@@ -57,6 +57,30 @@ object GraftExtensions {
           require(children.size == 3,
             s"graft_zspread takes (value, boundaries, spreads), got ${children.size}")
           ZOrderSpread(children(0), children(1), children(2))
+        }),
+      (
+        FunctionIdentifier("graft_minhash"),
+        new ExpressionInfo(classOf[MinHash].getName, "graft_minhash"),
+        (children: Seq[Expression]) => {
+          require(children.size == 3,
+            s"graft_minhash takes (tokens, w, k), got ${children.size}")
+          MinHash(children(0), children(1), children(2))
+        }),
+      (
+        FunctionIdentifier("graft_minhash_bands"),
+        new ExpressionInfo(classOf[MinHashBands].getName, "graft_minhash_bands"),
+        (children: Seq[Expression]) => {
+          require(children.size == 2,
+            s"graft_minhash_bands takes (signature, rowsPerBand), got ${children.size}")
+          MinHashBands(children.head, children.last)
+        }),
+      (
+        FunctionIdentifier("graft_shingle_jaccard"),
+        new ExpressionInfo(classOf[ShingleJaccard].getName, "graft_shingle_jaccard"),
+        (children: Seq[Expression]) => {
+          require(children.size == 3,
+            s"graft_shingle_jaccard takes (tokensA, tokensB, w), got ${children.size}")
+          ShingleJaccard(children(0), children(1), children(2))
         }))
 
   /** Idempotent late registration on an already-built session. */
@@ -96,4 +120,16 @@ object GraftExtensions {
   def zSpread(value: Column, boundaries: Column, spreads: Column): Column =
     org.apache.spark.sql.functions.call_function(
       "graft_zspread", value, boundaries, spreads)
+
+  /** DataFrame-API handle for the MinHash signature of a token array. */
+  def minhash(tokens: Column, w: Column, k: Column): Column =
+    org.apache.spark.sql.functions.call_function("graft_minhash", tokens, w, k)
+
+  /** DataFrame-API handle for the LSH band keys of a MinHash signature. */
+  def minhashBands(sig: Column, rowsPerBand: Column): Column =
+    org.apache.spark.sql.functions.call_function("graft_minhash_bands", sig, rowsPerBand)
+
+  /** DataFrame-API handle for the exact shingle Jaccard of two token arrays. */
+  def shingleJaccard(tokensA: Column, tokensB: Column, w: Column): Column =
+    org.apache.spark.sql.functions.call_function("graft_shingle_jaccard", tokensA, tokensB, w)
 }

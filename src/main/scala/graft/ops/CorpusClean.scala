@@ -22,32 +22,39 @@ object CorpusClean {
 
   /** The shared front of both cleaning modes: the quality gate and the
     * exact dedup. Quality stats feed two consumers (the gate and the
-    * final stat join); the exact-deduped corpus feeds three (the LSH
-    * signature pass, the candidate re-verification, and the final
-    * anti-join). Persist both so their lineage — a full corpus scan +
-    * tokenization — runs once, not once per consumer. Both frames are
-    * ≤ corpus-sized and column-pruned, so MEMORY_AND_DISK spills safely
-    * at scale. These (and the caches inside Dedup) are deliberately not
-    * unpersisted: a lazily-returned frame has no completion hook, so
-    * cache lifetime is left to Spark's LRU — repeated invocations in one
-    * session re-cache and let old blocks age out. */
+    * final stat join); the exact-deduped corpus feeds four (the LSH
+    * signature pass, the two text joins of the candidate
+    * re-verification, and the final anti-join). Both are
+    * localCheckpoint-ed so their lineage — a full corpus scan +
+    * tokenization — runs once, not once per consumer, AND so every
+    * downstream plan starts from a two-node scan of the checkpointed
+    * rows instead of embedding the whole upstream plan (a `persist`
+    * keeps the plan, and every scan site of a cached frame re-prints it
+    * at each AQE re-plan). Lazy, like [[Dedup.connectedComponents]]'s
+    * checkpoints: the first job that reads a frame materializes it.
+    * Both frames are ≤ corpus-sized and column-pruned; the checkpoint
+    * blocks are MEMORY_AND_DISK, so they spill safely at scale. Nothing
+    * is registered in Spark's CacheManager: the blocks belong to the
+    * checkpointed RDDs and are freed by the ContextCleaner once the
+    * returned frame is unreachable, so repeated calls in one session
+    * leave no cached plans behind. */
   private def gatedExact(
       docs: DataFrame,
       minTokens: Int,
       maxStopwordRatio: Double): (DataFrame, DataFrame) = {
     val quality = TextOps.qualityScore(docs)
       .filter(col("n_tokens") >= minTokens && col("stopword_ratio") <= maxStopwordRatio)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false)
     // carry only (doc_id, text): the fixture has its own n_chars column
     // that would collide with the computed quality stats downstream
     val passing = docs.select("doc_id", "text").join(quality.select("doc_id"), "doc_id")
 
-    // exact dedup: keep min doc_id per identical text
-    val exactKept = passing
+    // exact dedup: keep min doc_id per identical text — the text is the
+    // group key, so the aggregate already is the (doc_id, text) frame
+    val exact = passing
       .groupBy("text").agg(min("doc_id").as("doc_id"))
-      .select("doc_id")
-    val exact = passing.join(exactKept, "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select("doc_id", "text")
+      .localCheckpoint(false)
     (quality, exact)
   }
 

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.GraftExtensions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -45,50 +46,42 @@ object Dedup {
       .select(keys.map(col) ++ others.map(c => col(s"__first.$c").as(c)): _*)
   }
 
-  /** Jaccard from a candidate-pair frame: join each side's shingle rows,
-    * count the common shingles, divide by the union size. Exact integer
-    * ratio (engine-portable). `pairs` must have (doc_a, doc_b).
+  /** Exact Jaccard of each candidate pair (doc_a, doc_b): both texts are
+    * joined onto the pair and `graft_shingle_jaccard` compares their
+    * distinct w-token shingle sets in one expression, then the ratio is
+    * thresholded and 4-dp rounded like [[jaccardFromCounts]].
     *
-    * Cost shape (the round-2 regression lived here): `pairs` sits on an
-    * EXPENSIVE lineage (full-corpus signatures + band join), and this
-    * function fans it out to several consumers — so the candidate pairs
-    * are persisted (they are tiny: bounded by true near-dups plus LSH
-    * false positives). The shingles needed for re-verification are then
-    * recomputed ONLY for candidate docs (a semi-join against `docs`
-    * before shingling), never by re-shingling the whole corpus, and that
-    * candidate index is persisted too because it feeds three consumers
-    * (two pair joins + the size aggregate). The full corpus is shingled
-    * exactly once per LSH run — in the signature pass. No broadcast
-    * hints: AQE broadcasts the candidate frames whenever they are small;
-    * on a dup-heavy corpus where they are not, a forced broadcast would
-    * blow the driver. */
+    * Cost shape: two keyed joins of the candidate pairs (bounded by true
+    * near-dups plus LSH false positives) against `docs`, and a per-pair
+    * kernel linear in the two documents. Nothing is shuffled by shingle,
+    * nothing is persisted, and `pairs` is consumed once, so its upstream
+    * plan (signatures + band join) is analyzed and run once. No
+    * broadcast hints: AQE broadcasts the small side whenever it is small;
+    * on a dup-heavy corpus where it is not, a forced broadcast would blow
+    * the driver. A candidate pair that shares no shingle gets Jaccard 0,
+    * so only a threshold ≤ 0 can keep it. */
   private[graft] def verifyJaccard(
       pairs: DataFrame,
       docs: DataFrame,
       w: Int,
-      threshold: Double): DataFrame = {
-    val cand = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val candDocs = cand.select(col("doc_a").as("doc_id"))
-      .union(cand.select(col("doc_b").as("doc_id"))).distinct()
-    val invC = TextOps
-      .shingleRows(docs.join(candDocs, Seq("doc_id"), "left_semi"), w)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Sizes are only ever joined for candidate docs — compute them from
-    // the candidate index, not the full corpus.
-    val sizes = invC.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    val common = cand
-      .join(invC.select(col("doc_id").as("doc_a"), col("shingle")), "doc_a")
-      .join(invC.select(col("doc_id").as("doc_b"), col("shingle")), Seq("doc_b", "shingle"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("common"))
-    jaccardFromCounts(common, sizes, threshold)
-  }
+      threshold: Double): DataFrame =
+    pairs.select("doc_a", "doc_b")
+      .join(docs.select(col("doc_id").as("doc_a"), col("text").as("__ta")), "doc_a")
+      .join(docs.select(col("doc_id").as("doc_b"), col("text").as("__tb")), "doc_b")
+      .select(col("doc_a"), col("doc_b"),
+        GraftExtensions.shingleJaccard(
+          TextOps.tokens(col("__ta")), TextOps.tokens(col("__tb")), lit(w)).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+      .select(col("doc_a"), col("doc_b"), graft.Num.rnd(col("jaccard"), 4).as("jaccard"))
 
-  /** The Jaccard formula tail shared by the exact path and the LSH
-    * re-verification: |∩| / (|A|+|B|−|∩|) from a per-pair common-shingle
-    * count and per-doc sizes, thresholded and 4-dp rounded. ONE
-    * definition — the ext2_minhash_lsh oracle (LSH vs exact ground
-    * truth) is only meaningful while both paths compute the identical
+  /** The Jaccard formula tail of the exact inverted-index paths:
+    * |∩| / (|A|+|B|−|∩|) from a per-pair common-shingle count and per-doc
+    * sizes, thresholded and 4-dp rounded. The LSH re-verification
+    * ([[verifyJaccard]]) computes the same ratio per pair with
+    * `graft_shingle_jaccard` — the same long counts, the same double
+    * division — and MinHashKernelSpec pins the two equal on every
+    * [[jaccardPairs]] pair: the ext2_minhash_lsh oracle (LSH vs exact
+    * ground truth) is only meaningful while both compute the identical
     * ratio. */
   private def jaccardFromCounts(
       common: DataFrame,
@@ -191,19 +184,6 @@ object Dedup {
     jaccardFromCounts(common, sizes, threshold)
   }
 
-  /** MinHash signature: k seeded hashes; sig_i = min over shingles of
-    * xxhash64(shingle_hash, i). Formulated as shingle rows → groupBy(doc)
-    * with k `min` aggregates, NOT as higher-order array functions: HOFs
-    * are CodegenFallback (interpreted per row — measured 50× slower here),
-    * while hash + HashAggregate stay in whole-stage codegen and the mins
-    * combine map-side, so the shuffle carries one k-column row per
-    * document per mapper. */
-  private def withSignature(inv: DataFrame, k: Int): DataFrame = {
-    val hashed = inv.withColumn("h", xxhash64(col("shingle")))
-    val sigCols = (0 until k).map(i => min(xxhash64(col("h"), lit(i))).as(s"sig_$i"))
-    hashed.groupBy("doc_id").agg(sigCols.head, sigCols.tail: _*)
-  }
-
   /** Hot-bucket guard shared by the banded-LSH joins: a (band_id,
     * band_key) bucket holding B docs emits O(B²) candidate pairs from the
     * self-join, so one boilerplate-heavy bucket (a signature collision
@@ -269,22 +249,24 @@ object Dedup {
     k / rowsPerBand
   }
 
-  /** (doc_id, band_id, band_key) rows: band_key hashes the band's slice
-    * of the MinHash signature. The shingle arrays are NOT carried through
-    * the band join (they would be replicated ×bands through the shuffle);
-    * they are joined back onto the much smaller candidate-pair set
-    * instead. */
-  private def bandedSignatures(docs: DataFrame, w: Int, k: Int, bands: Int): DataFrame = {
-    val rows = k / bands
-    val sig = withSignature(TextOps.shingleRows(docs, w), k)
-    val bandStructs = (0 until bands).map { b =>
-      struct(
-        lit(b).as("band_id"),
-        xxhash64((b * rows until (b + 1) * rows).map(r => col(s"sig_$r")): _*).as("band_key"))
-    }
-    sig
-      .select(col("doc_id"), explode(array(bandStructs: _*)).as("band"))
-      .select(col("doc_id"), col("band.band_id"), col("band.band_key"))
+  /** (doc_id, sig, band_id, band_key) rows, one per (doc, band): `sig`
+    * is the k-entry MinHash signature of the doc's w-token shingles
+    * (`graft_minhash`) and band_key hashes the band's slice of it
+    * (`graft_minhash_bands`) — one projection and a posexplode, no
+    * shuffle, usable on a streaming frame as well (StreamingNearDup
+    * keeps `sig` in its bucket state). Docs shorter than `w` tokens get
+    * a NULL signature and so no rows. The batch callers select the band
+    * columns right away, so neither `sig` nor the text rides through the
+    * band join; the texts are joined back onto the much smaller
+    * candidate-pair set instead. */
+  private[graft] def bandedSignatures(docs: DataFrame, w: Int, k: Int, bands: Int): DataFrame = {
+    require(k % bands == 0, s"bands $bands must divide k $k")
+    docs
+      .select(col("doc_id"),
+        GraftExtensions.minhash(TextOps.tokens(col("text")), lit(w), lit(k)).as("sig"))
+      .select(col("doc_id"), col("sig"),
+        posexplode(GraftExtensions.minhashBands(col("sig"), lit(k / bands)))
+          .as(Seq("band_id", "band_key")))
   }
 
   /** EXT2b — MinHash + banded LSH near-dup (the scale path). k=64 hashes
@@ -325,7 +307,8 @@ object Dedup {
       minBandMatches: Int = 1): DataFrame = {
     require(minBandMatches >= 1)
     val b = if (bands > 0) bands else bandingFor(k, threshold)
-    val banded = capBuckets(bandedSignatures(docs, w, k, b), maxBucket)
+    val banded = capBuckets(
+      bandedSignatures(docs, w, k, b).select("doc_id", "band_id", "band_key"), maxBucket)
     val collisions = banded.alias("a")
       .join(banded.alias("b"),
         col("a.band_id") === col("b.band_id") && col("a.band_key") === col("b.band_key") &&
@@ -335,8 +318,12 @@ object Dedup {
       if (minBandMatches == 1) collisions.dropDuplicates("doc_a", "doc_b")
       else collisions.groupBy("doc_a", "doc_b").agg(count(lit(1)).as("__bands"))
         .filter(col("__bands") >= minBandMatches).drop("__bands")
-    // Exact re-verification on the (tiny) candidate set.
-    verifyJaccard(candidates, docs, w, threshold)
+    // Exact re-verification on the (tiny) candidate set. The candidates
+    // are localCheckpoint-ed (lazily: the verifying job fills the blocks)
+    // so the verification and every downstream plan start from a scan of
+    // them instead of embedding the signature/band-join plan, which AQE
+    // would otherwise re-print at every re-plan of every consumer.
+    verifyJaccard(candidates.localCheckpoint(false), docs, w, threshold)
   }
 
   /** EXT39 — FUZZY dedup: MinHash-LSH candidates verified by EDIT
@@ -689,7 +676,6 @@ object Dedup {
     * Driver-side work per round is ONE scalar count (the convergence
     * check), never the data. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 30, doubleFrom: Int = 2): DataFrame = {
-    val e0 = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
     // LAZY localCheckpoints throughout (r17): every round ends in a
     // convergence count() — the blocking action that materializes the
     // lazily-marked RDD and caches its blocks in the same job, so the
@@ -708,7 +694,12 @@ object Dedup {
     // (+58%) same-window with flat controls. The checkpoint's plan
     // truncation is load-bearing for iterated consumers of deep
     // pipelines; the per-round edge re-exchange is the price.
-    val edges = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
+    // both orientations from ONE scan of `pairs`: a union would analyze
+    // and plan the whole upstream pairs pipeline twice
+    val edges = pairs
+      .select(inline(array(
+        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
+        struct(col("doc_b").as("src"), col("doc_a").as("dst")))))
       .localCheckpoint(false)
     // init already needs one shuffle to enumerate nodes; fold round 0's
     // propagation into it for free (component = min(self, neighbors)) —

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.ops.Dedup
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** EXT2's streaming twin — MinHash-LSH NEAR-dup detection on the
@@ -15,14 +14,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * so a new arrival is checked against every prior arrival it shares a
   * band bucket with — across batches, without ever re-scanning history.
   *
-  * Hash parity with the batch lane is load-bearing: signatures and band
-  * keys are the SAME xxhash64 compositions as `Dedup.minhashLshPairs`
-  * (shingle → xxhash64, sig_i = min over xxhash64(h, i), band key =
-  * xxhash64 over the band's sig slice), computed per-row with
-  * higher-order array functions because a streaming frame cannot use the
-  * batch path's windows/groupBy. HOFs are CodegenFallback-interpreted —
-  * acceptable here because the per-event cost is one document, not a
-  * corpus scan; the batch lane remains the re-processing path.
+  * Hash parity with the batch lane is load-bearing, so there is one
+  * implementation: signatures and band keys come from the batch lane's
+  * own `Dedup.bandedSignatures` — the `graft_minhash` and
+  * `graft_minhash_bands` expressions (shingle → xxhash64, sig_i = min
+  * over xxhash64(h, i), band key = xxhash64 over the band's sig slice),
+  * a per-row projection that a streaming frame can run as-is.
   *
   * State shape: per (band_id, band_key) bucket, the (doc_id, signature)
   * entries seen so far — bounded per bucket by `maxBucket` exactly like
@@ -44,36 +41,6 @@ object StreamingNearDup {
   final case class Candidate(doc_a: Long, doc_b: Long, est_sim: Double)
   /** Parallel arrays, not a List of tuples: the state encoder stays flat. */
   final case class BucketState(ids: Array[Long], sigs: Array[Array[Long]])
-
-  /** Per-row banded MinHash signatures for a (possibly streaming) docs
-    * frame (`doc_id`, `text`): one row per (doc, band) with the full
-    * signature attached. Docs shorter than `w` tokens yield no rows —
-    * the batch contract. */
-  def bandedSignatures(docs: DataFrame, w: Int = 3, k: Int = 64, bands: Int = 16): DataFrame = {
-    require(k % bands == 0, s"bands $bands must divide k $k")
-    val rows = k / bands
-    // shingles: all w-token windows of the split text, as one array
-    val toks = split(col("text"), " ")
-    val shingles = transform(
-      sequence(lit(0), size(toks) - lit(w)),
-      i => concat_ws(" ", (0 until w).map(o => element_at(toks, i + lit(o + 1))): _*))
-    val hashes = transform(shingles, s => xxhash64(s))
-    val sigCol = array((0 until k).map(i =>
-      array_min(transform(col("hs"), h => xxhash64(h, lit(i))))): _*)
-    val withSig = docs
-      .filter(size(toks) >= w)
-      .select(col("doc_id"), hashes.as("hs"))
-      .select(col("doc_id"), sigCol.as("sig"))
-    val bandStructs = (0 until bands).map { b =>
-      struct(
-        lit(b).as("band_id"),
-        xxhash64((b * rows until (b + 1) * rows).map(r =>
-          element_at(col("sig"), r + 1)): _*).as("band_key"))
-    }
-    withSig
-      .select(col("doc_id"), col("sig"), explode(array(bandStructs: _*)).as("band"))
-      .select(col("doc_id"), col("band.band_id"), col("band.band_key"), col("sig"))
-  }
 
   /** The stateful pairing kernel: new docs in a bucket pair against every
     * stored doc, then join the stored set (until the cap). Arrival order
@@ -123,7 +90,7 @@ object StreamingNearDup {
       maxBucket: Int = Dedup.DefaultMaxBucket): Dataset[Candidate] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    bandedSignatures(docs, w, k, bands)
+    Dedup.bandedSignatures(docs, w, k, bands)
       .as[BandedDoc]
       .groupByKey(d => (d.band_id, d.band_key))
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(

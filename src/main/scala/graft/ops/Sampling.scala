@@ -174,8 +174,8 @@ object Sampling {
     * ratio mean_tok[ln p_tgt(tok) − ln p_src(tok)] — the paper scores
     * hashed n-gram features; the unigram models
     * ([[TextOps.unigramModel]], OOV add-one floor) are the portable core
-    * on the same seam as EXT35, and both factor through
-    * [[TextOps.scoreUnderModel]] so the weight is a difference of two
+    * on the same seam as EXT35, and both scores are
+    * [[TextOps.scoreUnderModel]]'s, so the weight is a difference of two
     * already-canonically-rounded scores (deterministic across engines).
     *
     * Selection is deterministic top-quota by (weight DESC, doc_id) —
@@ -192,13 +192,24 @@ object Sampling {
       sourceTotal: Double,
       quota: Int): DataFrame = {
     require(quota >= 1)
-    val tgt = TextOps.scoreUnderModel(docs, targetTf, targetTotal)
-      .select(col("doc_id"), col("avg_logp").as("lp_tgt"))
-    val src = TextOps.scoreUnderModel(docs, sourceTf, sourceTotal)
-      .select(col("doc_id"), col("avg_logp").as("lp_src"))
-    tgt.join(src, "doc_id")
+    require(targetTotal > 0 && sourceTotal > 0, "model totals must be positive")
+    // both models score ONE token stream in one aggregate: two
+    // scoreUnderModel frames joined on doc_id scan and aggregate the
+    // corpus twice, and at small sizes AQE broadcasts whichever side
+    // finishes first, so the plan and its generated code vary by call.
+    // A NULL doc_id names no document, so it takes no score.
+    docs.filter(col("doc_id").isNotNull)
+      .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("token"))
+      .join(targetTf.select(col("token"), col("cnt").as("t_cnt")), Seq("token"), "left")
+      .join(sourceTf.select(col("token"), col("cnt").as("s_cnt")), Seq("token"), "left")
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n"),
+        TextOps.sumLogCnt(col("t_cnt")).as("t_sum"),
+        TextOps.sumLogCnt(col("s_cnt")).as("s_sum"))
       .select(col("doc_id"),
-        graft.Num.rnd(col("lp_tgt") - col("lp_src"), 4).as("weight"))
+        graft.Num.rnd(
+          TextOps.avgLogp(col("t_sum"), col("n"), targetTotal) -
+            TextOps.avgLogp(col("s_sum"), col("n"), sourceTotal), 4).as("weight"))
       .orderBy(col("weight").desc, col("doc_id"))
       .limit(quota)
   }

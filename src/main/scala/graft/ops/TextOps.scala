@@ -827,14 +827,21 @@ object TextOps {
     val toks = docs.select(col("doc_id"), explode(tok(col("text"))).as("token"))
     toks.join(tf, Seq("token"), "left")
       .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_tokens"),
-        sum(log(coalesce(col("cnt"), lit(1L)).cast("double"))).as("sum_log_cnt"))
-      .select(
-        col("doc_id"), col("n_tokens"),
-        graft.Num.rnd(
-          (col("sum_log_cnt") - col("n_tokens").cast("double") * log(lit(total))) /
-            col("n_tokens").cast("double"), 4).as("avg_logp"))
+      .agg(count(lit(1)).as("n_tokens"), sumLogCnt(col("cnt")).as("sum_log_cnt"))
+      .select(col("doc_id"), col("n_tokens"),
+        avgLogp(col("sum_log_cnt"), col("n_tokens"), total).as("avg_logp"))
   }
+
+  /** Σ ln(cnt) over a doc's tokens, out-of-vocabulary tokens (NULL `cnt`
+    * after the model's left join) at the add-one floor cnt = 1. */
+  private[ops] def sumLogCnt(cnt: Column): Column =
+    sum(log(coalesce(cnt, lit(1L)).cast("double")))
+
+  /** A doc's mean log-probability under a model with `total` tokens, at
+    * 4dp: (Σ ln cnt − n·ln total) / n. */
+  private[ops] def avgLogp(sumLogCnt: Column, nTokens: Column, total: Double): Column =
+    graft.Num.rnd(
+      (sumLogCnt - nTokens.cast("double") * log(lit(total))) / nTokens.cast("double"), 4)
 
   /** Language-ID marker profiles. NOTE: the documents fixture draws every
     * language's text from one shared 31-token vocabulary (verified), so no

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -83,9 +84,15 @@ object PartitionedStore {
       keyCol: String,
       path: String,
       maxRecordsPerFile: Long): Unit = {
-    val exists = try {
-      spark.read.parquet(path).schema.nonEmpty
-    } catch { case _: org.apache.spark.sql.AnalysisException => false }
+    // the store exists once a write left a data entry under the path;
+    // `_`/`.`-prefixed names are skipped as parquet discovery skips
+    // them, so an empty or aborted-write directory still reads as new
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val exists = fs.exists(p) && fs.listStatus(p).exists { s =>
+      val n = s.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
     val merged =
       if (!exists) dated
       else {

@@ -4,26 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all specs — same SQL-conf semantics as the
-  * engine (GraftSession), small core count for test latency. */
+/** Shared local session for all specs — the engine's own session
+  * (GraftSession.build), at a small core count for test latency. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String): String = s"/root/testdata/$dir"
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    GraftSession.tune(s)
-  }
+  lazy val session: SparkSession = GraftSession.build("graft-test", cores = "4")
 }

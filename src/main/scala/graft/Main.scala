@@ -1,6 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import graft.ops.{ExternalScorer, IhcScorer, JourneyBuilder}
+import graft.sources.{SqlDml, SqlMaint, TxCatalog, TxStore}
 import org.apache.spark.sql.functions.{col, to_timestamp}
 
 /** CLI mirroring the reference's per-step interface
@@ -13,13 +16,18 @@ import org.apache.spark.sql.functions.{col, to_timestamp}
   *     [--max-sessions N]   // skew gate: skip conversions over N sessions
   *     [--min-tokens N] [--max-stopword-ratio X] [--jaccard-threshold X] \
   *     [--survivor-rule clustered|greedy]   // clean-corpus step only
+  *     [--sql '<statement>' | --query file.sql] [--tx name=path[@vN],…]  // sql step
   *
   * `--data-dir` points at the driver testdata (domain mapping in Tables);
   * `--out-dir` receives customer_journeys/ (CSV),
   * attribution_customer_journey/ (parquet) and channel_reporting/ (CSV).
   * Date bounds follow the reference's asymmetry: build-journeys filters
   * the conversion date (cj_builder.py:45–53), report filters the session
-  * date (⚠B5, channel_reporter.py:47–56).
+  * date (⚠B5, channel_reporter.py:47–56). `--step sql` lands one
+  * statement's result as out-dir/sql_result/ (parquet): maintenance
+  * statements ([[graft.sources.SqlMaint]]), DML and CTAS
+  * ([[graft.sources.SqlDml]]), and everything else through `spark.sql`,
+  * with `--tx` names resolved by [[graft.sources.TxCatalog]].
   */
 object Main {
 
@@ -138,109 +146,57 @@ object Main {
         println(s"[graft] clean corpus -> $outDir/clean_corpus " +
           s"(docs=${s.getLong(0)}, tokens=${s.getLong(1)}, avg_tokens=${s.getDouble(2)})")
       case "sql" =>
-        // the SQL entry point: every fixture table + the attribution
-        // domain views registered, one statement run through Catalyst,
-        // result landed as parquet — the reference's native interface
-        // (SQL text) without writing Scala
-        val text = opts.get("sql").orElse(opts.get("query").map { p =>
-          new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)),
-            java.nio.charset.StandardCharsets.UTF_8)
-        }).getOrElse(sys.error("--step sql needs --sql '<statement>' or --query <file.sql>"))
-        Tables.registerViews(spark, dataDir)
-        // transactional tables join the catalog too: --tx
-        // name=path[,name=path…]; a `@v<N>` path suffix registers the
-        // TIME-TRAVEL snapshot at version N (read-only — reproducing a
-        // historical report in SQL), so such views never enter the
-        // DML-addressable set below
-        val txAll: Seq[(String, String, Option[Long])] =
-          opts.get("tx").toSeq.flatMap(_.split(',')).map { pair =>
-            val i = pair.indexOf('=')
-            require(i > 0, s"--tx expects name=path pairs, got '$pair'")
-            val (name, spec) = (pair.substring(0, i), pair.substring(i + 1))
-            // the @vN suffix is a time-travel spec only when the PREFIX
-            // is a real table — a literal path whose last component
-            // happens to end in '@v2' must register as itself (trailing
-            // '/' is the documented escape: 'path@v2/' strips to the
-            // literal path). The LAST '@v' is the split point: a path
-            // like /data@vault/tbl@v3 means version 3 of /data@vault/tbl
-            val at = spec.lastIndexOf("@v")
-            val v = if (at > 0) spec.substring(at + 2) else ""
-            if (v.nonEmpty && v.forall(_.isDigit) &&
-                graft.sources.TxStore.isTable(spark, spec.substring(0, at)))
-              (name, spec.substring(0, at), Some(v.toLong))
-            else (name, spec.stripSuffix("/"), None)
-          }
-        txAll.foreach { case (name, path, version) =>
-          graft.sources.TxStore.registerView(spark, path, name, version)
-        }
-        val tx: Map[String, String] =
-          txAll.collect { case (n, p, None) => n -> p }.toMap
+        // the SQL entry point: one statement over every fixture table,
+        // the attribution domain views and the --tx transactional
+        // tables, result landed as parquet — the reference's native
+        // interface (SQL text) without writing Scala
+        val text = opts.get("sql")
+          .orElse(opts.get("query").map(p => Files.readString(Paths.get(p))))
+          .getOrElse(sys.error("--step sql needs --sql '<statement>' or --query <file.sql>"))
+        // --tx name=path[@vN][,…] names resolve through the session
+        // catalog of a fresh session, so the caller's session keeps its
+        // catalog and temp views; `@vN` pins a read-only time-travel
+        // version. Temp views resolve before any catalog, so a --tx name
+        // drops the fixture view it shadows: reads and writes (SqlDml,
+        // SqlMaint) then address the same table.
+        val entries = opts.get("tx").toSeq.flatMap(TxCatalog.parse(spark, _))
+        val session = TxCatalog.session(spark, entries)
+        Tables.registerViews(session, dataDir)
+        entries.foreach(e => session.catalog.dropTempView(e.name))
+        // the current (writable) names — what SqlMaint and SqlDml accept
+        val tx = entries.collect { case TxCatalog.Entry(n, p, None) => n -> p }.toMap
+        val result = s"$outDir/sql_result"
         // dispatch order: maintenance (OPTIMIZE/VACUUM/RESTORE/DESCRIBE
         // HISTORY/SHOW PARTITIONS/CONVERT — statements Spark's grammar
         // doesn't know, so they must intercept before its parser sees
-        // them), then DDL (ALTER TABLE → schema-evolution API), then
-        // DML (DELETE/UPDATE/MERGE on a --tx view translate to the
-        // TxStore API — Catalyst parses both but cannot execute either
-        // on a file-backed view), then plain queries through SqlRead,
-        // which rewrites tx relations to log-pruned scans (and resolves
-        // VERSION/TIMESTAMP AS OF) before Catalyst plans the rest
-        graft.sources.SqlMaint.maybeExecute(spark, text, tx) match {
+        // them), then DML (INSERT/DELETE/UPDATE/MERGE/CTAS translate to
+        // the TxStore API), then Spark itself: reads plan the v2
+        // pushed-filter scan, time travel and ALTER go through the catalog
+        SqlMaint.maybeExecute(session, text, tx) match {
           case Some(m) =>
-            // restore/optimize moved the snapshot — advance the view
-            // (CONVERT targets a raw path, not a registered view); the
-            // artifact is the statement's own summary frame (O(1)
-            // rows, or O(retained commits) for DESCRIBE HISTORY),
-            // never table data
-            m.version.foreach(_ => if (tx.contains(m.view))
-              graft.sources.TxStore.registerView(spark, m.path, m.view))
-            m.df.write.mode("overwrite").parquet(s"$outDir/sql_result")
+            // the statement's own summary frame (O(1) rows, or O(retained
+            // commits) for DESCRIBE HISTORY), never table data
+            m.df.write.mode("overwrite").parquet(result)
             println(s"[graft] sql ${m.op} on tx '${m.view}' " +
-              m.version.fold("(no commit)")(v => s"committed v$v") +
-              s" -> $outDir/sql_result")
-          case None =>
-        graft.sources.SqlDdl.maybeExecute(spark, text, tx) match {
-          case Some(dd) =>
-            // the schema/constraint set moved — advance the view so a
-            // following statement sees the altered table
-            dd.version.foreach(_ =>
-              graft.sources.TxStore.registerView(spark, dd.path, dd.view))
-            dd.df.write.mode("overwrite").parquet(s"$outDir/sql_result")
-            println(s"[graft] sql ${dd.op} on tx '${dd.view}' " +
-              dd.version.fold("(no commit)")(v => s"committed v$v") +
-              s" -> $outDir/sql_result")
-          case None =>
-        graft.sources.SqlDml.maybeExecute(spark, text, tx) match {
-          case Some(r) =>
-            // the view captured the pre-DML snapshot; advance it and
-            // land the COMMIT'S OWN CHANGED ROWS (CDF) as the step
-            // result — a one-partition DELETE is a metadata-only commit
-            // and its artifact costs O(changes), never a full-table
-            // re-land (VERDICT r13). No commit ⇒ an empty change set
-            // with the table's schema.
-            graft.sources.TxStore.registerView(spark, r.path, r.view)
-            val since = r.version.map(_ - 1)
-              .getOrElse(graft.sources.TxStore.snapshot(spark, r.path).version)
-            val (_, changes) = graft.sources.TxStore.readChangesSince(spark, r.path, since)
-            changes.write.mode("overwrite").parquet(s"$outDir/sql_result")
-            println(s"[graft] sql ${r.op} on tx '${r.view}' " +
-              r.version.fold("(matched nothing, no commit)")(v => s"committed v$v") +
-              s"; changed rows -> $outDir/sql_result")
-          case None =>
-            graft.sources.SqlRead.plan(spark, text, txAll) match {
-              case Some(p) =>
-                p.rewrites.foreach { rw =>
-                  println(s"[graft] sql scan on tx '${rw.view}'" +
-                    rw.version.fold("")(v => s" @v$v") +
-                    s": skipped ${rw.skipped.size} of " +
-                    s"${rw.kept.size + rw.skipped.size} files from log metadata")
-                }
-                p.df.write.mode("overwrite").parquet(s"$outDir/sql_result")
-              case None => // not a single-plan statement — let Catalyst report
-                spark.sql(text).write.mode("overwrite").parquet(s"$outDir/sql_result")
-            }
-            println(s"[graft] sql -> $outDir/sql_result")
-        }
-        }
+              m.version.fold("(no commit)")(v => s"committed v$v") + s" -> $result")
+          case None => SqlDml.maybeExecute(session, text, tx) match {
+            case Some(r) =>
+              // the COMMIT'S OWN CHANGED ROWS (CDF) as the step result — a
+              // one-partition DELETE is a metadata-only commit and its
+              // artifact costs O(changes), never a full-table re-land
+              // (VERDICT r13). No commit ⇒ an empty change set with the
+              // table's schema.
+              val since = r.version.map(_ - 1)
+                .getOrElse(TxStore.snapshot(session, r.path).version)
+              val (_, changes) = TxStore.readChangesSince(session, r.path, since)
+              changes.write.mode("overwrite").parquet(result)
+              println(s"[graft] sql ${r.op} on tx '${r.view}' " +
+                r.version.fold("(matched nothing, no commit)")(v => s"committed v$v") +
+                s"; changed rows -> $result")
+            case None =>
+              TxCatalog.artifact(session.sql(text)).write.mode("overwrite").parquet(result)
+              println(s"[graft] sql -> $result")
+          }
         }
       case other =>
         sys.error(s"unknown --step $other (build-journeys|score|score-external|report|clean-corpus|sql|all)")

@@ -35,14 +35,6 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** The ANALYZED logical plan behind a DataFrame — how the SQL read
-    * path (graft.sources.SqlRead) embeds a stats-pruned TxStore scan
-    * into a parsed statement's plan in place of the relation it
-    * replaces (the analyzer resolves the surrounding unresolved plan
-    * against the embedded resolved subtree). */
-  def plan(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-    df.queryExecution.analyzed
-
   /** Block until the listener bus has delivered every queued event (or
     * the timeout passes) — what graft.Profile needs so late job/stage-end
     * events are counted instead of dropped by a fixed sleep (ADVICE r17).

@@ -6,13 +6,16 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Registers the engine's native expressions with a session so they are
   * callable from SQL (`SELECT graft_dot(a, b)`) as well as the DataFrame
-  * API. Wire up either via
+  * API, and the planner check graft tables' `UNSET TBLPROPERTIES` needs
+  * ([[graft.sources.UnsetPropertiesCheck]]). Wire up either via
   * `spark.sql.extensions=graft.functions.GraftExtensions` or
   * [[GraftExtensions.register]] on an existing session (GraftSession does
   * the latter — extensions config only applies at session construction). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
+    ext.injectPlannerStrategy(_ => graft.sources.UnsetPropertiesCheck)
+  }
 }
 
 object GraftExtensions {
@@ -90,6 +93,8 @@ object GraftExtensions {
         spark.sessionState.functionRegistry.registerFunction(id, info, builder)
       }
     }
+    if (!spark.experimental.extraStrategies.contains(graft.sources.UnsetPropertiesCheck))
+      spark.experimental.extraStrategies :+= graft.sources.UnsetPropertiesCheck
     spark
   }
 

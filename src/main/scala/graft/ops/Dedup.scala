@@ -55,24 +55,38 @@ object Dedup {
     * near-dups plus LSH false positives) against `docs`, and a per-pair
     * kernel linear in the two documents. Nothing is shuffled by shingle,
     * nothing is persisted, and `pairs` is consumed once, so its upstream
-    * plan (signatures + band join) is analyzed and run once. No
-    * broadcast hints: AQE broadcasts the small side whenever it is small;
-    * on a dup-heavy corpus where it is not, a forced broadcast would blow
-    * the driver. A candidate pair that shares no shingle gets Jaccard 0,
-    * so only a threshold ≤ 0 can keep it. */
+    * plan (signatures + band join) is analyzed and run once. When the
+    * planner can broadcast the texts by their estimated size it does so
+    * up front; otherwise both joins are pinned to sort-merge. Left to
+    * AQE, that join of two small shuffle stages broadcast whichever side
+    * finished first, so the same call planned one of two stages (pairs
+    * or texts as the build side) and a repeat compiled the other's class
+    * afresh; a forced broadcast would blow the driver on a dup-heavy
+    * corpus, and sort-merge spills at any size. A candidate pair that
+    * shares no shingle gets Jaccard 0, so only a threshold ≤ 0 can keep
+    * it. */
   private[graft] def verifyJaccard(
       pairs: DataFrame,
       docs: DataFrame,
       w: Int,
-      threshold: Double): DataFrame =
+      threshold: Double): DataFrame = {
+    val texts = docs.select(col("doc_id"), col("text"))
+    val qe = texts.queryExecution
+    val pin = qe.optimizedPlan.stats.sizeInBytes >
+      qe.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    def side(key: String, text: String): DataFrame = {
+      val t = texts.select(col("doc_id").as(key), col("text").as(text))
+      if (pin) t.hint("merge") else t
+    }
     pairs.select("doc_a", "doc_b")
-      .join(docs.select(col("doc_id").as("doc_a"), col("text").as("__ta")), "doc_a")
-      .join(docs.select(col("doc_id").as("doc_b"), col("text").as("__tb")), "doc_b")
+      .join(side("doc_a", "__ta"), "doc_a")
+      .join(side("doc_b", "__tb"), "doc_b")
       .select(col("doc_a"), col("doc_b"),
         GraftExtensions.shingleJaccard(
           TextOps.tokens(col("__ta")), TextOps.tokens(col("__tb")), lit(w)).as("jaccard"))
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), graft.Num.rnd(col("jaccard"), 4).as("jaccard"))
+  }
 
   /** The Jaccard formula tail of the exact inverted-index paths:
     * |∩| / (|A|+|B|−|∩|) from a per-pair common-shingle count and per-doc

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.ops.{ChannelReport, IhcScorer, IncrementalReport, JourneyBuilder, Skew}
-import graft.sources.{Compaction, SqlMaint, TxStore}
+import graft.sources.{Compaction, SqlMaint, TxCatalog, TxStore}
 import graft.streaming.{StreamingCdf, StreamingIngest}
 import org.apache.spark.sql.functions._
 
@@ -628,9 +628,10 @@ object StorageQueries {
       bench = true),
 
     // ── S45 — SQL reads through the commit log's FILE SKIPPING: a
-    //    `SELECT … WHERE event_id <= 500` as SQL TEXT over a tx table
-    //    must consult the log's min/max stats exactly like
-    //    TxStore.readWhere — the REQUIRE pins that SqlRead's rewrite
+    //    `SELECT … WHERE event_id <= 500` as SQL TEXT over a `--tx`
+    //    name (resolved by the same TxCatalog session the CLI's sql
+    //    step uses) must consult the log's min/max stats exactly like
+    //    TxStore.readWhere — the REQUIRE pins that the v2 scan it plans
     //    skips the IDENTICAL file set pruneFiles skips (not merely
     //    "some" files), and the oracle pins the pruned plan's rows
     //    byte-for-byte. This is the r13 verdict's top item: the
@@ -642,20 +643,14 @@ object StorageQueries {
       "s45_sql_pruned_read",
       (s, d) => {
         val store = freshStore(s, "s45-sqlread", d)
-        val ev = Tables.events(s, d)
-        TxStore.append(ev.repartitionByRange(8, col("event_id")), store)
-        val (_, kept, skipped) = TxStore.pruneFiles(s, store, col("event_id") <= 500L)
-        require(skipped.nonEmpty,
-          s"range layout + selective predicate must skip files (kept ${kept.size})")
-        val planned = graft.sources.SqlRead.plan(s,
-          "SELECT event_id, ts div 1000 AS ts_us, user_id, event_type, value, props " +
-            "FROM s45tx WHERE event_id <= 500",
-          Seq(("s45tx", store, None))).get
-        require(planned.rewrites.map(r => (r.kept.toSet, r.skipped.toSet))
-            == Seq((kept.toSet, skipped.toSet)),
-          s"the SQL path must skip the SAME file set readWhere skips " +
-            s"(sql ${planned.rewrites.map(_.skipped.size)}, walk ${skipped.size})")
-        planned.df
+        prunedLikeReadWhere(s, d, store, "SQL read") {
+          val sql = TxCatalog.session(s, TxCatalog.parse(s, s"s45tx=$store"))
+          val df = sql.sql(
+            "SELECT event_id, ts div 1000 AS ts_us, user_id, event_type, value, props " +
+              "FROM s45tx WHERE event_id <= 500")
+          df.queryExecution.executedPlan: Unit // plans the scan: prunes files
+          df
+        }
       },
       Some(eventsSql(" WHERE event_id <= 500")),
       bench = true),
@@ -671,24 +666,11 @@ object StorageQueries {
       "s51_dsv2_pruned_read",
       (s, d) => {
         val store = freshStore(s, "s51-dsv2", d)
-        val ev = Tables.events(s, d)
-        TxStore.append(ev.repartitionByRange(8, col("event_id")), store)
-        val (_, kept, skipped) = TxStore.pruneFiles(s, store, col("event_id") <= 500L)
-        require(skipped.nonEmpty,
-          s"range layout + selective predicate must skip files (kept ${kept.size})")
-        graft.sources.GraftScanEvents.clear(store)
-        val v2 = s.read.format("graft").load(store).filter(col("event_id") <= 500L)
-        require(v2.count() > 0, "the pruned v2 scan must still return rows")
-        // search the per-path ring: a concurrent scan of the same path
-        // must not clobber THIS scan's event (ADVICE r15) — the REQUIRE
-        // stays falsifiable (broken pruning leaves NO matching event)
-        val ring = graft.sources.GraftScanEvents.recent(store)
-        require(ring.nonEmpty, "the v2 scan recorded no planning event")
-        require(ring.exists(p =>
-            p.kept.toSet == kept.toSet && p.skipped.toSet == skipped.toSet),
-          s"the v2 scan must skip the SAME file set readWhere skips " +
-            s"(v2 ${ring.head.skipped.size}, walk ${skipped.size})")
-        eventsCols(v2)
+        eventsCols(prunedLikeReadWhere(s, d, store, "v2 scan") {
+          val v2 = s.read.format("graft").load(store).filter(col("event_id") <= 500L)
+          require(v2.count() > 0, "the pruned v2 scan must still return rows")
+          v2
+        })
       },
       Some(eventsSql(" WHERE event_id <= 500")),
       bench = true),
@@ -1600,7 +1582,8 @@ object StorageQueries {
       bench = true),
 
     // ── S50 — SQL DDL: ALTER TABLE statements (RENAME/ADD/DROP COLUMN,
-    //    ADD CONSTRAINT) translated onto the schema-evolution API —
+    //    ADD CONSTRAINT) run by Spark over a `--tx` name and applied by
+    //    the catalog's alterTable on the schema-evolution API —
     //    four ALTERs, and the REQUIRE pins what makes them lake-grade:
     //    ALL metadata-only (the file set stays byte-identical through
     //    the whole sequence — rename rides the column mapping, add/drop
@@ -1614,8 +1597,8 @@ object StorageQueries {
         val store = freshStore(s, "s50-ddl", d)
         TxStore.append(Tables.events(s, d), store) // v1
         val files1 = TxStore.snapshot(s, store).files.toSet
-        val tx = Map("mt" -> store)
-        def run(sql: String): Unit = { graft.sources.SqlDdl.maybeExecute(s, sql, tx).get; () }
+        val sql = TxCatalog.session(s, TxCatalog.parse(s, s"mt=$store"))
+        def run(stmt: String): Unit = sql.sql(stmt): Unit
         run("ALTER TABLE mt RENAME COLUMN value TO score") // v2
         run("ALTER TABLE mt ADD COLUMN tag STRING") // v3
         run("ALTER TABLE mt DROP COLUMN props") // v4
@@ -1778,6 +1761,29 @@ object StorageQueries {
              |FROM events
              |WHERE event_id % 100 <> 0 AND user_id <> 7
              |GROUP BY 1, 2""".stripMargin)))
+
+  /** s45/s51: lay events out at `store` in 8 event_id ranges, run
+    * `read` (an `event_id <= 500` read that plans its scan), and REQUIRE
+    * that the scan kept and skipped exactly the files the readWhere stats
+    * walk does. The per-path ring is searched, so a concurrent scan of
+    * the same path cannot clobber this scan's event (ADVICE r15), and the
+    * REQUIRE stays falsifiable: broken pruning leaves NO matching event. */
+  private def prunedLikeReadWhere(
+      s: org.apache.spark.sql.SparkSession, d: String, store: String, what: String)(
+      read: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    TxStore.append(Tables.events(s, d).repartitionByRange(8, col("event_id")), store)
+    val (_, kept, skipped) = TxStore.pruneFiles(s, store, col("event_id") <= 500L)
+    require(skipped.nonEmpty,
+      s"range layout + selective predicate must skip files (kept ${kept.size})")
+    graft.sources.GraftScanEvents.clear(store)
+    val df = read
+    val ring = graft.sources.GraftScanEvents.recent(store)
+    require(ring.nonEmpty, s"the $what recorded no planning event")
+    require(ring.exists(p => p.kept.toSet == kept.toSet && p.skipped.toSet == skipped.toSet),
+      s"the $what must skip the SAME file set readWhere skips " +
+        s"($what ${ring.head.skipped.size}, walk ${skipped.size})")
+    df
+  }
 
   /** A per-(query, dir, process) TxStore path, wiped before use — a
     * reused log would replay the previous run's commits on top of this

@@ -2,13 +2,17 @@ package graft.sources
 
 import java.util.Locale
 
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.analysis.{NamespaceAlreadyExistsException, NoSuchNamespaceException, NoSuchTableException, NonEmptyNamespaceException, TableAlreadyExistsException}
-import org.apache.spark.sql.connector.catalog.{Identifier, NamespaceChange, SupportsNamespaces, Table, TableCatalog, TableChange}
+import org.apache.spark.sql.catalyst.analysis.{NamespaceAlreadyExistsException, NoSuchNamespaceException, NoSuchTableException, NonEmptyNamespaceException, ResolvedTable, TableAlreadyExistsException}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnsetTableProperties}
+import org.apache.spark.sql.connector.catalog.{Identifier, NamespaceChange, SupportsNamespaces, Table, TableCatalog, TableCatalogCapability, TableChange, TableInfo}
+import org.apache.spark.sql.connector.catalog.constraints.Check
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -42,21 +46,20 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * refuses rather than creating a table the catalog could never find
   * again by name).
   *
-  * Time travel plans through the catalog's own `loadTable` overloads:
-  * `VERSION AS OF n` pins [[TxStore.snapshotAt]], `TIMESTAMP AS OF ts`
-  * resolves through [[TxStore.versionAtTimestamp]] — the same
-  * snapshots `option("versionAsOf")` pins on the path surface.
+  * Loading, time travel and ALTER are [[PathCatalog]]'s, shared with
+  * the sql step's `--tx` names ([[TxCatalog]]); this class adds the
+  * warehouse layout, CREATE/DROP/RENAME and namespaces.
   *
   * Reference: the challenge stores tables as bare SQLite names
   * (db_operations.py:10-69); this is that naming surface re-derived on
   * the lake — names resolve to transactional directories, not a
   * metastore row. */
-final class GraftCatalog extends TableCatalog with SupportsNamespaces {
+final class GraftCatalog extends PathCatalog with SupportsNamespaces {
 
-  private var catalogName: String = _
-  private var warehouse: String = _
+  private var catalogName, warehouse: String = _
 
-  private def spark: SparkSession = SparkSession.active
+  override def name(): String = catalogName
+
   private def fs: FileSystem =
     new Path(warehouse).getFileSystem(spark.sessionState.newHadoopConf())
 
@@ -70,8 +73,6 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
     // followed by an unqualified CREATE must not demand a bootstrap
     fs.mkdirs(new Path(s"$warehouse/default")): Unit
   }
-
-  override def name(): String = catalogName
 
   override def defaultNamespace(): Array[String] = Array("default")
 
@@ -116,6 +117,9 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
 
   // ── tables ───────────────────────────────────────────────────────
 
+  override protected def locate(ident: Identifier): Option[(String, Option[Long])] =
+    Some((tablePath(ident), None))
+
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val p = requireNamespace(namespace.toSeq)
     fs.listStatus(new Path(p)).iterator
@@ -123,34 +127,6 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
       .map(st => Identifier.of(namespace, st.getPath.getName))
       .toArray
   }
-
-  private def load(ident: Identifier, snap: String => TxStore.Snapshot): GraftTable = {
-    val path = tablePath(ident)
-    if (!TxStore.isTable(spark, path)) throw new NoSuchTableException(ident)
-    new GraftTable(spark, path, snap(path))
-  }
-
-  override def loadTable(ident: Identifier): Table =
-    load(ident, TxStore.snapshot(spark, _))
-
-  /** `VERSION AS OF` through the catalog (version strings are commit
-    * numbers — the only version axis the log has). */
-  override def loadTable(ident: Identifier, version: String): Table = {
-    val v =
-      try version.trim.toLong
-      catch { case _: NumberFormatException => throw new IllegalArgumentException(
-        s"graft catalog: VERSION AS OF takes a commit number, got '$version'") }
-    load(ident, TxStore.snapshotAt(spark, _, v))
-  }
-
-  /** `TIMESTAMP AS OF` through the catalog — Spark hands MICROseconds
-    * since epoch; the log's clock is commit-file mtimes (millis). */
-  override def loadTable(ident: Identifier, timestamp: Long): Table =
-    load(ident, p =>
-      TxStore.snapshotAt(spark, p, TxStore.versionAtTimestamp(spark, p, timestamp / 1000L)))
-
-  override def tableExists(ident: Identifier): Boolean =
-    TxStore.isTable(spark, tablePath(ident))
 
   override def createTable(
       ident: Identifier,
@@ -191,37 +167,14 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
     new GraftTable(spark, path, TxStore.snapshot(spark, path))
   }
 
-  override def alterTable(ident: Identifier, changes: TableChange*): Table = {
-    val path = tablePath(ident)
-    if (!TxStore.isTable(spark, path)) throw new NoSuchTableException(ident)
-    // property changes batch into ONE commit each way (ALTER … SET
-    // TBLPROPERTIES is atomic multi-pair on the log); structural
-    // changes apply in statement order
-    val sets = changes.collect { case s: TableChange.SetProperty =>
-      s.property -> s.value }
-    val unsets = changes.collect { case r: TableChange.RemoveProperty => r.property }
-    if (sets.nonEmpty) TxStore.setTableProperties(spark, path, sets): Unit
-    if (unsets.nonEmpty)
-      TxStore.unsetTableProperties(spark, path, unsets, ifExists = true): Unit
-    changes.foreach {
-      case _: TableChange.SetProperty | _: TableChange.RemoveProperty => ()
-      case a: TableChange.AddColumn =>
-        require(a.fieldNames.length == 1,
-          s"graft catalog: nested ADD COLUMN is not supported (${a.fieldNames.mkString(".")})")
-        TxStore.addColumn(spark, path, a.fieldNames.head, a.dataType): Unit
-      case r: TableChange.RenameColumn =>
-        require(r.fieldNames.length == 1,
-          s"graft catalog: nested RENAME COLUMN is not supported (${r.fieldNames.mkString(".")})")
-        TxStore.renameColumn(spark, path, r.fieldNames.head, r.newName): Unit
-      case d: TableChange.DeleteColumn =>
-        require(d.fieldNames.length == 1,
-          s"graft catalog: nested DROP COLUMN is not supported (${d.fieldNames.mkString(".")})")
-        TxStore.dropColumn(spark, path, d.fieldNames.head): Unit
-      case other => throw new UnsupportedOperationException(
-        s"graft catalog: unsupported ALTER ($other) — supported: SET/UNSET " +
-          "TBLPROPERTIES, ADD/RENAME/DROP COLUMN")
-    }
-    loadTable(ident)
+  /** Declaring table-constraint support (for ALTER … ADD CONSTRAINT)
+    * routes `CREATE TABLE … CONSTRAINT` here too; refuse it rather than
+    * create the table without its constraints. */
+  override def createTable(ident: Identifier, info: TableInfo): Table = {
+    if (info.constraints.nonEmpty) throw new UnsupportedOperationException(
+      "graft catalog: CREATE TABLE … CONSTRAINT is not supported — create the " +
+        "table, then ALTER TABLE … ADD CONSTRAINT name CHECK (…)")
+    createTable(ident, info.schema, info.partitions, info.properties)
   }
 
   /** DROP deletes the directory — data, log, history (managed-table
@@ -297,11 +250,167 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
   }
 }
 
+/** A TableCatalog whose names resolve to TxStore table directories:
+  * the load, time-travel and ALTER code every graft catalog shares,
+  * keyed by path. An implementation only maps an identifier to its
+  * directory ([[locate]]) — the warehouse layout ([[GraftCatalog]]) or
+  * the sql step's `--tx` names ([[TxCatalog]]).
+  *
+  * Time travel plans through the `loadTable` overloads: `VERSION AS OF
+  * n` pins [[TxStore.snapshotAt]], `TIMESTAMP AS OF ts` resolves
+  * through [[TxStore.versionAtTimestamp]] — the same snapshots
+  * `option("versionAsOf")` pins on the path surface. A historical
+  * snapshot, and a name pinned to a version, load read-only. */
+trait PathCatalog extends TableCatalog {
+
+  protected def spark: SparkSession = SparkSession.active
+
+  /** The table directory `ident` names and the version it is pinned to
+    * (None = the current snapshot); None when the name is unknown. */
+  protected def locate(ident: Identifier): Option[(String, Option[Long])]
+
+  private def located(ident: Identifier): (String, Option[Long]) =
+    locate(ident).filter(l => TxStore.isTable(spark, l._1))
+      .getOrElse(throw new NoSuchTableException(ident))
+
+  private def at(path: String, version: Long): GraftTable =
+    new GraftTable(spark, path, TxStore.snapshotAt(spark, path, version), writable = false)
+
+  override def capabilities(): java.util.Set[TableCatalogCapability] =
+    java.util.EnumSet.of(TableCatalogCapability.SUPPORT_TABLE_CONSTRAINT)
+
+  override def loadTable(ident: Identifier): Table = {
+    val (path, pin) = located(ident)
+    pin.fold(new GraftTable(spark, path, TxStore.snapshot(spark, path)))(at(path, _))
+  }
+
+  /** `VERSION AS OF` (version strings are commit numbers — the only
+    * version axis the log has). */
+  override def loadTable(ident: Identifier, version: String): Table = {
+    val v =
+      try version.trim.toLong
+      catch { case _: NumberFormatException => throw new IllegalArgumentException(
+        s"graft catalog: VERSION AS OF takes a commit number, got '$version'") }
+    at(located(ident)._1, v)
+  }
+
+  /** `TIMESTAMP AS OF` — Spark hands MICROseconds since epoch; the
+    * log's clock is commit-file mtimes (millis). */
+  override def loadTable(ident: Identifier, timestamp: Long): Table = {
+    val path = located(ident)._1
+    at(path, TxStore.versionAtTimestamp(spark, path, timestamp / 1000L))
+  }
+
+  override def tableExists(ident: Identifier): Boolean =
+    locate(ident).exists(l => TxStore.isTable(spark, l._1))
+
+  /** ALTER TABLE onto the schema-evolution API. Every change is checked
+    * against these rules before anything commits, so a statement they
+    * refuse leaves no commit:
+    *
+    *   - SET / UNSET TBLPROPERTIES: one commit each (atomic multi-pair);
+    *   - ADD COLUMN: nullable top-level columns only — NOT NULL, DEFAULT,
+    *     COMMENT and FIRST/AFTER refuse (old files lack the column and
+    *     must read NULL, and a default would rewrite what history's rows
+    *     mean);
+    *   - DROP COLUMN: every named column in ONE [[TxStore.dropColumns]]
+    *     commit, so a refusal on one name leaves no earlier drop
+    *     durable; IF EXISTS skips absent names;
+    *   - RENAME COLUMN: metadata-only under column mapping;
+    *   - ADD CONSTRAINT: CHECK only, validated against existing rows;
+    *     DROP CONSTRAINT: IF EXISTS on an absent name commits nothing,
+    *     CASCADE refuses.
+    *
+    * Anything else refuses with the reason. */
+  override def alterTable(ident: Identifier, changes: TableChange*): Table = {
+    val (path, pin) = located(ident)
+    pin.foreach(v => refuse(s"'${ident.name}' is pinned to v$v — time-travel names are read-only"))
+    val snap = TxStore.snapshot(spark, path)
+    val columns = TxStore.logicalSchema(snap).map(_.fieldNames.map(lc).toSet).getOrElse(Set.empty)
+    val properties = snap.properties.map(p => lc(p._1)).toSet
+    def topLevel(names: Array[String], what: String): String =
+      if (names.length == 1) names.head
+      else refuse(s"$what: nested fields are not supported (${names.mkString(".")})")
+    // the whole statement validates here; the commits run after
+    val sets = ArrayBuffer.empty[(String, String)]
+    val unsets, drops = ArrayBuffer.empty[String]
+    val commits: Seq[() => Long] = changes.flatMap {
+      case s: TableChange.SetProperty =>
+        if (Set(TableCatalog.PROP_LOCATION, TableCatalog.PROP_PROVIDER).contains(lc(s.property)))
+          refuse(s"unsupported ALTER (SET ${s.property}) — a table stays at its " +
+            "directory and in the graft format")
+        sets += s.property -> s.value
+        None
+      case r: TableChange.RemoveProperty =>
+        // an absent key was refused at planning unless IF EXISTS
+        // ([[UnsetPropertiesCheck]]); it commits nothing
+        if (properties(lc(r.property))) unsets += r.property
+        None
+      case a: TableChange.AddColumn =>
+        val n = topLevel(a.fieldNames, "ADD COLUMN")
+        if (!a.isNullable) refuse(s"ADD COLUMN $n: NOT NULL is not supported — every log " +
+          "field is nullable (old files lack the column and must read NULL)")
+        if (a.defaultValue != null) refuse(s"ADD COLUMN $n: DEFAULT is not supported — a " +
+          "default would silently rewrite what history's rows mean")
+        if (a.comment != null) refuse(s"ADD COLUMN $n: COMMENT is not supported")
+        if (a.position != null) refuse(s"ADD COLUMN $n: FIRST/AFTER positions are not supported")
+        Some(() => TxStore.addColumn(spark, path, n, a.dataType))
+      case r: TableChange.RenameColumn =>
+        val n = topLevel(r.fieldNames, "RENAME COLUMN")
+        Some(() => TxStore.renameColumn(spark, path, n, r.newName))
+      case d: TableChange.DeleteColumn =>
+        val n = topLevel(d.fieldNames, "DROP COLUMN")
+        if (!d.ifExists || columns(lc(n))) drops += n
+        None
+      case a: TableChange.AddConstraint => a.constraint match {
+        case c: Check => Some(() => TxStore.addConstraint(spark, path, c.name, c.predicateSql))
+        case other => refuse(s"only CHECK constraints are supported, got ${other.toDDL}")
+      }
+      case d: TableChange.DropConstraint =>
+        if (d.mode == TableChange.DropConstraint.Mode.CASCADE)
+          refuse("DROP CONSTRAINT CASCADE is not supported")
+        if (d.ifExists && !snap.constraints.exists(_._1 == d.name)) None
+        else Some(() => TxStore.dropConstraint(spark, path, d.name))
+      case other => refuse(s"unsupported ALTER ($other) — supported: SET/UNSET " +
+        "TBLPROPERTIES, ADD/RENAME/DROP COLUMN, ADD/DROP CONSTRAINT (CHECK)")
+    }
+    if (sets.nonEmpty) TxStore.setTableProperties(spark, path, sets.toSeq): Unit
+    if (unsets.nonEmpty) TxStore.unsetTableProperties(spark, path, unsets.toSeq): Unit
+    // every dropped column in ONE commit: a refusal on any name (last
+    // column, constraint reference) leaves no earlier drop durable
+    if (drops.nonEmpty) TxStore.dropColumns(spark, path, drops.toSeq): Unit
+    commits.foreach(_())
+    loadTable(ident)
+  }
+
+  private def lc(s: String) = s.toLowerCase(Locale.ROOT)
+
+  private def refuse(msg: String): Nothing =
+    throw new IllegalArgumentException(s"graft catalog: $msg")
+}
+
+/** `UNSET TBLPROPERTIES` without IF EXISTS refuses a key the graft
+  * table does not carry. Spark hands a v2 catalog only the keys
+  * (`TableChange.RemoveProperty` has no IF EXISTS), so the check runs
+  * at planning, where the statement still carries it; it plans nothing
+  * itself. Registered by [[graft.functions.GraftExtensions]]. */
+object UnsetPropertiesCheck extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case UnsetTableProperties(ResolvedTable(_, _, t: GraftTable, _), keys, false) =>
+      val have = t.snap.properties.map(_._1.toLowerCase(Locale.ROOT)).toSet
+      val missing = keys.filterNot(k => have(k.toLowerCase(Locale.ROOT)))
+      require(missing.isEmpty, s"UNSET TBLPROPERTIES: no such key(s) " +
+        s"${missing.mkString(", ")} (UNSET TBLPROPERTIES IF EXISTS skips absent keys)")
+      Nil
+    case _ => Nil
+  }
+}
+
 object GraftCatalog {
   /** Resolve catalog-qualified name parts (`catalog.ns….table`) to the
     * table directory — Some only when `parts.head` names a registered
     * [[GraftCatalog]] and the directory is a live table. Shared by
-    * [[SqlDml]] and [[SqlResolve]] so DML and maintenance SQL text
+    * [[SqlDml]] and [[SqlMaint]] so DML and maintenance SQL text
     * address exactly the tables the catalog plans against. */
   def resolvePath(spark: SparkSession, parts: Seq[String]): Option[String] =
     if (parts.length < 2) None

@@ -35,8 +35,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *     re-plans its input partitions against them. That is the plan
   *     every star join over a 100 TB fact table wants: the dim
   *     predicate prunes FACT FILES before a single task launches,
-  *     which the pre-analysis SQL rewrite ([[SqlRead]]) structurally
-  *     cannot do (VERDICT r14 #1).
+  *     which no rewrite before analysis can do (the dim's surviving
+  *     keys exist only once its filter runs; VERDICT r14 #1).
   *   - Reading delegates to Spark's own v2 parquet reader factory
   *     (vectorized, whole-stage-codegen'd, row-group pushdown) —
   *     see [[org.apache.spark.sql.graft.DsvBridge]]. Splits are sized
@@ -196,13 +196,15 @@ private[sources] object GraftDataSource {
 
 /** One pinned snapshot of a transactional table, as a v2 Table.
   * `exists = false` marks a CREATABLE table (fresh path): writes may
-  * establish it, reads refuse at scan build. */
+  * establish it, reads refuse at scan build. `writable = false` marks a
+  * historical snapshot a catalog loaded: reads only. */
 final class GraftTable(
     val spark: SparkSession,
     val path: String,
     val snap: TxStore.Snapshot,
     val exists: Boolean = true,
-    val mergeSchema: Boolean = false) extends Table with SupportsRead with SupportsWrite
+    val mergeSchema: Boolean = false,
+    val writable: Boolean = true) extends Table with SupportsRead with SupportsWrite
   with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
   with org.apache.spark.sql.connector.catalog.SupportsDelete {
 
@@ -245,6 +247,7 @@ final class GraftTable(
     * keeps exact resolution either way — its frame reaches the write
     * already renamed to the table schema. */
   override def capabilities(): java.util.Set[TableCapability] = {
+    if (!writable) return java.util.EnumSet.of(TableCapability.BATCH_READ)
     val caps = java.util.EnumSet.of(
       TableCapability.BATCH_READ,
       // BATCH_WRITE routes DataFrameWriter.save onto the v2 plans
@@ -289,11 +292,15 @@ final class GraftTable(
     * stay on [[TxStore.delete]] / SQL DML, where the rewrite is the
     * documented contract. The freshest snapshot decides (not this
     * pinned one): commit-time conflict detection in TxStore still
-    * guards the race. */
-  override def canDeleteWhere(filters: Array[Filter]): Boolean =
+    * guards the race. A read-only snapshot refuses loudly here — for
+    * TRUNCATE TABLE too, whose default would otherwise change nothing
+    * in silence. */
+  override def canDeleteWhere(filters: Array[Filter]): Boolean = {
+    require(writable, s"graft: $path @v${snap.version} is a historical snapshot — read-only")
     exists && (filters.forall(_.isInstanceOf[sources.AlwaysTrue]) ||
       scala.util.Try(TxStore.canPartitionDelete(spark, path,
         filters.map(GraftWrites.exactColumn).reduce(_ && _))).getOrElse(false))
+  }
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
     require(exists, s"graft: not a transactional table: $path")

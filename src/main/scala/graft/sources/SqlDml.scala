@@ -10,10 +10,11 @@ import org.apache.spark.sql.{Column, SparkSession}
 /** SQL DML (DELETE / UPDATE / MERGE) against TxStore tables — the write
   * half of the SQL entry point (`--step sql --tx name=path`).
   *
-  * Catalyst PARSES these statements but classic Spark cannot EXECUTE
-  * them against a file-backed view (DML execution is a DataSource-v2
-  * capability, unsupported by design on temp views) — so the statement
-  * is parsed with Spark's own SQL parser and the resulting logical plan
+  * Catalyst PARSES these statements but executes UPDATE, MERGE and
+  * row-level DELETE only on v2 tables with row-level operations, which
+  * graft tables do not offer (their native DELETE is metadata-only) —
+  * so the statement is parsed with Spark's own SQL parser and the
+  * resulting logical plan
   * is translated to the TxStore API: `DeleteFromTable` →
   * [[TxStore.delete]], `UpdateTable` → [[TxStore.update]],
   * `MergeIntoTable` → [[TxStore.mergeConditional]]. The text a Delta
@@ -354,7 +355,7 @@ object SqlDml {
         val name = u.multipartIdentifier.mkString(".")
         tx.collectFirst { case (n, p) if n.equalsIgnoreCase(name) => p } match {
           case Some(path) => (name, None, path)
-          case None => catalogTarget(u.multipartIdentifier) match {
+          case None => GraftCatalog.resolvePath(SparkSession.active, u.multipartIdentifier) match {
             // catalog names resolve to the SAME path the catalog plans
             // against, so UPDATE/MERGE text (which classic Spark cannot
             // execute on a v2 relation without RowLevelOperation plans)
@@ -371,12 +372,6 @@ object SqlDml {
       case other => refuse(s"$op target must be a named tx table, got ${other.nodeName}")
     }
 
-  /** Resolve `catalog.ns….table` through a registered [[GraftCatalog]]
-    * to its table directory — only when the catalog exists, is a graft
-    * catalog, and the directory is a live table. */
-  private def catalogTarget(parts: Seq[String]): Option[String] =
-    GraftCatalog.resolvePath(SparkSession.active, parts)
-
   /** The alias a USING source is visible under (its SubqueryAlias, or
     * the relation's own name). */
   private def aliasOf(plan: LogicalPlan): Option[String] = plan match {
@@ -389,8 +384,8 @@ object SqlDml {
   private def qualifier(u: UnresolvedAttribute): Option[String] =
     if (u.nameParts.length >= 2) Some(u.nameParts.head.toLowerCase) else None
 
-  /** Flatten an AND tree (shared with [[SqlRead]]). */
-  private[sources] def conjuncts(e: Expression): Seq[Expression] = e match {
+  /** Flatten an AND tree. */
+  private def conjuncts(e: Expression): Seq[Expression] = e match {
     case org.apache.spark.sql.catalyst.expressions.And(l, r) => conjuncts(l) ++ conjuncts(r)
     case other => Seq(other)
   }

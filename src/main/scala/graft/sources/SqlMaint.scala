@@ -39,7 +39,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *     the COMMIT LOG's file names, zero directory listings.
   *   - `SHOW TBLPROPERTIES v` → the table's property set as a
   *     (key, value) frame — the log's latest-wins property state
-  *     (set/unset via `ALTER TABLE … [UN]SET TBLPROPERTIES`, SqlDdl).
+  *     (set/unset via `ALTER TABLE … [UN]SET TBLPROPERTIES`, which
+  *     plans through the catalog's `alterTable`).
   *   - `RESTORE [TABLE] v TO VERSION AS OF n | TO TIMESTAMP AS OF <expr>`
   *     → [[TxStore.restore]] (a NEW commit re-adding the target
   *     version's live set — history is append-only, so the restore
@@ -64,8 +65,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *
   * Each statement answers a SMALL summary frame (O(1) rows, or
   * O(retained commits) for DESCRIBE HISTORY) — never table data; the
-  * CLI lands it as the step artifact. Targets must be `--tx`-registered
-  * CURRENT views: a time-travel view (`@vN` / VERSION AS OF) is
+  * CLI lands it as the step artifact. Targets must be current `--tx`
+  * names or graft-catalog names: a time-travel name (`@vN`) is
   * read-only and never enters the addressable set, same rule as DML.
   * Refusals are loud, never silent no-ops. */
 object SqlMaint {
@@ -119,8 +120,19 @@ object SqlMaint {
       !isHistory && !isShowParts && !isClone)
       return None
 
-    def resolve(view: String): (String, String) =
-      SqlResolve.view(tx, view).getOrElse(refuse(SqlResolve.unknown(tx, view)))
+    // a --tx name (case-insensitive), else a catalog-qualified name
+    // resolved to the SAME path the catalog plans against — OPTIMIZE/
+    // VACUUM/RESTORE/HISTORY/… address graft.db.t like any Delta user
+    // would address their catalog
+    def resolve(view: String): (String, String) = {
+      val v = view.trim
+      tx.find(_._1.equalsIgnoreCase(v))
+        .orElse(GraftCatalog.resolvePath(spark,
+          v.split('.').toSeq.map(_.trim).filter(_.nonEmpty)).map((v, _)))
+        .getOrElse(refuse(s"'$v' is neither a --tx-registered table nor a graft-catalog " +
+          "table (time-travel names are read-only); registered: " +
+          (if (tx.isEmpty) "none" else tx.keys.toSeq.sorted.mkString(", "))))
+    }
     def one(cols: (String, Column)*): DataFrame =
       cols.foldLeft(spark.range(1).toDF())((df, c) => df.withColumn(c._1, c._2)).drop("id")
     def verCol(v: Option[Long]): Column =
@@ -243,10 +255,10 @@ object SqlMaint {
 
       case RestoreTimestampRe(viewRaw, tsExpr) =>
         val (view, path) = resolve(viewRaw)
-        // same resolution as SqlRead's TIMESTAMP AS OF: evaluate the
-        // expression through the session (a literal, date arithmetic —
-        // whatever casts to timestamp), then the latest version at or
-        // before it by commit-file mtime
+        // evaluate the expression through the session (a literal, date
+        // arithmetic — whatever casts to timestamp), then the latest
+        // version at or before it by commit-file mtime — the clock a
+        // catalog's TIMESTAMP AS OF resolves against
         val ts = spark.range(1).select(expr(tsExpr).cast("timestamp")).head.getTimestamp(0)
         if (ts == null) refuse("RESTORE: TIMESTAMP AS OF expression evaluated to NULL")
         val target = TxStore.versionAtTimestamp(spark, path, ts.getTime)
@@ -299,27 +311,4 @@ object SqlMaint {
 
   private def refuse(msg: String): Nothing =
     throw new IllegalArgumentException(s"sql maintenance: $msg")
-}
-
-/** Case-insensitive `--tx` view resolution, shared by the maintenance
-  * and DDL dispatchers — returns the REGISTERED key, never the name as
-  * typed, so the committing statement re-registers the temp view under
-  * the right name (ADVICE r14: the two private copies drifted once and
-  * needed the identical fix twice). */
-private[sources] object SqlResolve {
-  def view(tx: Map[String, String], name: String): Option[(String, String)] = {
-    val v = name.trim
-    tx.get(v).map((v, _))
-      .orElse(tx.find(_._1.equalsIgnoreCase(v)).map(e => (e._1, e._2)))
-      // catalog-qualified names resolve to the SAME path the catalog
-      // plans against — OPTIMIZE/VACUUM/RESTORE/HISTORY/… address
-      // graft.db.t like any Delta user would address their catalog
-      .orElse(GraftCatalog.resolvePath(
-        org.apache.spark.sql.SparkSession.active,
-        v.split('.').toSeq.map(_.trim).filter(_.nonEmpty)).map((v, _)))
-  }
-  def unknown(tx: Map[String, String], name: String): String =
-    s"'${name.trim}' is neither a --tx-registered table nor a graft-catalog " +
-      s"table (time-travel views are read-only); registered: " +
-      (if (tx.isEmpty) "none" else tx.keys.toSeq.sorted.mkString(", "))
 }

@@ -1274,16 +1274,6 @@ object TxStore {
   def tableConstraints(spark: SparkSession, path: String): Seq[(String, String)] =
     snapshot(spark, path).constraints
 
-  /** Register the table's current snapshot as a temp view — the SQL
-    * entry point's bridge to transactional tables (`--step sql --tx
-    * name=path`). The view captures THIS snapshot's plan (snapshot
-    * isolation: later commits don't leak into an already-registered
-    * view; re-register to advance). */
-  def registerView(spark: SparkSession, path: String, name: String,
-      version: Option[Long] = None): Unit =
-    version.fold(read(spark, path))(readAt(spark, path, _))
-      .createOrReplaceTempView(name)
-
   /** The table's hive-style partition columns (LOGICAL names, in
     * partition order) — empty for flat tables. */
   def tablePartitioning(spark: SparkSession, path: String): Seq[String] = {
@@ -4231,7 +4221,7 @@ object TxStore {
     * cols) per file, memoized per dir), then the per-file stats walk —
     * short-circuited, so a partition-refuted file never pays the stats
     * check. Shared by [[readWhere]]/[[readWhereAt]], [[pruneFiles]] and
-    * the SQL read path ([[SqlRead]]). */
+    * the DSv2 scan ([[GraftScanBuilder]], which SQL reads plan). */
   private[sources] def pruneSnapFiles(
       snap: Snapshot,
       pred: org.apache.spark.sql.catalyst.expressions.Expression): (Seq[String], Seq[String]) =
@@ -4277,21 +4267,6 @@ object TxStore {
     })
     if (counts.exists(_.isEmpty)) None else Some(counts.flatten.sum)
   }
-
-  /** Scan `files` of `snap` WITHOUT applying any predicate — the SQL
-    * read path embeds this under the statement's own Filter node, so
-    * the predicate evaluates exactly ONCE (log pruning is an
-    * optimization, never a substitute for the filter: conjuncts the
-    * stats walk cannot interpret simply keep their files). An empty
-    * file set reads as an empty frame with the snapshot's schema. */
-  private[sources] def readSnapFiles(
-      spark: SparkSession, path: String, snap: Snapshot, files: Seq[String]): DataFrame =
-    if (files.isEmpty) {
-      val schema = logicalSchema(snap).getOrElse(org.apache.spark.sql.types.StructType(Nil))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else
-      readFiles(spark, path, files, snap.schema, snap.dv, dvp = snap.dvp,
-        mapping = snap.mapping)
 
   /** Stats-pruned read: `read(...).filter(predicate)` semantics, with
     * files whose logged ranges refute the predicate never entering the

@@ -92,6 +92,65 @@ class CliSpec extends SparkSpec {
     }
   }
 
+  test("sql step: a --tx name shadows the fixture view of that name for reads and writes") {
+    import org.apache.spark.sql.functions.col
+    val table = s"${tmp()}/evshadow"
+    val ev = Tables.events(spark, sf("sf0.001"))
+    val mine = ev.filter(col("event_id") % 5 === 0)
+    graft.sources.TxStore.append(mine, table)
+    def step(sql: String) = {
+      val out = tmp()
+      Main.run(spark, Map("step" -> "sql", "data-dir" -> sf("sf0.001"), "out-dir" -> out,
+        "tx" -> s"events=$table", "sql" -> sql))
+      spark.read.parquet(s"$out/sql_result")
+    }
+    val n = mine.count()
+    assert(n < ev.count())
+    assert(step("SELECT COUNT(*) FROM events").as[Long].head === n)
+    // a write to the name lands in the same table a read then sees
+    step("DELETE FROM events WHERE event_id % 10 = 0")
+    val left = mine.filter(col("event_id") % 10 =!= 0).count()
+    assert(left < n && graft.sources.TxStore.read(spark, table).count() === left)
+    assert(step("SELECT COUNT(*) FROM events").as[Long].head === left)
+    step("ALTER TABLE events ADD COLUMN note STRING")
+    assert(graft.sources.TxStore.read(spark, table).columns.contains("note"))
+    // the other fixture views still resolve
+    assert(step("SELECT COUNT(*) FROM sessions").as[Long].head > 0)
+  }
+
+  test("sql step: names outside --tx resolve in Spark's session catalog") {
+    val dir = tmp()
+    val table = s"$dir/rtx"
+    graft.sources.TxStore.append(Tables.events(spark, sf("sf0.001")).limit(10), table)
+    def step(sql: String) = {
+      val out = tmp()
+      Main.run(spark, Map("step" -> "sql", "data-dir" -> sf("sf0.001"), "out-dir" -> out,
+        "tx" -> s"rtx=$table", "sql" -> sql))
+      spark.read.parquet(s"$out/sql_result")
+    }
+    spark.sql(s"CREATE TABLE cli_meta USING parquet LOCATION '$dir/meta' " +
+      "AS SELECT id FROM range(3)")
+    try {
+      // a metastore table, unqualified and database-qualified, beside a --tx name
+      assert(step("SELECT (SELECT COUNT(*) FROM cli_meta) AS a, " +
+        "(SELECT COUNT(*) FROM default.cli_meta) AS b, (SELECT COUNT(*) FROM rtx) AS c")
+        .as[(Long, Long, Long)].head === ((3L, 3L, 10L)))
+      assert(step("SHOW TABLES").select("tableName").as[String].collect().toSet
+        .intersect(Set("cli_meta", "rtx")) === Set("cli_meta", "rtx"))
+      // a plain CREATE TABLE lands in the metastore the caller sees
+      graft.sources.TxCatalog.session(spark, graft.sources.TxCatalog.parse(spark, s"rtx=$table"))
+        .sql(s"CREATE TABLE cli_made (a INT) USING parquet LOCATION '$dir/made'")
+      assert(spark.catalog.tableExists("cli_made"))
+      assert(step("SELECT current_catalog()").as[String].head === "spark_catalog")
+      // a --tx name is not a metastore table: it cannot be dropped
+      intercept[UnsupportedOperationException](step("DROP TABLE rtx"))
+      assert(graft.sources.TxStore.read(spark, table).count() === 10)
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS cli_meta")
+      spark.sql("DROP TABLE IF EXISTS cli_made")
+    }
+  }
+
   test("sql step: DELETE and UPDATE DML on a --tx view translate to the TxStore API") {
     import org.apache.spark.sql.functions.col
     val dir = tmp()
@@ -148,19 +207,20 @@ class CliSpec extends SparkSpec {
     graft.sources.TxStore.append(ev.filter(col("event_id") % 10 =!= 0), table)
     val twin = s"$dir/mergetwin"
     graft.sources.TxStore.append(ev.filter(col("event_id") % 10 =!= 0), twin)
-    // the update wave as a temp view for USING
-    ev.filter(col("event_id") % 5 === 0)
-      .withColumn("value", -col("value"))
-      .createOrReplaceTempView("wave")
+    // the update wave as a --tx table for USING (the step's session sees
+    // the fixture views and --tx names, not the caller's temp views)
+    val wave = s"$dir/wave"
+    graft.sources.TxStore.append(
+      ev.filter(col("event_id") % 5 === 0).withColumn("value", -col("value")), wave)
     Main.run(spark, Map(
       "step" -> "sql", "data-dir" -> sf("sf0.001"), "out-dir" -> tmp(),
-      "tx" -> s"evtx=$table",
+      "tx" -> s"evtx=$table,wave=$wave",
       "sql" -> ("MERGE INTO evtx AS t USING wave AS s ON t.event_id = s.event_id " +
         "WHEN MATCHED AND t.event_type = 'click' THEN UPDATE SET * " +
         "WHEN MATCHED AND t.event_type = 'purchase' THEN DELETE " +
         "WHEN NOT MATCHED AND s.user_id % 2 = 0 THEN INSERT *")))
     graft.sources.TxStore.mergeConditional(spark, twin,
-      spark.table("wave"), keys = Seq("event_id"),
+      graft.sources.TxStore.read(spark, wave), keys = Seq("event_id"),
       matchedUpdate = Some(col("t.event_type") === "click"),
       matchedDelete = Some(col("t.event_type") === "purchase"),
       notMatchedInsert = Some(col("s.user_id") % 2 === 0))
@@ -175,7 +235,7 @@ class CliSpec extends SparkSpec {
     // untranslatable shapes refuse with the reason, not a silent no-op
     val ex = intercept[IllegalArgumentException] {
       Main.run(spark, Map("step" -> "sql", "data-dir" -> sf("sf0.001"),
-        "out-dir" -> tmp(), "tx" -> s"evtx=$table",
+        "out-dir" -> tmp(), "tx" -> s"evtx=$table,wave=$wave",
         "sql" -> ("MERGE INTO evtx t USING wave s ON t.event_id > s.event_id " +
           "WHEN MATCHED THEN UPDATE SET *")))
     }
@@ -244,11 +304,13 @@ class CliSpec extends SparkSpec {
         (0L to 9L).map(i => (i, s"p$i", i.toDouble)).toDF("id", "payload", "score"), path)
     val table = s"$dir/clausetbl"; seed(table)
     val twin = s"$dir/clausetwin"; seed(twin)
-    (6L to 12L).map(i => (i, s"s$i", i * 10.0)).toDF("id", "payload", "score")
-      .createOrReplaceTempView("cwave")
+    val cwave = s"$dir/cwave"
+    graft.sources.TxStore.append(
+      (6L to 12L).map(i => (i, s"s$i", i * 10.0)).toDF("id", "payload", "score"), cwave)
+    val tx = s"ct=$table,cwave=$cwave"
     Main.run(spark, Map(
       "step" -> "sql", "data-dir" -> sf("sf0.001"), "out-dir" -> tmp(),
-      "tx" -> s"ct=$table",
+      "tx" -> tx,
       "sql" -> ("MERGE INTO ct AS t USING cwave AS s ON t.id = s.id " +
         "WHEN MATCHED AND t.id < 8 THEN UPDATE SET payload = t.payload || '+' || s.payload, " +
         "  score = t.score + s.score " +
@@ -256,7 +318,8 @@ class CliSpec extends SparkSpec {
         "WHEN NOT MATCHED AND s.id <= 11 THEN INSERT (id, score) VALUES (s.id, s.score) " +
         "WHEN NOT MATCHED BY SOURCE AND t.id <= 1 THEN DELETE " +
         "WHEN NOT MATCHED BY SOURCE AND t.id <= 3 THEN UPDATE SET payload = 'stale'")))
-    graft.sources.TxStore.mergeClauses(spark, twin, spark.table("cwave"), Seq("id"), Seq(
+    graft.sources.TxStore.mergeClauses(spark, twin, graft.sources.TxStore.read(spark, cwave),
+      Seq("id"), Seq(
       MatchedUpdate(Some(col("t.id") < 8L), Some(Map(
         "payload" -> concat(col("t.payload"), lit("+"), col("s.payload")),
         "score" -> (col("t.score") + col("s.score"))))),
@@ -274,7 +337,7 @@ class CliSpec extends SparkSpec {
     // a BY SOURCE clause referencing the source refuses loudly
     val ex = intercept[IllegalArgumentException] {
       Main.run(spark, Map("step" -> "sql", "data-dir" -> sf("sf0.001"),
-        "out-dir" -> tmp(), "tx" -> s"ct=$table",
+        "out-dir" -> tmp(), "tx" -> tx,
         "sql" -> ("MERGE INTO ct t USING cwave s ON t.id = s.id " +
           "WHEN NOT MATCHED BY SOURCE AND s.score > 0 THEN DELETE")))
     }
@@ -282,7 +345,7 @@ class CliSpec extends SparkSpec {
     // duplicate SET targets inside a merge clause refuse
     val ex2 = intercept[IllegalArgumentException] {
       Main.run(spark, Map("step" -> "sql", "data-dir" -> sf("sf0.001"),
-        "out-dir" -> tmp(), "tx" -> s"ct=$table",
+        "out-dir" -> tmp(), "tx" -> tx,
         "sql" -> ("MERGE INTO ct t USING cwave s ON t.id = s.id " +
           "WHEN MATCHED THEN UPDATE SET payload = 'a', payload = 'b'")))
     }
@@ -330,22 +393,26 @@ class CliSpec extends SparkSpec {
     val (_, kept, skipped) =
       graft.sources.TxStore.pruneFiles(spark, table, col("event_id") <= 100L)
     assert(skipped.nonEmpty, "range layout + selective predicate must skip files")
-    val planned = graft.sources.SqlRead.plan(spark,
-      "SELECT event_id, value FROM rtx WHERE rtx.event_id <= 100",
-      Seq(("rtx", table, None))).get
-    assert(planned.rewrites.map(r => (r.kept.toSet, r.skipped.toSet))
-      === Seq((kept.toSet, skipped.toSet)),
+    val session = graft.sources.TxCatalog.session(spark,
+      graft.sources.TxCatalog.parse(spark, s"rtx=$table"))
+    def scanned(sql: String): (Long, graft.sources.GraftScanEvents.Planned) = {
+      graft.sources.GraftScanEvents.clear(table)
+      val n = session.sql(sql).count()
+      (n, graft.sources.GraftScanEvents.recent(table).find(_.kept.nonEmpty)
+        .getOrElse(fail(s"no planning event for: $sql")))
+    }
+    val (n, planned) = scanned("SELECT event_id, value FROM rtx WHERE rtx.event_id <= 100")
+    assert((planned.kept.toSet, planned.skipped.toSet) === ((kept.toSet, skipped.toSet)),
       "SQL pruning must decide exactly as readWhere's stats walk")
-    // …and hash-match the unpruned view read
-    graft.sources.TxStore.registerView(spark, table, "rtx")
-    val viaView = spark.sql("SELECT event_id, value FROM rtx WHERE event_id <= 100")
-      .as[(Long, Double)].collect().toSet
-    assert(planned.df.as[(Long, Double)].collect().toSet === viaView && viaView.nonEmpty)
+    // …and return the rows of an unpruned read
+    val viaApi = graft.sources.TxStore.read(spark, table).filter(col("event_id") <= 100L)
+      .select("event_id", "value").as[(Long, Double)].collect().toSet
+    assert(session.sql("SELECT event_id, value FROM rtx WHERE event_id <= 100")
+      .as[(Long, Double)].collect().toSet === viaApi && n === viaApi.size.toLong && n > 0)
     // a conjunct the walk can't interpret weakens pruning, never drops rows
-    val mixed = graft.sources.SqlRead.plan(spark,
-      "SELECT event_id FROM rtx WHERE event_id <= 100 AND length(event_type) > 0",
-      Seq(("rtx", table, None))).get
-    assert(mixed.df.count() === viaView.size)
+    val (mixed, _) = scanned(
+      "SELECT event_id FROM rtx WHERE event_id <= 100 AND length(event_type) > 0")
+    assert(mixed === viaApi.size.toLong)
     // VERSION AS OF n ≡ readAt(n) ≡ the @vN-flag registration
     graft.sources.TxStore.delete(spark, table, col("event_type") === "view") // v2
     val out = tmp()
@@ -368,11 +435,10 @@ class CliSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out2/sql_result").head.getLong(0)
       === graft.sources.TxStore.read(spark, table).count())
     // pruning composes with time travel: the v1 filter must skip files too
-    val tt = graft.sources.SqlRead.plan(spark,
-      "SELECT event_id FROM rtx VERSION AS OF 1 WHERE event_id <= 100",
-      Seq(("rtx", table, None))).get
-    assert(tt.rewrites.head.skipped.nonEmpty && tt.rewrites.head.version === Some(1L))
-    assert(tt.df.count() ===
+    val (prunedV1, tt) =
+      scanned("SELECT event_id FROM rtx VERSION AS OF 1 WHERE event_id <= 100")
+    assert(tt.version === 1L && tt.skipped.nonEmpty)
+    assert(prunedV1 ===
       graft.sources.TxStore.readAt(spark, table, 1L).filter(col("event_id") <= 100L).count())
   }
 
@@ -462,6 +528,14 @@ class CliSpec extends SparkSpec {
         "sql" -> "DELETE FROM then WHERE event_id = 7"))
     }
     assert(ex.getMessage.contains("read-only"))
+    // …and so does ALTER
+    val exAlter = intercept[org.apache.spark.SparkException] {
+      Main.run(spark, Map("step" -> "sql", "data-dir" -> sf("sf0.001"),
+        "out-dir" -> tmp(), "tx" -> s"then=$table@v1",
+        "sql" -> "ALTER TABLE then SET TBLPROPERTIES ('k'='v')"))
+    }
+    assert(exAlter.getMessage.contains("read-only"), exAlter.getMessage)
+    assert(graft.sources.TxStore.snapshot(spark, table).version === 2L)
   }
 
   test("sql step hardening: no-op MERGE reports no commit; ON typo refuses; literal @vN paths") {
@@ -545,18 +619,24 @@ class CliSpec extends SparkSpec {
     graft.sources.TxStore.append(ev.filter(col("event_id") % 2 === 0), table) // v1
     graft.sources.TxStore.append(ev.filter(col("event_id") % 2 =!= 0), table) // v2
     val v1Count = ev.filter(col("event_id") % 2 === 0).count()
-    // RESTORE spelled 'MT' against the registered key 'mt': resolve
-    // must hand back the REGISTERED key so the committing statement
-    // re-registers the temp view — otherwise a later statement in the
-    // same session reads the pre-restore snapshot (ADVICE r14)
+    // RESTORE spelled 'MT' against the registered name 'mt' resolves
+    // case-insensitively (ADVICE r14)
     val out = tmp()
     Main.run(spark, Map(
       "step" -> "sql", "data-dir" -> sf("sf0.001"), "out-dir" -> out,
       "tx" -> s"mt=$table", "sql" -> "RESTORE TABLE MT TO VERSION AS OF 1"))
     assert(spark.read.parquet(s"$out/sql_result")
       .select("restored_to").as[Long].head === 1L)
-    assert(spark.table("mt").count() === v1Count,
-      "the registered view must serve the POST-restore snapshot")
+    // the name 'mt' advances: a later statement reads the POST-restore
+    // snapshot, and the caller's session gained no view and kept its
+    // current catalog
+    val out2 = tmp()
+    Main.run(spark, Map(
+      "step" -> "sql", "data-dir" -> sf("sf0.001"), "out-dir" -> out2,
+      "tx" -> s"mt=$table", "sql" -> "SELECT COUNT(*) AS n FROM Mt"))
+    assert(spark.read.parquet(s"$out2/sql_result").as[Long].head === v1Count)
+    assert(!spark.catalog.tableExists("mt"), "--tx names are never temp views")
+    assert(spark.catalog.currentCatalog() === "spark_catalog")
   }
 
   test("sql step: TBLPROPERTIES lifecycle — SET, SHOW, UNSET, DESCRIBE DETAIL") {
@@ -573,7 +653,8 @@ class CliSpec extends SparkSpec {
     }
     val set = spark.read.parquet(
       sql("ALTER TABLE mt SET TBLPROPERTIES ('team'='data-eng', 'pii'='false')"))
-    assert(set.select("op").as[String].head === "alter-set-properties")
+    // an ALTER lands its own commit's history row
+    assert(set.select("op").as[String].collect().toSeq === Seq("set-properties"))
     val shown = spark.read.parquet(sql("SHOW TBLPROPERTIES mt"))
     assert(shown.columns.toSeq === Seq("key", "value"))
     assert(shown.as[(String, String)].collect().toMap ===
@@ -860,34 +941,50 @@ class CliSpec extends SparkSpec {
     }
     spark.read.parquet(sql("ALTER TABLE mt DROP CONSTRAINT nonneg"))
     assert(graft.sources.TxStore.tableConstraints(spark, table).isEmpty)
-    // IF EXISTS on an absent constraint: no commit, the artifact says so
+    // IF EXISTS on an absent constraint: no commit, an empty artifact
+    val v0 = graft.sources.TxStore.snapshot(spark, table).version
     val skipped = spark.read.parquet(sql("ALTER TABLE mt DROP CONSTRAINT IF EXISTS nope"))
-    assert(skipped.select("detail").as[String].head.contains("skipped"))
+    assert(skipped.count() === 0)
+    assert(graft.sources.TxStore.snapshot(spark, table).version === v0)
 
-    // DROP COLUMN retires the column
-    spark.read.parquet(sql("ALTER TABLE mt DROP COLUMN props"))
+    // DROP COLUMN retires the column; the artifact is its commit's row
+    val dropped = spark.read.parquet(sql("ALTER TABLE mt DROP COLUMN props"))
+    assert(dropped.select("op").as[String].collect().toSeq === Seq("drop-column"))
     assert(!graft.sources.TxStore.read(spark, table).columns.contains("props"))
+    // every ALTER above was metadata-only: v1's data files, untouched
+    assert(graft.sources.TxStore.snapshot(spark, table).files.toSet ===
+      graft.sources.TxStore.snapshotAt(spark, table, 1L).files.toSet)
 
-    // refusals: NOT NULL adds, non-tx targets, unsupported ALTER shapes
-    intercept[IllegalArgumentException] {
+    // refusals: NOT NULL adds, non-tx targets, unsupported ALTER shapes,
+    // time-travel names — each names its reason and commits nothing
+    val v1 = graft.sources.TxStore.snapshot(spark, table).version
+    val exNull = intercept[org.apache.spark.SparkException] {
       Main.run(spark, Map("step" -> "sql", "data-dir" -> sf("sf0.001"),
         "out-dir" -> tmp(), "tx" -> s"mt=$table",
         "sql" -> "ALTER TABLE mt ADD COLUMN req STRING NOT NULL"))
     }
-    val exTx = intercept[IllegalArgumentException] {
+    assert(exNull.getMessage.contains("NOT NULL"), exNull.getMessage)
+    val exTx = intercept[org.apache.spark.sql.AnalysisException] {
       Main.run(spark, Map("step" -> "sql", "data-dir" -> sf("sf0.001"),
         "out-dir" -> tmp(), "sql" -> "ALTER TABLE events DROP COLUMN value"))
     }
-    assert(exTx.getMessage.contains("neither a --tx-registered table"))
+    assert(exTx.getMessage.contains("expects a table"), exTx.getMessage)
     // an ALTER shape the table format cannot honor refuses with the
     // reason (SET TBLPROPERTIES graduated to a supported statement in
     // round 15 — SET LOCATION stands in as the unsupported shape)
-    val exShape = intercept[IllegalArgumentException] {
+    val exShape = intercept[org.apache.spark.SparkException] {
       Main.run(spark, Map("step" -> "sql", "data-dir" -> sf("sf0.001"),
         "out-dir" -> tmp(), "tx" -> s"mt=$table",
         "sql" -> "ALTER TABLE mt SET LOCATION '/elsewhere'"))
     }
-    assert(exShape.getMessage.contains("unsupported ALTER statement"))
+    assert(exShape.getMessage.contains("unsupported ALTER"), exShape.getMessage)
+    val exPinned = intercept[org.apache.spark.SparkException] {
+      Main.run(spark, Map("step" -> "sql", "data-dir" -> sf("sf0.001"),
+        "out-dir" -> tmp(), "tx" -> s"old=$table@v1",
+        "sql" -> "ALTER TABLE old ADD COLUMN late STRING"))
+    }
+    assert(exPinned.getMessage.contains("read-only"), exPinned.getMessage)
+    assert(graft.sources.TxStore.snapshot(spark, table).version === v1)
   }
 
   test("sql step: CONVERT TO TX adopts a plain parquet estate, then SQL queries it") {

@@ -162,6 +162,81 @@ class GraftCatalogSpec extends SparkSpec {
       .contains("meta"))
   }
 
+  /** A fresh `graft.alter.<name>` table over two rows of (a, b, c), and
+    * its directory. */
+  private def alterTable(name: String): String = {
+    val w = warehouse
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.alter")
+    spark.sql(s"CREATE TABLE graft.alter.$name USING graft AS " +
+      "SELECT * FROM VALUES (1L, 2L, 3L), (4L, 5L, 6L) AS v(a, b, c)")
+    s"$w/alter/$name"
+  }
+
+  test("ALTER … ADD COLUMN NOT NULL refuses instead of committing a nullable column") {
+    val path = alterTable("notnull")
+    val before = TxStore.history(spark, path).size
+    val e = intercept[Exception](spark.sql("ALTER TABLE graft.alter.notnull ADD COLUMN n INT NOT NULL"))
+    assert(e.getMessage.contains("NOT NULL"), e.getMessage)
+    assert(TxStore.history(spark, path).size === before, "a refused ALTER commits nothing")
+    assert(spark.table("graft.alter.notnull").columns.toSeq === Seq("a", "b", "c"))
+  }
+
+  test("ALTER … ADD COLUMN refuses COMMENT, FIRST/AFTER and DEFAULT instead of ignoring them") {
+    val path = alterTable("clauses")
+    val before = TxStore.history(spark, path).size
+    for ((stmt, reason) <- Seq(
+        "ADD COLUMN d INT COMMENT 'hi'" -> "COMMENT",
+        "ADD COLUMN d INT FIRST" -> "FIRST/AFTER",
+        "ADD COLUMN d INT AFTER a" -> "FIRST/AFTER",
+        "ADD COLUMN d INT DEFAULT 3" -> "DEFAULT")) {
+      val e = intercept[Exception](spark.sql(s"ALTER TABLE graft.alter.clauses $stmt"))
+      assert(e.getMessage.toUpperCase.contains(reason), s"$stmt: ${e.getMessage}")
+    }
+    assert(TxStore.history(spark, path).size === before, "a refused ALTER commits nothing")
+    assert(spark.table("graft.alter.clauses").columns.toSeq === Seq("a", "b", "c"))
+    // the plain form still lands, last, reading NULL in old rows
+    spark.sql("ALTER TABLE graft.alter.clauses ADD COLUMN d INT")
+    assert(spark.table("graft.alter.clauses").columns.toSeq === Seq("a", "b", "c", "d"))
+    assert(spark.table("graft.alter.clauses").where("d IS NOT NULL").count() === 0)
+  }
+
+  test("ALTER … DROP COLUMNS is one commit: a refused column leaves no earlier drop durable") {
+    val path = alterTable("dropcols")
+    TxStore.addConstraint(spark, path, "b_pos", "b > 0")
+    val before = TxStore.history(spark, path).size
+    val e = intercept[Exception](spark.sql("ALTER TABLE graft.alter.dropcols DROP COLUMNS (a, b)"))
+    assert(e.getMessage.contains("b_pos"), e.getMessage)
+    assert(TxStore.history(spark, path).size === before)
+    assert(spark.table("graft.alter.dropcols").columns.toSeq === Seq("a", "b", "c"),
+      "the refusal on b must not leave a's drop committed")
+    // both columns in ONE commit; IF EXISTS skips an absent name
+    spark.sql("ALTER TABLE graft.alter.dropcols DROP COLUMNS IF EXISTS (a, c, nope)")
+    assert(spark.table("graft.alter.dropcols").columns.toSeq === Seq("b"))
+    assert(TxStore.history(spark, path).map(_.op).drop(before) === Seq("drop-column"))
+  }
+
+  test("ALTER … ADD/DROP CONSTRAINT CHECK through catalog names") {
+    val path = alterTable("checks")
+    spark.sql("ALTER TABLE graft.alter.checks ADD CONSTRAINT a_pos CHECK (a > 0)")
+    assert(TxStore.tableConstraints(spark, path) === Seq("a_pos" -> "a > 0"))
+    // the constraint gates later writes through the same table
+    intercept[Exception](spark.sql("INSERT INTO graft.alter.checks VALUES (-1, 0, 0)"))
+    // existing rows are validated before the constraint commits
+    intercept[Exception](spark.sql("ALTER TABLE graft.alter.checks ADD CONSTRAINT b_big CHECK (b > 4)"))
+    // only CHECK constraints, and no CASCADE
+    intercept[Exception](spark.sql(
+      "ALTER TABLE graft.alter.checks ADD CONSTRAINT pk PRIMARY KEY (a)"))
+    intercept[Exception](spark.sql("ALTER TABLE graft.alter.checks DROP CONSTRAINT a_pos CASCADE"))
+    assert(TxStore.tableConstraints(spark, path).map(_._1) === Seq("a_pos"))
+    val before = TxStore.history(spark, path).size
+    spark.sql("ALTER TABLE graft.alter.checks DROP CONSTRAINT IF EXISTS nope")
+    assert(TxStore.history(spark, path).size === before, "an absent IF EXISTS drop commits nothing")
+    spark.sql("ALTER TABLE graft.alter.checks DROP CONSTRAINT a_pos")
+    assert(TxStore.tableConstraints(spark, path).isEmpty)
+    spark.sql("INSERT INTO graft.alter.checks VALUES (-1, 0, 0)")
+    assert(spark.table("graft.alter.checks").count() === 3)
+  }
+
   test("refusals: LOCATION, OPTIONS, bad identifiers, non-empty namespace, wrong provider") {
     val w = warehouse
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.ref")
@@ -202,7 +277,7 @@ class GraftCatalogSpec extends SparkSpec {
     assert(t.op === "delete" && t.add.isEmpty)
     assert(TxStore.snapshot(spark, path).partitioning === Seq("p"))
 
-    // maintenance SQL resolves the same names (SqlResolve fallback)
+    // maintenance SQL resolves the same names (its catalog-name fallback)
     spark.sql("INSERT INTO graft.maint.t VALUES (1, 'a', 0), (2, 'b', 1)")
     val hist = graft.sources.SqlMaint.maybeExecute(spark,
       "DESCRIBE HISTORY graft.maint.t", Map.empty)

@@ -5,6 +5,9 @@ query's parquet dump from Verify, runs the oracle SQL in DuckDB over the
 same testdata, sorts columns by name and rows by value, and compares.
 
 Usage: python3 tools/parity.py <sfDir> <verifyOutDir> [query ...]
+
+Named queries restrict the check; a named query missing from
+oracle_sql.json counts as a FAIL.
 """
 import json, sys, glob, os
 import duckdb
@@ -35,6 +38,10 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    # a requested name the oracle does not know was never checked: FAIL
+    for name in sorted(only - oracle.keys()):
+        print(f"FAIL {name}: not in oracle_sql.json")
+        n_fail += 1
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
             continue

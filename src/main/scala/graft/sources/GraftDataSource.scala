@@ -25,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   *   - [[GraftScanBuilder]] receives the query's own pushed filters
   *     (`SupportsPushDownFilters`) and prunes files through the SAME
-  *     stats walk `readWhere` uses ([[TxStore.pruneSnapFiles]] —
+  *     stats walk `readWhere` uses ([[TxStats.pruneSnapFiles]] —
   *     partition dirs, min/max ranges, blooms, all from log metadata,
   *     zero file IO). Every filter is also returned as a post-scan
   *     filter: file pruning is approximate, Spark re-evaluates.
@@ -443,8 +443,8 @@ private[sources] object GraftPartitionEval {
     rel.split('/').dropRight(1).toSeq.flatMap { seg =>
       val i = seg.indexOf('=')
       if (i <= 0) None
-      else Some(lc(TxStore.unescapePathName(seg.take(i))) -> {
-        val raw = TxStore.unescapePathName(seg.drop(i + 1))
+      else Some(lc(TxStats.unescapePathName(seg.take(i))) -> {
+        val raw = TxStats.unescapePathName(seg.drop(i + 1))
         if (raw == "__HIVE_DEFAULT_PARTITION__") None else Some(raw)
       })
     }.toMap
@@ -673,7 +673,7 @@ private[sources] object GraftAggregates {
     if (snap.dv.nonEmpty || snap.dvp.nonEmpty) return None
     def lc(s: String) = s.toLowerCase(Locale.ROOT)
     val physFor = snap.mapping.map { case (l, p) => lc(l) -> p }.toMap
-    val pranges = TxStore.partitionRanges(snap)
+    val pranges = TxStats.partitionRanges(snap)
     def facts(f: String): Map[String, TxStore.ColRange] =
       snap.stats.getOrElse(f, Map.empty) ++ pranges(f)
     def numFact(f: String, key: String): Option[BigDecimal] =
@@ -979,7 +979,7 @@ final class GraftScan(
     if (runtimeEmptyIn) (Nil, snap.files)
     else if (preds.isEmpty) (exactKept, snap.files.diff(exactKept))
     else {
-      val (kept, skipped) = TxStore.pruneFileSubset(snap, preds.reduce(And), exactKept)
+      val (kept, skipped) = TxStats.pruneFileSubset(snap, preds.reduce(And), exactKept)
       (kept, skipped ++ snap.files.diff(exactKept))
     }
 
@@ -999,13 +999,13 @@ final class GraftScan(
     GraftScanEvents.record(path,
       GraftScanEvents.Planned(snap.version, kept, skipped, runtimeCount, runtimeShown))
     if (kept.isEmpty) return Array.empty
-    val sizes = TxStore.fileSizes(spark, path, snap, kept)
+    val sizes = TxStats.fileSizes(spark, path, snap, kept)
     val openCost = spark.sessionState.conf.filesOpenCostInBytes
     val maxSplit = DsvBridge.maxSplitBytes(spark, sizes.valuesIterator.map(_ + openCost).sum)
     val splits = kept.flatMap { rel =>
       val size = sizes(rel)
       val pv = partitionValuesOf(rel)
-      val abs = s"$path/${TxStore.DataDir}/$rel"
+      val abs = s"$path/${TxSnapshot.DataDir}/$rel"
       if (size == 0L) Seq(DsvBridge.partitionedFile(pv, abs, 0L, 0L, size))
       else (0L until size by maxSplit).map(start =>
         DsvBridge.partitionedFile(pv, abs, start, math.min(maxSplit, size - start), size))
@@ -1023,7 +1023,7 @@ final class GraftScan(
       val byName: Map[String, String] = rel.split('/').dropRight(1).toSeq.flatMap { seg =>
         val i = seg.indexOf('=')
         if (i < 0) None
-        else Some(lc(seg.take(i)) -> TxStore.unescapePathName(seg.drop(i + 1)))
+        else Some(lc(seg.take(i)) -> TxStats.unescapePathName(seg.drop(i + 1)))
       }.toMap
       val values: Array[Any] = readPartitionSchemaL.fields.map { f =>
         byName.get(lc(physName(f.name))) match {
@@ -1064,10 +1064,10 @@ final class GraftScan(
       // paths the executors read directly
       val live = snap.files.toSet
       val inline = snap.dv.collect { case (f, rows) if live(f) =>
-        TxStore.leafOf(f) -> rows.toArray
+        TxSnapshot.leafOf(f) -> rows.toArray
       }
       val sidecars = snap.dvp.collect { case (f, dirs) if live(f) =>
-        TxStore.leafOf(f) -> dirs.map(d => TxStore.sidecarPath(path, d).toString)
+        TxSnapshot.leafOf(f) -> dirs.map(d => TxSnapshot.sidecarPath(path, d).toString)
       }
       GraftReorderReaderFactory.wrap(
         DsvBridge.dvReaderFactory(spark, dataSchemaP, readDataSchemaP,
@@ -1083,11 +1083,11 @@ final class GraftScan(
     override val sizeInBytes: java.util.OptionalLong = java.util.OptionalLong.of(256L * n)
     override val numRows: java.util.OptionalLong = java.util.OptionalLong.of(n.toLong)
   } else new Statistics {
-    private val sizes = TxStore.fileSizes(spark, path, snap, pushedKept)
+    private val sizes = TxStats.fileSizes(spark, path, snap, pushedKept)
     override val sizeInBytes: java.util.OptionalLong =
       java.util.OptionalLong.of(sizes.valuesIterator.sum)
     override val numRows: java.util.OptionalLong =
-      TxStore.fileRowTotal(snap, pushedKept) match {
+      TxStats.fileRowTotal(snap, pushedKept) match {
         // inline dv marks are exact deletions — but only marks ON THE
         // KEPT FILES subtract (marks on pruned files would undercount,
         // even below zero); parquet-vectored marks are not counted
@@ -1242,7 +1242,7 @@ object GraftScanEvents {
 }
 
 /** v1 `sources.Filter` → catalyst expressions for the log's stats walk
-  * ([[TxStore.pruneSnapFiles]]), plus the physical-name rewrite for
+  * ([[TxStats.pruneSnapFiles]]), plus the physical-name rewrite for
   * parquet row-group pushdown. Translation is PRUNING-sound, never
   * complete: an untranslatable filter prunes nothing (its files are
   * kept), and Spark re-applies every filter above the scan. */

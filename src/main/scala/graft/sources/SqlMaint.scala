@@ -287,7 +287,7 @@ object SqlMaint {
           .map(fl => fl.substring(0, fl.lastIndexOf('/'))).distinct.sorted
         val rows = dirs.map { d =>
           org.apache.spark.sql.Row.fromSeq(d.split('/').toSeq.map { seg =>
-            TxStore.unescapePathName(seg.substring(seg.indexOf('=') + 1))
+            TxStats.unescapePathName(seg.substring(seg.indexOf('=') + 1))
           })
         }
         Result("show-partitions", view, path, None,

@@ -24,7 +24,8 @@ import org.apache.spark.sql.functions.{col, to_timestamp}
   * Date bounds follow the reference's asymmetry: build-journeys filters
   * the conversion date (cj_builder.py:45–53), report filters the session
   * date (⚠B5, channel_reporter.py:47–56). `--step sql` lands one
-  * statement's result as out-dir/sql_result/ (parquet): maintenance
+  * statement's result as out-dir/sql_result/ (parquet; a statement
+  * with no result columns writes none): maintenance
   * statements ([[graft.sources.SqlMaint]]), DML and CTAS
   * ([[graft.sources.SqlDml]]), and everything else through `spark.sql`,
   * with `--tx` names resolved by [[graft.sources.TxCatalog]].
@@ -194,8 +195,14 @@ object Main {
                 r.version.fold("(matched nothing, no commit)")(v => s"committed v$v") +
                 s"; changed rows -> $result")
             case None =>
-              TxCatalog.artifact(session.sql(text)).write.mode("overwrite").parquet(result)
-              println(s"[graft] sql -> $result")
+              // a statement with no result columns (CREATE, DROP, SET …)
+              // has already run; parquet cannot hold a zero-column frame
+              val df = TxCatalog.artifact(session.sql(text))
+              if (df.columns.isEmpty) println("[graft] sql ok (no result columns)")
+              else {
+                df.write.mode("overwrite").parquet(result)
+                println(s"[graft] sql -> $result")
+              }
           }
         }
       case other =>

@@ -1067,7 +1067,7 @@ final class GraftScan(
         TxSnapshot.leafOf(f) -> rows.toArray
       }
       val sidecars = snap.dvp.collect { case (f, dirs) if live(f) =>
-        TxSnapshot.leafOf(f) -> dirs.map(d => TxSnapshot.sidecarPath(path, d).toString)
+        TxSnapshot.leafOf(f) -> dirs.map(d => LogStore.sidecarPath(path, d).toString)
       }
       GraftReorderReaderFactory.wrap(
         DsvBridge.dvReaderFactory(spark, dataSchemaP, readDataSchemaP,

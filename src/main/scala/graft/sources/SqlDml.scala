@@ -46,9 +46,29 @@ import org.apache.spark.sql.{Column, SparkSession}
   *     clauses see the target row only.
   *   - `CREATE TABLE [IF NOT EXISTS] name LOCATION '/p'
   *      [PARTITIONED BY (cols)] AS SELECT …` → a fresh table's v1
-  *     commit (refuses non-empty locations — the cloneTable rule)
+  *     commit (refuses non-empty locations — the cloneTable rule); any
+  *     other CTAS is not taken and runs through `spark.sql`
   */
 object SqlDml {
+
+  /** The `(name, path)` of the one CTAS form this translator owns: a
+    * single-part name with a LOCATION and no provider other than graft.
+    * Every other CTAS — a qualified name, no LOCATION, `USING parquet` —
+    * is Spark's to run (`graft.db.t USING graft` through the graft
+    * catalog, `default.t` through the session catalog). */
+  private def txCtas(c: CreateTableAsSelect): Option[(String, String)] = {
+    val (location, provider) = c.tableSpec match {
+      case t: TableSpec => (t.location, t.provider)
+      case t: UnresolvedTableSpec => (t.location, t.provider) // the parse-stage form
+      case _ => (None, None)
+    }
+    (c.name, location) match {
+      case (u: org.apache.spark.sql.catalyst.analysis.UnresolvedIdentifier, Some(path))
+          if u.nameParts.length == 1 && provider.forall(_.equalsIgnoreCase("graft")) =>
+        Some((u.nameParts.head, path))
+      case _ => None
+    }
+  }
 
   /** Executed DML: the statement kind, the view name it hit, the
     * table path, and the committed version (None = matched nothing,
@@ -277,29 +297,12 @@ object SqlDml {
           }
         Some(Result("insert", view, path, version))
 
-      case c: CreateTableAsSelect =>
+      case c: CreateTableAsSelect if txCtas(c).isDefined =>
         // CTAS: CREATE TABLE name LOCATION '/p' [PARTITIONED BY (…)]
         // AS SELECT … — completes the SQL lifecycle (create → query →
         // DML → time travel). The v1 commit goes through the same
         // partitioning-establishing append every table starts with.
-        val name = c.name match {
-          case u: org.apache.spark.sql.catalyst.analysis.UnresolvedIdentifier =>
-            // refuse BEFORE any write: a dotted name would commit v1 and
-            // then crash temp-view registration — a half-completed step
-            if (u.nameParts.length > 1)
-              refuse(s"qualified CTAS name '${u.nameParts.mkString(".")}' is not " +
-                "supported — tx views are single-part names over LOCATION paths")
-            u.nameParts.head
-          case other => refuse(s"unsupported CTAS name ${other.nodeName}")
-        }
-        val location: Option[String] = c.tableSpec match {
-          case t: TableSpec => t.location
-          case t: UnresolvedTableSpec => t.location // the parse-stage form
-          case other => refuse(s"unsupported CTAS table spec ${other.getClass.getSimpleName}")
-        }
-        val path = location.getOrElse(refuse(
-          s"CTAS needs LOCATION — tx tables are path-addressed " +
-            s"(CREATE TABLE $name LOCATION '/path' AS SELECT …)"))
+        val (name, path) = txCtas(c).get
         if (TxStore.isTable(spark, path)) {
           if (c.ignoreIfExists) return Some(Result("create", name, path, None))
           refuse(s"CTAS location $path already holds a table " +
@@ -337,7 +340,7 @@ object SqlDml {
     * every MERGE assignment list. */
   private def requireNoDuplicateTargets(
       spark: SparkSession, names: Seq[String], what: String): Unit = {
-    val caseSensitive = TxStore.sessionCaseSensitive(spark)
+    val caseSensitive = TxSnapshot.sessionCaseSensitive(spark)
     val dup = names
       .groupBy(n => if (caseSensitive) n else n.toLowerCase(java.util.Locale.ROOT))
       .collect { case (n, vs) if vs.size > 1 => n }

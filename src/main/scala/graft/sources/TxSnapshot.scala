@@ -1,12 +1,13 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{array, bit_or, call_function, coalesce, col, count, count_distinct, explode, lit, not, pmod, struct, when, xxhash64}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 import java.nio.charset.StandardCharsets
 import java.util.UUID
 
+import LogStore.sidecarPath
 import TxStats._
 
 /** TxStore's commit log read side: the commit and snapshot shapes, the
@@ -14,7 +15,6 @@ import TxStats._
   * snapshot's data files. */
 object TxSnapshot {
 
-  private[sources] val LogDir = "_txlog"
   private[sources] val DataDir = "data"
 
   /** One log entry: the files this commit added/removed plus the op name
@@ -137,7 +137,7 @@ object TxSnapshot {
   // commit file is never rewritten), so decode memoizes on content;
   // the crude full-clear bound keeps the cache from outliving its
   // usefulness in a long bench process.
-  private[sources] val decodeCache =
+  private val decodeCache =
     new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
   private[sources] def memo[T <: AnyRef](key: String, kind: Char)(compute: => T): T = {
     if (decodeCache.size > 8192) decodeCache.clear()
@@ -149,7 +149,7 @@ object TxSnapshot {
   // mtime granularity is typically 1 s and commit payloads are
   // fixed-width enough that lengths repeat — a table deleted and
   // recreated within the same second could be served the PREVIOUS
-  // generation's parse (ADVICE r17 medium). tryCommit is
+  // generation's parse (ADVICE r17 medium). A log store's put is
   // create-if-absent, so a commit file THIS process writes did not
   // exist an instant earlier: any memoized parse for that path is by
   // definition from a dead generation. Winning a commit therefore bumps
@@ -159,18 +159,24 @@ object TxSnapshot {
   // mtime-based cache has without content hashing, accepted and
   // documented. The map is cleared together with the memo it guards so
   // a generation can never outlive (or get reset under) its entries.
-  private[sources] val commitGen =
+  private val commitGen =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private[sources] def bumpGen(f: FileSystem, p: Path): Unit = {
-    if (commitGen.size > 65536) { commitGen.clear(); decodeCache.clear() }
-    commitGen.merge(f.makeQualified(p).toString, 1L, (a, b) => a + b): Unit
-  }
-  private[sources] def genOf(qualified: String): Long = {
-    val g = commitGen.get(qualified)
+  private def commitKey(log: LogStore, version: Long) = s"${log.id}/$version"
+  private def genOf(key: String): Long = {
+    val g = commitGen.get(key)
     if (g == null) 0L else g.longValue()
   }
 
-  private[sources] def decodeSchema(b64: String): org.apache.spark.sql.types.StructType =
+  /** Publish `c` through the log store; true iff this writer now owns
+    * its version. A win bumps the commit's generation (see above). */
+  private[sources] def publish(log: LogStore, c: Commit): Boolean =
+    log.putIfAbsent(c.version, render(c).getBytes(StandardCharsets.UTF_8)) && {
+      if (commitGen.size > 65536) { commitGen.clear(); decodeCache.clear() }
+      commitGen.merge(commitKey(log, c.version), 1L, (a, b) => a + b)
+      true
+    }
+
+  private def decodeSchema(b64: String): org.apache.spark.sql.types.StructType =
     memo(b64, 's') {
       org.apache.spark.sql.types.DataType
         .fromJson(new String(java.util.Base64.getDecoder.decode(b64), StandardCharsets.UTF_8))
@@ -188,7 +194,7 @@ object TxSnapshot {
     java.util.Base64.getEncoder.encodeToString(
       cs.map { case (n, e) => s"$n\t$e" }.mkString("\n").getBytes(StandardCharsets.UTF_8))
 
-  private[sources] def decodeConstraints(b64: String): Seq[(String, String)] =
+  private def decodeConstraints(b64: String): Seq[(String, String)] =
     memo(b64, 'k') {
       val txt = new String(java.util.Base64.getDecoder.decode(b64), StandardCharsets.UTF_8)
       if (txt.isEmpty) Nil
@@ -224,7 +230,7 @@ object TxSnapshot {
     java.util.Base64.getEncoder.encodeToString(
       cols.mkString("\t").getBytes(StandardCharsets.UTF_8))
 
-  private[sources] def decodePartitioning(b64: String): Seq[String] =
+  private def decodePartitioning(b64: String): Seq[String] =
     memo(b64, 'P') {
       val txt = new String(java.util.Base64.getDecoder.decode(b64), StandardCharsets.UTF_8)
       if (txt.isEmpty) Nil else txt.split("\t", -1).toSeq
@@ -249,7 +255,7 @@ object TxSnapshot {
       (m.map { case (l, p) => s"m\t$l\t$p" } ++ retired.map(p => s"r\t$p"))
         .mkString("\n").getBytes(StandardCharsets.UTF_8))
 
-  private[sources] def decodeMapping(b64: String): (Seq[(String, String)], Seq[String]) =
+  private def decodeMapping(b64: String): (Seq[(String, String)], Seq[String]) =
     memo(b64, 'm') {
       val txt = new String(java.util.Base64.getDecoder.decode(b64), StandardCharsets.UTF_8)
       if (txt.isEmpty) (Nil, Nil)
@@ -285,6 +291,135 @@ object TxSnapshot {
 
   private[sources] def lc(n: String) = n.toLowerCase(java.util.Locale.ROOT)
 
+  /** Rename a logical frame's columns to their physical names before
+    * staging — identity when the mapping is. Columns without a pair
+    * (pre-evolution callers extend the mapping first) pass through. */
+  private[sources] def toPhysical(df: DataFrame, mapping: Seq[(String, String)]): DataFrame =
+    if (mapping.isEmpty) df
+    else {
+      val byLogical = mapping.map { case (l, p) =>
+        l.toLowerCase(java.util.Locale.ROOT) -> p
+      }.toMap
+      df.select(df.columns.toIndexedSeq.map(c =>
+        col(c).as(byLogical.getOrElse(c.toLowerCase(java.util.Locale.ROOT), c))): _*)
+    }
+
+  /** Schema evolution in MAPPING mode: evolve on the LOGICAL level
+    * (same widening/duplicate rules as [[evolve]]), then assign each
+    * genuinely new logical column a physical name — its own name when
+    * never used by any live or retired physical column, else a
+    * suffixed fresh one (the no-resurrection rule). Returns the new
+    * physical schema and the extended mapping. */
+  private[sources] def evolveMapped(
+      snap: Snapshot,
+      incoming: org.apache.spark.sql.types.StructType,
+      caseSensitive: Boolean): (org.apache.spark.sql.types.StructType, Seq[(String, String)]) = {
+    def key(n: String) = if (caseSensitive) n else n.toLowerCase(java.util.Locale.ROOT)
+    val phys = snap.schema.getOrElse(
+      throw new IllegalStateException("mapping mode requires a log schema"))
+    val logicalCur = logicalSchema(snap).get
+    val evolvedLogical = evolve(Some(logicalCur), incoming, caseSensitive)
+    val pairByLogical = snap.mapping.map { case (l, p) => key(l) -> p }.toMap
+    val used = (phys.fieldNames.toSeq ++ snap.retired ++ snap.mapping.map(_._2))
+      .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
+    val newFields = evolvedLogical.fields.toSeq.filterNot(f => pairByLogical.contains(key(f.name)))
+    // refuse names the tab/newline-delimited mapping payload cannot
+    // carry BEFORE commit — same rule as materializedMapping (a
+    // committed undecodable payload would brick every snapshot())
+    newFields.foreach(f => require(!f.name.exists(c => c == '\t' || c == '\n'),
+      s"column name unsupported for mapping mode: '${f.name}'"))
+    val newPairs = newFields.map { f =>
+      val p =
+        if (used(f.name.toLowerCase(java.util.Locale.ROOT)))
+          s"${f.name}_${UUID.randomUUID().toString.take(8)}"
+        else f.name
+      (f.name, p)
+    }
+    val widenedByPhys = evolvedLogical.fields.toSeq.flatMap(f =>
+      pairByLogical.get(key(f.name)).map(p => key(p) -> f.dataType)).toMap
+    val physFields = phys.fields.toSeq.map(f =>
+      widenedByPhys.get(key(f.name)).fold(f)(dt => f.copy(dataType = dt))) ++
+      newPairs.zip(newFields).map { case ((_, p), f) => f.copy(name = p) }
+    (org.apache.spark.sql.types.StructType(physFields), snap.mapping ++ newPairs)
+  }
+
+  private[sources] def normalize(
+      s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(s.fields.map(_.copy(nullable = true)))
+
+  /** Rank in the safe widening chains: every step up a chain is exact
+    * (no value an INT holds is unrepresentable as BIGINT; every FLOAT
+    * widens to the same DOUBLE bit-for-bit), and Spark 4's parquet
+    * readers perform exactly these promotions when the read schema is
+    * wider than the file (SPARK-40876) — which is what lets old files
+    * stay untouched when the log schema widens. Everything outside the
+    * two chains is NOT widening (string↔int, double→float, …) and keeps
+    * being rejected as type drift. */
+  private def widenRank(dt: org.apache.spark.sql.types.DataType): Option[(Char, Int)] = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case ByteType => Some(('i', 0))
+      case ShortType => Some(('i', 1))
+      case IntegerType => Some(('i', 2))
+      case LongType => Some(('i', 3))
+      case FloatType => Some(('f', 0))
+      case DoubleType => Some(('f', 1))
+      case _ => None
+    }
+  }
+
+  /** The wider of two types when they sit on one widening chain. */
+  private[sources] def widened(
+      a: org.apache.spark.sql.types.DataType,
+      b: org.apache.spark.sql.types.DataType): Option[org.apache.spark.sql.types.DataType] =
+    if (a == b) Some(a)
+    else (widenRank(a), widenRank(b)) match {
+      case (Some((ca, ra)), Some((cb, rb))) if ca == cb => Some(if (ra >= rb) a else b)
+      case _ => None
+    }
+
+  /** Schema evolution: incoming may ADD columns, and a column both sides
+    * know may WIDEN along a safe chain (INT→BIGINT, FLOAT→DOUBLE — the
+    * log carries the widest type ever seen, readback promotes narrower
+    * files); any other type change is drift and rejected — silent type
+    * drift is how a lake corrupts. Name matching follows the session's
+    * `spark.sql.caseSensitive` (default false, like Spark's own column
+    * resolution): case-insensitively, an incoming 'ID' IS the table's
+    * 'id' — the table's original spelling is kept — rather than a
+    * silent duplicate column that would break every subsequent
+    * schema-applied read. Returns table (with widenings applied) ++ new
+    * columns. */
+  private[sources] def evolve(
+      cur: Option[org.apache.spark.sql.types.StructType],
+      incoming: org.apache.spark.sql.types.StructType,
+      caseSensitive: Boolean): org.apache.spark.sql.types.StructType = {
+    def key(n: String) = if (caseSensitive) n else n.toLowerCase(java.util.Locale.ROOT)
+    val dupes = incoming.fields.groupBy(f => key(f.name)).filter(_._2.length > 1)
+    require(dupes.isEmpty,
+      s"incoming schema has columns colliding under spark.sql.caseSensitive=$caseSensitive: " +
+        dupes.values.map(_.map(_.name).mkString("/")).mkString(", "))
+    cur match {
+      case None => normalize(incoming)
+      case Some(t) =>
+        val byName = t.fields.map(f => key(f.name) -> f).toMap
+        val evolvedExisting = t.fields.map { old =>
+          incoming.fields.find(f => key(f.name) == key(old.name)) match {
+            case None => old
+            case Some(f) =>
+              val w = widened(old.dataType, f.dataType).getOrElse(throw new IllegalArgumentException(
+                s"schema conflict on '${old.name}': table has ${old.dataType.catalogString}, " +
+                  s"incoming has ${f.dataType.catalogString} — not a safe widening"))
+              old.copy(dataType = w)
+          }
+        }
+        normalize(org.apache.spark.sql.types.StructType(
+          evolvedExisting ++ incoming.fields.filterNot(f => byName.contains(key(f.name)))))
+    }
+  }
+
+  private[sources] def sessionCaseSensitive(spark: SparkSession): Boolean =
+    spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
+
   // ── deletion vectors in the log (merge-on-read DELETE) ─────────────
   // A delete-dv commit adds/removes NO files: it marks row POSITIONS of
   // live files as deleted ({"file":[idx,...],...}, base64-wrapped like
@@ -296,12 +431,12 @@ object TxSnapshot {
   // compact/delete/merge read THROUGH the vectors and their new files
   // carry none.
 
-  private[sources] def renderDv(m: Map[String, Seq[Long]]): String =
+  private def renderDv(m: Map[String, Seq[Long]]): String =
     m.toSeq.sortBy(_._1).map { case (f, rows) =>
       s""""$f":[${rows.sorted.distinct.mkString(",")}]"""
     }.mkString("{", ",", "}")
 
-  private[sources] def parseDv(s: String): Map[String, Seq[Long]] = {
+  private def parseDv(s: String): Map[String, Seq[Long]] = {
     val out = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Long]]
     var i = 0
     def expect(c: Char): Unit = {
@@ -346,17 +481,12 @@ object TxSnapshot {
   // stage-then-publish story as data files), losers of a commit race
   // delete and restage, and vacuum reclaims aged unreferenced ones.
 
-  private[sources] val SidecarDirName = "_sidecar"
-
-  private[sources] def sidecarPath(path: String, name: String): Path =
-    new Path(s"$path/$LogDir/$SidecarDirName/$name")
-
   /** Packed deletion-vector codec for sidecars: per file, sorted
     * positions as delta-encoded LEB128 varints, base64-wrapped —
     * {"file":"b64",...}. 1–2 bytes per mark on realistic (clustered or
     * sparse) deletes vs ~8–12 for the inline decimal CSV; the compressed
     * position-bitmap trade DV sidecars exist for. */
-  private[sources] def renderDvPacked(m: Map[String, Seq[Long]]): String = {
+  private def renderDvPacked(m: Map[String, Seq[Long]]): String = {
     def pack(rows: Seq[Long]): String = {
       val out = new java.io.ByteArrayOutputStream()
       var prev = -1L
@@ -372,7 +502,7 @@ object TxSnapshot {
       .mkString("{", ",", "}")
   }
 
-  private[sources] def parseDvPacked(s: String): Map[String, Seq[Long]] = {
+  private def parseDvPacked(s: String): Map[String, Seq[Long]] = {
     def unpack(b64: String): Seq[Long] = {
       val bytes = java.util.Base64.getDecoder.decode(b64)
       val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -412,11 +542,6 @@ object TxSnapshot {
     out.toMap
   }
 
-  /** Write one sidecar holding a shard of restated per-file stats and/or
-    * packed deletion-vector marks. Plain create under a fresh UUID name
-    * — no race possible, and the file is invisible to replay until a
-    * commit references it. Content: up to two lines, `stats:<b64 of
-    * renderStats>` and `dvp:<b64 of renderDvPacked>`. */
   /** One sidecar's decoded payloads: a stats shard, a packed-inline dv
     * shard, and references to PARQUET deletion-vector dirs (each with
     * the data files its marks apply to — file-LEVEL metadata, so replay
@@ -426,6 +551,11 @@ object TxSnapshot {
       dv: Map[String, Seq[Long]],
       dvParquet: Seq[(String, Seq[String])])
 
+  /** Write one sidecar holding a shard of restated per-file stats and/or
+    * packed deletion-vector marks. Plain create under a fresh UUID name
+    * — no race possible, and the file is invisible to replay until a
+    * commit references it. Content: up to two lines, `stats:<b64 of
+    * renderStats>` and `dvp:<b64 of renderDvPacked>`. */
   private[sources] def writeSidecar(
       f: FileSystem,
       path: String,
@@ -473,8 +603,8 @@ object TxSnapshot {
   private[sources] def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private[sources] def logPath(path: String, v: Long): Path =
-    new Path(s"$path/$LogDir/${"%020d".format(v)}.json")
+  private[sources] def logStore(spark: SparkSession, path: String): LogStore =
+    LogStore(fs(spark, path), path)
 
   private[sources] def render(c: Commit): String = {
     def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -521,51 +651,45 @@ object TxSnapshot {
       props = fieldOpt("props").map(_.drop(1).takeWhile(_ != '"')))
   }
 
-  private[sources] def readText(f: FileSystem, p: Path): String = {
+  private def readText(f: FileSystem, p: Path): String = {
     val in = f.open(p)
     try new String(in.readAllBytes(), StandardCharsets.UTF_8)
     finally in.close()
   }
 
-  /** All commits in version order. A checkpoint (see [[checkpoint]]) is a
-    * commit whose `add` is the full live set at its version — replay can
-    * start there, so only it plus the tail is parsed. */
-  private[sources] def commits(f: FileSystem, path: String): Seq[Commit] = {
-    val all = allCommits(f, path)
+  /** All commits in version order. A checkpoint (see [[TxStore.checkpoint]])
+    * is a commit whose `add` is the full live set at its version — replay
+    * can start there, so only it plus the tail is parsed. */
+  private[sources] def commits(log: LogStore): Seq[Commit] = fromLastCheckpoint(allCommits(log))
+
+  private[sources] def fromLastCheckpoint(all: Seq[Commit]): Seq[Commit] = {
     val lastCk = all.lastIndexWhere(_.op == "checkpoint")
     if (lastCk <= 0) all else all.drop(lastCk)
   }
 
   /** The FULL physical log, ignoring checkpoint truncation — commit files
     * are never deleted, so pre-checkpoint history stays reconstructible
-    * for [[vacuum]]'s retention window. */
-  private[sources] def allCommits(f: FileSystem, path: String): Seq[Commit] = {
-    val dir = new Path(s"$path/$LogDir")
-    if (!f.exists(dir)) return Nil
-    f.listStatus(dir).toSeq
-      .filter(_.getPath.getName.endsWith(".json"))
-      .sortBy(_.getPath.getName)
-      // Memoize the read+parse per commit FILE (r17): replay re-lists
-      // the log on every snapshot — that freshness is the multi-writer
-      // contract and stays — but a commit file, once published, is
-      // immutable (tryCommit is create-if-absent), so re-reading and
-      // re-parsing every retained commit on every snapshot made a
-      // K-commit workflow pay O(K²) log IO. The key carries the
-      // listing's own mtime+length so a path REUSED after a whole-table
-      // delete+recreate (the bench's freshStore idiom — the one way a
-      // commit path's content can ever change) misses cleanly instead
-      // of serving the previous table's line, plus the in-process
-      // generation counter (see commitGen) that makes the same-second
-      // same-length recreate miss deterministically.
-      .map { st =>
-        val qp = f.makeQualified(st.getPath).toString
-        memo(s"$qp|${genOf(qp)}|${st.getModificationTime}|${st.getLen}", 'j') {
-          parse(readText(f, st.getPath))
-        }
-      }
-  }
+    * for [[TxStore.vacuum]]'s retention window.
+    *
+    * Memoizes the read+parse per commit FILE (r17): replay re-lists the
+    * log on every snapshot — that freshness is the multi-writer contract
+    * and stays — but a published commit is immutable (the log store's
+    * put is create-if-absent), so re-reading and re-parsing every
+    * retained commit on every snapshot made a K-commit workflow pay
+    * O(K²) log IO. The key carries the listing's own mtime+length so a
+    * path REUSED after a whole-table delete+recreate (the bench's
+    * freshStore idiom — the one way a commit path's content can ever
+    * change) misses cleanly instead of serving the previous table's
+    * line, plus the in-process generation counter (see commitGen) that
+    * makes the same-second same-length recreate miss deterministically. */
+  private[sources] def allCommits(log: LogStore): Seq[Commit] =
+    log.listFrom(0L).map { lf =>
+      val key = commitKey(log, lf.version)
+      memo(s"$key|${genOf(key)}|${lf.mtime}|${lf.length}", 'j')(parse(log.read(lf.version)))
+    }
 
-  private[sources] def replay(f: FileSystem, path: String, cs: Seq[Commit]): Snapshot = {
+  private[sources] def replay(log: LogStore, cs: Seq[Commit]): Snapshot = {
+    val (f, path) = (log.fs, log.table)
     val live = scala.collection.mutable.LinkedHashSet.empty[String]
     val stats = scala.collection.mutable.LinkedHashMap
       .empty[String, Map[String, ColRange]]
@@ -629,80 +753,8 @@ object TxSnapshot {
       props.map(decodeConstraints).getOrElse(Nil))
   }
 
-  /** Try to own version `v`; true iff this writer published the commit
-    * file — atomically in both existence AND content (see inline). */
-  private[sources] def tryCommit(f: FileSystem, path: String, c: Commit): Boolean = {
-    val p = logPath(path, c.version)
-    val bytes = render(c).getBytes(StandardCharsets.UTF_8)
-    // Two atomicity requirements at once: EXISTENCE (exactly one of N
-    // racing writers may own the version — create-if-absent) and CONTENT
-    // (a concurrent reader must never observe a partially-written commit
-    // — replay would die on the truncated JSON). A bare exclusive
-    // create-then-write gives only the first, so both branches write the
-    // full content to a writer-private temp name and then make it appear
-    // under the final name in one metadata operation:
-    //  - local: hard-link — link(2) fails atomically if the target
-    //    exists (POSIX rename would silently overwrite, losing a race
-    //    undetectably);
-    //  - Hadoop FS: rename — HDFS rename is atomic and returns false if
-    //    the destination exists.
-    if (f.getScheme == "file") {
-      val local = java.nio.file.Paths.get(f.makeQualified(p).toUri)
-      java.nio.file.Files.createDirectories(local.getParent)
-      val tmp = local.resolveSibling(s".${local.getFileName}.${UUID.randomUUID()}.tmp")
-      java.nio.file.Files.write(tmp, bytes)
-      try {
-        java.nio.file.Files.createLink(local, tmp)
-        bumpGen(f, p) // fresh file at this path — retire any memoized parse
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-        // the tmp vanished under us — a concurrent vacuum reclaimed it as
-        // debris. Not a filesystem fault: treat it as a lost race; the
-        // retry writes a fresh tmp (and may well win the same version).
-        case _: java.nio.file.NoSuchFileException => false
-      }
-      finally java.nio.file.Files.deleteIfExists(tmp): Unit
-    } else {
-      val tmp = new Path(p.getParent, s".${p.getName}.${UUID.randomUUID()}.tmp")
-      val out = f.create(tmp, /* overwrite = */ true)
-      try out.write(bytes)
-      finally out.close()
-      val won =
-        try f.rename(tmp, p)
-        catch { case _: FileAlreadyExistsException => false }
-      if (!won) {
-        f.delete(tmp, false)
-        // Hadoop's boolean rename conflates "destination exists" (a lost
-        // commit race — expected) with every other failure; only the
-        // former may be swallowed, or a genuine IO problem would
-        // masquerade as 20 lost races and a bogus livelock diagnosis.
-        if (!f.exists(p))
-          throw new java.io.IOException(
-            s"commit rename $tmp -> $p failed but $p does not exist — " +
-              "not a lost race; underlying filesystem error")
-      }
-      if (won) bumpGen(f, p) // fresh file at this path — retire any memoized parse
-      won
-    }
-  }
-
   // ── reads ──────────────────────────────────────────────────────────
 
-  /** The log schema (when present) is APPLIED, never inferred from
-    * footers: files predating an added column read it as NULL, and the
-    * reader costs zero metadata IO regardless of file count. Logs
-    * written before schema tracking fall back to footer inference.
-    *
-    * Deletion vectors apply HERE, so every read path (current,
-    * time-travel, stats-pruned, rewrite inputs) sees them: rows whose
-    * (file, row position) is marked deleted are anti-joined out via
-    * the scan's `_metadata.row_index` (position identity is the
-    * parquet row order, stable under pushdown — probed in
-    * TxStoreSpec). `withFile` keeps a `__file` column (the bare data
-    * file name) for the copy-on-write probes — `_metadata.file_name`
-    * is captured AT the scan, so unlike `input_file_name()` it
-    * survives the anti-join. */
   /** A snapshot's deletion-vector state restricted to `files`: the
     * inline (file → positions) map, and the parquet-vector dirs each
     * restricted to the files its refs still cover (a dir may also hold
@@ -754,6 +806,27 @@ object TxSnapshot {
       Some(((inlineDf.toSeq ++ parquetMarks).reduce(_ unionByName _), parquetDirs.isEmpty))
     }
 
+  /** `files` of `snap`, read through its deletion vectors and column
+    * mapping. */
+  private[sources] def readSnap(
+      spark: SparkSession, path: String, snap: Snapshot, files: Seq[String],
+      withFile: Boolean = false): DataFrame =
+    readFiles(spark, path, files, snap.schema, snap.dv, withFile, snap.dvp, snap.mapping)
+
+  /** The log schema (when present) is APPLIED, never inferred from
+    * footers: files predating an added column read it as NULL, and the
+    * reader costs zero metadata IO regardless of file count. Logs
+    * written before schema tracking fall back to footer inference.
+    *
+    * Deletion vectors apply HERE, so every read path (current,
+    * time-travel, stats-pruned, rewrite inputs) sees them: rows whose
+    * (file, row position) is marked deleted are anti-joined out via
+    * the scan's `_metadata.row_index` (position identity is the
+    * parquet row order, stable under pushdown — probed in
+    * TxStoreSpec). `withFile` keeps a `__file` column (the bare data
+    * file name) for the copy-on-write probes — `_metadata.file_name`
+    * is captured AT the scan, so unlike `input_file_name()` it
+    * survives the anti-join. */
   private[sources] def readFiles(
       spark: SparkSession,
       path: String,

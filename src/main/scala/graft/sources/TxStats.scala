@@ -1,11 +1,10 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{array, bit_or, call_function, coalesce, col, count, count_distinct, explode, lit, not, pmod, struct, when, xxhash64}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{array, bit_or, call_function, col, explode, lit, pmod, struct, xxhash64}
 
 import java.nio.charset.StandardCharsets
-import java.util.UUID
 
 import TxSnapshot._
 
@@ -204,8 +203,9 @@ object TxStats {
     * group lacks usable stats. NULL note: parquet min/max cover
     * non-null values only, and [[readWhere]] only prunes on comparison
     * predicates, which no NULL can satisfy — so skipping a file whose
-    * non-null range refutes the predicate never loses a row. */
-  /** `foreign = true` marks files ADOPTED from another writer
+    * non-null range refutes the predicate never loses a row.
+    *
+    * `foreign = true` marks files ADOPTED from another writer
     * ([[convert]]): their footers may legally carry truncated binary
     * min/max (exactness flags parquet-mr never exposes) and double
     * stats computed ignoring NaN — under Spark's NaN-greatest ordering
@@ -522,11 +522,69 @@ object TxStats {
     }
   }
 
+  /** Per-file bloom filters over `cols` of `base`, built in ONE
+    * distributed pass over the live files: k seeded xxhash64 positions
+    * per value, map-side `bit_or` into 64-bit blocks keyed by (file,
+    * block) — the ext45 Bloom shape per file. The driver collect is
+    * files × numBits/8 bytes, the O(live files) metadata class. Keys are
+    * `<physical col>#b`; see [[TxStore.buildBlooms]]. */
+  private[sources] def bloomStats(
+      spark: SparkSession, path: String, base: Snapshot, cols: Seq[String],
+      numBits: Int, numHashes: Int): FileStats = {
+    val schema = base.schema.getOrElse(
+      throw new IllegalArgumentException(s"$path carries no log schema to type-check against"))
+    // callers name LOGICAL columns; the scan, the hash input and the
+    // stats key all use the PHYSICAL name (the probe translates back)
+    val logSchema = logicalSchema(base).get
+    val physFor = physByLogical(base)
+    def physName(c: String) = physFor.getOrElse(c.toLowerCase(java.util.Locale.ROOT), c)
+    val tpes: Map[String, Char] = cols.map { c =>
+      val f = logSchema.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
+        throw new IllegalArgumentException(s"no such column: $c"))
+      f.dataType match {
+        case org.apache.spark.sql.types.LongType => physName(c) -> 'L'
+        case org.apache.spark.sql.types.StringType => physName(c) -> 'S'
+        case other => throw new IllegalArgumentException(
+          s"bloom index supports bigint/string columns only; $c is $other")
+      }
+    }.toMap
+    val pcols = cols.map(physName)
+    val rdr0 = spark.read.schema(schema)
+    val rdr = // partitioned tables: parse partition values from paths
+      if (base.files.exists(_.indexOf('/') >= 0)) rdr0.option("basePath", s"$path/$DataDir")
+      else rdr0
+    val raw = rdr.parquet(base.files.map(n => s"$path/$DataDir/$n"): _*)
+      .select(col("_metadata.file_name").as("__file") +: pcols.map(col): _*)
+    // one exploded (file, col, block, mask) projection → one combinable agg
+    val posCols = pcols.flatMap { c =>
+      (0 until numHashes).map(i => struct(
+        lit(c).as("c"),
+        pmod(xxhash64(lit(i), col(c)), lit(numBits.toLong)).as("p")))
+    }
+    val perFile = raw
+      .select(col("__file"), explode(array(posCols: _*)).as("h"))
+      .filter(col("h.p").isNotNull)
+      .groupBy(col("__file"), col("h.c").as("__c"), (col("h.p") / 64L).cast("long").as("__block"))
+      .agg(bit_or(call_function("shiftleft", lit(1L), pmod(col("h.p"), lit(64L)).cast("int")))
+        .as("__bits"))
+      .collect() // files × cols × numBits/8 bytes — O(live files) metadata class
+    val fullName = byLeaf(base.files) // the scan's file_name is the leaf
+    val built = scala.collection.mutable.LinkedHashMap.empty[String, Map[String, ColRange]]
+    perFile.groupBy(r => (fullName(r.getString(0)), r.getString(1))).foreach {
+      case ((file, c), rows) =>
+        val bits = new Array[Long](numBits / 64)
+        rows.foreach(r => bits(r.getLong(2).toInt) = r.getLong(3))
+        built(file) = built.getOrElse(file, Map.empty) +
+          (s"$c#b" -> BloomSum(tpes(c), numHashes, bits))
+    }
+    built.toMap
+  }
+
   /** Driver-side twin of the distributed bloom build's membership test:
     * hash the predicate literal with the SAME Catalyst xxhash64 the
     * build ran on column values (same seed chain, same input types), so
     * a set bit answers may-contain and a clear bit is a sound skip. */
-  private[sources] def bloomContains(b: BloomSum, v: Either[BigDecimal, String]): Boolean = {
+  private def bloomContains(b: BloomSum, v: Either[BigDecimal, String]): Boolean = {
     import org.apache.spark.sql.catalyst.expressions.{Literal => CLit, XxHash64}
     import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
     val typed: Option[CLit] = (b.tpe, v) match {

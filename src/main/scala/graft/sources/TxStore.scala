@@ -1,12 +1,13 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{array, bit_or, call_function, coalesce, col, count, count_distinct, explode, lit, not, pmod, struct, when, xxhash64}
+import org.apache.spark.sql.functions.{col, lit}
 
 import java.nio.charset.StandardCharsets
 import java.util.UUID
 
+import LogStore.sidecarPath
 import TxSnapshot._
 import TxStats._
 
@@ -30,8 +31,9 @@ import TxStats._
   * commit names them, which is what makes writes all-or-nothing.
   *
   * Concurrency: OPTIMISTIC. A writer stages data files, then tries to
-  * publish `_txlog/<latest+1>.json` by writing a private temp file and
-  * hard-linking (local) / renaming (HDFS) it into the final name — one
+  * publish `_txlog/<latest+1>.json` through the table's [[LogStore]] by
+  * writing a private temp file and hard-linking (local) / renaming
+  * (HDFS) it into the final name — one
   * metadata operation that atomically settles BOTH who owns the version
   * (link/rename fail if the target exists) and content visibility (a
   * reader never sees a half-written commit). Exactly one of N racing
@@ -61,6 +63,10 @@ import TxStats._
   * Data-file IO is fully distributed. On S3-like stores without atomic
   * create-no-overwrite, the commit step needs an external lock/CAS service
   * (exactly Delta's documented S3 story) — out of scope here.
+  *
+  * Code layout: [[LogStore]] (commit-file IO), [[TxSnapshot]] (commit
+  * and snapshot shapes, codecs, replay), [[TxStats]] (file stats and
+  * pruning) and [[TxWrites]] (the write entry points, mixed in here).
   */
 object TxStore extends TxWrites {
 
@@ -86,7 +92,7 @@ object TxStore extends TxWrites {
     * `@v<digits>` is NOT a time-travel spec unless the prefix is a real
     * table). */
   def isTable(spark: SparkSession, path: String): Boolean =
-    allCommits(fs(spark, path), path).nonEmpty
+    logStore(spark, path).listFrom(0L).nonEmpty
 
   /** Table-establishment guard (CTAS; the [[cloneTable]] rule made
     * reusable): true when `path` does not exist or is an empty
@@ -98,25 +104,18 @@ object TxStore extends TxWrites {
     !f.exists(p) || f.listStatus(p).isEmpty
   }
 
-  /** Current snapshot (version 0 = empty table, no log yet). */
   /** The latest committed version — ONE directory listing, zero
     * payload reads or decodes. The streaming source polls this per
     * trigger; a full [[snapshot]] replay here would re-read every
     * retained commit's payloads on every poll (the inline-payload
     * re-read cost the sf100 probe measured). */
-  def latestVersion(spark: SparkSession, path: String): Long = {
-    val f = fs(spark, path)
-    val dir = new Path(s"$path/$LogDir")
-    if (!f.exists(dir)) 0L
-    else f.listStatus(dir).iterator.map(_.getPath.getName)
-      .filter(_.endsWith(".json"))
-      .map(_.stripSuffix(".json").toLong)
-      .foldLeft(0L)(math.max)
-  }
+  def latestVersion(spark: SparkSession, path: String): Long =
+    logStore(spark, path).listFrom(0L).lastOption.fold(0L)(_.version)
 
+  /** Current snapshot (version 0 = empty table, no log yet). */
   def snapshot(spark: SparkSession, path: String): Snapshot = {
-    val f = fs(spark, path)
-    replay(f, path, commits(f, path))
+    val log = logStore(spark, path)
+    replay(log, commits(log))
   }
 
   /** Snapshot as of an historical version — time travel. Works for any
@@ -125,8 +124,8 @@ object TxStore extends TxWrites {
     * vacuum's `retainVersions` window (see the retention contract
     * there). */
   def snapshotAt(spark: SparkSession, path: String, version: Long): Snapshot = {
-    val f = fs(spark, path)
-    val all = commits(f, path)
+    val log = logStore(spark, path)
+    val all = commits(log)
     // a FUTURE version must refuse, not silently read the current state
     // — "VERSION AS OF 99" on a v2 table answering with v2's data would
     // let the user believe they reproduced v99 (Delta raises
@@ -136,12 +135,12 @@ object TxStore extends TxWrites {
       s"version $version does not exist at $path (latest is v$latest)")
     val cs = all.filter(_.version <= version)
     require(cs.nonEmpty || version == 0, s"version $version predates the retained log at $path")
-    replay(f, path, cs)
+    replay(log, cs)
   }
 
   /** Commit history, oldest first (op + files per version). */
   def history(spark: SparkSession, path: String): Seq[Commit] =
-    commits(fs(spark, path), path)
+    commits(logStore(spark, path))
 
   /** [[history]] as a DataFrame — the DESCRIBE HISTORY surface: one
     * row per retained commit, timestamped by the commit file's mtime
@@ -150,12 +149,9 @@ object TxStore extends TxWrites {
     * `TIMESTAMP AS OF`). O(retained commits) metadata lookups, no
     * data IO — the frame is log-scale regardless of table size. */
   def historyFrame(spark: SparkSession, path: String): DataFrame = {
-    val f = fs(spark, path)
-    val rows = commits(f, path).map { c =>
-      (c.version,
-        new java.sql.Timestamp(
-          f.getFileStatus(logPath(path, c.version)).getModificationTime),
-        c.op, c.add.size.toLong, c.remove.size.toLong)
+    val log = logStore(spark, path)
+    val rows = commits(log).map { c =>
+      (c.version, new java.sql.Timestamp(log.mtime(c.version)), c.op, c.add.size.toLong, c.remove.size.toLong)
     }
     spark.createDataFrame(rows).toDF("version", "ts", "op", "n_add", "n_remove")
   }
@@ -247,8 +243,7 @@ object TxStore extends TxWrites {
       if (validatedAt != snap.version) {
         if (snap.files.nonEmpty)
           enforceConstraints(
-            readFiles(spark, path, snap.files, snap.schema, snap.dv, dvp = snap.dvp,
-              mapping = snap.mapping),
+            readSnap(spark, path, snap, snap.files),
             Seq(name -> exprSql), "existing data", path)
         validatedAt = snap.version
       }
@@ -270,14 +265,6 @@ object TxStore extends TxWrites {
 
   // ── column rename / drop (public surface) ──────────────────────────
 
-  /** Table PROPERTIES — Delta's TBLPROPERTIES surface re-derived on the
-    * log: free-form (key → value) pairs riding commits latest-wins
-    * (like the schema), restated through checkpoints/clones so
-    * truncation never loses them, and rewound by restore only if the
-    * target's commit chain says so (a restore commit does not restate
-    * properties — they are operational metadata, not data state). Keys
-    * are case-preserving but case-insensitively unique. One commit per
-    * statement — an ALTER with several pairs is atomic. */
   /** The property grammar + behavior-key gate, shared by
     * [[setTableProperties]] and [[create]]. */
   private def validateProperties(kv: Seq[(String, String)]): Unit = {
@@ -297,6 +284,14 @@ object TxStore extends TxWrites {
       s"duplicate property key in ${kv.map(_._1).mkString(", ")}")
   }
 
+  /** Table PROPERTIES — Delta's TBLPROPERTIES surface re-derived on the
+    * log: free-form (key → value) pairs riding commits latest-wins
+    * (like the schema), restated through checkpoints/clones so
+    * truncation never loses them, and rewound by restore only if the
+    * target's commit chain says so (a restore commit does not restate
+    * properties — they are operational metadata, not data state). Keys
+    * are case-preserving but case-insensitively unique. One commit per
+    * statement — an ALTER with several pairs is atomic. */
   def setTableProperties(
       spark: SparkSession, path: String, kv: Seq[(String, String)]): Long = {
     require(kv.nonEmpty, "SET TBLPROPERTIES: no pairs given")
@@ -501,9 +496,9 @@ object TxStore extends TxWrites {
     * snapshot and resume CDC from its version. */
   def readAppendsSince(
       spark: SparkSession, path: String, sinceVersion: Long): (Long, DataFrame) = {
-    val f = fs(spark, path)
-    val cs = commits(f, path)
-    val snap = replay(f, path, cs)
+    val log = logStore(spark, path)
+    val cs = commits(log)
+    val snap = replay(log, cs)
     // a position AHEAD of the log is a consumer pointed at the wrong /
     // wiped / recreated table — answering (0, empty) would silently
     // reset its position and re-deliver everything it already consumed
@@ -607,9 +602,9 @@ object TxStore extends TxWrites {
   private def changesBetween(
       spark: SparkSession, path: String, sinceVersion: Long,
       untilVersion: Option[Long]): (Long, DataFrame) = {
-    val f = fs(spark, path)
-    val cs = commits(f, path)
-    val snap = replay(f, path, cs)
+    val log = logStore(spark, path)
+    val cs = commits(log)
+    val snap = replay(log, cs)
     require(
       sinceVersion <= snap.version,
       s"consumer position v$sinceVersion is ahead of the log at $path " +
@@ -638,8 +633,8 @@ object TxStore extends TxWrites {
       readFiles(spark, path, files, readSchema, s0.dv, dvp = s0.dvp, mapping = curMap)
 
     val parts: Seq[DataFrame] = tail.flatMap { c =>
-      lazy val before = replay(f, path, cs.filter(_.version < c.version))
-      lazy val after = replay(f, path, cs.filter(_.version <= c.version))
+      lazy val before = replay(log, cs.filter(_.version < c.version))
+      lazy val after = replay(log, cs.filter(_.version <= c.version))
       c.op match {
         case "append" =>
           if (c.add.isEmpty) Nil
@@ -654,7 +649,7 @@ object TxStore extends TxWrites {
             | "set-properties" | "unset-properties" | "create" =>
           Nil
         case "delete-dv" =>
-          val touched = dvTouchedFiles(f, path, c).filter(after.files.contains)
+          val touched = dvTouchedFiles(log.fs, path, c).filter(after.files.contains)
           if (touched.isEmpty) Nil
           else {
             val (bdv, bdvp) = restrictMarks(before.dv, before.dvp, touched)
@@ -769,8 +764,8 @@ object TxStore extends TxWrites {
     * always restate as one (dir → live files) sidecar — the dirs
     * themselves are immutable data-plane files and are never rewritten.
     * Returns (spec, staged sidecar names) so callers can discard the
-    * sidecars of a lost attempt. Shared by [[checkpoint]] and
-    * [[cloneTable]]. */
+    * sidecars of a lost attempt. Shared by [[checkpoint]],
+    * [[cloneTable]] and [[restore]]. */
   private def restateSpec(
       f: FileSystem,
       path: String,
@@ -837,7 +832,7 @@ object TxStore extends TxWrites {
     val snap = snapshot(spark, source)
     require(snap.files.nonEmpty, s"nothing to clone at $source")
     val destF = fs(spark, dest)
-    require(!destF.exists(new Path(s"$dest/$LogDir")),
+    require(!LogStore(destF, dest).exists,
       s"clone target $dest already has a transaction log")
     snap.files.foreach { n =>
       linkOrCopy(f, new Path(s"$source/$DataDir/$n"), destF, new Path(s"$dest/$DataDir/$n"))
@@ -901,11 +896,10 @@ object TxStore extends TxWrites {
     * has; an external clock-skewed writer shifts history the same way
     * it does there). O(retained commits) metadata lookups, no data IO. */
   def versionAtTimestamp(spark: SparkSession, path: String, tsMillis: Long): Long = {
-    val f = fs(spark, path)
-    val cs = commits(f, path)
+    val log = logStore(spark, path)
+    val cs = commits(log)
     require(cs.nonEmpty, s"no transaction log at $path")
-    val at = cs.filter(c =>
-      f.getFileStatus(logPath(path, c.version)).getModificationTime <= tsMillis)
+    val at = cs.filter(c => log.mtime(c.version) <= tsMillis)
     require(at.nonEmpty,
       s"timestamp $tsMillis predates the retained log at $path")
     at.last.version
@@ -928,16 +922,23 @@ object TxStore extends TxWrites {
   /** Read the current snapshot. */
   def read(spark: SparkSession, path: String): DataFrame = {
     val snap = snapshot(spark, path)
-    readFiles(spark, path, snap.files, snap.schema, snap.dv, dvp = snap.dvp,
-      mapping = snap.mapping)
+    readSnap(spark, path, snap, snap.files)
   }
 
   /** Read an historical snapshot — time travel, with the schema AS OF
     * that version (a later-added column does not haunt the past). */
   def readAt(spark: SparkSession, path: String, version: Long): DataFrame = {
     val snap = snapshotAt(spark, path, version)
-    readFiles(spark, path, snap.files, snap.schema, snap.dv, dvp = snap.dvp,
-      mapping = snap.mapping)
+    readSnap(spark, path, snap, snap.files)
+  }
+
+  /** Filter-sizing helper: ~`bitsPerValue` bits per expected value per
+    * file (rounded up to a 64-bit block; floor 64 Kbit). m/n ≈ 10 with
+    * k = 7 sits at ~0.8% fp; an UNDER-sized filter saturates (fp → 1)
+    * and prunes nothing — size to the data, not the default. */
+  def bloomBits(rowsPerFile: Long, bitsPerValue: Int = 10): Int = {
+    require(rowsPerFile >= 0 && bitsPerValue >= 1, "bad bloom sizing inputs")
+    math.max(65536L, rowsPerFile * bitsPerValue / 64L * 64L + 64L).toInt
   }
 
   /** Build per-file BLOOM FILTERS over `cols` and publish them as one
@@ -960,15 +961,6 @@ object TxStore extends TxWrites {
     * Rewritten files (compact/optimize) drop their blooms with their
     * stats — rebuild after large rewrites. Returns the commit version.
     */
-  /** Filter-sizing helper: ~`bitsPerValue` bits per expected value per
-    * file (rounded up to a 64-bit block; floor 64 Kbit). m/n ≈ 10 with
-    * k = 7 sits at ~0.8% fp; an UNDER-sized filter saturates (fp → 1)
-    * and prunes nothing — size to the data, not the default. */
-  def bloomBits(rowsPerFile: Long, bitsPerValue: Int = 10): Int = {
-    require(rowsPerFile >= 0 && bitsPerValue >= 1, "bad bloom sizing inputs")
-    math.max(65536L, rowsPerFile * bitsPerValue / 64L * 64L + 64L).toInt
-  }
-
   def buildBlooms(
       spark: SparkSession,
       path: String,
@@ -983,53 +975,8 @@ object TxStore extends TxWrites {
     require(numHashes >= 1 && numHashes <= 64, s"numHashes out of range: $numHashes")
     val base = snapshot(spark, path)
     require(base.files.nonEmpty, s"nothing to index at $path")
-    val schema = base.schema.getOrElse(
-      throw new IllegalArgumentException(s"$path carries no log schema to type-check against"))
-    // callers name LOGICAL columns; the scan, the hash input and the
-    // stats key all use the PHYSICAL name (the probe translates back)
-    val logSchema = logicalSchema(base).get
-    val physFor = physByLogical(base)
-    def physName(c: String) = physFor.getOrElse(c.toLowerCase(java.util.Locale.ROOT), c)
-    val tpes: Map[String, Char] = cols.map { c =>
-      val f = logSchema.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
-        throw new IllegalArgumentException(s"no such column: $c"))
-      f.dataType match {
-        case org.apache.spark.sql.types.LongType => physName(c) -> 'L'
-        case org.apache.spark.sql.types.StringType => physName(c) -> 'S'
-        case other => throw new IllegalArgumentException(
-          s"bloom index supports bigint/string columns only; $c is $other")
-      }
-    }.toMap
-    val pcols = cols.map(physName)
-    val rdr0 = spark.read.schema(schema)
-    val rdr = // partitioned tables: parse partition values from paths
-      if (base.files.exists(_.indexOf('/') >= 0)) rdr0.option("basePath", s"$path/$DataDir")
-      else rdr0
-    val raw = rdr.parquet(base.files.map(n => s"$path/$DataDir/$n"): _*)
-      .select(col("_metadata.file_name").as("__file") +: pcols.map(col): _*)
-    // one exploded (file, col, block, mask) projection → one combinable agg
-    val posCols = pcols.flatMap { c =>
-      (0 until numHashes).map(i => struct(
-        lit(c).as("c"),
-        pmod(xxhash64(lit(i), col(c)), lit(numBits.toLong)).as("p")))
-    }
-    val perFile = raw
-      .select(col("__file"), explode(array(posCols: _*)).as("h"))
-      .filter(col("h.p").isNotNull)
-      .groupBy(col("__file"), col("h.c").as("__c"), (col("h.p") / 64L).cast("long").as("__block"))
-      .agg(bit_or(call_function("shiftleft", lit(1L), pmod(col("h.p"), lit(64L)).cast("int")))
-        .as("__bits"))
-      .collect() // files × cols × numBits/8 bytes — O(live files) metadata class
-    val fullName = byLeaf(base.files) // the scan's file_name is the leaf
-    val built = scala.collection.mutable.LinkedHashMap.empty[String, Map[String, ColRange]]
-    perFile.groupBy(r => (fullName(r.getString(0)), r.getString(1))).foreach {
-      case ((file, c), rows) =>
-        val bits = new Array[Long](numBits / 64)
-        rows.foreach(r => bits(r.getLong(2).toInt) = r.getLong(3))
-        built(file) = built.getOrElse(file, Map.empty) +
-          (s"$c#b" -> BloomSum(tpes(c), numHashes, bits))
-    }
-    val rendered = renderStats(built.toMap)
+    val built = bloomStats(spark, path, base, cols, numBits, numHashes)
+    val rendered = renderStats(built)
     // Bloom payloads grow with ROWS (bits ∝ values indexed), not files —
     // the one stats payload that can outgrow a commit line. INLINE stays
     // the fast path for small indexes; past `inlineMaxBytes` the blocks
@@ -1040,17 +987,13 @@ object TxStore extends TxWrites {
     // s37 read path.
     val sidecarName =
       if (rendered.length <= inlineMaxBytes) None
-      else Some(writeSidecar(fs(spark, path), path, built.toMap, Map.empty))
+      else Some(writeSidecar(fs(spark, path), path, built, Map.empty))
     def discardSidecar(): Unit = sidecarName.foreach { n =>
       try { fs(spark, path).delete(sidecarPath(path, n), false): Unit }
       catch { case _: Exception => () } // best-effort; vacuum sweeps debris
     }
     try commitLoop(spark, path, "bloom") { snap =>
-      val vanished = base.files.toSet -- snap.files.toSet
-      if (vanished.nonEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"bloom build at $path conflicts: indexed files rewritten concurrently: " +
-            vanished.take(3).mkString(", "))
+      requireLive("bloom build", path, base.files, snap)
       sidecarName match {
         case Some(sc) => Some(CommitSpec(Nil, Nil, None, sidecars = Seq(sc)))
         case None => Some(CommitSpec(Nil, Nil, None,
@@ -1107,24 +1050,9 @@ object TxStore extends TxWrites {
     if (kept.isEmpty) {
       val schema = logicalSchema(snap).getOrElse(org.apache.spark.sql.types.StructType(Nil))
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else readFiles(spark, path, kept, snap.schema, snap.dv, dvp = snap.dvp,
-      mapping = snap.mapping).filter(predicate)
+    } else readSnap(spark, path, snap, kept).filter(predicate)
   }
 
-  /** Delta-style RESTORE: ONE commit rewinds the table to the state at
-    * `version` — live files, schema, per-file stats AND deletion
-    * vectors all as of v (an accidental overwrite/delete is undone
-    * without replaying history by hand, and the botched versions stay
-    * in the log for forensics — restore is itself just a commit).
-    *
-    * Mechanics: the commit removes every currently-live file and
-    * re-adds the target set (a file live in both is removed-then-
-    * re-added within the commit, which is what lets replay RESET its
-    * accumulated deletion vector to the historical one — vector marks
-    * otherwise only grow). Stats and vectors are restated from the
-    * target snapshot. Fails loudly if vacuum already reclaimed a
-    * target file (restore reach = the vacuum retention window, the
-    * same trade Delta documents). */
   /** CONVERT an existing plain-parquet directory into a transactional
     * table IN PLACE — Delta's CONVERT TO DELTA. Data files are RENAMED
     * under `data/` (same-filesystem metadata ops, never copied),
@@ -1210,6 +1138,20 @@ object TxStore extends TxWrites {
     }.get.version
   }
 
+  /** Delta-style RESTORE: ONE commit rewinds the table to the state at
+    * `version` — live files, schema, per-file stats AND deletion
+    * vectors all as of v (an accidental overwrite/delete is undone
+    * without replaying history by hand, and the botched versions stay
+    * in the log for forensics — restore is itself just a commit).
+    *
+    * Mechanics: the commit removes every currently-live file and
+    * re-adds the target set (a file live in both is removed-then-
+    * re-added within the commit, which is what lets replay RESET its
+    * accumulated deletion vector to the historical one — vector marks
+    * otherwise only grow). Stats and vectors are restated from the
+    * target snapshot. Fails loudly if vacuum already reclaimed a
+    * target file (restore reach = the vacuum retention window, the
+    * same trade Delta documents). */
   def restore(
       spark: SparkSession, path: String, version: Long, shardFiles: Int = 512): Long = {
     val target = snapshotAt(spark, path, version)
@@ -1219,44 +1161,20 @@ object TxStore extends TxWrites {
     require(missing.isEmpty,
       s"restore to v$version impossible: ${missing.size} file(s) already reclaimed by " +
         s"vacuum (outside the retention window): ${missing.take(3).mkString(", ")}")
-    // same multi-part restatement as checkpoint: the target's per-file
-    // payloads are fixed (not per-attempt), so sidecars stage once;
-    // parquet-vector refs restate as one (dir → files) sidecar — the
-    // restore's remove-all leg resets current refs, this re-attaches
-    // the target's
-    val dvpRefs = dvpByDir(target)
-    val dvpSc =
-      if (dvpRefs.isEmpty) Nil
-      else Seq(writeSidecar(f, path, Map.empty, Map.empty, dvpRefs))
-    val payloadFiles = (target.stats.keySet ++ target.dv.keySet).toSeq.sorted
-    val (sts, dvs, sc) =
-      if (payloadFiles.size <= shardFiles) {
-        val s0 =
-          if (target.stats.isEmpty) None
-          else Some(java.util.Base64.getEncoder.encodeToString(
-            renderStats(target.stats).getBytes(StandardCharsets.UTF_8)))
-        val d0 = if (target.dv.isEmpty) None else Some(encodeDv(target.dv))
-        (s0, d0, dvpSc)
-      } else {
-        val shards = payloadFiles.grouped(shardFiles).map { group =>
-          val g = group.toSet
-          writeSidecar(f, path,
-            target.stats.view.filterKeys(g).toMap,
-            target.dv.view.filterKeys(g).toMap)
-        }.toSeq
-        (None, None, shards ++ dvpSc)
-      }
+    // the checkpoint restatement of the target: its per-file payloads
+    // are fixed (not per-attempt), so sidecars stage once; the restore's
+    // remove-all leg resets current parquet-vector refs, the restated
+    // (dir → files) sidecar re-attaches the target's
+    val (spec, sc) = restateSpec(f, path, target, shardFiles)
     try
       commitLoop(spark, path, "restore") { snap =>
         // remove the CURRENT live set (fresh per retry) and re-add the
         // target's — same last-writer-wins semantics as overwrite; the
         // TARGET version's constraint set AND column mapping restore
         // with its data (its files were written/validated under them —
-        // self-consistent per version)
-        Some(CommitSpec(target.files, snap.files, target.schema.map(encodeSchema), sts, dvs, sc,
-          Some(encodeConstraints(target.constraints)),
-          Some(encodeMapping(target.mapping, target.retired)),
-          Some(encodePartitioning(target.partitioning))))
+        // self-consistent per version). Properties are operational
+        // metadata, not data state: a restore does not rewind them.
+        Some(spec.copy(remove = snap.files, props = None))
       }.get.version
     catch {
       case e: Throwable =>
@@ -1309,6 +1227,93 @@ object TxStore extends TxWrites {
     * in flight. */
   val DefaultAgeGraceMs: Long = 60L * 60 * 1000
 
+  /** WALL-CLOCK retention resolved to a VERSION count — Delta's
+    * `VACUUM … RETAIN 168 HOURS` re-derived on the log's own clock
+    * (commit-file mtimes, the same clock [[versionAtTimestamp]] and
+    * DESCRIBE HISTORY report): every version whose commit published
+    * inside the window stays reachable, PLUS the version that was
+    * current AT the window's edge — so `TIMESTAMP AS OF now−window`
+    * keeps resolving after the reap, the same contract Delta documents.
+    * The count feeds the unchanged [[vacuum]]/[[vacuumPreview]]
+    * single-scan victim computation; version- and time-based retention
+    * are one mechanism with two frontends. A window older than the
+    * retained log keeps everything (a checkpoint already truncated
+    * further back). */
+  def retainVersionsForWindow(spark: SparkSession, path: String, windowMs: Long): Int = {
+    require(windowMs >= 0, s"retention window must be ≥ 0 ms: $windowMs")
+    val log = logStore(spark, path)
+    // the FULL log: commit files are never deleted, and vacuum's victim
+    // replay walks all of history — the window must resolve on the same
+    // axis (a checkpoint truncates replay for READERS, not retention)
+    val cs = allCommits(log)
+    require(cs.nonEmpty, s"no transaction log at $path")
+    val cutoffTs = System.currentTimeMillis() - windowMs
+    val atEdge = cs.filter(c => log.mtime(c.version) <= cutoffTs)
+    val cutoffVersion = if (atEdge.isEmpty) cs.head.version else atEdge.last.version
+    (cs.last.version - cutoffVersion + 1).toInt
+  }
+
+  /** The data files a [[vacuum]] with these parameters would delete
+    * RIGHT NOW (relative names) — the DRY RUN an operator reads before
+    * lowering retention. Shares the victim computation with vacuum
+    * itself, so preview and reap cannot drift; clock-dependent (a file
+    * aging past the grace between preview and vacuum joins the reap —
+    * inherent to any dry run). */
+  def vacuumPreview(
+      spark: SparkSession,
+      path: String,
+      retainVersions: Int = 2,
+      ageGraceMs: Long = DefaultAgeGraceMs): Seq[String] = {
+    require(retainVersions >= 1, s"retainVersions must be ≥ 1: $retainVersions")
+    val f = fs(spark, path)
+    val dataDir = new Path(s"$path/$DataDir")
+    if (!f.exists(dataDir)) return Nil
+    val dataQ = f.makeQualified(dataDir).toString
+    vacuumVictims(logStore(spark, path), retainVersions, ageGraceMs)._1
+      .map(_.toString.substring(dataQ.length + 1))
+  }
+
+  /** The unreferenced-and-aged data files under `path` — the victim set
+    * shared by [[vacuum]] (which deletes it) and [[vacuumPreview]]
+    * (which reports it) — plus the full commit list and retention
+    * cutoff the scan derived them from (vacuum's log-truncation leg
+    * reuses both, so the log reads once per run). */
+  private def vacuumVictims(
+      log: LogStore, retainVersions: Int, ageGraceMs: Long): (Seq[Path], Seq[Commit], Long) = {
+    val (f, path) = (log.fs, log.table)
+    val dataDir = new Path(s"$path/$DataDir")
+    val all = allCommits(log)
+    val latest = if (all.isEmpty) 0L else all.last.version
+    val cutoff = latest - retainVersions + 1
+    // one incremental replay over the full log; union the live set at
+    // every version inside the window
+    val live = scala.collection.mutable.LinkedHashSet.empty[String]
+    val keep = scala.collection.mutable.HashSet.empty[String]
+    all.foreach { c =>
+      c.remove.foreach(n => live -= n); c.add.foreach(n => live += n)
+      if (c.version >= cutoff) keep ++= live
+    }
+    // the retained-log contract is unchanged: every add after the last
+    // checkpoint stays referencable for time travel
+    keep ++= fromLastCheckpoint(all).flatMap(_.add)
+    val now = System.currentTimeMillis()
+    // RECURSIVE file walk: partitioned tables nest data files under
+    // col=value/ dirs and the keep-set holds RELATIVE names. In-flight
+    // _stage-*/ part files are excluded here (whole stage dirs sweep
+    // in vacuum under the same age grace).
+    val dataQ = f.makeQualified(dataDir).toString
+    val buf = scala.collection.mutable.ArrayBuffer.empty[Path]
+    val it = f.listFiles(dataDir, true)
+    while (it.hasNext) {
+      val st = it.next()
+      val rel = st.getPath.toString.substring(dataQ.length + 1)
+      if (rel.endsWith(".parquet") && !rel.startsWith("_stage-") &&
+        !keep.contains(rel) && now - st.getModificationTime >= ageGraceMs)
+        buf += st.getPath
+    }
+    (buf.toSeq, all, cutoff)
+  }
+
   /** Delete files outside the retention window: data files removed by
     * overwrite/compact/delete more than `retainVersions` versions ago,
     * crashed-writer debris (both only past `ageGraceMs` of age), and
@@ -1335,108 +1340,21 @@ object TxStore extends TxWrites {
     * tmp reclaimed under a mid-commit writer — degrades to a lost
     * commit race (retried), not a failure. Tests pass `ageGraceMs = 0`
     * to reclaim deterministically. */
-  /** WALL-CLOCK retention resolved to a VERSION count — Delta's
-    * `VACUUM … RETAIN 168 HOURS` re-derived on the log's own clock
-    * (commit-file mtimes, the same clock [[versionAtTimestamp]] and
-    * DESCRIBE HISTORY report): every version whose commit published
-    * inside the window stays reachable, PLUS the version that was
-    * current AT the window's edge — so `TIMESTAMP AS OF now−window`
-    * keeps resolving after the reap, the same contract Delta documents.
-    * The count feeds the unchanged [[vacuum]]/[[vacuumPreview]]
-    * single-scan victim computation; version- and time-based retention
-    * are one mechanism with two frontends. A window older than the
-    * retained log keeps everything (a checkpoint already truncated
-    * further back). */
-  def retainVersionsForWindow(spark: SparkSession, path: String, windowMs: Long): Int = {
-    require(windowMs >= 0, s"retention window must be ≥ 0 ms: $windowMs")
-    val f = fs(spark, path)
-    // the FULL log: commit files are never deleted, and vacuum's victim
-    // replay walks all of history — the window must resolve on the same
-    // axis (a checkpoint truncates replay for READERS, not retention)
-    val cs = allCommits(f, path)
-    require(cs.nonEmpty, s"no transaction log at $path")
-    val cutoffTs = System.currentTimeMillis() - windowMs
-    val atEdge = cs.filter(c =>
-      f.getFileStatus(logPath(path, c.version)).getModificationTime <= cutoffTs)
-    val cutoffVersion = if (atEdge.isEmpty) cs.head.version else atEdge.last.version
-    (cs.last.version - cutoffVersion + 1).toInt
-  }
-
-  /** The data files a [[vacuum]] with these parameters would delete
-    * RIGHT NOW (relative names) — the DRY RUN an operator reads before
-    * lowering retention. Shares the victim computation with vacuum
-    * itself, so preview and reap cannot drift; clock-dependent (a file
-    * aging past the grace between preview and vacuum joins the reap —
-    * inherent to any dry run). */
-  def vacuumPreview(
-      spark: SparkSession,
-      path: String,
-      retainVersions: Int = 2,
-      ageGraceMs: Long = DefaultAgeGraceMs): Seq[String] = {
-    require(retainVersions >= 1, s"retainVersions must be ≥ 1: $retainVersions")
-    val f = fs(spark, path)
-    val dataDir = new Path(s"$path/$DataDir")
-    if (!f.exists(dataDir)) return Nil
-    val dataQ = f.makeQualified(dataDir).toString
-    vacuumVictims(f, path, retainVersions, ageGraceMs)._1
-      .map(_.toString.substring(dataQ.length + 1))
-  }
-
-  /** The unreferenced-and-aged data files under `path` — the victim set
-    * shared by [[vacuum]] (which deletes it) and [[vacuumPreview]]
-    * (which reports it) — plus the full commit list and retention
-    * cutoff the scan derived them from (vacuum's log-truncation leg
-    * reuses both, so the log reads once per run). */
-  private def vacuumVictims(
-      f: FileSystem, path: String, retainVersions: Int,
-      ageGraceMs: Long): (Seq[Path], Seq[Commit], Long) = {
-    val dataDir = new Path(s"$path/$DataDir")
-    val all = allCommits(f, path)
-    val latest = if (all.isEmpty) 0L else all.last.version
-    val cutoff = latest - retainVersions + 1
-    // one incremental replay over the full log; union the live set at
-    // every version inside the window
-    val live = scala.collection.mutable.LinkedHashSet.empty[String]
-    val keep = scala.collection.mutable.HashSet.empty[String]
-    all.foreach { c =>
-      c.remove.foreach(n => live -= n); c.add.foreach(n => live += n)
-      if (c.version >= cutoff) keep ++= live
-    }
-    // the retained-log contract is unchanged: every add after the last
-    // checkpoint stays referencable for time travel
-    keep ++= commits(f, path).flatMap(_.add)
-    val now = System.currentTimeMillis()
-    // RECURSIVE file walk: partitioned tables nest data files under
-    // col=value/ dirs and the keep-set holds RELATIVE names. In-flight
-    // _stage-*/ part files are excluded here (whole stage dirs sweep
-    // in vacuum under the same age grace).
-    val dataQ = f.makeQualified(dataDir).toString
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Path]
-    val it = f.listFiles(dataDir, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val rel = st.getPath.toString.substring(dataQ.length + 1)
-      if (rel.endsWith(".parquet") && !rel.startsWith("_stage-") &&
-        !keep.contains(rel) && now - st.getModificationTime >= ageGraceMs)
-        buf += st.getPath
-    }
-    (buf.toSeq, all, cutoff)
-  }
-
   def vacuum(
       spark: SparkSession,
       path: String,
       retainVersions: Int = 2,
       ageGraceMs: Long = DefaultAgeGraceMs): Int = {
     require(retainVersions >= 1, s"retainVersions must be ≥ 1: $retainVersions")
-    val f = fs(spark, path)
+    val log = logStore(spark, path)
+    val f = log.fs
     val dataDir = new Path(s"$path/$DataDir")
     if (!f.exists(dataDir)) return 0
     val now = System.currentTimeMillis()
     def aged(s: org.apache.hadoop.fs.FileStatus): Boolean =
       now - s.getModificationTime >= ageGraceMs
     val listed = f.listStatus(dataDir).toSeq
-    val (victims, all, cutoff) = vacuumVictims(f, path, retainVersions, ageGraceMs)
+    val (victims, all, cutoff) = vacuumVictims(log, retainVersions, ageGraceMs)
     victims.foreach(f.delete(_, false))
     // partition dirs a partition delete + vacuum fully emptied are
     // dead weight in every later recursive listing — reap them
@@ -1466,19 +1384,13 @@ object TxStore extends TxWrites {
       }
     }
     // a writer that died inside stage() leaves a _stage-<uuid>/ directory
-    // of never-renamed part files; one that died inside tryCommit leaves
-    // a never-linked .<v>.json.<uuid>.tmp in the log dir
+    // of never-renamed part files; one that died inside a log store put
+    // leaves a never-published temp commit
     val staleStages = listed
       .filter(s => s.getPath.getName.startsWith("_stage-") && aged(s))
       .map(_.getPath)
     staleStages.foreach(f.delete(_, true))
-    val logDir = new Path(s"$path/$LogDir")
-    val staleTmps =
-      if (!f.exists(logDir)) Nil
-      else f.listStatus(logDir).toSeq
-        .filter(s => s.getPath.getName.startsWith(".") && s.getPath.getName.endsWith(".tmp") &&
-          aged(s))
-        .map(_.getPath)
+    val staleTmps = log.temps.filter(aged).map(_.getPath)
     staleTmps.foreach(f.delete(_, false))
     // LOG truncation — the log must not grow forever either. A commit
     // file is prunable once it is BOTH behind the latest checkpoint
@@ -1488,22 +1400,17 @@ object TxStore extends TxWrites {
     // protect). Everything from min(checkpoint, window start) on stays,
     // so the full-log replay above keeps working for the whole window.
     val lastCk = all.filter(_.op == "checkpoint").lastOption.map(_.version)
-    val prunedLogs = lastCk match {
-      case None => Nil
-      case Some(ck) =>
-        val keepFrom = math.min(ck, cutoff)
-        all.filter(_.version < keepFrom)
-          .map(c => logPath(path, c.version))
+    val prunedLogs = lastCk.fold(Set.empty[Long]) { ck =>
+      all.map(_.version).filter(_ < math.min(ck, cutoff)).toSet
     }
-    prunedLogs.foreach(f.delete(_, false))
+    prunedLogs.foreach(log.delete)
     // SIDECAR GC: a sidecar is reclaimable once no surviving commit file
     // references it — either its commit was just pruned above, or it is
     // a crash/lost-race orphan that was never referenced. The age grace
     // protects a mid-commit writer's freshly-staged sidecar exactly as
     // it protects staged data files.
-    val prunedNames = prunedLogs.map(_.getName).toSet
     val referencedSc = all
-      .filterNot(c => prunedNames.contains(logPath(path, c.version).getName))
+      .filterNot(c => prunedLogs(c.version))
       .flatMap(_.sidecars)
       .toSet
     // parquet-vector DIRS are referenced indirectly — through the
@@ -1514,15 +1421,12 @@ object TxStore extends TxWrites {
       .flatMap(n => scala.util.Try(readSidecar(f, path, n).dvParquet).getOrElse(Nil))
       .map(_._1)
       .toSet
-    val scDir = new Path(s"$path/$LogDir/$SidecarDirName")
-    val staleSidecars =
-      if (!f.exists(scDir)) Nil
-      else f.listStatus(scDir).toSeq
-        .filter { s =>
-          val n = s.getPath.getName
-          !referencedSc.contains(n) && !referencedDvpq.contains(n) && aged(s)
-        }
-        .map(_.getPath)
+    val staleSidecars = log.sidecars
+      .filter { s =>
+        val n = s.getPath.getName
+        !referencedSc.contains(n) && !referencedDvpq.contains(n) && aged(s)
+      }
+      .map(_.getPath)
     staleSidecars.foreach(f.delete(_, /* recursive = */ true))
     victims.size + staleStages.size + staleTmps.size + prunedLogs.size + staleSidecars.size
   }

@@ -1,14 +1,15 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{array, bit_or, call_function, coalesce, col, count, count_distinct, explode, lit, not, pmod, struct, when, xxhash64}
+import org.apache.spark.sql.functions.{coalesce, col, count, count_distinct, lit, not, struct, when}
 
-import java.nio.charset.StandardCharsets
 import java.util.UUID
 
+import LogStore.sidecarPath
 import TxSnapshot._
 import TxStats._
+import TxWrites.{Blind, Conflict, Loud, NoOp, Strict}
 
 /** TxStore's write entry points, mixed into [[TxStore]]. */
 trait TxWrites {
@@ -18,59 +19,7 @@ trait TxWrites {
   val MergeClause = TxWrites.MergeClause
   type MergeClause = TxWrites.MergeClause
 
-  private[sources] val MaxRetries = 20
-
-  /** Rename a logical frame's columns to their physical names before
-    * staging — identity when the mapping is. Columns without a pair
-    * (pre-evolution callers extend the mapping first) pass through. */
-  private[sources] def toPhysical(df: DataFrame, mapping: Seq[(String, String)]): DataFrame =
-    if (mapping.isEmpty) df
-    else {
-      val byLogical = mapping.map { case (l, p) =>
-        l.toLowerCase(java.util.Locale.ROOT) -> p
-      }.toMap
-      df.select(df.columns.toIndexedSeq.map(c =>
-        col(c).as(byLogical.getOrElse(c.toLowerCase(java.util.Locale.ROOT), c))): _*)
-    }
-
-  /** Schema evolution in MAPPING mode: evolve on the LOGICAL level
-    * (same widening/duplicate rules as [[evolve]]), then assign each
-    * genuinely new logical column a physical name — its own name when
-    * never used by any live or retired physical column, else a
-    * suffixed fresh one (the no-resurrection rule). Returns the new
-    * physical schema and the extended mapping. */
-  private[sources] def evolveMapped(
-      snap: Snapshot,
-      incoming: org.apache.spark.sql.types.StructType,
-      caseSensitive: Boolean): (org.apache.spark.sql.types.StructType, Seq[(String, String)]) = {
-    def key(n: String) = if (caseSensitive) n else n.toLowerCase(java.util.Locale.ROOT)
-    val phys = snap.schema.getOrElse(
-      throw new IllegalStateException("mapping mode requires a log schema"))
-    val logicalCur = logicalSchema(snap).get
-    val evolvedLogical = evolve(Some(logicalCur), incoming, caseSensitive)
-    val pairByLogical = snap.mapping.map { case (l, p) => key(l) -> p }.toMap
-    val used = (phys.fieldNames.toSeq ++ snap.retired ++ snap.mapping.map(_._2))
-      .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-    val newFields = evolvedLogical.fields.toSeq.filterNot(f => pairByLogical.contains(key(f.name)))
-    // refuse names the tab/newline-delimited mapping payload cannot
-    // carry BEFORE commit — same rule as materializedMapping (a
-    // committed undecodable payload would brick every snapshot())
-    newFields.foreach(f => require(!f.name.exists(c => c == '\t' || c == '\n'),
-      s"column name unsupported for mapping mode: '${f.name}'"))
-    val newPairs = newFields.map { f =>
-      val p =
-        if (used(f.name.toLowerCase(java.util.Locale.ROOT)))
-          s"${f.name}_${UUID.randomUUID().toString.take(8)}"
-        else f.name
-      (f.name, p)
-    }
-    val widenedByPhys = evolvedLogical.fields.toSeq.flatMap(f =>
-      pairByLogical.get(key(f.name)).map(p => key(p) -> f.dataType)).toMap
-    val physFields = phys.fields.toSeq.map(f =>
-      widenedByPhys.get(key(f.name)).fold(f)(dt => f.copy(dataType = dt))) ++
-      newPairs.zip(newFields).map { case ((_, p), f) => f.copy(name = p) }
-    (org.apache.spark.sql.types.StructType(physFields), snap.mapping ++ newPairs)
-  }
+  private val MaxRetries = 20
 
   /** ANSI CHECK semantics: a row VIOLATES iff the expression evaluates
     * to FALSE — a NULL result passes (unknown is not a violation; same
@@ -98,89 +47,8 @@ trait TxWrites {
         s"$op at $path violates CHECK constraint(s) ${violated.mkString("; ")}")
   }
 
-  private[sources] def normalize(
-      s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(s.fields.map(_.copy(nullable = true)))
-
-  /** Rank in the safe widening chains: every step up a chain is exact
-    * (no value an INT holds is unrepresentable as BIGINT; every FLOAT
-    * widens to the same DOUBLE bit-for-bit), and Spark 4's parquet
-    * readers perform exactly these promotions when the read schema is
-    * wider than the file (SPARK-40876) — which is what lets old files
-    * stay untouched when the log schema widens. Everything outside the
-    * two chains is NOT widening (string↔int, double→float, …) and keeps
-    * being rejected as type drift. */
-  private[sources] def widenRank(dt: org.apache.spark.sql.types.DataType): Option[(Char, Int)] = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case ByteType => Some(('i', 0))
-      case ShortType => Some(('i', 1))
-      case IntegerType => Some(('i', 2))
-      case LongType => Some(('i', 3))
-      case FloatType => Some(('f', 0))
-      case DoubleType => Some(('f', 1))
-      case _ => None
-    }
-  }
-
-  /** The wider of two types when they sit on one widening chain. */
-  private[sources] def widened(
-      a: org.apache.spark.sql.types.DataType,
-      b: org.apache.spark.sql.types.DataType): Option[org.apache.spark.sql.types.DataType] =
-    if (a == b) Some(a)
-    else (widenRank(a), widenRank(b)) match {
-      case (Some((ca, ra)), Some((cb, rb))) if ca == cb => Some(if (ra >= rb) a else b)
-      case _ => None
-    }
-
-  /** Schema evolution: incoming may ADD columns, and a column both sides
-    * know may WIDEN along a safe chain (INT→BIGINT, FLOAT→DOUBLE — the
-    * log carries the widest type ever seen, readback promotes narrower
-    * files); any other type change is drift and rejected — silent type
-    * drift is how a lake corrupts. Name matching follows the session's
-    * `spark.sql.caseSensitive` (default false, like Spark's own column
-    * resolution): case-insensitively, an incoming 'ID' IS the table's
-    * 'id' — the table's original spelling is kept — rather than a
-    * silent duplicate column that would break every subsequent
-    * schema-applied read. Returns table (with widenings applied) ++ new
-    * columns. */
-  private[sources] def evolve(
-      cur: Option[org.apache.spark.sql.types.StructType],
-      incoming: org.apache.spark.sql.types.StructType,
-      caseSensitive: Boolean): org.apache.spark.sql.types.StructType = {
-    def key(n: String) = if (caseSensitive) n else n.toLowerCase(java.util.Locale.ROOT)
-    val dupes = incoming.fields.groupBy(f => key(f.name)).filter(_._2.length > 1)
-    require(dupes.isEmpty,
-      s"incoming schema has columns colliding under spark.sql.caseSensitive=$caseSensitive: " +
-        dupes.values.map(_.map(_.name).mkString("/")).mkString(", "))
-    cur match {
-      case None => normalize(incoming)
-      case Some(t) =>
-        val byName = t.fields.map(f => key(f.name) -> f).toMap
-        val evolvedExisting = t.fields.map { old =>
-          incoming.fields.find(f => key(f.name) == key(old.name)) match {
-            case None => old
-            case Some(f) =>
-              val w = widened(old.dataType, f.dataType).getOrElse(throw new IllegalArgumentException(
-                s"schema conflict on '${old.name}': table has ${old.dataType.catalogString}, " +
-                  s"incoming has ${f.dataType.catalogString} — not a safe widening"))
-              old.copy(dataType = w)
-          }
-        }
-        normalize(org.apache.spark.sql.types.StructType(
-          evolvedExisting ++ incoming.fields.filterNot(f => byName.contains(key(f.name)))))
-    }
-  }
-
-  private[sources] def sessionCaseSensitive(spark: SparkSession): Boolean =
-    spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
-
   // ── writes ─────────────────────────────────────────────────────────
 
-  /** Stage `df` as new immutable data files; returns their names. Staged
-    * files are invisible until a commit lists them. */
-  /** Stage the frame's partitions as immutable data files and harvest
-    * their footer stats — (names, stats payload for the commit). */
   /** Should staging harvest per-column NULL facts? On unless the table
     * opts out with `graft.stats.nullCounts=false` (the EXT74 bounding
     * knob — the harvest rides the footer walk the commit already pays,
@@ -188,11 +56,14 @@ trait TxWrites {
     * pruning and COUNT(col) pushdown those facts power for leaner
     * commits; absent facts are always SOUND — they just prune nothing
     * and refuse the metadata answer). */
-  private[sources] def harvestNullCounts(snap: Snapshot): Boolean =
+  private def harvestNullCounts(snap: Snapshot): Boolean =
     !snap.properties.exists(p => p._1.equalsIgnoreCase("graft.stats.nullCounts") &&
       p._2.trim.equalsIgnoreCase("false"))
 
-  private[sources] def stage(
+  /** Stage the frame's partitions as immutable data files and harvest
+    * their footer stats — (names, stats payload for the commit). Staged
+    * files are invisible until a commit lists them. */
+  private def stage(
       df: DataFrame, path: String, collectStats: Boolean = true,
       partitionBy: Seq[String] = Nil,
       nullCounts: Boolean = true): (Seq[String], Option[String]) = {
@@ -232,22 +103,33 @@ trait TxWrites {
     * would let it pass — and its replacement files, staged reading
     * through BASE's marks, would silently resurrect rows whose vectored
     * delete committed in between (a lost delete, violating
-    * write-serializable isolation). Every rewrite op (compact /
-    * compactZOrder / delete) re-checks this in its commit attempt;
-    * merge is already safe via its strict version check, and
-    * dv-AFTER-rewrite ordering is safe because the rewrite's commit
-    * removes the marked files (the vanished-file check on the dv side). */
-  private[sources] def dvDrifted(base: Snapshot, snap: Snapshot, inputs: Seq[String]): Boolean = {
+    * write-serializable isolation). The [[Loud]] and [[NoOp]] rules
+    * re-check this in every rewrite's commit attempt; merge is already
+    * safe via its strict version check, and dv-AFTER-rewrite ordering is
+    * safe because the rewrite's commit removes the marked files (the
+    * vanished-file check on the dv side). */
+  private def dvDrifted(base: Snapshot, snap: Snapshot, inputs: Seq[String]): Boolean = {
     val in = inputs.toSet
     base.dv.view.filterKeys(in).toMap != snap.dv.view.filterKeys(in).toMap ||
       base.dvp.view.filterKeys(in).toMap != snap.dvp.view.filterKeys(in).toMap
   }
 
-  /** Optimistic-commit loop shared by every write op. `attempt` sees the
-    * latest snapshot and returns the [[CommitSpec]] to try at its
-    * version + 1, or None to abort as a no-op (e.g. compaction inputs
-    * vanished). The spec is decided per attempt so a retry restates it
-    * against the freshest snapshot. */
+  private def vanished(inputs: Seq[String], snap: Snapshot): Seq[String] = {
+    val live = snap.files.toSet
+    inputs.filterNot(live)
+  }
+
+  /** Refuse a commit whose `inputs` a concurrent commit removed: the
+    * snapshot the op decided on is gone, and re-deciding against the new
+    * one is the caller's call, never an implicit retry. */
+  private[sources] def requireLive(
+      op: String, path: String, inputs: Seq[String], snap: Snapshot): Unit = {
+    val gone = vanished(inputs, snap)
+    if (gone.nonEmpty)
+      throw new java.util.ConcurrentModificationException(
+        s"$op at $path conflicts: files removed concurrently: ${gone.take(3).mkString(", ")}")
+  }
+
   /** Row-mutating ops the `graft.appendOnly` table property refuses —
     * Delta's delta.appendOnly contract: existing rows can never be
     * deleted or updated. The gate fires when the decided spec removes
@@ -260,20 +142,29 @@ trait TxWrites {
     * an overwrite of an EMPTY table pass (no rows mutated); maintenance
     * rewrites (compact / optimize-zorder: row-preserving) and
     * checkpoint restatements stay exempt by op name. */
-  private[sources] val AppendOnlyGated =
+  private val AppendOnlyGated =
     Set("overwrite", "replace-where", "delete", "update", "delete-dv", "merge", "restore")
 
-  private[sources] def isAppendOnly(snap: Snapshot): Boolean =
+  private def isAppendOnly(snap: Snapshot): Boolean =
     snap.properties.exists(p =>
       p._1.equalsIgnoreCase("graft.appendOnly") && p._2.trim.equalsIgnoreCase("true"))
 
+  /** Optimistic-commit loop shared by every write op. `attempt` sees the
+    * latest snapshot and returns the [[CommitSpec]] to try at its
+    * version + 1, or None to abort as a no-op (e.g. compaction inputs
+    * vanished). The spec is decided per attempt so a retry restates it
+    * against the freshest snapshot. A `txn` stamp already in the
+    * retained log aborts too: a concurrent delivery of the same batch
+    * committed first (see [[once]]). */
   private[sources] def commitLoop(
       spark: SparkSession, path: String, op: String, txn: Option[String] = None)(
       attempt: Snapshot => Option[CommitSpec]): Option[Commit] = {
-    val f = fs(spark, path)
+    val log = logStore(spark, path)
     var tries = 0
     while (tries < MaxRetries) {
-      val snap = replay(f, path, commits(f, path))
+      val cs = commits(log)
+      if (txn.exists(t => cs.exists(_.txn.contains(t)))) return None
+      val snap = replay(log, cs)
       attempt(snap) match {
         case None => return None
         case Some(spec) =>
@@ -289,7 +180,7 @@ trait TxWrites {
           val c = Commit(snap.version + 1, op, spec.add, spec.remove, txn,
             spec.schema, spec.stats, spec.dv, spec.sidecars, spec.constraints, spec.mapping,
             spec.partcols, spec.props)
-          if (tryCommit(f, path, c)) return Some(c)
+          if (publish(log, c)) return Some(c)
       }
       tries += 1
     }
@@ -297,12 +188,181 @@ trait TxWrites {
       s"$op at $path lost $MaxRetries optimistic-commit races — livelocked table?")
   }
 
+  /** Does `snap` still admit a commit decided against the rule's base?
+    * True to go on, false to abort the op as a no-op; a loud rule
+    * throws. */
+  private def admits(op: String, path: String, rule: Conflict, snap: Snapshot): Boolean =
+    rule match {
+      case Blind => true
+      case Strict(base) =>
+        if (snap.version != base.version)
+          throw new java.util.ConcurrentModificationException(
+            s"$op at $path conflicts: table advanced from v${base.version} " +
+              s"to v${snap.version} after the probe")
+        true
+      case Loud(base, inputs) =>
+        requireLive(op, path, inputs, snap)
+        if (dvDrifted(base, snap, inputs))
+          throw new java.util.ConcurrentModificationException(
+            s"$op at $path conflicts: deletion vectors advanced on rewrite inputs after the probe")
+        true
+      case NoOp(base, inputs) => vanished(inputs, snap).isEmpty && !dvDrifted(base, snap, inputs)
+    }
+
+  /** The core every staged write runs on: stage `out` as data files
+    * (under `partitionBy`), then publish through [[commitLoop]] — each
+    * attempt first passes `rule`, then `spec` decides its commit from the
+    * newest snapshot and the staged (files, stats). The staged files are
+    * deleted when an attempt throws or the op aborts, so a failed or
+    * no-op write leaves nothing behind for vacuum. Returns the committed
+    * version, None on abort. */
+  private def stageAndCommit(
+      out: DataFrame, path: String, op: String, rule: Conflict, partitionBy: Seq[String],
+      collectStats: Boolean = true, nullCounts: Boolean = true, txn: Option[String] = None)(
+      spec: (Snapshot, Seq[String], Option[String]) => Option[CommitSpec]): Option[Long] = {
+    val (files, stats) = stage(out, path, collectStats, partitionBy, nullCounts)
+    val f = fs(out.sparkSession, path)
+    def discard(): Unit = files.foreach(n => f.delete(new Path(s"$path/$DataDir/$n"), false))
+    val committed =
+      try commitLoop(out.sparkSession, path, op, txn) { snap =>
+        if (admits(op, path, rule, snap)) spec(snap, files, stats) else None
+      }
+      catch { case e: Throwable => discard(); throw e }
+    if (committed.isEmpty) discard()
+    committed.map(_.version)
+  }
+
+  /** A rewrite's commit: the staged files replace `inputs`, restating
+    * the LATEST schema (an append may have evolved it since the base —
+    * its files stay live, so its columns must stay declared). */
+  private def replacing(inputs: Seq[String])(
+      snap: Snapshot, files: Seq[String], stats: Option[String]): Option[CommitSpec] =
+    Some(CommitSpec(files, inputs, snap.schema.map(encodeSchema), stats))
+
+  /** The copy-on-write probe shared by delete, update and merge: the
+    * live files of `base` holding a row `select` keeps. Predicates push
+    * into the parquet scan, so row-group stats prune most files before a
+    * row is read. The probe's `__file` is the leaf name; one leaf → log
+    * name map serves every hit (one per hit would cost O(hits × live
+    * files)). */
+  private def hitFiles(spark: SparkSession, path: String, base: Snapshot)(
+      select: DataFrame => DataFrame): Seq[String] = {
+    val leaves = select(readSnap(spark, path, base, base.files, withFile = true))
+      .select("__file").distinct().collect().map(_.getString(0))
+    if (leaves.isEmpty) Nil
+    else {
+      val fullName = byLeaf(base.files)
+      leaves.toSeq.map(fullName)
+    }
+  }
+
+  /** The exactly-once shell of appendOnce, mergeOnce and
+    * mergeConditionalOnce: `write` commits under a (writerId, batchId)
+    * txn stamp. A delivery whose stamp is already in the retained log
+    * answers that commit's version and writes nothing; [[commitLoop]]
+    * re-checks the stamp per attempt, so two CONCURRENT deliveries of
+    * one batch commit it once (the loser's staged files are deleted),
+    * and a loser of merge's serializable race re-checks the stamp and
+    * answers the winner's version. A write that commits nothing (a
+    * merge that matched nothing) answers the current version.
+    *
+    * Retention contract: [[TxStore.checkpoint]] truncates replay,
+    * dropping stamps older than the checkpoint — run it only once the
+    * upstream redelivery window has passed, or a very late replay of a
+    * pre-checkpoint batch would write again. */
+  private def once(spark: SparkSession, path: String, writerId: String, batchId: Long)(
+      write: Option[String] => Option[Long]): Long = {
+    require(
+      writerId.nonEmpty && !writerId.exists(c => c == '"' || c == '\\' || c == ':'),
+      "writerId must be non-empty and free of quotes, backslashes and colons")
+    val stamp = s"$writerId:$batchId"
+    def committed: Option[Long] =
+      commits(logStore(spark, path)).find(_.txn.contains(stamp)).map(_.version)
+    committed.getOrElse {
+      try write(Some(stamp)).orElse(committed).getOrElse(snapshot(spark, path).version)
+      catch {
+        case e: java.util.ConcurrentModificationException => committed.getOrElse(throw e)
+      }
+    }
+  }
+
+  /** Append's write, shared by append, appendOnce and replaceWhere: `df`
+    * is checked against the table's constraints and partition layout,
+    * staged (logical → physical names under column mapping), and
+    * committed with append's per-attempt drift checks. `remove` picks,
+    * per attempt, the live files the commit replaces (replaceWhere's
+    * matching partitions; none for an append). */
+  private def appendCore(
+      df: DataFrame, path: String, op: String, pre: Snapshot, partitionBy: Seq[String],
+      collectStats: Boolean, txn: Option[String] = None,
+      remove: Snapshot => Seq[String] = _ => Nil): Option[Long] = {
+    val cs = sessionCaseSensitive(df.sparkSession)
+    // validate against the CURRENT constraint set before paying the
+    // stage write; re-checked per commit attempt below if it drifts
+    var checked = pre.constraints
+    enforceConstraints(df, checked, op, path)
+    // hive-style partitioning: `partitionBy` names are LOGICAL; the
+    // effective list (PHYSICAL names, what stage and the log carry) is
+    // fixed at table creation — later appends inherit it (pass Nil) or
+    // must restate it identically; re-partitioning an existing table is
+    // overwrite's job (mixing flat and partitioned files would break
+    // the basePath read).
+    val effParts = resolvePartitioning(pre, partitionBy, path)
+    val missing = effParts.map(p => pre.mapping.find(_._2 == p).map(_._1).getOrElse(p))
+      .filterNot(n => df.columns.exists(_.equalsIgnoreCase(n)))
+    require(missing.isEmpty,
+      s"$op to partitioned table $path: frame lacks partition column(s) " +
+        missing.mkString(", "))
+    // column-mapping mode: evolve on the LOGICAL level against the
+    // pre-snapshot, stage under PHYSICAL names; a concurrent mapping/
+    // schema change invalidates the staged names → conflict (mapping
+    // changes are rare metadata ops; plain appends stay conflict-free)
+    val mapped =
+      if (pre.mapping.isEmpty) None
+      else Some(evolveMapped(pre, df.schema, cs))
+    def conflict(what: String) =
+      new java.util.ConcurrentModificationException(s"$op at $path conflicts: $what — retry")
+    stageAndCommit(mapped.fold(df) { case (_, m2) => toPhysical(df, m2) }, path, op, Blind,
+        effParts, collectStats, harvestNullCounts(pre), txn) { (snap, files, stats) =>
+      if (snap.constraints != checked) {
+        // a constraint landed while we were staging — the new gate
+        // applies to THIS write too (its commit orders after the
+        // constraint's full-table validation)
+        enforceConstraints(df, snap.constraints, op, path)
+        checked = snap.constraints
+      }
+      if (snap.mapping != pre.mapping || snap.retired != pre.retired)
+        throw conflict("column mapping changed while staging")
+      if (snap.partitioning != pre.partitioning)
+        throw conflict("table partitioning changed while staging")
+      // ESTABLISHING partitioning (empty table at stage time) must still
+      // hold at commit time: a concurrent FLAT append leaves
+      // snap.partitioning == pre.partitioning (both Nil) but fills
+      // snap.files — committing the partitioned batch then would mix
+      // flat and hive-pathed live files under one basePath, which Spark
+      // rejects as "conflicting directory structures" on every read.
+      if (pre.partitioning.isEmpty && effParts.nonEmpty && snap.files.nonEmpty)
+        throw conflict("a concurrent append filled the table while this append was " +
+          "establishing partitioning")
+      val pc = if (effParts != snap.partitioning) Some(encodePartitioning(effParts)) else None
+      val (schema, mp) = mapped match {
+        case None => (evolve(snap.schema, df.schema, cs), None)
+        case Some((physSchema, m2)) =>
+          if (snap.schema != pre.schema)
+            throw conflict("schema evolved concurrently under column mapping")
+          (physSchema, if (m2 != pre.mapping) Some(encodeMapping(m2, pre.retired)) else None)
+      }
+      Some(CommitSpec(files, remove(snap), Some(encodeSchema(schema)), stats, mapping = mp,
+        partcols = pc))
+    }
+  }
+
   /** The PHYSICAL partition column list an append must stage under:
     * the table's own when one is set (a non-empty `requested` must
     * restate it identically — partitioning is a table property, not a
     * per-write choice), else the requested list, which only a table
     * with no live files may establish. */
-  private[sources] def resolvePartitioning(
+  private def resolvePartitioning(
       pre: Snapshot, requested: Seq[String], path: String): Seq[String] = {
     if (requested.isEmpty) return pre.partitioning
     val phys = physByLogical(pre)
@@ -329,87 +389,8 @@ trait TxWrites {
     * land under `col=value/` paths, partition values travel in the log
     * names, and [[readWhere]] prunes on them before any stats walk. */
   def append(df: DataFrame, path: String, collectStats: Boolean = true,
-      partitionBy: Seq[String] = Nil): Long = {
-    val cs = sessionCaseSensitive(df.sparkSession)
-    // validate against the CURRENT constraint set before paying the
-    // stage write; re-checked per commit attempt below if it drifts
-    val pre = snapshot(df.sparkSession, path)
-    var checked = pre.constraints
-    enforceConstraints(df, checked, "append", path)
-    // hive-style partitioning: `partitionBy` names are LOGICAL; the
-    // effective list (PHYSICAL names, what stage and the log carry) is
-    // fixed at table creation — later appends inherit it (pass Nil) or
-    // must restate it identically; re-partitioning an existing table is
-    // overwrite's job (mixing flat and partitioned files would break
-    // the basePath read).
-    val effParts = resolvePartitioning(pre, partitionBy, path)
-    if (effParts.nonEmpty) {
-      val logNames =
-        if (pre.mapping.isEmpty) effParts
-        else effParts.map(p => pre.mapping.find(_._2 == p).map(_._1).getOrElse(p))
-      val missing = logNames.filterNot(n => df.columns.exists(_.equalsIgnoreCase(n)))
-      require(missing.isEmpty,
-        s"append to partitioned table $path: frame lacks partition column(s) " +
-          missing.mkString(", "))
-    }
-    // column-mapping mode: evolve on the LOGICAL level against the
-    // pre-snapshot, stage under PHYSICAL names; a concurrent mapping/
-    // schema change invalidates the staged names → conflict (mapping
-    // changes are rare metadata ops; plain appends stay conflict-free)
-    val mapped =
-      if (pre.mapping.isEmpty) None
-      else Some(evolveMapped(pre, df.schema, cs))
-    val (files, stats) =
-      stage(mapped.fold(df) { case (_, m2) => toPhysical(df, m2) }, path, collectStats,
-        partitionBy = effParts, nullCounts = harvestNullCounts(pre))
-    val f = fs(df.sparkSession, path)
-    try
-      commitLoop(df.sparkSession, path, "append") { snap =>
-        if (snap.constraints != checked) {
-          // a constraint landed while we were staging — the new gate
-          // applies to THIS append too (its commit orders after the
-          // constraint's full-table validation)
-          enforceConstraints(df, snap.constraints, "append", path)
-          checked = snap.constraints
-        }
-        if (snap.mapping != pre.mapping || snap.retired != pre.retired)
-          throw new java.util.ConcurrentModificationException(
-            s"append at $path conflicts: column mapping changed while staging — retry")
-        if (snap.partitioning != pre.partitioning)
-          throw new java.util.ConcurrentModificationException(
-            s"append at $path conflicts: table partitioning changed while staging — retry")
-        // ESTABLISHING partitioning (empty table at stage time) must still
-        // hold at commit time: a concurrent FLAT append leaves
-        // snap.partitioning == pre.partitioning (both Nil) but fills
-        // snap.files — committing the partitioned batch then would mix
-        // flat and hive-pathed live files under one basePath, which Spark
-        // rejects as "conflicting directory structures" on every read.
-        if (pre.partitioning.isEmpty && effParts.nonEmpty && snap.files.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"append at $path conflicts: a concurrent append filled the table while " +
-              "this append was establishing partitioning — retry or overwrite")
-        val pc =
-          if (effParts != snap.partitioning) Some(encodePartitioning(effParts)) else None
-        mapped match {
-          case None =>
-            Some(CommitSpec(files, Nil,
-              Some(encodeSchema(evolve(snap.schema, df.schema, cs))), stats, partcols = pc))
-          case Some((physSchema, m2)) =>
-            if (snap.schema != pre.schema)
-              throw new java.util.ConcurrentModificationException(
-                s"append at $path conflicts: schema evolved concurrently under column mapping")
-            val mp =
-              if (m2 != pre.mapping) Some(encodeMapping(m2, pre.retired)) else None
-            Some(CommitSpec(files, Nil, Some(encodeSchema(physSchema)), stats, mapping = mp,
-              partcols = pc))
-        }
-      }.get.version
-    catch {
-      case e: Throwable =>
-        files.foreach(n => f.delete(new Path(s"$path/$DataDir/$n"), false))
-        throw e
-    }
-  }
+      partitionBy: Seq[String] = Nil): Long =
+    appendCore(df, path, "append", snapshot(df.sparkSession, path), partitionBy, collectStats).get
 
   /** Transactional full overwrite: one commit removes every currently-live
     * file and adds the replacement set. Fails (cleaning up its staged
@@ -427,41 +408,29 @@ trait TxWrites {
     // an overwrite REPLACES the table, so the replacement's layout is
     // exactly `partitionBy` (default flat) — like the mapping reset, a
     // previously-partitioned table may legitimately go flat here
-    val (files, stats) =
-      stage(df, path, partitionBy = partitionBy, nullCounts = harvestNullCounts(base))
-    val f = fs(df.sparkSession, path)
-    try {
-      commitLoop(df.sparkSession, path, "overwrite") { snap =>
-        if (snap.constraints != checked) { // see append's drift re-check
-          enforceConstraints(df, snap.constraints, "overwrite", path)
-          checked = snap.constraints
-        }
-        val vanished = base.files.toSet -- snap.files.toSet
-        if (snap.version > base.version && vanished.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"overwrite at $path conflicts: files removed concurrently: " +
-              vanished.take(3).mkString(", "))
-        // removing the files live NOW (a concurrent append's rows are
-        // legitimately clobbered by a later full overwrite — same
-        // semantics as Delta's overwrite after a racing append). An
-        // overwrite may change the schema freely — it replaces the
-        // table; an active column mapping resets to identity with it
-        // (every old file leaves the live set, so retired names may be
-        // forgotten — nothing their data could resurrect through).
-        val mp =
-          if (snap.mapping.nonEmpty || snap.retired.nonEmpty)
-            Some(encodeMapping(Nil, Nil))
-          else None
-        val pc =
-          if (partitionBy != snap.partitioning) Some(encodePartitioning(partitionBy)) else None
-        Some(CommitSpec(files, snap.files, Some(encodeSchema(normalize(df.schema))), stats,
-          mapping = mp, partcols = pc))
-      }.get.version
-    } catch {
-      case e: Throwable =>
-        files.foreach(n => f.delete(new Path(s"$path/$DataDir/$n"), false))
-        throw e
-    }
+    stageAndCommit(df, path, "overwrite", Blind, partitionBy,
+        nullCounts = harvestNullCounts(base)) { (snap, files, stats) =>
+      if (snap.constraints != checked) { // see appendCore's drift re-check
+        enforceConstraints(df, snap.constraints, "overwrite", path)
+        checked = snap.constraints
+      }
+      requireLive("overwrite", path, base.files, snap)
+      // removing the files live NOW (a concurrent append's rows are
+      // legitimately clobbered by a later full overwrite — same
+      // semantics as Delta's overwrite after a racing append). An
+      // overwrite may change the schema freely — it replaces the
+      // table; an active column mapping resets to identity with it
+      // (every old file leaves the live set, so retired names may be
+      // forgotten — nothing their data could resurrect through).
+      val mp =
+        if (snap.mapping.nonEmpty || snap.retired.nonEmpty)
+          Some(encodeMapping(Nil, Nil))
+        else None
+      val pc =
+        if (partitionBy != snap.partitioning) Some(encodePartitioning(partitionBy)) else None
+      Some(CommitSpec(files, snap.files, Some(encodeSchema(normalize(df.schema))), stats,
+        mapping = mp, partcols = pc))
+    }.get
   }
 
   /** Transactional compaction: rewrite the current file set as `target`
@@ -471,25 +440,9 @@ trait TxWrites {
   def compact(spark: SparkSession, path: String, target: Int = 1): Option[Long] = {
     val base = snapshot(spark, path)
     if (base.files.isEmpty) return None
-    val (compacted, cStats) =
-      stage(toPhysical(
-        readFiles(spark, path, base.files, base.schema, base.dv, dvp = base.dvp,
-          mapping = base.mapping).repartition(target),
-        base.mapping), path, partitionBy = base.partitioning)
-    val f = fs(spark, path)
-    val committed = commitLoop(spark, path, "compact") { snap =>
-      if (!base.files.forall(snap.files.contains)) None
-      // a concurrent delete-dv on an input file would be silently undone
-      // by the rewrite (it read through BASE's marks) — abort, same
-      // no-op contract as vanished inputs; the caller re-runs compact
-      else if (dvDrifted(base, snap, base.files)) None
-      // restate the LATEST schema (an append may have evolved it since
-      // base — its files stay live, so its columns must stay declared)
-      else Some(CommitSpec(compacted, base.files, snap.schema.map(encodeSchema), cStats))
-    }
-    if (committed.isEmpty)
-      compacted.foreach(n => f.delete(new Path(s"$path/$DataDir/$n"), false))
-    committed.map(_.version)
+    val out = readSnap(spark, path, base, base.files).repartition(target)
+    stageAndCommit(toPhysical(out, base.mapping), path, "compact", NoOp(base, base.files),
+      base.partitioning)(replacing(base.files))
   }
 
   /** The live files a maintenance op's WHERE scopes to: all of them
@@ -497,7 +450,7 @@ trait TxWrites {
     * partition-only predicate, refusing anything else — shared by
     * [[compactZOrder]] and [[compactSmallFiles]] so the scoping rule
     * and its refusal cannot drift apart. */
-  private[sources] def scopedFiles(spark: SparkSession, path: String, base: Snapshot,
+  private def scopedFiles(spark: SparkSession, path: String, base: Snapshot,
       where: Option[Column], op: String): Seq[String] = where match {
     case None => base.files
     case Some(p) =>
@@ -581,8 +534,7 @@ trait TxWrites {
       import spark.implicits._
       assignment.map { case (fl, b) => (leafOf(fl), b) }.toDF("__file", "__bin")
     }
-    val pre = readFiles(spark, path, inputs, base.schema, base.dv, withFile = true,
-      dvp = base.dvp, mapping = base.mapping)
+    val pre = readSnap(spark, path, base, inputs, withFile = true)
     require(!pre.columns.contains("__bin"),
       "table must not carry the reserved __bin column")
     // Rows route to bins through an EXACT integer partitioner on the
@@ -611,16 +563,8 @@ trait TxWrites {
       .values
       .map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.patch(binIdx, Nil, 1)))
     val routed = spark.createDataFrame(routedRdd, outSchema)
-    val (staged, sStats) =
-      stage(toPhysical(routed, base.mapping), path, partitionBy = base.partitioning)
-    val committed = commitLoop(spark, path, "compact") { snap =>
-      if (!inputs.forall(snap.files.contains)) None
-      else if (dvDrifted(base, snap, inputs)) None
-      else Some(CommitSpec(staged, inputs, snap.schema.map(encodeSchema), sStats))
-    }
-    if (committed.isEmpty)
-      staged.foreach(n => f.delete(new Path(s"$path/$DataDir/$n"), false))
-    committed.map(_.version)
+    stageAndCommit(toPhysical(routed, base.mapping), path, "compact", NoOp(base, inputs),
+      base.partitioning)(replacing(inputs))
   }
 
   /** OPTIMIZE ZORDER — transactionally rewrite the current file set
@@ -652,8 +596,7 @@ trait TxWrites {
     // file rewrite.
     val inputs = scopedFiles(spark, path, base, where, "compactZOrder")
     if (inputs.isEmpty) return None
-    val df = readFiles(spark, path, inputs, base.schema, base.dv, dvp = base.dvp,
-      mapping = base.mapping)
+    val df = readSnap(spark, path, base, inputs)
     require(!df.columns.contains("__z"), "table must not carry the reserved __z column")
     // persisted: the keyed frame feeds both the range-sampling and the
     // write pass (see the s24 lane note). DISK_ONLY (r18): the frame is
@@ -662,22 +605,12 @@ trait TxWrites {
     // the write for executor memory at scale (guide §5).
     val keyed = df.withColumn("__z", Compaction.zOrderKey(df, zCols, bits))
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val (staged, zStats) =
-      try
-        stage(toPhysical(
+    try
+      stageAndCommit(toPhysical(
           keyed.repartitionByRange(target, col("__z")).sortWithinPartitions("__z").drop("__z"),
-          base.mapping), path, partitionBy = base.partitioning)
-      finally keyed.unpersist(): Unit
-    val f = fs(spark, path)
-    val committed = commitLoop(spark, path, "optimize-zorder") { snap =>
-      if (!inputs.forall(snap.files.contains)) None
-      // concurrent delete-dv on an input — see compact
-      else if (dvDrifted(base, snap, inputs)) None
-      else Some(CommitSpec(staged, inputs, snap.schema.map(encodeSchema), zStats))
-    }
-    if (committed.isEmpty)
-      staged.foreach(n => f.delete(new Path(s"$path/$DataDir/$n"), false))
-    committed.map(_.version)
+          base.mapping), path, "optimize-zorder", NoOp(base, inputs),
+        base.partitioning)(replacing(inputs))
+    finally keyed.unpersist(): Unit
   }
 
   /** Idempotent append for EXACTLY-ONCE streaming sinks. The commit is
@@ -699,120 +632,19 @@ trait TxWrites {
       writerId: String,
       batchId: Long,
       collectStats: Boolean = true,
-      partitionBy: Seq[String] = Nil): Long = {
-    require(
-      writerId.nonEmpty && !writerId.exists(c => c == '"' || c == '\\' || c == ':'),
-      "writerId must be non-empty and free of quotes, backslashes and colons")
-    val spark = df.sparkSession
-    val f = fs(spark, path)
-    val stamp = s"$writerId:$batchId"
-    def committed: Option[Long] = commits(f, path).find(_.txn.contains(stamp)).map(_.version)
-    committed match {
-      case Some(v) => v
-      case None =>
-        val cs = sessionCaseSensitive(spark)
-        val pre = snapshot(spark, path)
-        var checked = pre.constraints
-        enforceConstraints(df, checked, "appendOnce", path)
-        // partitioning: inherit the table's layout (Nil), restate it, or
-        // ESTABLISH it on a creating first batch — append's exact rule
-        val effParts = resolvePartitioning(pre, partitionBy, path)
-        if (effParts.nonEmpty) {
-          val logNames =
-            if (pre.mapping.isEmpty) effParts
-            else effParts.map(p => pre.mapping.find(_._2 == p).map(_._1).getOrElse(p))
-          val missing = logNames.filterNot(n => df.columns.exists(_.equalsIgnoreCase(n)))
-          require(missing.isEmpty,
-            s"appendOnce to partitioned table $path: frame lacks partition column(s) " +
-              missing.mkString(", "))
-        }
-        val mapped = // see append: logical evolution + physical staging
-          if (pre.mapping.isEmpty) None
-          else Some(evolveMapped(pre, df.schema, cs))
-        val (files, stats) =
-          stage(mapped.fold(df) { case (_, m2) => toPhysical(df, m2) }, path, collectStats,
-            partitionBy = effParts, nullCounts = harvestNullCounts(pre))
-        try
-          commitLoop(spark, path, "append", txn = Some(stamp)) { snap =>
-            if (committed.isDefined) None
-            else {
-              if (snap.constraints != checked) { // see append's drift re-check
-                enforceConstraints(df, snap.constraints, "appendOnce", path)
-                checked = snap.constraints
-              }
-              if (snap.mapping != pre.mapping || snap.retired != pre.retired)
-                throw new java.util.ConcurrentModificationException(
-                  s"appendOnce at $path conflicts: column mapping changed while staging")
-              if (snap.partitioning != pre.partitioning)
-                throw new java.util.ConcurrentModificationException(
-                  s"appendOnce at $path conflicts: table partitioning changed while staging")
-              // establishing partitioning must not race a concurrent flat
-              // fill — see append's identical check
-              if (pre.partitioning.isEmpty && effParts.nonEmpty && snap.files.nonEmpty)
-                throw new java.util.ConcurrentModificationException(
-                  s"appendOnce at $path conflicts: a concurrent append filled the table " +
-                    "while this append was establishing partitioning")
-              val pc =
-                if (effParts != snap.partitioning) Some(encodePartitioning(effParts))
-                else None
-              mapped match {
-                case None =>
-                  Some(CommitSpec(files, Nil,
-                    Some(encodeSchema(evolve(snap.schema, df.schema, cs))), stats,
-                    partcols = pc))
-                case Some((physSchema, m2)) =>
-                  if (snap.schema != pre.schema)
-                    throw new java.util.ConcurrentModificationException(
-                      s"appendOnce at $path conflicts: schema evolved concurrently " +
-                        "under column mapping")
-                  val mp =
-                    if (m2 != pre.mapping) Some(encodeMapping(m2, pre.retired)) else None
-                  Some(CommitSpec(files, Nil, Some(encodeSchema(physSchema)), stats,
-                    mapping = mp, partcols = pc))
-              }
-            }
-          } match {
-            case Some(c) => c.version
-            case None => // a concurrent delivery of THIS batch won the race
-              files.foreach(n => f.delete(new Path(s"$path/$DataDir/$n"), false))
-              committed.get
-          }
-        catch {
-          case e: Throwable =>
-            files.foreach(n => f.delete(new Path(s"$path/$DataDir/$n"), false))
-            throw e
-        }
+      partitionBy: Seq[String] = Nil): Long =
+    once(df.sparkSession, path, writerId, batchId) { stamp =>
+      appendCore(df, path, "append", snapshot(df.sparkSession, path), partitionBy, collectStats,
+        stamp)
     }
-  }
 
-  /** Copy-on-write DELETE. Two phases, both distributed:
-    *
-    *  1. PROBE — scan the snapshot for files that contain a matching row.
-    *     `predicate` is pushed into the parquet scan, so row-group min/max
-    *     stats prune most files before a row is read; at lake scale a
-    *     selective delete probes cheaply and touches a handful of files.
-    *  2. REWRITE — only the hit files are re-read and rewritten without
-    *     their matching rows; every other file is carried over untouched
-    *     (never read twice, never rewritten).
-    *
-    * Kept rows are those where the predicate is NOT TRUE — a NULL
-    * predicate result keeps the row (SQL DELETE semantics; a plain
-    * `!predicate` filter would silently drop NULL-valued rows too).
-    *
-    * Isolation is write-serializable (the Delta default): rows appended
-    * concurrently with the probe are not deleted (they were not in the
-    * decided snapshot); a concurrent overwrite/compact that removed one of
-    * the files this delete decided to rewrite fails loudly — re-running
-    * against the new snapshot is the caller's decision, never an implicit
-    * retry that could delete rows the caller never saw. Returns None (and
-    * writes no commit) when nothing matched. */
   /** The partition-delete decision: Some(result) when the fast path
     * applies (result = delete's own return value), None to fall through
     * to the copy-on-write path. Applies iff the table is partitioned
     * AND the predicate references partition columns exclusively — then
     * per file the predicate is a constant, and the decision runs on a
     * partitions-count local frame (metadata class), never the data. */
-  private[sources] def partitionOnlyDelete(
+  private def partitionOnlyDelete(
       spark: SparkSession, path: String, base: Snapshot,
       predicate: Column): Option[Option[Long]] = {
     val matched = partitionDirsMatching(spark, base, predicate) match {
@@ -822,18 +654,14 @@ trait TxWrites {
     if (matched.isEmpty) return Some(None)
     val removed = base.files.filter(f => matched(dirOf(f)))
     val committed = commitLoop(spark, path, "delete") { snap =>
-      val vanished = removed.filterNot(snap.files.contains)
-      if (vanished.nonEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"partition delete at $path conflicts: files removed concurrently: " +
-            vanished.take(3).mkString(", "))
+      requireLive("delete", path, removed, snap)
       Some(CommitSpec(Nil, removed, snap.schema.map(encodeSchema)))
     }
     Some(committed.map(_.version))
   }
 
   /** Directory (relative, `col=value[/…]`) of a partitioned data file. */
-  private[sources] def dirOf(f: String) = f.substring(0, f.lastIndexOf('/'))
+  private def dirOf(f: String) = f.substring(0, f.lastIndexOf('/'))
 
   /** Evaluate a predicate against the live PARTITION DIRECTORIES of
     * `base`: Some(matching dir set) when the table is partitioned and
@@ -843,7 +671,7 @@ trait TxWrites {
     * never the data. None when that evaluation does not apply and
     * per-row semantics are required. Shared by the partition-delete
     * fast path and [[replaceWhere]]. */
-  private[sources] def partitionDirsMatching(
+  private def partitionDirsMatching(
       spark: SparkSession, base: Snapshot,
       predicate: Column): Option[Set[String]] = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
@@ -933,7 +761,6 @@ trait TxWrites {
     * Schema evolves additively, like append. Returns the version. */
   def replaceWhere(df: DataFrame, path: String, predicate: Column): Long = {
     val spark = df.sparkSession
-    val cs = sessionCaseSensitive(spark)
     val pre = snapshot(spark, path)
     require(pre.partitioning.nonEmpty,
       s"replaceWhere at $path: table is not partitioned — use overwrite to (re-)layout")
@@ -961,59 +788,15 @@ trait TxWrites {
       throw new IllegalArgumentException(
         s"replaceWhere at $path: the batch contains rows outside the replaced " +
           s"region (predicate not TRUE), e.g. ${outside.take(1).mkString}")
-    var checked = pre.constraints
-    enforceConstraints(df, checked, "replace-where", path)
-    val logNames =
-      if (pre.mapping.isEmpty) pre.partitioning
-      else pre.partitioning.map(p => pre.mapping.find(_._2 == p).map(_._1).getOrElse(p))
-    val missing = logNames.filterNot(n => df.columns.exists(_.equalsIgnoreCase(n)))
-    require(missing.isEmpty,
-      s"replaceWhere at $path: frame lacks partition column(s) ${missing.mkString(", ")}")
-    val mapped =
-      if (pre.mapping.isEmpty) None
-      else Some(evolveMapped(pre, df.schema, cs))
-    val (files, stats) =
-      stage(mapped.fold(df) { case (_, m2) => toPhysical(df, m2) }, path,
-        collectStats = true, partitionBy = pre.partitioning)
-    val f = fs(spark, path)
-    try
-      commitLoop(spark, path, "replace-where") { snap =>
-        if (snap.constraints != checked) { // see append's drift re-check
-          enforceConstraints(df, snap.constraints, "replace-where", path)
-          checked = snap.constraints
-        }
-        if (snap.mapping != pre.mapping || snap.retired != pre.retired)
-          throw new java.util.ConcurrentModificationException(
-            s"replaceWhere at $path conflicts: column mapping changed while staging")
-        if (snap.partitioning != pre.partitioning)
-          throw new java.util.ConcurrentModificationException(
-            s"replaceWhere at $path conflicts: table partitioning changed while staging")
-        // matching dirs re-resolved against THIS snapshot: a racing
-        // append's rows in a matching partition are replaced (overwrite
-        // semantics), in an unmatched partition they survive untouched
-        val matched = partitionDirsMatching(spark, snap, predicate).getOrElse(
-          throw new java.util.ConcurrentModificationException(
-            s"replaceWhere at $path conflicts: partitioning vanished while staging"))
-        val removed = snap.files.filter(fl => matched(dirOf(fl)))
-        mapped match {
-          case None =>
-            Some(CommitSpec(files, removed,
-              Some(encodeSchema(evolve(snap.schema, df.schema, cs))), stats))
-          case Some((physSchema, m2)) =>
-            if (snap.schema != pre.schema)
-              throw new java.util.ConcurrentModificationException(
-                s"replaceWhere at $path conflicts: schema evolved concurrently under column mapping")
-            val mp =
-              if (m2 != pre.mapping) Some(encodeMapping(m2, pre.retired)) else None
-            Some(CommitSpec(files, removed, Some(encodeSchema(physSchema)), stats,
-              mapping = mp))
-        }
-      }.get.version
-      catch {
-        case e: Throwable =>
-          files.foreach(n => f.delete(new Path(s"$path/$DataDir/$n"), false))
-          throw e
-      }
+    appendCore(df, path, "replace-where", pre, Nil, collectStats = true, remove = { snap =>
+      // matching dirs re-resolved against THIS snapshot: a racing
+      // append's rows in a matching partition are replaced (overwrite
+      // semantics), in an unmatched partition they survive untouched
+      val matched = partitionDirsMatching(spark, snap, predicate).getOrElse(
+        throw new java.util.ConcurrentModificationException(
+          s"replaceWhere at $path conflicts: partitioning vanished while staging"))
+      snap.files.filter(fl => matched(dirOf(fl)))
+    }).get
     } finally { if (ownPersist) df.unpersist(): Unit }
   }
 
@@ -1055,6 +838,27 @@ trait TxWrites {
           "tx view for the copy-on-write path"))
   }
 
+  /** Copy-on-write DELETE. Two phases, both distributed:
+    *
+    *  1. PROBE — scan the snapshot for files that contain a matching row.
+    *     `predicate` is pushed into the parquet scan, so row-group min/max
+    *     stats prune most files before a row is read; at lake scale a
+    *     selective delete probes cheaply and touches a handful of files.
+    *  2. REWRITE — only the hit files are re-read and rewritten without
+    *     their matching rows; every other file is carried over untouched
+    *     (never read twice, never rewritten).
+    *
+    * Kept rows are those where the predicate is NOT TRUE — a NULL
+    * predicate result keeps the row (SQL DELETE semantics; a plain
+    * `!predicate` filter would silently drop NULL-valued rows too).
+    *
+    * Isolation is write-serializable (the Delta default): rows appended
+    * concurrently with the probe are not deleted (they were not in the
+    * decided snapshot); a concurrent overwrite/compact that removed one of
+    * the files this delete decided to rewrite fails loudly — re-running
+    * against the new snapshot is the caller's decision, never an implicit
+    * retry that could delete rows the caller never saw. Returns None (and
+    * writes no commit) when nothing matched. */
   def delete(spark: SparkSession, path: String, predicate: Column): Option[Long] = {
     val base = snapshot(spark, path)
     if (base.files.isEmpty) return None
@@ -1071,45 +875,13 @@ trait TxWrites {
       case Some(r) => return r
       case None => // general copy-on-write path below
     }
-    val fullName = byLeaf(base.files) // probe __file is the leaf name
-    val hit = readFiles(spark, path, base.files, base.schema, base.dv, withFile = true,
-      dvp = base.dvp, mapping = base.mapping)
-      .filter(predicate)
-      .select(col("__file"))
-      .distinct()
-      .collect()
-      .map(r => fullName(r.getString(0)))
-      .toSeq
+    val hit = hitFiles(spark, path, base)(_.filter(predicate))
     if (hit.isEmpty) return None
     // reading THROUGH the vectors: the rewrite also materializes any
     // deletion vectors on the hit files (their marks die with the files)
-    val kept =
-      readFiles(spark, path, hit, base.schema, base.dv, dvp = base.dvp, mapping = base.mapping)
-        .filter(not(predicate <=> lit(true)))
-    val (staged, dStats) =
-      stage(toPhysical(kept, base.mapping), path, partitionBy = base.partitioning)
-    val f = fs(spark, path)
-    try
-      commitLoop(spark, path, "delete") { snap =>
-        val vanished = hit.filterNot(snap.files.contains)
-        if (vanished.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"delete at $path conflicts: rewrite inputs removed concurrently: " +
-              vanished.take(3).mkString(", "))
-        // a delete-dv that landed on a hit file after the probe: the
-        // staged rewrite read through BASE's marks and would resurrect
-        // the concurrently-deleted rows — loud conflict, caller retries
-        if (dvDrifted(base, snap, hit))
-          throw new java.util.ConcurrentModificationException(
-            s"delete at $path conflicts: deletion vectors advanced on rewrite " +
-              "inputs after the probe")
-        Some(CommitSpec(staged, hit, snap.schema.map(encodeSchema), dStats))
-      }.map(_.version)
-    catch {
-      case e: Throwable =>
-        staged.foreach(n => f.delete(new Path(s"$path/$DataDir/$n"), false))
-        throw e
-    }
+    val kept = readSnap(spark, path, base, hit).filter(not(predicate <=> lit(true)))
+    stageAndCommit(toPhysical(kept, base.mapping), path, "delete", Loud(base, hit),
+      base.partitioning)(replacing(hit))
   }
 
   /** Copy-on-write UPDATE … SET … WHERE — [[delete]]'s sibling and the
@@ -1139,17 +911,9 @@ trait TxWrites {
     require(set.nonEmpty, "update needs at least one SET assignment")
     val base = snapshot(spark, path)
     if (base.files.isEmpty) return None
-    val fullName = byLeaf(base.files) // probe __file is the leaf name
-    val hit = readFiles(spark, path, base.files, base.schema, base.dv, withFile = true,
-      dvp = base.dvp, mapping = base.mapping)
-      .filter(predicate)
-      .select(col("__file"))
-      .distinct()
-      .collect()
-      .map(r => fullName(r.getString(0)))
-      .toSeq
+    val hit = hitFiles(spark, path, base)(_.filter(predicate))
     if (hit.isEmpty) return None
-    val cur = readFiles(spark, path, hit, base.schema, base.dv, dvp = base.dvp, mapping = base.mapping)
+    val cur = readSnap(spark, path, base, hit)
     val missing = set.keys.filterNot(cur.columns.contains)
     require(missing.isEmpty,
       s"UPDATE may only SET existing columns; missing: ${missing.mkString(", ")}")
@@ -1167,29 +931,12 @@ trait TxWrites {
     // rows in the frame were valid on write; re-checking them is free
     // of false refusals by the live-table invariant)
     enforceConstraints(updated, base.constraints, "update", path)
-    val (staged, uStats) =
-      stage(toPhysical(updated, base.mapping), path, partitionBy = base.partitioning)
-    val f = fs(spark, path)
-    try
-      commitLoop(spark, path, "update") { snap =>
-        if (snap.constraints != base.constraints)
-          throw new java.util.ConcurrentModificationException(
-            s"update at $path conflicts: constraints changed after validation")
-        val vanished = hit.filterNot(snap.files.contains)
-        if (vanished.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"update at $path conflicts: rewrite inputs removed concurrently: " +
-              vanished.take(3).mkString(", "))
-        if (dvDrifted(base, snap, hit))
-          throw new java.util.ConcurrentModificationException(
-            s"update at $path conflicts: deletion vectors advanced on rewrite " +
-              "inputs after the probe")
-        Some(CommitSpec(staged, hit, snap.schema.map(encodeSchema), uStats))
-      }.map(_.version)
-    catch {
-      case e: Throwable =>
-        staged.foreach(n => f.delete(new Path(s"$path/$DataDir/$n"), false))
-        throw e
+    stageAndCommit(toPhysical(updated, base.mapping), path, "update", Loud(base, hit),
+        base.partitioning) { (snap, files, stats) =>
+      if (snap.constraints != base.constraints)
+        throw new java.util.ConcurrentModificationException(
+          s"update at $path conflicts: constraints changed after validation")
+      replacing(hit)(snap, files, stats)
     }
   }
 
@@ -1229,8 +976,7 @@ trait TxWrites {
       inlineDvRows: Int = 10000): Option[Long] = {
     val base = snapshot(spark, path)
     if (base.files.isEmpty) return None
-    val hits = readFiles(spark, path, base.files, base.schema, base.dv, withFile = true,
-      dvp = base.dvp, mapping = base.mapping)
+    val hits = readSnap(spark, path, base, base.files, withFile = true)
       .filter(predicate <=> lit(true))
       .select(col("__file"), col("__row"))
       .collect()
@@ -1249,11 +995,7 @@ trait TxWrites {
     val sc = if (hits.length > inlineDvRows) Seq(writeSidecar(f, path, Map.empty, marks)) else Nil
     try
       commitLoop(spark, path, "delete-dv") { snap =>
-        val vanished = marks.keys.filterNot(snap.files.contains)
-        if (vanished.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"delete-dv at $path conflicts: marked files removed concurrently: " +
-              vanished.take(3).mkString(", "))
+        requireLive("delete-dv", path, marks.keys.toSeq, snap)
         if (sc.isEmpty)
           Some(CommitSpec(Nil, Nil, snap.schema.map(encodeSchema), None, Some(encodeDv(marks))))
         else Some(CommitSpec(Nil, Nil, snap.schema.map(encodeSchema), None, None, sc))
@@ -1299,8 +1041,7 @@ trait TxWrites {
     val f = fs(spark, path)
     val dir = s"${UUID.randomUUID()}.dvpq"
     val dirPath = sidecarPath(path, dir)
-    readFiles(spark, path, base.files, base.schema, base.dv, withFile = true,
-      dvp = base.dvp, mapping = base.mapping)
+    readSnap(spark, path, base, base.files, withFile = true)
       .filter(predicate <=> lit(true))
       .select(col("__file"), col("__row"))
       .write.parquet(dirPath.toString)
@@ -1316,11 +1057,7 @@ trait TxWrites {
     val sc = writeSidecar(f, path, Map.empty, Map.empty, Seq(dir -> marked))
     try
       commitLoop(spark, path, "delete-dv") { snap =>
-        val vanished = marked.filterNot(snap.files.contains)
-        if (vanished.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"delete-dv at $path conflicts: marked files removed concurrently: " +
-              vanished.take(3).mkString(", "))
+        requireLive("delete-dv", path, marked, snap)
         Some(CommitSpec(Nil, Nil, snap.schema.map(encodeSchema), None, None, Seq(sc)))
       }.map(_.version)
     catch {
@@ -1353,7 +1090,13 @@ trait TxWrites {
       updates: DataFrame,
       keys: Seq[String],
       collectStats: Boolean = true): Long =
-    mergeImpl(spark, path, updates, keys, txn = None, collectStats)
+    mergeClauses(spark, path, updates, keys, Upsert, collectStats)
+      .getOrElse(snapshot(spark, path).version)
+
+  /** [[merge]]'s clauses: unconditional SET * and INSERT *. */
+  private val Upsert = Seq(
+    TxWrites.MergeClause.MatchedUpdate(None, None),
+    TxWrites.MergeClause.NotMatchedInsert(None, None))
 
   /** Idempotent [[merge]] for EXACTLY-ONCE incremental maintenance — the
     * upsert twin of [[appendOnce]], same (writerId, batchId) txn stamp
@@ -1372,124 +1115,9 @@ trait TxWrites {
       keys: Seq[String],
       writerId: String,
       batchId: Long,
-      collectStats: Boolean = true): Long = {
-    require(
-      writerId.nonEmpty && !writerId.exists(c => c == '"' || c == '\\' || c == ':'),
-      "writerId must be non-empty and free of quotes, backslashes and colons")
-    val stamp = s"$writerId:$batchId"
-    def committed: Option[Long] =
-      commits(fs(spark, path), path).find(_.txn.contains(stamp)).map(_.version)
-    committed.getOrElse {
-      try mergeImpl(spark, path, updates, keys, Some(stamp), collectStats)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          committed.getOrElse(throw e)
-      }
-    }
-  }
-
-  private[sources] def mergeImpl(
-      spark: SparkSession,
-      path: String,
-      updates: DataFrame,
-      keys: Seq[String],
-      txn: Option[String],
-      collectStats: Boolean = true): Long = {
-    require(keys.nonEmpty, "merge needs at least one key column")
-    require(!updates.columns.contains("__f"), "updates must not carry the reserved __f column")
-    val base = snapshot(spark, path)
-    val keyCols = keys.map(col)
-    // The merge runs several actions over `updates` (validation counts,
-    // the file probe, the rewrite union, the stage write) — persist it
-    // for the duration or an expensive upstream plan (a delta rollup, a
-    // stateful micro-batch) recomputes per action. Row count and
-    // per-key uniqueness come from ONE aggregate job, not two.
-    updates.persist()
-    try {
-      mergeBody(spark, path, updates, keys, keyCols, base, txn, collectStats)
-    } finally updates.unpersist(): Unit
-  }
-
-  private[sources] def mergeBody(
-      spark: SparkSession,
-      path: String,
-      updates: DataFrame,
-      keys: Seq[String],
-      keyCols: Seq[Column],
-      base: Snapshot,
-      txn: Option[String],
-      collectStats: Boolean): Long = {
-    val counts = updates
-      .agg(count(lit(1)).as("n"), count_distinct(struct(keyCols: _*)).as("k"))
-      .head()
-    val nUpdates = counts.getLong(0)
-    if (nUpdates == 0) return base.version
-    val distinctKeys = updates.select(keyCols: _*).distinct()
-    require(
-      counts.getLong(1) == nUpdates,
-      s"updates must be unique per key (${keys.mkString(", ")}) — ambiguous winners")
-    // every new row value comes from `updates`; merge's serializable
-    // version check conflicts on any concurrent constraint commit, so
-    // one validation against the decided snapshot suffices
-    enforceConstraints(updates, base.constraints, "merge", path)
-    val hit =
-      if (base.files.isEmpty) Nil
-      else {
-        val cur =
-          readFiles(spark, path, base.files, base.schema, base.dv, withFile = true,
-            dvp = base.dvp, mapping = base.mapping)
-        val fullName = byLeaf(base.files) // probe __file is the leaf name
-        cur
-          .join(distinctKeys, keys, "left_semi")
-          .select("__file")
-          .distinct()
-          .collect()
-          .map(r => fullName(r.getString(0)))
-          .toSeq
-      }
-    // updates are FULL rows (they must carry every table column — a
-    // missing column would silently null existing data) but may ADD
-    // columns, evolving the schema like append does; kept rows read the
-    // new columns as NULL through allowMissingColumns. Under column
-    // mapping the evolution runs on the LOGICAL level (evolveMapped) and
-    // the commit carries the extended mapping; merge's serializable
-    // version check covers any concurrent mapping change.
-    val cs = sessionCaseSensitive(spark)
-    val (evolved, m2) =
-      if (base.mapping.isEmpty) (evolve(base.schema, updates.schema, cs), base.mapping)
-      else evolveMapped(base, updates.schema, cs)
-    logicalSchema(base).foreach { t =>
-      val missing = t.fieldNames.filterNot(updates.columns.contains)
-      require(
-        missing.isEmpty,
-        s"updates must carry every table column (full-row upsert); missing: " +
-          missing.mkString(", "))
-    }
-    val kept =
-      if (hit.isEmpty) None
-      else Some(
-        readFiles(spark, path, hit, base.schema, base.dv, dvp = base.dvp, mapping = base.mapping)
-          .join(distinctKeys, keys, "left_anti"))
-    val out = kept.fold(updates)(_.unionByName(updates, allowMissingColumns = true))
-    val (staged, mStats) =
-      stage(toPhysical(out, m2), path, collectStats, partitionBy = base.partitioning)
-    val f = fs(spark, path)
-    try
-      commitLoop(spark, path, "merge", txn = txn) { snap =>
-        if (snap.version != base.version)
-          throw new java.util.ConcurrentModificationException(
-            s"merge at $path conflicts: table advanced from v${base.version} " +
-              s"to v${snap.version} after the probe")
-        val mp = if (m2 != base.mapping) Some(encodeMapping(m2, base.retired)) else None
-        Some(CommitSpec(staged, hit, Some(encodeSchema(evolved)), mStats, mapping = mp))
-      }.get.version
-    catch {
-      case e: Throwable =>
-        staged.foreach(n => f.delete(new Path(s"$path/$DataDir/$n"), false))
-        throw e
-    }
-  }
-
+      collectStats: Boolean = true): Long =
+    once(spark, path, writerId, batchId)(
+      mergeClauses(spark, path, updates, keys, Upsert, collectStats, _))
 
   // ── general MERGE (ordered WHEN clauses) ───────────────────────────
 
@@ -1592,7 +1220,9 @@ trait TxWrites {
             s"updates must carry every table column (a SET * / INSERT * clause is " +
               s"present); missing: ${missing.mkString(", ")}")
         }
-      // logical-level evolution under column mapping — see mergeBody
+      // updates may ADD columns (a full-row clause), evolving the schema
+      // like append; under column mapping the evolution runs on the
+      // LOGICAL level and the commit carries the extended mapping
       val (evolvedOpt, m2) =
         if (!fullRow) (base.schema, base.mapping)
         else if (base.mapping.isEmpty)
@@ -1604,12 +1234,7 @@ trait TxWrites {
       val distinctKeys = updates.select(keys.map(col): _*).distinct()
       val keyHit: Seq[String] =
         if (base.files.isEmpty || nUpdates == 0) Nil
-        else
-          readFiles(spark, path, base.files, base.schema, base.dv, withFile = true,
-            dvp = base.dvp, mapping = base.mapping)
-            .join(distinctKeys, keys, "left_semi")
-            .select("__file").distinct().collect()
-            .map(r => byLeaf(base.files)(r.getString(0))).toSeq
+        else hitFiles(spark, path, base)(_.join(distinctKeys, keys, "left_semi"))
       // BY SOURCE clauses govern target rows with NO key match — every
       // file that might hold a row satisfying any such condition must
       // rewrite. Candidates prune on the log's stats exactly like
@@ -1628,7 +1253,7 @@ trait TxWrites {
         }
       val hit = (keyHit ++ bySourceHit).distinct
       val srcCols = updates.columns.toSeq
-      val src = updates.withColumn("__m", lit(true)).alias("s")
+      lazy val src = updates.withColumn("__m", lit(true)).alias("s")
       // projection for one column-scoped UPDATE SET list: assigned
       // columns evaluate (against the OLD row + its source row) and
       // cast to the table type; the rest carry over
@@ -1666,14 +1291,20 @@ trait TxWrites {
           }
         }
       val (keptRows, newValueFrames): (Option[DataFrame], Seq[DataFrame]) =
-        if (hit.isEmpty) {
+        if (clauses == Upsert) {
+          // the plain upsert: every source row lands as it is, and a hit
+          // file's row is kept iff no source row shares its key — one
+          // anti-join, no per-row dispatch
+          val kept = if (hit.isEmpty) None
+            else Some(readSnap(spark, path, base, hit).join(distinctKeys, keys, "left_anti"))
+          (kept, Seq(updates))
+        } else if (hit.isEmpty) {
           // nothing matched anywhere and no BY SOURCE candidate: the
           // table is untouched except inserts (every source row is
           // unmatched — keyHit empty means no file holds a matching key)
           (None, insertFrames(src))
         } else {
-          val cur = readFiles(spark, path, hit, base.schema, base.dv,
-            dvp = base.dvp, mapping = base.mapping)
+          val cur = readSnap(spark, path, base, hit)
           val tgtCols = cur.columns.toSeq
           val tgt = cur.alias("t")
           val keyEq = keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
@@ -1728,30 +1359,21 @@ trait TxWrites {
         newValueFrames.reduceOption(_.unionByName(_, allowMissingColumns = true))
       // a merge that matched NOTHING anywhere — no hit file, and no
       // source row surviving an insert clause — writes NO commit (the
-      // delete/update None contract), never an empty version
-      if (keptRows.isEmpty && newValues.forall(_.isEmpty)) return None
+      // delete/update None contract), never an empty version. An
+      // unconditional insert clause lands every unmatched source row, so
+      // with a non-empty source there is nothing to check.
+      val surelyInserts = nUpdates > 0 && insertCl.exists(_.cond.isEmpty)
+      if (keptRows.isEmpty && !surelyInserts && newValues.forall(_.isEmpty)) return None
       // gate only rows that LAND with new values (kept rows are valid
       // by the live-table invariant; guarded-away rows never materialize)
       newValues.foreach(nv => enforceConstraints(nv, base.constraints, "merge", path))
       val out = (keptRows.toSeq ++ newValueFrames)
         .reduceOption(_.unionByName(_, allowMissingColumns = true))
         .getOrElse(updates.limit(0))
-      val (staged, mStats) =
-        stage(toPhysical(out, m2), path, collectStats, partitionBy = base.partitioning)
-      val f = fs(spark, path)
-      try
-        Some(commitLoop(spark, path, "merge", txn) { snap =>
-          if (snap.version != base.version)
-            throw new java.util.ConcurrentModificationException(
-              s"merge at $path conflicts: table advanced from " +
-                s"v${base.version} to v${snap.version} after the probe")
-          val mp = if (m2 != base.mapping) Some(encodeMapping(m2, base.retired)) else None
-          Some(CommitSpec(staged, hit, evolvedOpt.map(encodeSchema), mStats, mapping = mp))
-        }.get.version)
-      catch {
-        case e: Throwable =>
-          staged.foreach(n => f.delete(new Path(s"$path/$DataDir/$n"), false))
-          throw e
+      stageAndCommit(toPhysical(out, m2), path, "merge", Strict(base), base.partitioning,
+          collectStats, txn = txn) { (_, files, stats) =>
+        val mp = if (m2 != base.mapping) Some(encodeMapping(m2, base.retired)) else None
+        Some(CommitSpec(files, hit, evolvedOpt.map(encodeSchema), stats, mapping = mp))
       }
     } finally updates.unpersist(): Unit
   }
@@ -1775,14 +1397,22 @@ trait TxWrites {
       notMatchedInsert: Option[Column] = Some(lit(true)),
       collectStats: Boolean = true,
       txn: Option[String] = None): Long = {
+    // the historical contract: a no-op answers the CURRENT version
+    mergeClauses(spark, path, updates, keys,
+      conditionalClauses(matchedUpdate, matchedDelete, notMatchedInsert), collectStats, txn)
+      .getOrElse(snapshot(spark, path).version)
+  }
+
+  /** [[mergeConditional]]'s clauses in precedence order. */
+  private def conditionalClauses(
+      matchedUpdate: Option[Column],
+      matchedDelete: Option[Column],
+      notMatchedInsert: Option[Column]): Seq[MergeClause] = {
     import TxWrites.MergeClause._
-    val clauses = Seq(
+    Seq(
       matchedDelete.map(c => MatchedDelete(Some(c))),
       matchedUpdate.map(c => MatchedUpdate(Some(c), None)),
       notMatchedInsert.map(c => NotMatchedInsert(Some(c), None))).flatten
-    // the historical contract: a no-op answers the CURRENT version
-    mergeClauses(spark, path, updates, keys, clauses, collectStats, txn)
-      .getOrElse(snapshot(spark, path).version)
   }
 
   /** Exactly-once [[mergeConditional]] under a (writerId, batchId)
@@ -1799,26 +1429,30 @@ trait TxWrites {
       matchedUpdate: Option[Column] = Some(lit(true)),
       matchedDelete: Option[Column] = None,
       notMatchedInsert: Option[Column] = Some(lit(true)),
-      collectStats: Boolean = true): Long = {
-    require(
-      writerId.nonEmpty && !writerId.exists(c => c == '"' || c == '\\' || c == ':'),
-      "writerId must be non-empty and free of quotes, backslashes and colons")
-    val stamp = s"$writerId:$batchId"
-    def committed: Option[Long] =
-      commits(fs(spark, path), path).find(_.txn.contains(stamp)).map(_.version)
-    committed.getOrElse {
-      try mergeConditional(spark, path, updates, keys, matchedUpdate, matchedDelete,
-        notMatchedInsert, collectStats, Some(stamp))
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          committed.getOrElse(throw e)
-      }
-    }
-  }
+      collectStats: Boolean = true): Long =
+    once(spark, path, writerId, batchId)(mergeClauses(spark, path, updates, keys,
+      conditionalClauses(matchedUpdate, matchedDelete, notMatchedInsert), collectStats, _))
 }
 
 object TxWrites {
 
+  /** How a staged write's commit attempt treats commits that landed
+    * after the snapshot it decided on (see `stageAndCommit`). */
+  private[sources] sealed trait Conflict
+  /** No rule of its own: the op's attempt restates against the newest
+    * snapshot (appends, overwrite, replaceWhere). */
+  private[sources] case object Blind extends Conflict
+  /** Delete, update: every rewrite input must still be live, with the
+    * deletion-vector marks it was read through, or the op fails loudly. */
+  private[sources] final case class Loud(base: TxSnapshot.Snapshot, inputs: Seq[String])
+      extends Conflict
+  /** Compactions: the same checks, but a moved input makes the op a
+    * no-op (None) — maintenance re-runs, it never fights a writer. */
+  private[sources] final case class NoOp(base: TxSnapshot.Snapshot, inputs: Seq[String])
+      extends Conflict
+  /** Merge: serializable — any commit after `base` conflicts, because
+    * even a plain append may have inserted one of the merge keys. */
+  private[sources] final case class Strict(base: TxSnapshot.Snapshot) extends Conflict
 
   /** One WHEN clause of a general ANSI/Delta MERGE — the argument shape
     * of [[mergeClauses]]. Conditions are Columns over two aliases: `t`

@@ -1041,4 +1041,52 @@ class CliSpec extends SparkSpec {
     assert(graft.sources.TxStore.read(spark, table)
       .filter(col("event_id") === 1L).count() === 0)
   }
+
+  private def sqlStep(stmt: String): String = {
+    val out = tmp()
+    Main.run(spark, Map(
+      "step" -> "sql", "data-dir" -> sf("sf0.001"), "out-dir" -> out, "sql" -> stmt))
+    out
+  }
+
+  test("sql step: statements that return no columns run and land no sql_result") {
+    val dir = tmp()
+    try {
+      val created = sqlStep("CREATE VIEW cli_nocols_v AS SELECT 1 AS a")
+      assert(!new java.io.File(s"$created/sql_result").exists)
+      assert(spark.catalog.tableExists("cli_nocols_v"))
+      sqlStep(s"CREATE TABLE cli_nocols_t (a INT) USING parquet LOCATION '$dir/pt'")
+      assert(spark.catalog.tableExists("cli_nocols_t"))
+      // a query after them still lands its rows
+      val read = sqlStep("SELECT a FROM cli_nocols_v")
+      assert(spark.read.parquet(s"$read/sql_result").head.getInt(0) === 1)
+      sqlStep("DROP TABLE cli_nocols_t")
+      assert(!spark.catalog.tableExists("cli_nocols_t"))
+    } finally {
+      spark.sql("DROP VIEW IF EXISTS cli_nocols_v")
+      spark.sql("DROP TABLE IF EXISTS cli_nocols_t")
+    }
+  }
+
+  test("sql step: a qualified CTAS in the session catalog runs through Spark") {
+    try {
+      sqlStep("CREATE TABLE default.cli_ctas_qq USING parquet AS SELECT 1L AS id")
+      assert(spark.table("default.cli_ctas_qq").as[Long].collect().toSeq === Seq(1L))
+    } finally spark.sql("DROP TABLE IF EXISTS default.cli_ctas_qq")
+  }
+
+  test("sql step: a CTAS into the graft catalog runs through Spark") {
+    val warehouse = tmp()
+    val keys = Seq("spark.sql.catalog.graft", "spark.sql.catalog.graft.warehouse")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graft.warehouse", warehouse)
+    try {
+      sqlStep("CREATE NAMESPACE graft.p")
+      sqlStep("CREATE TABLE graft.p.cli_ctas_t USING graft AS SELECT 1L AS id")
+      val table = s"$warehouse/p/cli_ctas_t"
+      assert(graft.sources.TxStore.isTable(spark, table))
+      assert(graft.sources.TxStore.read(spark, table).as[Long].collect().toSeq === Seq(1L))
+    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
 }

@@ -7,7 +7,7 @@ import java.util.UUID
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileStatus, FileSystem, Path}
 
 /** One published commit file as a listing reports it. */
-private[sources] final case class LogFile(version: Long, mtime: Long, length: Long)
+private[graft] final case class LogFile(version: Long, mtime: Long, length: Long)
 
 /** The commit log's storage seam: the one place that knows where a
   * table's commit files live (`<table>/_txlog/%020d.json`, sidecars
@@ -25,9 +25,9 @@ private[sources] final case class LogFile(version: Long, mtime: Long, length: Lo
   * (`.<v>.json.<uuid>.tmp`) and then make it appear under the final name
   * in one metadata operation; they differ only in that operation (see
   * [[LogStore.apply]]). */
-private[sources] sealed abstract class LogStore(val fs: FileSystem, val table: String) {
+private[graft] sealed abstract class LogStore(val fs: FileSystem, val table: String) {
 
-  val dir: Path = new Path(s"$table/${LogStore.LogDir}")
+  val dir: Path = new Path(LogStore.dirOf(table))
 
   protected def file(version: Long): Path = new Path(dir, s"${"%020d".format(version)}.json")
 
@@ -80,10 +80,14 @@ private[sources] sealed abstract class LogStore(val fs: FileSystem, val table: S
   }
 }
 
-private[sources] object LogStore {
+private[graft] object LogStore {
 
-  val LogDir = "_txlog"
+  private val LogDir = "_txlog"
   private val SidecarDir = "_sidecar"
+
+  /** Where `table`'s commit files live; [[graft.streaming.StreamingCdf]]
+    * follows a table by streaming this directory's arrivals. */
+  def dirOf(table: String): String = s"$table/$LogDir"
 
   def sidecarPath(table: String, name: String): Path =
     new Path(s"$table/$LogDir/$SidecarDir/$name")
@@ -112,7 +116,10 @@ private[sources] object LogStore {
         // retry writes a fresh tmp (and may well win the same version).
         case _: NoSuchFileException => false
       }
-      finally Files.deleteIfExists(tmp): Unit
+      // the link alone decides the version: a failing cleanup must not
+      // throw after a won link (the caller would take the published
+      // version for lost), and a leftover tmp is vacuum's (see temps)
+      finally try Files.deleteIfExists(tmp): Unit catch { case _: IOException => () }
     }
   }
 

@@ -1073,8 +1073,9 @@ trait TxWrites {
     * [[delete]]: a distributed semi-join probe finds the files holding a
     * matching key (the file identity is captured AT the scan via
     * `_metadata.file_name` — see readFiles — so it survives the join),
-    * then only those files are rewritten, anti-joined against the
-    * update keys, with `updates` unioned in.
+    * then only those files are rewritten: it is [[mergeClauses]] with
+    * `WHEN MATCHED THEN UPDATE SET *` and `WHEN NOT MATCHED THEN INSERT *`,
+    * so every target row sharing a key takes that key's source row.
     *
     * `updates` must be unique per key — two updates for one key have no
     * defined winner, so that's rejected up front rather than written.
@@ -1157,8 +1158,6 @@ trait TxWrites {
     import TxWrites.MergeClause._
     require(keys.nonEmpty, "merge needs at least one key column")
     require(clauses.nonEmpty, "merge needs at least one WHEN clause")
-    require(!updates.columns.contains("__m"), "updates must not carry the reserved __m column")
-    require(!updates.columns.contains("__act"), "updates must not carry the reserved __act column")
     val matchedCl: Seq[MergeClause] = clauses.filter {
       case _: MatchedUpdate | _: MatchedDelete => true
       case _ => false
@@ -1187,8 +1186,11 @@ trait TxWrites {
     // cast types); an empty table's schema is the source's (fullRow)
     val tgtFields: org.apache.spark.sql.types.StructType =
       logicalSchema(base).getOrElse(updates.schema)
-    require(!tgtFields.fieldNames.contains("__act"),
-      "the table must not carry the reserved __act column")
+    // the dispatch's working columns take names neither side uses
+    val taken = (updates.columns ++ tgtFields.fieldNames).map(_.toLowerCase).toSet
+    def fresh(n: String): String =
+      Iterator.iterate(n)(_ + "_").find(c => !taken(c.toLowerCase)).get
+    val (mCol, actCol) = (fresh("__m"), fresh("__act"))
     def fieldOf(n: String) = tgtFields.fields.find(f => sameName(f.name, n))
     val assigned: Seq[String] = clauses.flatMap {
       case MatchedUpdate(_, Some(s)) => s.keys
@@ -1253,7 +1255,7 @@ trait TxWrites {
         }
       val hit = (keyHit ++ bySourceHit).distinct
       val srcCols = updates.columns.toSeq
-      lazy val src = updates.withColumn("__m", lit(true)).alias("s")
+      val src = updates.withColumn(mCol, lit(true)).alias("s")
       // projection for one column-scoped UPDATE SET list: assigned
       // columns evaluate (against the OLD row + its source row) and
       // cast to the table type; the rest carry over
@@ -1281,9 +1283,9 @@ trait TxWrites {
           val iact = insertCl.zipWithIndex.foldRight(lit(-1)) { case ((c, i), acc) =>
             when(coalesce(c.cond.getOrElse(lit(true)), lit(false)), lit(i)).otherwise(acc)
           }
-          val dispatched = anti.withColumn("__act", iact)
+          val dispatched = anti.withColumn(actCol, iact)
           insertCl.zipWithIndex.map { case (c, i) =>
-            val rows = dispatched.filter(col("__act") === i)
+            val rows = dispatched.filter(col(actCol) === i)
             c.values match {
               case None => rows.select(srcCols.map(n => col(s"s.$n")): _*)
               case Some(values) => insertProjection(rows, values)
@@ -1291,14 +1293,7 @@ trait TxWrites {
           }
         }
       val (keptRows, newValueFrames): (Option[DataFrame], Seq[DataFrame]) =
-        if (clauses == Upsert) {
-          // the plain upsert: every source row lands as it is, and a hit
-          // file's row is kept iff no source row shares its key — one
-          // anti-join, no per-row dispatch
-          val kept = if (hit.isEmpty) None
-            else Some(readSnap(spark, path, base, hit).join(distinctKeys, keys, "left_anti"))
-          (kept, Seq(updates))
-        } else if (hit.isEmpty) {
+        if (hit.isEmpty) {
           // nothing matched anywhere and no BY SOURCE candidate: the
           // table is untouched except inserts (every source row is
           // unmatched — keyHit empty means no file holds a matching key)
@@ -1309,7 +1304,7 @@ trait TxWrites {
           val tgt = cur.alias("t")
           val keyEq = keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
           val joined = tgt.join(src, keyEq, "left")
-          val matched = coalesce(col("__m"), lit(false))
+          val matched = coalesce(col(mCol), lit(false))
           // per-row dispatch: first clause of the row's group whose
           // condition passes, in statement order; -1 ⇒ kept unchanged.
           // Matched clauses gate on `matched`, BY SOURCE on !matched
@@ -1333,26 +1328,29 @@ trait TxWrites {
           val act = acts.foldRight(lit(-1)) { case ((i, c), acc) =>
             when(c, lit(i)).otherwise(acc)
           }
-          val dispatched = joined.withColumn("__act", act)
-          val kept = dispatched.filter(col("__act") === -1)
+          val dispatched = joined.withColumn(actCol, act)
+          val kept = dispatched.filter(col(actCol) === -1)
             .select(tgtCols.map(n => col(s"t.$n")): _*)
           val updatedFrames: Seq[DataFrame] =
             matchedCl.zipWithIndex.collect {
               case (MatchedUpdate(_, set), i) =>
-                val rows = dispatched.filter(col("__act") === i)
+                val rows = dispatched.filter(col(actCol) === i)
                 set match {
                   case None => rows.select(srcCols.map(n => col(s"s.$n")): _*)
                   case Some(s0) => setProjection(rows, s0, tgtCols)
                 }
             } ++ bySourceCl.zipWithIndex.collect {
               case (NotMatchedBySourceUpdate(_, s0), j) =>
-                setProjection(dispatched.filter(col("__act") === (1000 + j)), s0, tgtCols)
+                setProjection(dispatched.filter(col(actCol) === (1000 + j)), s0, tgtCols)
             }
           // deletes: their rows simply land in no output frame.
           // The anti-join for inserts runs against the HIT-file content
           // only — sufficient, because by construction every current
-          // row sharing a key with `updates` lives in a keyHit file.
-          val anti = src.join(cur.select(keys.map(col): _*).distinct(), keys, "left_anti")
+          // row sharing a key with `updates` lives in a keyHit file. Its
+          // build side is the hit files' keys as the matched branch's
+          // join reads them, so the plan broadcasts them once (no
+          // distinct: duplicates cannot change an anti-join).
+          val anti = src.join(cur.select(keys.map(col): _*), keys, "left_anti")
           (Some(kept), updatedFrames ++ insertFrames(anti))
         }
       val newValues =

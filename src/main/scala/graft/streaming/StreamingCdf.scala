@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.TxStore
+import graft.sources.{LogStore, TxStore}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -49,7 +49,7 @@ object StreamingCdf {
     spark.readStream
       .schema(logSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(s"$tablePath/_txlog")
+      .json(LogStore.dirOf(tablePath))
 
   /** Follow `srcTable`'s change feed into `sinkTable`: every commit's
     * row-level changes (rows tagged `_change_type` = insert/delete and

@@ -458,6 +458,26 @@ class TxStoreSpec extends SparkSpec {
     assert(e.getMessage.contains("unique per key"))
   }
 
+  test("merge dispatches per target row like mergeConditional; working columns never collide") {
+    // each copy of a duplicated target key matches the source row on
+    // its own and takes its values — plain and conditional merge agree
+    val ta = tmpDir(); val tb = tmpDir()
+    val dupTarget = Seq((1L, "a"), (1L, "b"), (2L, "c")).toDF("id", "payload")
+    TxStore.append(dupTarget, ta); TxStore.append(dupTarget, tb)
+    val updates = Seq((1L, "u1"), (3L, "u3")).toDF("id", "payload")
+    TxStore.merge(spark, ta, updates, Seq("id"))
+    TxStore.mergeConditional(spark, tb, updates, Seq("id"))
+    val got = TxStore.read(spark, ta).as[(Long, String)].collect().sorted.toSeq
+    assert(got === Seq((1L, "u1"), (1L, "u1"), (2L, "c"), (3L, "u3")))
+    assert(TxStore.read(spark, tb).as[(Long, String)].collect().sorted.toSeq === got)
+    // data columns named like the dispatch's match flag and clause index
+    val tc = tmpDir()
+    TxStore.append(Seq((1L, "x", 0L)).toDF("id", "__m", "__act"), tc)
+    TxStore.merge(spark, tc, Seq((1L, "y", 5L), (2L, "z", 6L)).toDF("id", "__m", "__act"), Seq("id"))
+    assert(TxStore.read(spark, tc).as[(Long, String, Long)].collect().sorted.toSeq ===
+      Seq((1L, "y", 5L), (2L, "z", 6L)))
+  }
+
   test("racing conditional merges serialize like plain merges") {
     val t = tmpDir()
     TxStore.append(rows(10), t)

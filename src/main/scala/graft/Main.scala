@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.ops.{ExternalScorer, IhcScorer, JourneyBuilder}
-import graft.sources.{SqlDml, SqlMaint, TxCatalog, TxStore}
+import graft.sources.{SqlMaint, TxCatalog}
 import org.apache.spark.sql.functions.{col, to_timestamp}
 
 /** CLI mirroring the reference's per-step interface
@@ -25,10 +25,11 @@ import org.apache.spark.sql.functions.{col, to_timestamp}
   * the conversion date (cj_builder.py:45–53), report filters the session
   * date (⚠B5, channel_reporter.py:47–56). `--step sql` lands one
   * statement's result as out-dir/sql_result/ (parquet; a statement
-  * with no result columns writes none): maintenance
-  * statements ([[graft.sources.SqlMaint]]), DML and CTAS
-  * ([[graft.sources.SqlDml]]), and everything else through `spark.sql`,
-  * with `--tx` names resolved by [[graft.sources.TxCatalog]].
+  * with no result columns writes none): maintenance statements
+  * ([[graft.sources.SqlMaint]]), and everything else through
+  * `spark.sql`, with `--tx` names resolved by
+  * [[graft.sources.TxCatalog]]. A write on a graft table (DELETE,
+  * UPDATE, MERGE, INSERT) lands the rows its commits changed.
   */
 object Main {
 
@@ -158,21 +159,20 @@ object Main {
         // catalog of a fresh session, so the caller's session keeps its
         // catalog and temp views; `@vN` pins a read-only time-travel
         // version. Temp views resolve before any catalog, so a --tx name
-        // drops the fixture view it shadows: reads and writes (SqlDml,
-        // SqlMaint) then address the same table.
+        // drops the fixture view it shadows: reads, writes and SqlMaint
+        // then address the same table.
         val entries = opts.get("tx").toSeq.flatMap(TxCatalog.parse(spark, _))
         val session = TxCatalog.session(spark, entries)
         Tables.registerViews(session, dataDir)
         entries.foreach(e => session.catalog.dropTempView(e.name))
-        // the current (writable) names — what SqlMaint and SqlDml accept
+        // the current (writable) names — what SqlMaint accepts
         val tx = entries.collect { case TxCatalog.Entry(n, p, None) => n -> p }.toMap
         val result = s"$outDir/sql_result"
-        // dispatch order: maintenance (OPTIMIZE/VACUUM/RESTORE/DESCRIBE
-        // HISTORY/SHOW PARTITIONS/CONVERT — statements Spark's grammar
-        // doesn't know, so they must intercept before its parser sees
-        // them), then DML (INSERT/DELETE/UPDATE/MERGE/CTAS translate to
-        // the TxStore API), then Spark itself: reads plan the v2
-        // pushed-filter scan, time travel and ALTER go through the catalog
+        // maintenance statements (OPTIMIZE/VACUUM/RESTORE/DESCRIBE
+        // HISTORY/SHOW PARTITIONS/CONVERT) are not in Spark's grammar,
+        // so they intercept before its parser sees them; everything else
+        // is Spark's: reads plan the v2 pushed-filter scan, writes run
+        // through the catalog and graft's planner hook
         SqlMaint.maybeExecute(session, text, tx) match {
           case Some(m) =>
             // the statement's own summary frame (O(1) rows, or O(retained
@@ -180,30 +180,20 @@ object Main {
             m.df.write.mode("overwrite").parquet(result)
             println(s"[graft] sql ${m.op} on tx '${m.view}' " +
               m.version.fold("(no commit)")(v => s"committed v$v") + s" -> $result")
-          case None => SqlDml.maybeExecute(session, text, tx) match {
-            case Some(r) =>
-              // the COMMIT'S OWN CHANGED ROWS (CDF) as the step result — a
-              // one-partition DELETE is a metadata-only commit and its
-              // artifact costs O(changes), never a full-table re-land
-              // (VERDICT r13). No commit ⇒ an empty change set with the
-              // table's schema.
-              val since = r.version.map(_ - 1)
-                .getOrElse(TxStore.snapshot(session, r.path).version)
-              val (_, changes) = TxStore.readChangesSince(session, r.path, since)
-              changes.write.mode("overwrite").parquet(result)
-              println(s"[graft] sql ${r.op} on tx '${r.view}' " +
-                r.version.fold("(matched nothing, no commit)")(v => s"committed v$v") +
-                s"; changed rows -> $result")
-            case None =>
+          case None =>
+            TxCatalog.artifact(session.sql(text)) match {
+              case (changes, Some(w)) =>
+                changes.write.mode("overwrite").parquet(result)
+                println(s"[graft] sql ${w.op} on '${w.name}' " +
+                  w.version.fold("(matched nothing, no commit)")(v => s"committed v$v") +
+                  s"; changed rows -> $result")
               // a statement with no result columns (CREATE, DROP, SET …)
               // has already run; parquet cannot hold a zero-column frame
-              val df = TxCatalog.artifact(session.sql(text))
-              if (df.columns.isEmpty) println("[graft] sql ok (no result columns)")
-              else {
+              case (df, None) if df.columns.isEmpty => println("[graft] sql ok (no result columns)")
+              case (df, None) =>
                 df.write.mode("overwrite").parquet(result)
                 println(s"[graft] sql -> $result")
-              }
-          }
+            }
         }
       case other =>
         sys.error(s"unknown --step $other (build-journeys|score|score-external|report|clean-corpus|sql|all)")

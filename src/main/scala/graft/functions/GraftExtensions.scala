@@ -6,19 +6,22 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Registers the engine's native expressions with a session so they are
   * callable from SQL (`SELECT graft_dot(a, b)`) as well as the DataFrame
-  * API, and the planner check graft tables' `UNSET TBLPROPERTIES` needs
-  * ([[graft.sources.UnsetPropertiesCheck]]). Wire up either via
-  * `spark.sql.extensions=graft.functions.GraftExtensions` or
+  * API, and graft tables' planner hooks: the check their `UNSET
+  * TBLPROPERTIES` needs ([[graft.sources.UnsetPropertiesCheck]]) and
+  * their SQL DELETE/UPDATE/MERGE ([[graft.sources.GraftDml]]). Wire up
+  * either via `spark.sql.extensions=graft.functions.GraftExtensions` or
   * [[GraftExtensions.register]] on an existing session (GraftSession does
   * the latter — extensions config only applies at session construction). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
-    ext.injectPlannerStrategy(_ => graft.sources.UnsetPropertiesCheck)
+    GraftExtensions.strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
   }
 }
 
 object GraftExtensions {
+
+  private val strategies = Seq(graft.sources.UnsetPropertiesCheck, graft.sources.GraftDml)
 
   private val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
     Seq(
@@ -93,8 +96,9 @@ object GraftExtensions {
         spark.sessionState.functionRegistry.registerFunction(id, info, builder)
       }
     }
-    if (!spark.experimental.extraStrategies.contains(graft.sources.UnsetPropertiesCheck))
-      spark.experimental.extraStrategies :+= graft.sources.UnsetPropertiesCheck
+    strategies.foreach { s =>
+      if (!spark.experimental.extraStrategies.contains(s)) spark.experimental.extraStrategies :+= s
+    }
     spark
   }
 

@@ -29,7 +29,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   USING graft PARTITIONED BY (p)
   * INSERT INTO graft.db.events VALUES …
   * SELECT * FROM graft.db.events VERSION AS OF 3
-  * DELETE FROM graft.db.events WHERE p = 1      -- native v2 plan
+  * UPDATE graft.db.events SET v = 'x' WHERE id = 2   -- [[GraftDml]]
+  * DELETE FROM graft.db.events WHERE p = 1            -- metadata-only
   * DROP TABLE graft.db.events
   * }}}
   *
@@ -98,8 +99,8 @@ final class GraftCatalog extends PathCatalog with SupportsNamespaces {
   }
 
   /** The table directory an identifier resolves to — shared with
-    * [[SqlDml]]'s catalog-name resolution so SQL DML text and the
-    * catalog plan against the same path. */
+    * [[SqlMaint]]'s catalog-name resolution so maintenance SQL text and
+    * the catalog plan against the same path. */
   def tablePath(ident: Identifier): String = {
     checkSegments(ident.namespace.toSeq :+ ident.name, "identifier")
     (warehouse +: ident.namespace.toSeq :+ ident.name).mkString("/")
@@ -136,14 +137,6 @@ final class GraftCatalog extends PathCatalog with SupportsNamespaces {
     requireNamespace(ident.namespace.toSeq)
     val path = tablePath(ident)
     if (TxStore.isTable(spark, path)) throw new TableAlreadyExistsException(ident)
-    val partitionBy = partitions.toSeq.map { t =>
-      // the concrete IdentityTransform class is private[sql]; its public
-      // face is name() == "identity" with exactly one column reference
-      if (t.name == "identity" && t.references.length == 1)
-        t.references.head.fieldNames.mkString(".")
-      else throw new UnsupportedOperationException(
-        s"graft catalog: only identity (hive-style) partitioning is supported, got $t")
-    }
     val props = properties.asScala.toSeq.flatMap { case (k, v) =>
       k.toLowerCase(Locale.ROOT) match {
         case "provider" =>
@@ -163,7 +156,7 @@ final class GraftCatalog extends PathCatalog with SupportsNamespaces {
         case _ => Some(k -> v)
       }
     }
-    TxStore.create(spark, path, schema, partitionBy, props)
+    TxStore.create(spark, path, schema, identityColumns(partitions), props)
     new GraftTable(spark, path, TxStore.snapshot(spark, path))
   }
 
@@ -278,6 +271,17 @@ trait PathCatalog extends TableCatalog {
 
   override def capabilities(): java.util.Set[TableCatalogCapability] =
     java.util.EnumSet.of(TableCatalogCapability.SUPPORT_TABLE_CONSTRAINT)
+
+  /** PARTITIONED BY columns: identity (hive-style) transforms only. The
+    * concrete IdentityTransform class is private[sql]; its public face
+    * is name() == "identity" with exactly one column reference. */
+  protected def identityColumns(partitions: Array[Transform]): Seq[String] =
+    partitions.toSeq.map { t =>
+      if (t.name == "identity" && t.references.length == 1)
+        t.references.head.fieldNames.mkString(".")
+      else throw new UnsupportedOperationException(
+        s"graft catalog: only identity (hive-style) partitioning is supported, got $t")
+    }
 
   override def loadTable(ident: Identifier): Table = {
     val (path, pin) = located(ident)
@@ -409,9 +413,9 @@ object UnsetPropertiesCheck extends SparkStrategy {
 object GraftCatalog {
   /** Resolve catalog-qualified name parts (`catalog.ns….table`) to the
     * table directory — Some only when `parts.head` names a registered
-    * [[GraftCatalog]] and the directory is a live table. Shared by
-    * [[SqlDml]] and [[SqlMaint]] so DML and maintenance SQL text
-    * address exactly the tables the catalog plans against. */
+    * [[GraftCatalog]] and the directory is a live table. [[SqlMaint]]
+    * resolves names through it, so maintenance SQL text addresses
+    * exactly the tables the catalog plans against. */
   def resolvePath(spark: SparkSession, parts: Seq[String]): Option[String] =
     if (parts.length < 2) None
     else org.apache.spark.sql.graft.DsvBridge.catalogPlugin(spark, parts.head).collect {

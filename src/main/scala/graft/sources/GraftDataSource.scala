@@ -236,7 +236,9 @@ final class GraftTable(
     * insert IS [[TxStore.append]]/[[TxStore.overwrite]] — one staged
     * commit with the full discipline (stats/null/bloom harvest,
     * partition layout, constraints, exactly-once txn stamps), proven
-    * ≡ the API twins rather than re-implemented.
+    * ≡ the API twins rather than re-implemented. OVERWRITE_DYNAMIC
+    * (`partitionOverwriteMode=dynamic`) takes the same V1 write, planned
+    * by [[GraftDml]].
     *
     * Schema contract (Delta's): writes resolve BY NAME against the log
     * schema — the analyzer reorders and safe-casts, and refuses drift.
@@ -257,7 +259,8 @@ final class GraftTable(
       TableCapability.BATCH_WRITE,
       TableCapability.V1_BATCH_WRITE,
       TableCapability.TRUNCATE,
-      TableCapability.OVERWRITE_BY_FILTER)
+      TableCapability.OVERWRITE_BY_FILTER,
+      TableCapability.OVERWRITE_DYNAMIC)
     if (!exists || mergeSchema) caps.add(TableCapability.ACCEPT_ANY_SCHEMA): Unit
     caps
   }
@@ -281,35 +284,17 @@ final class GraftTable(
     new GraftScanBuilder(this)
   }
 
-  /** Native `DELETE FROM` (VERDICT r16 #3) — METADATA deletes only:
-    * canDeleteWhere says yes exactly when the predicate decides per
-    * partition directory ([[TxStore.canPartitionDelete]] — the same
-    * walk the partition-delete fast path runs), or is unconditional
-    * (truncate: remove every live file, one log line). Everything else
-    * refuses AT PLANNING — Catalyst then raises the standard
-    * cannot-delete error instead of this table silently paying a
-    * copy-on-write rewrite the plan never showed. Row-level deletes
-    * stay on [[TxStore.delete]] / SQL DML, where the rewrite is the
-    * documented contract. The freshest snapshot decides (not this
-    * pinned one): commit-time conflict detection in TxStore still
-    * guards the race. A read-only snapshot refuses loudly here — for
-    * TRUNCATE TABLE too, whose default would otherwise change nothing
-    * in silence. */
+  /** DELETE plans through [[GraftDml]] (the analyzer only asks that a
+    * v2 table support deletes at all); what stays here is `TRUNCATE
+    * TABLE`, which Spark runs as `truncateTable()`: one remove-all
+    * commit ([[TxStore.truncate]]). A read-only snapshot refuses loudly
+    * rather than let the default change nothing in silence. */
   override def canDeleteWhere(filters: Array[Filter]): Boolean = {
     require(writable, s"graft: $path @v${snap.version} is a historical snapshot — read-only")
-    exists && (filters.forall(_.isInstanceOf[sources.AlwaysTrue]) ||
-      scala.util.Try(TxStore.canPartitionDelete(spark, path,
-        filters.map(GraftWrites.exactColumn).reduce(_ && _))).getOrElse(false))
+    exists && filters.forall(_.isInstanceOf[sources.AlwaysTrue])
   }
 
-  override def deleteWhere(filters: Array[Filter]): Unit = {
-    require(exists, s"graft: not a transactional table: $path")
-    if (filters.forall(_.isInstanceOf[sources.AlwaysTrue]))
-      TxStore.truncate(spark, path): Unit
-    else
-      TxStore.deletePartitions(spark, path,
-        filters.map(GraftWrites.exactColumn).reduce(_ && _)): Unit
-  }
+  override def deleteWhere(filters: Array[Filter]): Unit = TxStore.truncate(spark, path): Unit
 
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsOverwrite, V1Write, Write, WriteBuilder}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsDynamicOverwrite, SupportsOverwrite, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.functions.{col, expr, lit}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{Filter, InsertableRelation}
@@ -12,7 +12,10 @@ import org.apache.spark.sql.sources.{Filter, InsertableRelation}
   *
   *   - the analyzer's mode calls (`truncate` for SaveMode.Overwrite /
   *     INSERT OVERWRITE, `overwrite(filters)` for a filter-scoped
-  *     overwrite) are captured here and carried into the write;
+  *     overwrite such as a static `INSERT OVERWRITE … PARTITION (p='x')`,
+  *     `overwriteDynamicPartitions` under
+  *     `spark.sql.sources.partitionOverwriteMode=dynamic`) are captured
+  *     here and carried into the write;
   *   - `build()` returns a [[V1Write]] whose `InsertableRelation`
   *     IS the TxStore API — [[TxStore.append]], [[TxStore.overwrite]],
   *     [[TxStore.replaceWhere]], [[TxStore.appendOnce]] — so every
@@ -41,10 +44,12 @@ import org.apache.spark.sql.sources.{Filter, InsertableRelation}
   * output (cj_builder.py:112-120, channel_reporter.py:98-120); this
   * surface is their `to_parquet` re-expressed as transactional writes. */
 final class GraftWriteBuilder(table: GraftTable, info: LogicalWriteInfo)
-  extends WriteBuilder with SupportsOverwrite {
+  extends WriteBuilder with SupportsOverwrite with SupportsDynamicOverwrite {
 
-  private var truncateAll = false
+  private var truncateAll, dynamic = false
   private var overwriteBy: Option[Array[Filter]] = None
+
+  override def overwriteDynamicPartitions(): WriteBuilder = { dynamic = true; this }
 
   override def truncate(): WriteBuilder = { truncateAll = true; this }
 
@@ -61,10 +66,10 @@ final class GraftWriteBuilder(table: GraftTable, info: LogicalWriteInfo)
       // captured by the builder calls above (Spark's V1 fallback execs
       // pass the mode through the builder, not this flag)
       override def insert(data: DataFrame, overwrite: Boolean): Unit =
-        GraftWrites.insert(table, info, truncateAll, overwriteBy, data)
+        GraftWrites.insert(table, info, truncateAll, dynamic, overwriteBy, data)
     }
     override def toString: String =
-      s"GraftWrite(${table.path}, truncate=$truncateAll, " +
+      s"GraftWrite(${table.path}, truncate=$truncateAll, dynamic=$dynamic, " +
         s"overwriteBy=${overwriteBy.map(_.mkString(", ")).getOrElse("-")})"
   }
 }
@@ -75,6 +80,7 @@ private[sources] object GraftWrites {
       table: GraftTable,
       info: LogicalWriteInfo,
       truncateAll: Boolean,
+      dynamic: Boolean,
       overwriteBy: Option[Array[Filter]],
       data: DataFrame): Unit = {
     val opts = info.options
@@ -105,7 +111,9 @@ private[sources] object GraftWrites {
       opt("partitionBy")
         .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
         .orElse(opt("__partition_columns").map(parseStringArray))
-    val partitionBy: Seq[String] = partitionByOpt.getOrElse(Nil)
+    // a creating write takes the layout a CTAS asked for
+    val partitionBy: Seq[String] =
+      partitionByOpt.getOrElse(if (table.exists) Nil else table.partitionLogical)
     val replaceWhere = opt("replaceWhere")
     val txn = (opt("txnAppId"), opt("txnVersion"))
 
@@ -129,6 +137,28 @@ private[sources] object GraftWrites {
         // must be the filter's precise meaning (the pruning-sound
         // partial translation the scan uses is NOT acceptable here)
         TxStore.replaceWhere(data, path, filters.map(exactColumn).reduce(_ && _)): Unit
+      case None if dynamic =>
+        require(replaceWhere.isEmpty,
+          "graft: give either a dynamic partition overwrite or option replaceWhere, not both")
+        requireNoRelayout()
+        val parts = table.partitionLogical
+        if (parts.isEmpty)
+          // an unpartitioned table is one partition: the batch replaces it
+          TxStore.overwrite(data, path): Unit
+        else {
+          // the batch replaces the partitions it holds rows for, one
+          // region per distinct value tuple, so an empty batch commits
+          // nothing; persisted so the regions and the staged rows come
+          // from one evaluation of the batch
+          data.persist()
+          try {
+            val regions = data.select(parts.map(c): _*).distinct().collect()
+            if (regions.nonEmpty)
+              TxStore.replaceWhere(data, path, regions.map { r =>
+                parts.indices.map(i => c(parts(i)) <=> lit(r.get(i))).reduce(_ && _)
+              }.reduce(_ || _)): Unit
+          } finally data.unpersist(): Unit
+        }
       case None if truncateAll =>
         replaceWhere match {
           case Some(cond) =>

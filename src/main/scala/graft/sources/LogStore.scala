@@ -134,7 +134,16 @@ private[graft] object LogStore {
       try {
         won =
           try fs.rename(tmp, p)
-          catch { case _: FileAlreadyExistsException => false }
+          catch {
+            case _: FileAlreadyExistsException => false
+            // a rename that took effect before it threw (an HDFS RPC that
+            // timed out after the NameNode applied it): only this rename
+            // can have consumed this writer's temp, so a gone temp beside
+            // a present commit is a win — reporting a failed put would
+            // make the caller delete data files the commit lists
+            case e: IOException =>
+              if (!fs.exists(tmp) && fs.exists(p)) true else throw e
+          }
         // Hadoop's boolean rename conflates "destination exists" (a lost
         // commit race — expected) with every other failure; only the
         // former may be swallowed, or a genuine IO problem would

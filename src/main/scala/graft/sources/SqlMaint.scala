@@ -10,8 +10,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 /** Maintenance SQL against TxStore tables — the statements a lake
   * operator runs nightly, none of which Spark's grammar knows (Delta
   * adds them through a parser extension; this engine adds them through
-  * the same pre-Catalyst dispatch SqlDml uses, so the one `--step sql`
-  * surface carries reads, DML AND maintenance):
+  * a dispatch ahead of Spark's parser, so the one `--step sql` surface
+  * carries reads, DML AND maintenance):
   *
   *   - `OPTIMIZE v [WHERE <partition-pred>] [ZORDER BY (c1[, c2…])]`
   *     → [[TxStore.compactSmallFiles]] (bin-packing, Delta's plain
@@ -113,8 +113,8 @@ object SqlMaint {
     // the rest to Catalyst
     val isShowParts = ShowPartsRe.pattern.matcher(t).matches() ||
       ShowPropsRe.pattern.matcher(t).matches()
-    // CREATE TABLE has a second life as CTAS (SqlDml) — intercept only
-    // the exact SHALLOW CLONE shape, let everything else fall through
+    // CREATE TABLE is Spark's (CTAS included) — intercept only the
+    // exact SHALLOW CLONE shape, let everything else fall through
     val isClone = CloneRe.pattern.matcher(t).matches()
     if (!Set("OPTIMIZE", "VACUUM", "RESTORE", "CONVERT").contains(head) &&
       !isHistory && !isShowParts && !isClone)

@@ -5,8 +5,8 @@ import java.util.Locale
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.analysis.ResolvedTable
-import org.apache.spark.sql.catalyst.plans.logical.{AddCheckConstraint, AlterTableCommand}
-import org.apache.spark.sql.connector.catalog.{DelegatingCatalogExtension, Identifier, Table, TableCatalogCapability, TableChange, TableInfo}
+import org.apache.spark.sql.catalyst.plans.logical.{AddCheckConstraint, AlterTableCommand, DeleteFromTable, LogicalPlan, MergeIntoTable, UpdateTable, V2WriteCommand}
+import org.apache.spark.sql.connector.catalog.{DelegatingCatalogExtension, Identifier, Table, TableCatalog, TableCatalogCapability, TableChange, TableInfo}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.internal.SQLConf
@@ -23,8 +23,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * it as `spark_catalog` and passes the map as catalog options
   * (`path.<name>`, `version.<name>`). A `--tx` name matches
   * case-insensitively, unqualified or in the default database, and
-  * shadows a metastore table of the same name; it cannot be created,
-  * dropped or renamed — its table exists before the statement runs. */
+  * shadows a metastore table of the same name; it cannot be dropped or
+  * renamed, and it is created only by CTAS when its path holds no table
+  * yet. */
 final class TxCatalog extends DelegatingCatalogExtension with PathCatalog {
 
   private var tables: Map[String, (String, Option[Long])] = Map.empty
@@ -42,7 +43,7 @@ final class TxCatalog extends DelegatingCatalogExtension with PathCatalog {
 
   private def lc(ns: Array[String]): Seq[String] = ns.toSeq.map(_.toLowerCase(Locale.ROOT))
 
-  private def owns(ident: Identifier): Boolean = locate(ident).isDefined
+  private[sources] def owns(ident: Identifier): Boolean = locate(ident).isDefined
 
   override def capabilities(): java.util.Set[TableCatalogCapability] = {
     val c = java.util.EnumSet.noneOf(classOf[TableCatalogCapability])
@@ -82,14 +83,34 @@ final class TxCatalog extends DelegatingCatalogExtension with PathCatalog {
       .filterNot(i => owns(i))
   }
 
-  /** Declaring table-constraint support (for ALTER … ADD CONSTRAINT on
-    * `--tx` names) routes `CREATE TABLE … CONSTRAINT` here too; refuse
-    * it rather than create the table without its constraints. */
+  /** A `--tx` name whose path holds no table yet is created by CTAS,
+    * `CREATE TABLE name USING graft [PARTITIONED BY (…)] AS SELECT …`:
+    * the table returned is CREATABLE, so the query's write is the
+    * table's first commit (v1 holds the rows, under the requested
+    * layout). A non-empty path that is not a table refuses; an existing
+    * table never gets here (`tableExists`, so IF NOT EXISTS no-ops).
+    * [[GraftDml]] refuses a plain CREATE TABLE on a `--tx` name, which
+    * would otherwise create nothing. Other names go to Spark's session
+    * catalog. Declaring table-constraint support (for ALTER … ADD
+    * CONSTRAINT on `--tx` names) routes `CREATE TABLE … CONSTRAINT`
+    * here too; refuse it rather than create the table without its
+    * constraints. */
   override def createTable(ident: Identifier, info: TableInfo): Table = {
     if (info.constraints.nonEmpty) throw new UnsupportedOperationException(
       "CREATE TABLE … CONSTRAINT is not supported in the sql step")
-    super[DelegatingCatalogExtension].createTable(
-      ident, info.columns, info.partitions, info.properties)
+    locate(ident) match {
+      case None => super[DelegatingCatalogExtension].createTable(
+        ident, info.columns, info.partitions, info.properties)
+      case Some((path, _)) =>
+        Option(info.properties.get(TableCatalog.PROP_PROVIDER)).foreach(p =>
+          require(p.equalsIgnoreCase("graft"), s"CREATE TABLE ${ident.name}: a --tx name is " +
+            s"a graft table (USING graft), got provider '$p'"))
+        require(TxStore.isEmptyLocation(spark, path),
+          s"CREATE TABLE ${ident.name}: $path exists and is not empty")
+        val snap = TxStore.snapshot(spark, path)
+        new GraftTable(spark, path, snap.copy(partitioning = identityColumns(info.partitions)),
+          exists = false)
+    }
   }
 
   override def dropTable(ident: Identifier): Boolean =
@@ -154,19 +175,43 @@ object TxCatalog {
     s
   }
 
-  /** What a `spark.sql` statement lands as its artifact: an ALTER on a
+  /** A write the sql step reports: what it did, the table's name, and
+    * the version it committed (None = it matched nothing). */
+  final case class Written(op: String, name: String, version: Option[Long])
+
+  /** What a `spark.sql` statement lands as its artifact. A DELETE,
+    * UPDATE, MERGE or INSERT on a graft table lands the rows its
+    * commits changed: the change feed since the version pinned in the
+    * statement's relation, O(changes), never the table. An ALTER on a
     * graft table lands the history rows of the commits it made (none
-    * when IF [NOT] EXISTS matched nothing); anything else its own
+    * when IF [NOT] EXISTS matched nothing). Anything else lands its own
     * result. */
-  def artifact(df: DataFrame): DataFrame = df.queryExecution.analyzed match {
-    // ADD CONSTRAINT … CHECK stays AddCheckConstraint over the relation
-    case plan @ (_: AlterTableCommand | _: AddCheckConstraint) =>
-      plan.collectFirst {
-        case ResolvedTable(_, _, t: GraftTable, _) => t
-        case r: DataSourceV2Relation if r.table.isInstanceOf[GraftTable] =>
-          r.table.asInstanceOf[GraftTable]
-      }.fold(df)(t =>
-        TxStore.historyFrame(df.sparkSession, t.path).where(col("version") > t.snap.version))
-    case _ => df
+  def artifact(df: DataFrame): (DataFrame, Option[Written]) = {
+    val spark = df.sparkSession
+    def graft(plan: LogicalPlan): Option[(GraftTable, String)] = plan.collectFirst {
+      case ResolvedTable(_, id, t: GraftTable, _) => (t, id.name)
+      case r: DataSourceV2Relation if r.table.isInstanceOf[GraftTable] =>
+        val t = r.table.asInstanceOf[GraftTable]
+        (t, r.identifier.fold(t.path)(_.name))
+    }
+    df.queryExecution.analyzed match {
+      // ADD CONSTRAINT … CHECK stays AddCheckConstraint over the relation
+      case plan @ (_: AlterTableCommand | _: AddCheckConstraint) =>
+        (graft(plan).fold(df) { case (t, _) =>
+          TxStore.historyFrame(spark, t.path).where(col("version") > t.snap.version)
+        }, None)
+      case plan =>
+        val write = plan match {
+          case d: DeleteFromTable => Some("delete" -> d.table)
+          case u: UpdateTable => Some("update" -> u.table)
+          case m: MergeIntoTable => Some("merge" -> m.targetTable)
+          case w: V2WriteCommand => Some("insert" -> w.table)
+          case _ => None
+        }
+        write.flatMap { case (op, table) => graft(table).collect { case (t, name) if t.exists =>
+          val (latest, changes) = TxStore.readChangesSince(spark, t.path, t.snap.version)
+          (changes, Some(Written(op, name, Some(latest).filter(_ > t.snap.version))))
+        } }.getOrElse((df, None))
+    }
   }
 }

@@ -807,11 +807,17 @@ object TxSnapshot {
     }
 
   /** `files` of `snap`, read through its deletion vectors and column
-    * mapping. */
+    * mapping. No files (a created, truncated or fully deleted table, or
+    * a pruned read that kept none) read as no rows under the log
+    * schema. */
   private[sources] def readSnap(
       spark: SparkSession, path: String, snap: Snapshot, files: Seq[String],
       withFile: Boolean = false): DataFrame =
-    readFiles(spark, path, files, snap.schema, snap.dv, withFile, snap.dvp, snap.mapping)
+    if (files.isEmpty) {
+      val schema = logicalSchema(snap).getOrElse(org.apache.spark.sql.types.StructType(Nil))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        if (withFile) schema.add("__file", "string").add("__row", "long") else schema)
+    } else readFiles(spark, path, files, snap.schema, snap.dv, withFile, snap.dvp, snap.mapping)
 
   /** The log schema (when present) is APPLIED, never inferred from
     * footers: files predating an added column read it as NULL, and the

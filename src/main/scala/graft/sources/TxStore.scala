@@ -1047,10 +1047,7 @@ object TxStore extends TxWrites {
       spark: SparkSession, path: String, snap: Snapshot, predicate: Column): DataFrame = {
     val pred = org.apache.spark.sql.graft.ColumnBridge.expression(predicate)
     val (kept, _) = pruneSnapFiles(snap, pred)
-    if (kept.isEmpty) {
-      val schema = logicalSchema(snap).getOrElse(org.apache.spark.sql.types.StructType(Nil))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else readSnap(spark, path, snap, kept).filter(predicate)
+    readSnap(spark, path, snap, kept).filter(predicate)
   }
 
   /** CONVERT an existing plain-parquet directory into a transactional

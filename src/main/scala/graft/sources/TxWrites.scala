@@ -62,39 +62,51 @@ trait TxWrites {
 
   /** Stage the frame's partitions as immutable data files and harvest
     * their footer stats — (names, stats payload for the commit). Staged
-    * files are invisible until a commit lists them. */
+    * files are invisible until a commit lists them. A stage that fails
+    * part way deletes the files it already moved into `data/` and its
+    * stage dir, so a failed write leaves nothing for vacuum. */
   private def stage(
-      df: DataFrame, path: String, collectStats: Boolean = true,
-      partitionBy: Seq[String] = Nil,
-      nullCounts: Boolean = true): (Seq[String], Option[String]) = {
+      df: DataFrame, path: String, collectStats: Boolean, partitionBy: Seq[String],
+      nullCounts: Boolean): (Seq[String], Option[String]) = {
     val tmp = s"$path/$DataDir/_stage-${UUID.randomUUID()}"
-    val writer = df.write.mode("error")
-    (if (partitionBy.isEmpty) writer else writer.partitionBy(partitionBy: _*)).parquet(tmp)
     val f = fs(df.sparkSession, path)
     val tmpPath = new Path(tmp)
-    // recursive: a partitioned write nests part files under col=value/
-    // dirs; the staged NAME keeps those segments (hive-style paths under
-    // data/, partition values riding free in the log's add list)
-    val tmpQ = f.makeQualified(tmpPath).toString
-    val staged = scala.collection.mutable.ArrayBuffer.empty[(Path, String)]
-    val it = f.listFiles(tmpPath, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.getPath.getName.endsWith(".parquet")) {
-        val rel = st.getPath.toString.substring(tmpQ.length + 1)
-        val cut = rel.lastIndexOf('/')
-        staged += ((st.getPath, if (cut < 0) "" else rel.substring(0, cut + 1)))
+    val named = scala.collection.mutable.ArrayBuffer.empty[String]
+    try {
+      val writer = df.write.mode("error")
+      (if (partitionBy.isEmpty) writer else writer.partitionBy(partitionBy: _*)).parquet(tmp)
+      // recursive: a partitioned write nests part files under col=value/
+      // dirs; the staged NAME keeps those segments (hive-style paths under
+      // data/, partition values riding free in the log's add list)
+      val tmpQ = f.makeQualified(tmpPath).toString
+      val staged = scala.collection.mutable.ArrayBuffer.empty[(Path, String)]
+      val it = f.listFiles(tmpPath, true)
+      while (it.hasNext) {
+        val st = it.next()
+        if (st.getPath.getName.endsWith(".parquet")) {
+          val rel = st.getPath.toString.substring(tmpQ.length + 1)
+          val cut = rel.lastIndexOf('/')
+          staged += ((st.getPath, if (cut < 0) "" else rel.substring(0, cut + 1)))
+        }
       }
+      staged.foreach { case (p, dir) =>
+        val name = s"$dir${UUID.randomUUID()}.parquet"
+        val dst = new Path(s"$path/$DataDir/$name")
+        if (dir.nonEmpty) f.mkdirs(dst.getParent)
+        require(f.rename(p, dst), s"rename failed for $p")
+        named += name
+      }
+      f.delete(tmpPath, true)
+      (named.toSeq, if (collectStats) fileStats(f, path, named.toSeq, nullCounts = nullCounts) else None)
+    } catch {
+      case t: Throwable =>
+        // best effort: a cleanup fault must not hide the stage's own
+        try {
+          named.foreach(n => f.delete(new Path(s"$path/$DataDir/$n"), false))
+          f.delete(tmpPath, true)
+        } catch { case _: java.io.IOException => () }
+        throw t
     }
-    val named = staged.toSeq.map { case (p, dir) =>
-      val name = s"$dir${UUID.randomUUID()}.parquet"
-      val dst = new Path(s"$path/$DataDir/$name")
-      if (dir.nonEmpty) f.mkdirs(dst.getParent)
-      require(f.rename(p, dst), s"rename failed for $p")
-      name
-    }
-    f.delete(tmpPath, true)
-    (named, if (collectStats) fileStats(f, path, named, nullCounts = nullCounts) else None)
   }
 
   /** Have the deletion-vector marks on `inputs` changed between the
@@ -210,17 +222,19 @@ trait TxWrites {
     }
 
   /** The core every staged write runs on: stage `out` as data files
-    * (under `partitionBy`), then publish through [[commitLoop]] — each
+    * (under `partitionBy`, harvesting NULL facts unless `base`, the
+    * snapshot the op decided on, opts out), then publish through
+    * [[commitLoop]] — each
     * attempt first passes `rule`, then `spec` decides its commit from the
     * newest snapshot and the staged (files, stats). The staged files are
     * deleted when an attempt throws or the op aborts, so a failed or
     * no-op write leaves nothing behind for vacuum. Returns the committed
     * version, None on abort. */
   private def stageAndCommit(
-      out: DataFrame, path: String, op: String, rule: Conflict, partitionBy: Seq[String],
-      collectStats: Boolean = true, nullCounts: Boolean = true, txn: Option[String] = None)(
+      out: DataFrame, path: String, op: String, rule: Conflict, base: Snapshot,
+      partitionBy: Seq[String], collectStats: Boolean = true, txn: Option[String] = None)(
       spec: (Snapshot, Seq[String], Option[String]) => Option[CommitSpec]): Option[Long] = {
-    val (files, stats) = stage(out, path, collectStats, partitionBy, nullCounts)
+    val (files, stats) = stage(out, path, collectStats, partitionBy, harvestNullCounts(base))
     val f = fs(out.sparkSession, path)
     def discard(): Unit = files.foreach(n => f.delete(new Path(s"$path/$DataDir/$n"), false))
     val committed =
@@ -322,8 +336,8 @@ trait TxWrites {
       else Some(evolveMapped(pre, df.schema, cs))
     def conflict(what: String) =
       new java.util.ConcurrentModificationException(s"$op at $path conflicts: $what — retry")
-    stageAndCommit(mapped.fold(df) { case (_, m2) => toPhysical(df, m2) }, path, op, Blind,
-        effParts, collectStats, harvestNullCounts(pre), txn) { (snap, files, stats) =>
+    stageAndCommit(mapped.fold(df) { case (_, m2) => toPhysical(df, m2) }, path, op, Blind, pre,
+        effParts, collectStats, txn) { (snap, files, stats) =>
       if (snap.constraints != checked) {
         // a constraint landed while we were staging — the new gate
         // applies to THIS write too (its commit orders after the
@@ -408,8 +422,7 @@ trait TxWrites {
     // an overwrite REPLACES the table, so the replacement's layout is
     // exactly `partitionBy` (default flat) — like the mapping reset, a
     // previously-partitioned table may legitimately go flat here
-    stageAndCommit(df, path, "overwrite", Blind, partitionBy,
-        nullCounts = harvestNullCounts(base)) { (snap, files, stats) =>
+    stageAndCommit(df, path, "overwrite", Blind, base, partitionBy) { (snap, files, stats) =>
       if (snap.constraints != checked) { // see appendCore's drift re-check
         enforceConstraints(df, snap.constraints, "overwrite", path)
         checked = snap.constraints
@@ -442,7 +455,7 @@ trait TxWrites {
     if (base.files.isEmpty) return None
     val out = readSnap(spark, path, base, base.files).repartition(target)
     stageAndCommit(toPhysical(out, base.mapping), path, "compact", NoOp(base, base.files),
-      base.partitioning)(replacing(base.files))
+      base, base.partitioning)(replacing(base.files))
   }
 
   /** The live files a maintenance op's WHERE scopes to: all of them
@@ -564,7 +577,7 @@ trait TxWrites {
       .map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.patch(binIdx, Nil, 1)))
     val routed = spark.createDataFrame(routedRdd, outSchema)
     stageAndCommit(toPhysical(routed, base.mapping), path, "compact", NoOp(base, inputs),
-      base.partitioning)(replacing(inputs))
+      base, base.partitioning)(replacing(inputs))
   }
 
   /** OPTIMIZE ZORDER — transactionally rewrite the current file set
@@ -609,7 +622,7 @@ trait TxWrites {
       stageAndCommit(toPhysical(
           keyed.repartitionByRange(target, col("__z")).sortWithinPartitions("__z").drop("__z"),
           base.mapping), path, "optimize-zorder", NoOp(base, inputs),
-        base.partitioning)(replacing(inputs))
+        base, base.partitioning)(replacing(inputs))
     finally keyed.unpersist(): Unit
   }
 
@@ -800,9 +813,8 @@ trait TxWrites {
     } finally { if (ownPersist) df.unpersist(): Unit }
   }
 
-  /** Remove every live file in ONE metadata commit — the native v2
-    * `DELETE FROM t` with no (or an always-true) condition, and
-    * `TRUNCATE TABLE`. Schema, layout, constraints and properties
+  /** Remove every live file in ONE metadata commit — SQL `DELETE FROM
+    * t` with no condition ([[GraftDml]]) and `TRUNCATE TABLE`. Schema, layout, constraints and properties
     * survive; time travel still reads the data; CDC derives the wave as
     * deletes (op "delete"). None = the table was already empty. */
   def truncate(spark: SparkSession, path: String): Option[Long] =
@@ -811,31 +823,21 @@ trait TxWrites {
       else Some(CommitSpec(Nil, snap.files, snap.schema.map(encodeSchema)))
     }.map(_.version)
 
-  /** Can [[deletePartitions]] execute `predicate` purely from partition
-    * metadata? The planning half of the native v2 DELETE contract
-    * (`SupportsDelete.canDeleteWhere`): true only when the predicate
-    * decides per partition DIRECTORY — deterministic, references
-    * partition columns exclusively, on a partitioned table. A true here
-    * is a promise the execution keeps with zero data IO. */
-  def canPartitionDelete(spark: SparkSession, path: String, predicate: Column): Boolean = {
-    val base = snapshot(spark, path)
-    base.files.isEmpty || partitionDirsMatching(spark, base, predicate).isDefined
-  }
-
-  /** Metadata-only DELETE, or a LOUD refusal — never copy-on-write:
-    * the native v2 DELETE's execution half. [[canPartitionDelete]] said
-    * yes at planning; silently falling back to a rewrite here would
-    * turn a promised O(metadata) drop into a data-plane job. Use
-    * [[delete]] for general predicates (its partition fast path is this
-    * same walk; past it, copy-on-write applies). */
+  /** Metadata-only DELETE, or a LOUD refusal — never copy-on-write: a
+    * promised O(metadata) partition drop (the retention path) must not
+    * silently turn into a data-plane job. The predicate must decide per
+    * partition DIRECTORY — deterministic, over partition columns
+    * exclusively, on a partitioned table. Use [[delete]] for general
+    * predicates (its partition fast path is this same walk; past it,
+    * copy-on-write applies). */
   def deletePartitions(spark: SparkSession, path: String, predicate: Column): Option[Long] = {
     val base = snapshot(spark, path)
     if (base.files.isEmpty) return None
     partitionOnlyDelete(spark, path, base, predicate).getOrElse(
       throw new UnsupportedOperationException(
         s"DELETE at $path: the predicate does not decide per partition directory — " +
-          "a row-level delete must rewrite data; use TxStore.delete / SQL DML on the " +
-          "tx view for the copy-on-write path"))
+          "a row-level delete must rewrite data; use TxStore.delete (or SQL DELETE, " +
+          "which runs it) for the copy-on-write path"))
   }
 
   /** Copy-on-write DELETE. Two phases, both distributed:
@@ -881,7 +883,7 @@ trait TxWrites {
     // deletion vectors on the hit files (their marks die with the files)
     val kept = readSnap(spark, path, base, hit).filter(not(predicate <=> lit(true)))
     stageAndCommit(toPhysical(kept, base.mapping), path, "delete", Loud(base, hit),
-      base.partitioning)(replacing(hit))
+      base, base.partitioning)(replacing(hit))
   }
 
   /** Copy-on-write UPDATE … SET … WHERE — [[delete]]'s sibling and the
@@ -932,7 +934,7 @@ trait TxWrites {
     // of false refusals by the live-table invariant)
     enforceConstraints(updated, base.constraints, "update", path)
     stageAndCommit(toPhysical(updated, base.mapping), path, "update", Loud(base, hit),
-        base.partitioning) { (snap, files, stats) =>
+        base, base.partitioning) { (snap, files, stats) =>
       if (snap.constraints != base.constraints)
         throw new java.util.ConcurrentModificationException(
           s"update at $path conflicts: constraints changed after validation")
@@ -1368,7 +1370,7 @@ trait TxWrites {
       val out = (keptRows.toSeq ++ newValueFrames)
         .reduceOption(_.unionByName(_, allowMissingColumns = true))
         .getOrElse(updates.limit(0))
-      stageAndCommit(toPhysical(out, m2), path, "merge", Strict(base), base.partitioning,
+      stageAndCommit(toPhysical(out, m2), path, "merge", Strict(base), base, base.partitioning,
           collectStats, txn = txn) { (_, files, stats) =>
         val mp = if (m2 != base.mapping) Some(encodeMapping(m2, base.retired)) else None
         Some(CommitSpec(files, hit, evolvedOpt.map(encodeSchema), stats, mapping = mp))

@@ -191,12 +191,12 @@ class CliSpec extends SparkSpec {
       .select("event_id", "value").as[(Long, Double)].collect().toMap
     assert(sq === tw)
 
-    // DML against a non-tx view refuses loudly (no Catalyst fallthrough)
-    val ex = intercept[IllegalArgumentException] {
+    // DML against a view that is no table refuses loudly (Spark's error)
+    val ex = intercept[org.apache.spark.SparkException] {
       Main.run(spark, Map("step" -> "sql", "data-dir" -> sf("sf0.001"),
         "out-dir" -> tmp(), "sql" -> "DELETE FROM events WHERE event_id = 1"))
     }
-    assert(ex.getMessage.contains("neither a --tx registered table"))
+    assert(ex.getMessage.contains("Unexpected table relation"), ex.getMessage)
   }
 
   test("sql step: MERGE INTO a --tx view runs the keyed conditional merge") {
@@ -275,18 +275,18 @@ class CliSpec extends SparkSpec {
     assert(graft.sources.TxStore.read(spark, table).count() === 2)
     assert(graft.sources.TxStore.snapshot(spark, table).files.forall(_.contains("bucket=")),
       "overwrite keeps the hive layout")
-    // arity mismatch refuses before anything commits
-    val ex = intercept[IllegalArgumentException](run("INSERT INTO instbl VALUES (1)"))
-    assert(ex.getMessage.contains("expects"))
+    // arity mismatch refuses before anything commits (Spark's analyzer)
+    val ex = intercept[org.apache.spark.sql.AnalysisException](run("INSERT INTO instbl VALUES (1)"))
+    assert(ex.getMessage.contains("INSERT_COLUMN_ARITY_MISMATCH"), ex.getMessage)
     // a PARTITION clause naming a DATA column refuses — it would
     // silently clobber that column with the constant
-    val ex2 = intercept[IllegalArgumentException](
+    val ex2 = intercept[org.apache.spark.sql.AnalysisException](
       run("INSERT INTO instbl PARTITION (payload='z') VALUES (103, 'p1')"))
     assert(ex2.getMessage.contains("non-partition column"))
     // dynamic partition overwrite of an empty batch is a no-op
     val before = graft.sources.TxStore.history(spark, table).size
-    run("INSERT OVERWRITE instbl PARTITION (bucket) " +
-      "SELECT id, payload, bucket FROM instbl WHERE id < 0")
+    dynamicOverwrite(run("INSERT OVERWRITE instbl PARTITION (bucket) " +
+      "SELECT id, payload, bucket FROM instbl WHERE id < 0"))
     assert(graft.sources.TxStore.history(spark, table).size === before,
       "empty dynamic overwrite must not commit")
     // duplicate UPDATE SET targets refuse
@@ -334,14 +334,15 @@ class CliSpec extends SparkSpec {
       .as[(Long, Option[String], Double)].collect().toSet
     assert(sq === tw && sq.nonEmpty, s"SQL $sq != Scala twin $tw")
     assert(sq.exists(_._2.isEmpty), "column-list INSERT leaves unassigned columns NULL")
-    // a BY SOURCE clause referencing the source refuses loudly
-    val ex = intercept[IllegalArgumentException] {
+    // a BY SOURCE clause referencing the source refuses loudly (Spark
+    // resolves BY SOURCE clauses against the target only)
+    val ex = intercept[org.apache.spark.sql.AnalysisException] {
       Main.run(spark, Map("step" -> "sql", "data-dir" -> sf("sf0.001"),
         "out-dir" -> tmp(), "tx" -> tx,
         "sql" -> ("MERGE INTO ct t USING cwave s ON t.id = s.id " +
           "WHEN NOT MATCHED BY SOURCE AND s.score > 0 THEN DELETE")))
     }
-    assert(ex.getMessage.contains("target row only"), ex.getMessage)
+    assert(ex.getMessage.contains("UNRESOLVED_COLUMN"), ex.getMessage)
     // duplicate SET targets inside a merge clause refuse
     val ex2 = intercept[IllegalArgumentException] {
       Main.run(spark, Map("step" -> "sql", "data-dir" -> sf("sf0.001"),
@@ -474,14 +475,18 @@ class CliSpec extends SparkSpec {
       Main.run(spark, txArg.fold(base)(t => base + ("tx" -> t)))
       out
     }
-    // CREATE … PARTITIONED BY … AS SELECT over the fixture catalog
-    run("CREATE TABLE ctas LOCATION '" + table + "' PARTITIONED BY (event_type) " +
-      "AS SELECT event_id, user_id, event_type, value FROM events WHERE event_id % 9 = 0")
+    // CREATE … USING graft PARTITIONED BY … AS SELECT over the fixture
+    // catalog, on a --tx name whose path holds no table yet
+    run("CREATE TABLE ctas USING graft PARTITIONED BY (event_type) " +
+      "AS SELECT event_id, user_id, event_type, value FROM events WHERE event_id % 9 = 0",
+      Some(s"ctas=$table"))
     assert(graft.sources.TxStore.isTable(spark, table))
     assert(graft.sources.TxStore.tablePartitioning(spark, table) === Seq("event_type"))
     val n0 = graft.sources.TxStore.read(spark, table).count()
     assert(n0 === Tables.events(spark, sf("sf0.001"))
       .filter(col("event_id") % 9 === 0).count() && n0 > 0)
+    assert(graft.sources.TxStore.history(spark, table).map(_.op) === Seq("append"),
+      "v1 holds the rows")
     // SELECT through --tx sees the created table
     val out1 = run("SELECT COUNT(*) AS n FROM ctas", Some(s"ctas=$table"))
     assert(spark.read.parquet(s"$out1/sql_result").head.getLong(0) === n0)
@@ -491,18 +496,24 @@ class CliSpec extends SparkSpec {
       "(SELECT COUNT(*) FROM ctas) AS after", Some(s"ctas=$table"))
     val r = spark.read.parquet(s"$out2/sql_result").head
     assert(r.getLong(0) === n0 && r.getLong(1) < n0)
-    // a second CTAS at the same location refuses; IF NOT EXISTS no-ops
-    val ex = intercept[IllegalArgumentException](
-      run(s"CREATE TABLE ctas LOCATION '$table' AS SELECT 1 AS x"))
-    assert(ex.getMessage.contains("already holds a table"), ex.getMessage)
-    run(s"CREATE TABLE IF NOT EXISTS ctas LOCATION '$table' AS SELECT 1 AS x")
+    // a second CTAS on the name refuses (Spark's table-exists error);
+    // IF NOT EXISTS no-ops
+    val ex = intercept[org.apache.spark.sql.AnalysisException](
+      run("CREATE TABLE ctas USING graft AS SELECT 1 AS x", Some(s"ctas=$table")))
+    assert(ex.getMessage.contains("TABLE_OR_VIEW_ALREADY_EXISTS"), ex.getMessage)
+    run("CREATE TABLE IF NOT EXISTS ctas USING graft AS SELECT 1 AS x", Some(s"ctas=$table"))
     assert(graft.sources.TxStore.snapshot(spark, table).version === 2L, "no-op kept v2")
     // …and a non-empty non-table location refuses (the cloneTable rule)
     val occupied = s"$dir/occupied"
     Tables.events(spark, sf("sf0.001")).limit(1).write.parquet(occupied)
     val ex2 = intercept[IllegalArgumentException](
-      run(s"CREATE TABLE o LOCATION '$occupied' AS SELECT 1 AS x"))
+      run("CREATE TABLE o USING graft AS SELECT 1 AS x", Some(s"o=$occupied")))
     assert(ex2.getMessage.contains("not empty"), ex2.getMessage)
+    // a plain CREATE TABLE would create nothing at a --tx path: refused
+    val ex3 = intercept[IllegalArgumentException](
+      run("CREATE TABLE fresh (x INT) USING graft", Some(s"fresh=$dir/fresh")))
+    assert(ex3.getMessage.contains("AS SELECT"), ex3.getMessage)
+    assert(!graft.sources.TxStore.isTable(spark, s"$dir/fresh"))
   }
 
   test("sql step: --tx name=path@vN registers a read-only time-travel view") {
@@ -544,24 +555,24 @@ class CliSpec extends SparkSpec {
     val table = s"$dir/hardtbl"
     val ev = Tables.events(spark, sf("sf0.001"))
     graft.sources.TxStore.append(ev.limit(20), table) // v1
-    // an EMPTY USING source: mergeConditional returns the pre-merge
-    // version without committing — the Result must carry None, not
-    // 'committed v1' (ADVICE r13)
-    ev.filter(col("event_id") < 0).createOrReplaceTempView("emptywave")
-    val r = graft.sources.SqlDml.maybeExecute(spark,
+    // an EMPTY USING source matches nothing: the step reports no
+    // commit, not 'committed v1' (ADVICE r13)
+    val session = graft.sources.TxCatalog.session(spark,
+      graft.sources.TxCatalog.parse(spark, s"hard=$table"))
+    session.sql("SELECT * FROM hard WHERE event_id < 0").createOrReplaceTempView("emptywave")
+    val (changes, written) = graft.sources.TxCatalog.artifact(session.sql(
       "MERGE INTO hard t USING emptywave s ON t.event_id = s.event_id " +
-        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
-      Map("hard" -> table)).get
-    assert(r.version.isEmpty, s"no-op merge must report no commit, got ${r.version}")
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"))
+    assert(written.map(_.op) === Some("merge"))
+    assert(written.flatMap(_.version).isEmpty, s"no-op merge must report no commit, got $written")
+    assert(changes.isEmpty)
     assert(graft.sources.TxStore.snapshot(spark, table).version === 1L)
     // 'ON t.k = t.k' — both sides qualify the TARGET (a typo): refuses
     // instead of silently running the keyed join on k (ADVICE r13)
-    ev.limit(5).createOrReplaceTempView("wave5")
+    session.sql("SELECT * FROM hard LIMIT 5").createOrReplaceTempView("wave5")
     val ex = intercept[IllegalArgumentException] {
-      graft.sources.SqlDml.maybeExecute(spark,
-        "MERGE INTO hard t USING wave5 s ON t.event_id = t.event_id " +
-          "WHEN MATCHED THEN UPDATE SET *",
-        Map("hard" -> table))
+      session.sql("MERGE INTO hard t USING wave5 s ON t.event_id = t.event_id " +
+        "WHEN MATCHED THEN UPDATE SET *")
     }
     assert(ex.getMessage.contains("TARGET column"), ex.getMessage)
     // a literal table path whose last component ends in '@v<digits>' is
@@ -739,7 +750,7 @@ class CliSpec extends SparkSpec {
     assert(dst.exceptAll(src).isEmpty && src.exceptAll(dst).isEmpty)
     assert(graft.sources.TxStore.tableProperties(spark, dest).toMap === Map("team" -> "x"))
     assert(graft.sources.TxStore.snapshot(spark, dest).version === 1L)
-    // a CTAS still falls through to SqlDml untouched by the clone rule
+    // an unknown clone source refuses loudly
     intercept[IllegalArgumentException] {
       Main.run(spark, Map("step" -> "sql", "data-dir" -> sf("sf0.001"),
         "out-dir" -> tmp(), "tx" -> s"mt=$table",
@@ -1040,6 +1051,48 @@ class CliSpec extends SparkSpec {
     run("DELETE FROM ao WHERE ao.event_id = 1")
     assert(graft.sources.TxStore.read(spark, table)
       .filter(col("event_id") === 1L).count() === 0)
+  }
+
+  /** Run `body` under `spark.sql.sources.partitionOverwriteMode=dynamic`. */
+  private def dynamicOverwrite[T](body: => T): T = {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "dynamic")
+    try body finally spark.conf.unset(key)
+  }
+
+  test("sql step: INSERT OVERWRITE static vs dynamic partitions") {
+    import org.apache.spark.sql.functions.col
+    val dir = tmp()
+    val rows = (0 until 30).map(i => (i.toLong, s"v$i", s"p${i % 3}")).toDF("id", "payload", "bucket")
+    val table = s"$dir/dyntbl"
+    graft.sources.TxStore.append(rows, table, partitionBy = Seq("bucket"))
+    val twin = s"$dir/dyntwin"
+    graft.sources.TxStore.append(rows, twin, partitionBy = Seq("bucket"))
+    def run(sql: String): Unit =
+      Main.run(spark, Map("step" -> "sql", "data-dir" -> sf("sf0.001"),
+        "out-dir" -> tmp(), "tx" -> s"dt=$table", "sql" -> sql))
+    def history = graft.sources.TxStore.history(spark, table)
+    // dynamic: the batch replaces exactly the partitions it holds rows
+    // for ≡ replaceWhere on them
+    dynamicOverwrite(run("INSERT OVERWRITE dt PARTITION (bucket) " +
+      "SELECT id + 100, payload, bucket FROM dt WHERE bucket = 'p1'"))
+    assert(history.last.op === "replace-where")
+    graft.sources.TxStore.replaceWhere(
+      rows.filter(col("bucket") === "p1").withColumn("id", col("id") + 100L), twin,
+      col("bucket") === "p1")
+    val got = graft.sources.TxStore.read(spark, table).as[(Long, String, String)].collect().toSet
+    assert(got === graft.sources.TxStore.read(spark, twin).as[(Long, String, String)].collect().toSet)
+    assert(got.count(_._3 == "p1") === 10 && got.filter(_._3 == "p1").forall(_._1 >= 100L))
+    // an empty batch holds no partition: nothing commits
+    val before = history.size
+    dynamicOverwrite(run("INSERT OVERWRITE dt PARTITION (bucket) " +
+      "SELECT id, payload, bucket FROM dt WHERE id < 0"))
+    assert(history.size === before, "empty dynamic overwrite must not commit")
+    // static mode (Spark's default): the same statement overwrites the
+    // whole table with the empty batch
+    run("INSERT OVERWRITE dt PARTITION (bucket) SELECT id, payload, bucket FROM dt WHERE id < 0")
+    assert(history.last.op === "overwrite")
+    assert(graft.sources.TxStore.read(spark, table).count() === 0)
   }
 
   private def sqlStep(stmt: String): String = {

@@ -7,10 +7,10 @@ import org.apache.spark.sql.functions._
 /** The `spark.sql.catalog.graft` TableCatalog (VERDICT r16 #2):
   * name-addressed tables over the TxStore machinery — the catalog
   * holds no state of its own, so every lifecycle step below must be
-  * observable in the table directory's own log. Also covers the
-  * native `DELETE FROM` plan (VERDICT r16 #3): partition/metadata
-  * deletes plan through Catalyst, row-level predicates refuse at
-  * planning rather than paying a hidden copy-on-write. */
+  * observable in the table directory's own log. Also covers SQL DML
+  * on catalog names through `spark.sql` (GraftDml): a partition DELETE
+  * is a remove-only commit, a row-level one rewrites the hit files,
+  * and UPDATE and MERGE run on the TxStore rewrite core. */
 class GraftCatalogSpec extends SparkSpec {
 
   import spark.implicits._
@@ -78,7 +78,7 @@ class GraftCatalogSpec extends SparkSpec {
       "the catalog read must prune through the same log walk readWhere uses")
   }
 
-  test("native DELETE: partition predicates plan metadata-only, row predicates refuse") {
+  test("native DELETE: partition drops metadata-only, rows rewrite") {
     val w = warehouse
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.dml")
     spark.sql("CREATE TABLE graft.dml.t (id BIGINT, payload STRING, p INT) " +
@@ -106,34 +106,54 @@ class GraftCatalogSpec extends SparkSpec {
     assert(spark.table("graft.dml.t").columns.toSeq === Seq("id", "payload", "p"))
     assert(spark.sql(s"SELECT * FROM graft.dml.t VERSION AS OF $vBefore").count() === 30)
 
-    // a row-level predicate must refuse at planning (no silent CoW)
-    spark.sql("INSERT INTO graft.dml.t VALUES (1, 'x', 0)")
-    val e = intercept[AnalysisException](spark.sql("DELETE FROM graft.dml.t WHERE id = 1"))
-    assert(e.getMessage.toLowerCase.contains("delete"))
-    assert(spark.table("graft.dml.t").count() === 1, "the refused DELETE changed nothing")
+    // a row-level predicate rewrites the files holding matching rows
+    spark.sql("INSERT INTO graft.dml.t SELECT /*+ COALESCE(1) */ * " +
+      "FROM VALUES (1L, 'x', 0), (2L, 'y', 0) AS v(id, payload, p)")
+    spark.sql("DELETE FROM graft.dml.t WHERE id = 1")
+    assert(spark.table("graft.dml.t").as[(Long, String, Int)].collect().toSeq === Seq((2L, "y", 0)))
+    val r = TxStore.history(spark, path).last
+    assert(r.op === "delete" && r.add.nonEmpty && r.remove.nonEmpty)
   }
 
-  test("UPDATE and MERGE text resolve catalog names through SqlDml") {
+  test("UPDATE and MERGE on catalog names run through spark.sql") {
     val w = warehouse
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.updml")
     spark.sql("CREATE TABLE graft.updml.t (id BIGINT, payload STRING) USING graft")
     spark.sql("INSERT INTO graft.updml.t VALUES (1, 'a'), (2, 'b')")
     val path = s"$w/updml/t"
 
-    val r = graft.sources.SqlDml.maybeExecute(spark,
-      "UPDATE graft.updml.t SET payload = 'z' WHERE id = 2", Map.empty)
-    assert(r.exists(_.op == "update"))
+    spark.sql("UPDATE graft.updml.t SET payload = 'z' WHERE id = 2")
     assert(spark.table("graft.updml.t").where("id = 2").head().getString(1) === "z")
     assert(TxStore.history(spark, path).last.op === "update")
 
     Seq((2L, "m"), (3L, "n")).toDF("id", "payload").createOrReplaceTempView("updml_src")
-    val m = graft.sources.SqlDml.maybeExecute(spark,
-      "MERGE INTO graft.updml.t AS t USING updml_src AS s ON t.id = s.id " +
-        "WHEN MATCHED THEN UPDATE SET payload = s.payload " +
-        "WHEN NOT MATCHED THEN INSERT *", Map.empty)
-    assert(m.exists(_.op == "merge"))
+    spark.sql("MERGE INTO graft.updml.t AS t USING updml_src AS s ON t.id = s.id " +
+      "WHEN MATCHED THEN UPDATE SET payload = s.payload " +
+      "WHEN NOT MATCHED THEN INSERT *")
+    assert(TxStore.history(spark, path).last.op === "merge")
     assert(spark.table("graft.updml.t").orderBy("id").as[(Long, String)].collect().toSeq
       === Seq((1L, "a"), (2L, "m"), (3L, "n")))
+
+    // all five clause kinds, ≡ the Scala clause API on a twin table
+    import TxStore.MergeClause._
+    val twin = s"${java.nio.file.Files.createTempDirectory("updml-twin")}/t"
+    TxStore.append(TxStore.read(spark, path), twin)
+    Seq((1L, "p"), (3L, "q"), (4L, "r")).toDF("id", "payload").createOrReplaceTempView("updml_src2")
+    spark.sql("MERGE INTO graft.updml.t t USING updml_src2 s ON t.id = s.id " +
+      "WHEN MATCHED AND t.id = 1 THEN DELETE " +
+      "WHEN MATCHED THEN UPDATE SET payload = concat(t.payload, s.payload) " +
+      "WHEN NOT MATCHED THEN INSERT (id, payload) VALUES (s.id, 'new') " +
+      "WHEN NOT MATCHED BY SOURCE AND t.payload = 'm' THEN UPDATE SET payload = 'stale' " +
+      "WHEN NOT MATCHED BY SOURCE THEN DELETE")
+    TxStore.mergeClauses(spark, twin, spark.table("updml_src2"), Seq("id"), Seq(
+      MatchedDelete(Some(col("t.id") === 1L)),
+      MatchedUpdate(None, Some(Map("payload" -> concat(col("t.payload"), col("s.payload"))))),
+      NotMatchedInsert(None, Some(Map("id" -> col("s.id"), "payload" -> lit("new")))),
+      NotMatchedBySourceUpdate(Some(col("t.payload") === "m"), Map("payload" -> lit("stale"))),
+      NotMatchedBySourceDelete(None)))
+    val viaSql = spark.table("graft.updml.t").as[(Long, String)].collect().toSet
+    assert(viaSql === Set((2L, "stale"), (3L, "nq"), (4L, "new")))
+    assert(viaSql === TxStore.read(spark, twin).as[(Long, String)].collect().toSet)
   }
 
   test("CTAS, ALTER properties and columns, SHOW surfaces") {

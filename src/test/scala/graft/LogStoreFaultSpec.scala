@@ -15,13 +15,24 @@ import java.util.concurrent.atomic.AtomicInteger
   * lose or fail the next commit publications (renames onto
   * `_txlog/<20 digits>.json`). A lost put first lands a rival writer's
   * empty commit at the contested version, so the rename loses exactly
-  * as a real race does; a failed put throws an IOException. */
+  * as a real race does; a failed put throws an IOException; an applied
+  * put renames and then throws, as an RPC that times out after the
+  * NameNode applied it. A data fault fails a staged file's move into
+  * `data/` (the rename answers false) after letting `dataPass` moves
+  * through. */
 class FaultFs extends FilterFileSystem(new FaultFs.Raw) {
   override def getScheme: String = "faultfs"
 
   override def rename(src: Path, dst: Path): Boolean = {
+    if (FaultFs.isData(dst) && FaultFs.dataFail.get > 0 && !FaultFs.take(FaultFs.dataPass) &&
+        FaultFs.take(FaultFs.dataFail))
+      return false
     if (FaultFs.isCommit(dst)) {
       if (FaultFs.take(FaultFs.fail)) throw new IOException(s"injected put failure at $dst")
+      if (FaultFs.take(FaultFs.applied)) {
+        super.rename(src, dst)
+        throw new IOException(s"injected failure after the put took effect at $dst")
+      }
       if (FaultFs.take(FaultFs.lose)) {
         val version = dst.getName.stripSuffix(".json").toLong
         val out = create(dst, false)
@@ -48,11 +59,18 @@ object FaultFs {
     override def listStatus(p: Path): Array[FileStatus] = super.listStatus(p).map(plain)
   }
 
-  /** Commit publications left to lose, and to fail. */
+  /** Commit publications left to lose, to fail, and to apply then fail;
+    * staged data moves to let through, then to fail. */
   val lose = new AtomicInteger(0)
   val fail = new AtomicInteger(0)
+  val applied = new AtomicInteger(0)
+  val dataPass = new AtomicInteger(0)
+  val dataFail = new AtomicInteger(0)
 
   private def take(n: AtomicInteger): Boolean = n.getAndUpdate(k => math.max(0, k - 1)) > 0
+
+  private def isData(p: Path): Boolean =
+    p.getName.endsWith(".parquet") && p.toString.contains("/data/") && !p.toString.contains("_stage-")
 
   private def isCommit(p: Path): Boolean =
     p.getParent != null && p.getParent.getName == "_txlog" && p.getName.matches("\\d{20}\\.json")
@@ -127,5 +145,27 @@ class LogStoreFaultSpec extends SparkSpec {
       assert(TxStore.vacuum(spark, t, ageGraceMs = 0) === 0, s"$name left files behind")
       assert(contents(t) === before, name)
     }
+  }
+
+  test("a failed staged file move deletes the moved files and the stage dir") {
+    val t = table()
+    TxStore.append(rows(6), t)
+    val before = contents(t)
+    FaultFs.dataPass.set(1)
+    val e = intercept[IllegalArgumentException](
+      armed(FaultFs.dataFail, 1)(TxStore.append(rows(30, from = 10).repartition(3), t)))
+    FaultFs.dataPass.set(0)
+    assert(e.getMessage.contains("rename failed"), e.getMessage)
+    assert(TxStore.latestVersion(spark, t) === 1L)
+    assert(TxStore.vacuum(spark, t, ageGraceMs = 0) === 0, "the failed stage left files behind")
+    assert(contents(t) === before)
+  }
+
+  test("a commit rename that throws after it took effect is the op's commit") {
+    val t = table()
+    TxStore.append(rows(6), t)
+    assert(armed(FaultFs.applied, 1)(TxStore.append(rows(3, from = 6), t)) === 2L)
+    assert(contents(t) === (0 until 9).map(i => (i.toLong, s"v$i")).toSet)
+    assert(TxStore.vacuum(spark, t, ageGraceMs = 0) === 0)
   }
 }

@@ -2661,6 +2661,54 @@ class TxStoreSpec extends SparkSpec {
       TxStore.setTableProperties(spark, t, Seq("graft.stats.nullCounts" -> "off")))
   }
 
+  test("read and readAt answer no rows on a table with no live files") {
+    val schema = rows(1).schema
+    def empty(t: String, v: Long): Unit = {
+      for (df <- Seq(TxStore.read(spark, t), TxStore.readAt(spark, t, v))) {
+        assert(df.count() === 0L, s"$t @v$v")
+        assert(df.columns.toSeq === Seq("id", "payload"))
+      }
+    }
+    val created = tmpDir()
+    TxStore.create(spark, created, schema)
+    empty(created, 1L)
+    val truncated = tmpDir()
+    TxStore.append(rows(5), truncated)
+    assert(TxStore.truncate(spark, truncated) === Some(2L))
+    empty(truncated, 2L)
+    val dropped = tmpDir()
+    TxStore.append(rows(6).withColumn("p", col("id") % 2), dropped, partitionBy = Seq("p"))
+    assert(TxStore.deletePartitions(spark, dropped, col("p") >= 0L) === Some(2L))
+    assert(TxStore.read(spark, dropped).columns.toSeq === Seq("id", "payload", "p"))
+    assert(TxStore.read(spark, dropped).count() === 0L && TxStore.readAt(spark, dropped, 2L).count() === 0L)
+    // the rows are still there one version back
+    assert(TxStore.readAt(spark, dropped, 1L).count() === 6L)
+  }
+
+  test("every rewrite honours graft.stats.nullCounts=false") {
+    def data(n: Int, from: Int) = rows(n, from).withColumn("id2", -col("id"))
+    val rewrites: Seq[(String, String => Option[Long])] = Seq(
+      "compact" -> (t => TxStore.compact(spark, t)),
+      "compactSmallFiles" -> (t => TxStore.compactSmallFiles(spark, t)),
+      "compactZOrder" -> (t => TxStore.compactZOrder(spark, t, Seq("id", "id2"), target = 2)),
+      "delete" -> (t => TxStore.delete(spark, t, col("id") === 3L)),
+      "update" -> (t => TxStore.update(spark, t, col("id") === 4L, Map("payload" -> lit("u")))),
+      "merge" -> (t => Some(TxStore.merge(spark, t, data(3, from = 18), Seq("id")))))
+    rewrites.foreach { case (name, rewrite) =>
+      val t = tmpDir()
+      TxStore.append(data(10, from = 0).repartition(2), t)
+      TxStore.append(data(10, from = 10).repartition(2), t)
+      TxStore.setTableProperties(spark, t, Seq("graft.stats.nullCounts" -> "false"))
+      val v = rewrite(t)
+      val c = TxStore.history(spark, t).last
+      assert(v === Some(c.version) && c.add.nonEmpty, s"$name committed no rewrite")
+      val stats = TxStore.snapshot(spark, t).stats
+      assert(c.add.forall(f => stats.get(f).exists(_.contains("#rows"))), name)
+      assert(c.add.forall(f => !stats(f).keys.exists(_.endsWith("#n"))),
+        s"$name harvested null facts on an opted-out table")
+    }
+  }
+
   test("CDC ranges spanning property commits derive cleanly (metadata-only ops)") {
     val t = tmpDir()
     TxStore.append(rows(10).repartition(1), t) // v1

@@ -224,9 +224,9 @@ trait TxWrites {
   /** The core every staged write runs on: stage `out` as data files
     * (under `partitionBy`, harvesting NULL facts unless `base`, the
     * snapshot the op decided on, opts out), then publish through
-    * [[commitLoop]] — each
-    * attempt first passes `rule`, then `spec` decides its commit from the
-    * newest snapshot and the staged (files, stats). The staged files are
+    * [[commitLoop]] — each attempt first passes `rule`, then `spec`
+    * decides its commit from the newest snapshot and the staged (files,
+    * stats). The staged files are
     * deleted when an attempt throws or the op aborts, so a failed or
     * no-op write leaves nothing behind for vacuum. Returns the committed
     * version, None on abort. */

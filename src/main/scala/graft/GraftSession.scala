@@ -34,6 +34,9 @@ import org.apache.spark.sql.SparkSession
   *
   * [[build]] is the only place a graft process creates its session: the
   * CLI and tool mains at `SPARK_GRAFT_CPUS` cores, the test suite at 4.
+  * It builds the session with [[graft.functions.GraftExtensions]], so
+  * the session and every `newSession()` of it parse graft's
+  * maintenance SQL.
   */
 object GraftSession {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -76,9 +79,9 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftExtensions.register(spark)
     spark
   }
 

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.ops.{ExternalScorer, IhcScorer, JourneyBuilder}
-import graft.sources.{SqlMaint, TxCatalog}
+import graft.sources.TxCatalog
 import org.apache.spark.sql.functions.{col, to_timestamp}
 
 /** CLI mirroring the reference's per-step interface
@@ -23,13 +23,14 @@ import org.apache.spark.sql.functions.{col, to_timestamp}
   * attribution_customer_journey/ (parquet) and channel_reporting/ (CSV).
   * Date bounds follow the reference's asymmetry: build-journeys filters
   * the conversion date (cj_builder.py:45–53), report filters the session
-  * date (⚠B5, channel_reporter.py:47–56). `--step sql` lands one
-  * statement's result as out-dir/sql_result/ (parquet; a statement
-  * with no result columns writes none): maintenance statements
-  * ([[graft.sources.SqlMaint]]), and everything else through
-  * `spark.sql`, with `--tx` names resolved by
-  * [[graft.sources.TxCatalog]]. A write on a graft table (DELETE,
-  * UPDATE, MERGE, INSERT) lands the rows its commits changed.
+  * date (⚠B5, channel_reporter.py:47–56). `--step sql` runs one
+  * statement through `spark.sql`, with `--tx` names resolved by
+  * [[graft.sources.TxCatalog]], and lands its result as
+  * out-dir/sql_result/ (parquet; a statement with no result columns
+  * writes none). A write on a graft table (DELETE, UPDATE, MERGE,
+  * INSERT) lands the rows its commits changed; a maintenance statement
+  * (OPTIMIZE, VACUUM, RESTORE, DESCRIBE HISTORY/DETAIL, CONVERT TO TX,
+  * SHALLOW CLONE; [[graft.sources.GraftSqlParser]]) lands its summary.
   */
 object Main {
 
@@ -159,41 +160,28 @@ object Main {
         // catalog of a fresh session, so the caller's session keeps its
         // catalog and temp views; `@vN` pins a read-only time-travel
         // version. Temp views resolve before any catalog, so a --tx name
-        // drops the fixture view it shadows: reads, writes and SqlMaint
-        // then address the same table.
+        // drops the fixture view it shadows: every statement then
+        // addresses the same table.
         val entries = opts.get("tx").toSeq.flatMap(TxCatalog.parse(spark, _))
         val session = TxCatalog.session(spark, entries)
         Tables.registerViews(session, dataDir)
         entries.foreach(e => session.catalog.dropTempView(e.name))
-        // the current (writable) names — what SqlMaint accepts
-        val tx = entries.collect { case TxCatalog.Entry(n, p, None) => n -> p }.toMap
         val result = s"$outDir/sql_result"
-        // maintenance statements (OPTIMIZE/VACUUM/RESTORE/DESCRIBE
-        // HISTORY/SHOW PARTITIONS/CONVERT) are not in Spark's grammar,
-        // so they intercept before its parser sees them; everything else
-        // is Spark's: reads plan the v2 pushed-filter scan, writes run
-        // through the catalog and graft's planner hook
-        SqlMaint.maybeExecute(session, text, tx) match {
-          case Some(m) =>
-            // the statement's own summary frame (O(1) rows, or O(retained
-            // commits) for DESCRIBE HISTORY), never table data
-            m.df.write.mode("overwrite").parquet(result)
-            println(s"[graft] sql ${m.op} on tx '${m.view}' " +
-              m.version.fold("(no commit)")(v => s"committed v$v") + s" -> $result")
-          case None =>
-            TxCatalog.artifact(session.sql(text)) match {
-              case (changes, Some(w)) =>
-                changes.write.mode("overwrite").parquet(result)
-                println(s"[graft] sql ${w.op} on '${w.name}' " +
-                  w.version.fold("(matched nothing, no commit)")(v => s"committed v$v") +
-                  s"; changed rows -> $result")
-              // a statement with no result columns (CREATE, DROP, SET …)
-              // has already run; parquet cannot hold a zero-column frame
-              case (df, None) if df.columns.isEmpty => println("[graft] sql ok (no result columns)")
-              case (df, None) =>
-                df.write.mode("overwrite").parquet(result)
-                println(s"[graft] sql -> $result")
-            }
+        // Spark parses every statement, graft's maintenance statements
+        // through the session's parser extension; reads plan the v2
+        // pushed-filter scan, writes run through the catalog and
+        // graft's planner hooks
+        TxCatalog.artifact(session.sql(text)) match {
+          case (df, Some(w)) =>
+            df.write.mode("overwrite").parquet(result)
+            println(s"[graft] sql ${w.op} on '${w.name}' " +
+              w.version.fold("(no commit)")(v => s"committed v$v") + s" -> $result")
+          // a statement with no result columns (CREATE, DROP, SET …)
+          // has already run; parquet cannot hold a zero-column frame
+          case (df, None) if df.columns.isEmpty => println("[graft] sql ok (no result columns)")
+          case (df, None) =>
+            df.write.mode("overwrite").parquet(result)
+            println(s"[graft] sql -> $result")
         }
       case other =>
         sys.error(s"unknown --step $other (build-journeys|score|score-external|report|clean-corpus|sql|all)")

@@ -6,16 +6,19 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Registers the engine's native expressions with a session so they are
   * callable from SQL (`SELECT graft_dot(a, b)`) as well as the DataFrame
-  * API, and graft tables' planner hooks: the check their `UNSET
+  * API; graft tables' planner hooks: the check their `UNSET
   * TBLPROPERTIES` needs ([[graft.sources.UnsetPropertiesCheck]]) and
-  * their SQL DELETE/UPDATE/MERGE ([[graft.sources.GraftDml]]). Wire up
-  * either via `spark.sql.extensions=graft.functions.GraftExtensions` or
-  * [[GraftExtensions.register]] on an existing session (GraftSession does
-  * the latter — extensions config only applies at session construction). */
+  * their SQL DELETE/UPDATE/MERGE ([[graft.sources.GraftDml]]); and the
+  * parser of their maintenance statements
+  * ([[graft.sources.GraftSqlParser]]). Extensions apply when a session
+  * is built: `GraftSession.build` passes this one to the builder, and
+  * `spark.sql.extensions=graft.functions.GraftExtensions` does the same
+  * for any session. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
     GraftExtensions.strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
+    ext.injectParser((_, delegate) => new graft.sources.GraftSqlParser(delegate))
   }
 }
 
@@ -89,8 +92,12 @@ object GraftExtensions {
           ShingleJaccard(children(0), children(1), children(2))
         }))
 
-  /** Idempotent late registration on an already-built session. */
+  /** Idempotent late registration of the functions and planner hooks
+    * on a session built without the extension (`GraftSession.tune`).
+    * Maintenance SQL needs the parser, which only the extension at
+    * construction adds. */
   def register(spark: SparkSession): SparkSession = {
+    if (spark.sessionState.sqlParser.isInstanceOf[graft.sources.GraftSqlParser]) return spark
     functions.foreach { case (id, info, builder) =>
       if (!spark.catalog.functionExists(id.funcName)) {
         spark.sessionState.functionRegistry.registerFunction(id, info, builder)

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.ops.{ChannelReport, IhcScorer, IncrementalReport, JourneyBuilder, Skew}
-import graft.sources.{Compaction, SqlMaint, TxCatalog, TxStore}
+import graft.sources.{Compaction, TxCatalog, TxStore}
 import graft.streaming.{StreamingCdf, StreamingIngest}
 import org.apache.spark.sql.functions._
 
@@ -1375,9 +1375,9 @@ object StorageQueries {
 
     // ── S47 — MAINTENANCE SQL: the nightly-operations statements
     //    (OPTIMIZE / DESCRIBE HISTORY / RESTORE / VACUUM) as SQL TEXT
-    //    through the same pre-Catalyst dispatch DML rides — Spark's
-    //    grammar knows none of them, so a lake operator previously
-    //    needed the Scala API for exactly the jobs they script most.
+    //    through `spark.sql` — Spark's grammar knows none of them, so
+    //    graft's parser extension turns each into a command whose table
+    //    the analyzer resolves, like DML's.
     //    The lane drives the full lifecycle: a trickle-ingested table
     //    is OPTIMIZEd (bin-packing commit), its history read back as a
     //    frame (metadata-only, log-scale), RESTOREd to v1 (a NEW
@@ -1394,11 +1394,15 @@ object StorageQueries {
         TxStore.append(ev.filter(col("event_id") % 2 === 0).repartition(1), store) // v1
         for (w <- 0 until 4) // odd-id trickle, 4 small files (v2..v5)
           TxStore.append(ev.filter(col("event_id") % 8 === 2 * w + 1).repartition(1), store)
-        val tx = Map("mt" -> store)
-        def run(sql: String): SqlMaint.Result = SqlMaint.maybeExecute(s, sql, tx).get
+        val sql = TxCatalog.session(s, TxCatalog.parse(s, s"mt=$store"))
+        // (summary rows, the version committed)
+        def run(stmt: String) = {
+          val (df, w) = TxCatalog.artifact(sql.sql(stmt))
+          (df, w.flatMap(_.version))
+        }
         val filesBefore = TxStore.snapshot(s, store).files.size // 1 big + 4 trickle
-        val opt = run("OPTIMIZE mt")
-        require(opt.version.isDefined && TxStore.history(s, store).last.op == "compact",
+        val (_, optimized) = run("OPTIMIZE mt")
+        require(optimized.isDefined && TxStore.history(s, store).last.op == "compact",
           "OPTIMIZE must land a bin-packing compact commit")
         // scale-honest bin math: at bench SFs every file sits under the
         // 64 MB floor and all 5 fold into one; at century scale the big
@@ -1406,18 +1410,18 @@ object StorageQueries {
         // trickle still folds — either way strictly fewer files
         require(TxStore.snapshot(s, store).files.size < filesBefore,
           "the sub-floor trickle files must fold")
-        val hist = run("DESCRIBE HISTORY mt").df
+        val (hist, _) = run("DESCRIBE HISTORY mt")
         require(hist.count() == 6 &&
           hist.columns.sameElements(Array("version", "ts", "op", "n_add", "n_remove")),
           "DESCRIBE HISTORY must answer one row per commit")
-        val rst = run("RESTORE TABLE mt TO VERSION AS OF 1")
-        require(rst.version.contains(7L) && TxStore.history(s, store).last.op == "restore",
+        val (_, restored) = run("RESTORE TABLE mt TO VERSION AS OF 1")
+        require(restored.contains(7L) && TxStore.history(s, store).last.op == "restore",
           "RESTORE must land a new commit, never rewrite history")
         // reap everything the restore orphaned; the readback below must
         // survive on the kept files alone
         TxStore.checkpoint(s, store) // v8
-        val vac = run("VACUUM mt RETAIN 1 VERSIONS GRACE 0 MS")
-        require(vac.df.select("files_deleted").head.getLong(0) >= 4,
+        val (vac, _) = run("VACUUM mt RETAIN 1 VERSIONS GRACE 0 MS")
+        require(vac.select("files_deleted").head.getLong(0) >= 4,
           "VACUUM must reap the trickle + packed files the restore orphaned")
         eventsCols(TxStore.read(s, store))
       },
@@ -1560,8 +1564,8 @@ object StorageQueries {
           }
         val before = walk(new java.io.File(store), "").toMap
         require(before.nonEmpty, "fixture: the estate must hold parquet files")
-        val r = SqlMaint.maybeExecute(s, s"CONVERT TO TX '$store'", Map.empty).get
-        require(r.version.contains(1L) &&
+        val r = s.sql(s"CONVERT TO TX '$store'").head()
+        require(r.getAs[Long]("version") == 1L &&
           TxStore.history(s, store).head.op == "convert",
           "convert must publish exactly one v1 commit")
         val snap = TxStore.snapshot(s, store)

@@ -118,14 +118,6 @@ object DsvBridge {
       inlineMarks, sidecarDirsByLeaf, conf)
   }
 
-  /** The session's registered catalog plugin under `name`, loading it
-    * if configured (CatalogManager is `private[sql]`; the plugin
-    * interface itself is public). None when no such catalog. */
-  def catalogPlugin(
-      spark: SparkSession,
-      name: String): Option[org.apache.spark.sql.connector.catalog.CatalogPlugin] =
-    scala.util.Try(spark.sessionState.catalogManager.catalog(name)).toOption
-
   /** Re-wrap a computed batch plan as a STREAMING frame — what a v1
     * streaming Source's `getBatch` must return (MicroBatchExecution
     * asserts isStreaming). The plan's RDD is captured LAZILY, so the

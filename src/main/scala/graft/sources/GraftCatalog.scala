@@ -31,6 +31,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * SELECT * FROM graft.db.events VERSION AS OF 3
   * UPDATE graft.db.events SET v = 'x' WHERE id = 2   -- [[GraftDml]]
   * DELETE FROM graft.db.events WHERE p = 1            -- metadata-only
+  * OPTIMIZE graft.db.events                -- [[GraftSqlParser]]
   * DROP TABLE graft.db.events
   * }}}
   *
@@ -98,10 +99,8 @@ final class GraftCatalog extends PathCatalog with SupportsNamespaces {
     (warehouse +: namespace).mkString("/")
   }
 
-  /** The table directory an identifier resolves to — shared with
-    * [[SqlMaint]]'s catalog-name resolution so maintenance SQL text and
-    * the catalog plan against the same path. */
-  def tablePath(ident: Identifier): String = {
+  /** The table directory an identifier resolves to. */
+  private def tablePath(ident: Identifier): String = {
     checkSegments(ident.namespace.toSeq :+ ident.name, "identifier")
     (warehouse +: ident.namespace.toSeq :+ ident.name).mkString("/")
   }
@@ -408,18 +407,4 @@ object UnsetPropertiesCheck extends SparkStrategy {
       Nil
     case _ => Nil
   }
-}
-
-object GraftCatalog {
-  /** Resolve catalog-qualified name parts (`catalog.ns….table`) to the
-    * table directory — Some only when `parts.head` names a registered
-    * [[GraftCatalog]] and the directory is a live table. [[SqlMaint]]
-    * resolves names through it, so maintenance SQL text addresses
-    * exactly the tables the catalog plans against. */
-  def resolvePath(spark: SparkSession, parts: Seq[String]): Option[String] =
-    if (parts.length < 2) None
-    else org.apache.spark.sql.graft.DsvBridge.catalogPlugin(spark, parts.head).collect {
-      case g: GraftCatalog => g.tablePath(Identifier.of(
-        parts.drop(1).dropRight(1).toArray, parts.last))
-    }.filter(p => TxStore.isTable(spark, p))
 }

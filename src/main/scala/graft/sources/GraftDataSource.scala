@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.util.Locale
+import java.util.{Locale, Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
@@ -206,7 +206,8 @@ final class GraftTable(
     val mergeSchema: Boolean = false,
     val writable: Boolean = true) extends Table with SupportsRead with SupportsWrite
   with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
-  with org.apache.spark.sql.connector.catalog.SupportsDelete {
+  with org.apache.spark.sql.connector.catalog.SupportsDelete
+  with org.apache.spark.sql.connector.catalog.SupportsPartitionManagement {
 
   private[sources] val logical: StructType =
     TxStore.logicalSchema(snap).getOrElse {
@@ -221,11 +222,45 @@ final class GraftTable(
   private[sources] val partitionLogical: Seq[String] =
     snap.partitioning.map(p => logicalByPhys.getOrElse(lc(p), p))
 
-  override def name(): String =
-    if (exists) s"graft.`$path` @v${snap.version}"
-    else s"graft.`$path` (CREATABLE — not yet a table)"
+  /** A SQL identifier (Spark's error messages quote it) naming the
+    * path and the version. */
+  override def name(): String = {
+    val at = if (exists) s"@v${snap.version}" else " (not yet a table)"
+    s"graft.`${(path + at).replace("`", "``")}`"
+  }
 
   override def schema(): StructType = logical
+
+  /** The log's property set (`SHOW TBLPROPERTIES`, `DESCRIBE TABLE
+    * EXTENDED`). */
+  override def properties(): JMap[String, String] = snap.properties.toMap.asJava
+
+  /** `SHOW PARTITIONS`: the live files' directories, decoded like the
+    * scan decodes them; the layout is the log's, so create, drop and
+    * replace refuse. */
+  override def partitionSchema(): StructType =
+    StructType(partitionLogical.flatMap(n => logical.find(_.name.equalsIgnoreCase(n))))
+
+  override def listPartitionIdentifiers(names: Array[String], ident: InternalRow): Array[InternalRow] = {
+    val fields = partitionSchema().fields
+    val at = names.map(n => fields.indexWhere(_.name == n))
+    snap.files.map(GraftPartitionEval.rawValues).distinct.map { raw =>
+      new GenericInternalRow(snap.partitioning.zip(fields).map { case (p, f) =>
+        raw.get(lc(p)).flatten.map(GraftPartitionEval.catalystValue(spark, _, f.dataType)).orNull
+      }.toArray): InternalRow
+    }.filter(p => at.indices.forall(k =>
+      p.get(at(k), fields(at(k)).dataType) == ident.get(k, fields(at(k)).dataType))).toArray
+  }
+
+  override def loadPartitionMetadata(ident: InternalRow): JMap[String, String] =
+    java.util.Collections.emptyMap()
+  override def createPartition(ident: InternalRow, props: JMap[String, String]): Unit = fixedLayout()
+  override def dropPartition(ident: InternalRow): Boolean = fixedLayout()
+  override def replacePartitionMetadata(ident: InternalRow, props: JMap[String, String]): Unit =
+    fixedLayout()
+
+  private def fixedLayout(): Nothing = throw new UnsupportedOperationException(
+    s"graft: the partitions of $path are its files' directories — write or delete rows instead")
 
   override def partitioning(): Array[Transform] =
     partitionLogical.map(Expressions.identity).toArray
@@ -1005,16 +1040,10 @@ final class GraftScan(
   private def partitionValuesOf(rel: String): InternalRow =
     if (emittedPartSchema.isEmpty) InternalRow.empty
     else {
-      val byName: Map[String, String] = rel.split('/').dropRight(1).toSeq.flatMap { seg =>
-        val i = seg.indexOf('=')
-        if (i < 0) None
-        else Some(lc(seg.take(i)) -> TxStats.unescapePathName(seg.drop(i + 1)))
-      }.toMap
+      val raw = GraftPartitionEval.rawValues(rel)
       val values: Array[Any] = readPartitionSchemaL.fields.map { f =>
-        byName.get(lc(physName(f.name))) match {
-          case None | Some("__HIVE_DEFAULT_PARTITION__") => null
-          case Some(raw) => castPartitionValue(raw, f.dataType)
-        }
+        raw.get(lc(physName(f.name))).flatten
+          .map(GraftPartitionEval.catalystValue(spark, _, f.dataType)).orNull
       }
       val meta: Array[Any] = readMetaSchema.fields.map { f =>
         if (f.name.equalsIgnoreCase(GraftMetaColumns.File.name))
@@ -1023,11 +1052,6 @@ final class GraftScan(
       }
       new GenericInternalRow(values ++ meta)
     }
-
-  private def castPartitionValue(raw: String, dt: DataType): Any =
-    if (dt == StringType) UTF8String.fromString(raw)
-    else Cast(Literal(UTF8String.fromString(raw), StringType), dt,
-      Some(spark.sessionState.conf.sessionLocalTimeZone), EvalMode.LEGACY).eval(null)
 
   private def hasDv: Boolean = snap.dv.nonEmpty || snap.dvp.nonEmpty
 

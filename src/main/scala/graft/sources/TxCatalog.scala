@@ -156,7 +156,10 @@ object TxCatalog {
     * ahead of the metastore. The caller's session keeps its own
     * catalog and temp views; the new one carries the caller's runtime
     * SQL settings (bar a session-catalog implementation of its own,
-    * which [[TxCatalog]] replaces) and graft's functions. */
+    * which [[TxCatalog]] replaces) and the caller's extensions, so it
+    * parses maintenance SQL when the caller was built with graft's.
+    * `register` gives a session built without them graft's functions
+    * and planner hooks. */
   def session(spark: SparkSession, entries: Seq[Entry]): SparkSession = {
     val s = spark.newSession()
     spark.conf.getAll.foreach { case (k, v) =>
@@ -175,8 +178,9 @@ object TxCatalog {
     s
   }
 
-  /** A write the sql step reports: what it did, the table's name, and
-    * the version it committed (None = it matched nothing). */
+  /** A write or maintenance statement the sql step reports: what it
+    * did, the table's name, and the version it committed (None = it
+    * committed nothing). */
   final case class Written(op: String, name: String, version: Option[Long])
 
   /** What a `spark.sql` statement lands as its artifact. A DELETE,
@@ -184,8 +188,9 @@ object TxCatalog {
     * commits changed: the change feed since the version pinned in the
     * statement's relation, O(changes), never the table. An ALTER on a
     * graft table lands the history rows of the commits it made (none
-    * when IF [NOT] EXISTS matched nothing). Anything else lands its own
-    * result. */
+    * when IF [NOT] EXISTS matched nothing). A maintenance statement
+    * ([[GraftMaintenance]]) lands its summary rows. Anything else lands
+    * its own result. */
   def artifact(df: DataFrame): (DataFrame, Option[Written]) = {
     val spark = df.sparkSession
     def graft(plan: LogicalPlan): Option[(GraftTable, String)] = plan.collectFirst {
@@ -195,6 +200,7 @@ object TxCatalog {
         (t, r.identifier.fold(t.path)(_.name))
     }
     df.queryExecution.analyzed match {
+      case m: GraftMaintenance => (df, Some(m.written(spark)))
       // ADD CONSTRAINT … CHECK stays AddCheckConstraint over the relation
       case plan @ (_: AlterTableCommand | _: AddCheckConstraint) =>
         (graft(plan).fold(df) { case (t, _) =>

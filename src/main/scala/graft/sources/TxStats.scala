@@ -37,9 +37,9 @@ object TxStats {
 
   /** Hive path unescaping (the inverse of the `%xx` escaping Spark's
     * partitioned writer applies to special characters in values).
-    * `private[sources]`: SqlMaint's SHOW PARTITIONS decodes values
-    * through THIS function so display and partition pruning can never
-    * disagree on an escape. */
+    * `private[sources]`: SHOW PARTITIONS (`GraftTable`'s partition
+    * listing) decodes values through THIS function so display and
+    * partition pruning can never disagree on an escape. */
   private[sources] def unescapePathName(s: String): String =
     if (s.indexOf('%') < 0) s
     else {

@@ -709,19 +709,10 @@ trait TxWrites {
     val logicalNames = base.partitioning.map(p => logicalOf(lc(p)))
     val types = logicalSchema(base).get.fields
       .map(f => lc(f.name) -> f.dataType).toMap
-    val dirs = base.files.map(dirOf).distinct
-    val rows = dirs.map { d =>
-      val vals: Map[String, String] = d.split('/').iterator.flatMap { seg =>
-        val eq = seg.indexOf('=')
-        if (eq <= 0) None
-        else {
-          val v = unescapePathName(seg.substring(eq + 1))
-          if (v == "__HIVE_DEFAULT_PARTITION__") None
-          else Some(lc(unescapePathName(seg.substring(0, eq))) -> v)
-        }
-      }.toMap
+    val rows = base.files.groupBy(dirOf).toSeq.map { case (d, files) =>
+      val vals = GraftPartitionEval.rawValues(files.head)
       org.apache.spark.sql.Row.fromSeq(
-        d +: base.partitioning.map(p => vals.get(lc(p)).orNull))
+        d +: base.partitioning.map(p => vals.get(lc(p)).flatten.orNull))
     }
     val schema = StructType(StructField("__dir", StringType) +:
       logicalNames.map(n => StructField(n, StringType)))

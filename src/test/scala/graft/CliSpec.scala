@@ -750,8 +750,8 @@ class CliSpec extends SparkSpec {
     assert(dst.exceptAll(src).isEmpty && src.exceptAll(dst).isEmpty)
     assert(graft.sources.TxStore.tableProperties(spark, dest).toMap === Map("team" -> "x"))
     assert(graft.sources.TxStore.snapshot(spark, dest).version === 1L)
-    // an unknown clone source refuses loudly
-    intercept[IllegalArgumentException] {
+    // an unknown clone source refuses loudly, with Spark's own error
+    intercept[org.apache.spark.sql.AnalysisException] {
       Main.run(spark, Map("step" -> "sql", "data-dir" -> sf("sf0.001"),
         "out-dir" -> tmp(), "tx" -> s"mt=$table",
         "sql" -> s"CREATE TABLE '$dest' SHALLOW CLONE nosuchview"))
@@ -830,13 +830,13 @@ class CliSpec extends SparkSpec {
     assert(graft.sources.TxStore.read(spark, table).count() ===
       ev.filter(col("event_id") % 2 === 0).count())
 
-    // maintenance on an unregistered view refuses loudly — never a
-    // Catalyst fallthrough, never a silent no-op
-    val ex = intercept[IllegalArgumentException] {
+    // maintenance on a view refuses loudly with Spark's own error —
+    // never a silent no-op
+    val ex = intercept[org.apache.spark.sql.AnalysisException] {
       Main.run(spark, Map("step" -> "sql", "data-dir" -> sf("sf0.001"),
         "out-dir" -> tmp(), "sql" -> "OPTIMIZE events"))
     }
-    assert(ex.getMessage.contains("neither a --tx-registered table"))
+    assert(ex.getMessage.contains("EXPECT_TABLE_NOT_VIEW"), ex.getMessage)
     // DESCRIBE of a plain view still belongs to Catalyst (only
     // DESCRIBE HISTORY intercepts)
     Main.run(spark, Map("step" -> "sql", "data-dir" -> sf("sf0.001"),
@@ -873,15 +873,16 @@ class CliSpec extends SparkSpec {
       .select("event_id", "value").as[(Long, Double)].collect().toMap
     assert(a === b)
     // SHOW PARTITIONS answers the live partition dirs from the log —
-    // one row per event_type, no directory listing involved
+    // one row per event_type, no directory listing involved — in
+    // Spark's one `partition` column
     val outP = tmp()
     Main.run(spark, Map(
       "step" -> "sql", "data-dir" -> sf("sf0.001"), "out-dir" -> outP,
       "tx" -> s"mt=$table", "sql" -> "SHOW PARTITIONS mt"))
     val parts = spark.read.parquet(s"$outP/sql_result")
-    assert(parts.columns.toSeq === Seq("event_type"))
+    assert(parts.columns.toSeq === Seq("partition"))
     assert(parts.as[String].collect().sorted.toSeq ===
-      ev.select("event_type").distinct().as[String].collect().sorted.toSeq)
+      ev.select("event_type").distinct().as[String].collect().sorted.toSeq.map("event_type=" + _))
     // DESCRIBE DETAIL: one row of log-resident table facts
     val outD = tmp()
     Main.run(spark, Map(
@@ -894,15 +895,15 @@ class CliSpec extends SparkSpec {
     assert(det.select("num_files").as[Long].head ===
       graft.sources.TxStore.snapshot(spark, table).files.size.toLong)
     assert(det.select("size_bytes").as[Long].head > 0L)
-    // SHOW PARTITIONS on an unpartitioned table refuses; other SHOW
-    // forms still belong to Catalyst
+    // SHOW PARTITIONS on an unpartitioned table refuses with Spark's
+    // own error; other SHOW forms are Spark's too
     val flat = s"$dir/flattbl"
     graft.sources.TxStore.append(ev.limit(10), flat)
-    val exP = intercept[IllegalArgumentException] {
+    val exP = intercept[org.apache.spark.sql.AnalysisException] {
       Main.run(spark, Map("step" -> "sql", "data-dir" -> sf("sf0.001"),
         "out-dir" -> tmp(), "tx" -> s"ft=$flat", "sql" -> "SHOW PARTITIONS ft"))
     }
-    assert(exP.getMessage.contains("not partitioned"))
+    assert(exP.getMessage.contains("not partitioned"), exP.getMessage)
     Main.run(spark, Map("step" -> "sql", "data-dir" -> sf("sf0.001"),
       "out-dir" -> tmp(), "sql" -> "SHOW TABLES"))
     // an unparseable clause refuses loudly
@@ -912,6 +913,62 @@ class CliSpec extends SparkSpec {
         "sql" -> "OPTIMIZE mt INTO 3 FILES"))
     }
     assert(ex.getMessage.contains("unrecognized clause"))
+  }
+
+  test("sql step: SHOW PARTITIONS / TBLPROPERTIES on a metastore table are Spark's") {
+    val dir = tmp()
+    def step(stmt: String): String = {
+      val out = tmp()
+      Main.run(spark, Map("step" -> "sql", "data-dir" -> sf("sf0.001"), "out-dir" -> out,
+        "sql" -> stmt))
+      s"$out/sql_result"
+    }
+    try {
+      step(s"CREATE TABLE cli_pq (a INT, b STRING) USING parquet PARTITIONED BY (b) " +
+        s"LOCATION '$dir/pq' TBLPROPERTIES ('owner_team' = 'ops')")
+      step("INSERT INTO cli_pq VALUES (1, 'x'), (2, 'y')")
+      assert(spark.read.parquet(step("SHOW PARTITIONS cli_pq")).as[String].collect().sorted
+        .toSeq === Seq("b=x", "b=y"))
+      val props = spark.read.parquet(step("SHOW TBLPROPERTIES cli_pq"))
+      assert(props.columns.toSeq === Seq("key", "value"))
+      assert(props.as[(String, String)].collect().contains("owner_team" -> "ops"))
+    } finally spark.sql("DROP TABLE IF EXISTS cli_pq")
+  }
+
+  test("sql step: maintenance names resolve like any other Spark name") {
+    import org.apache.spark.sql.functions.col
+    val table = s"${tmp()}/namestbl"
+    val ev = Tables.events(spark, sf("sf0.001"))
+    for (w <- 0 until 3) // three small files
+      graft.sources.TxStore.append(ev.filter(col("event_id") % 3 === w).repartition(1), table)
+    def step(tx: String, stmt: String): String = {
+      val out = tmp()
+      Main.run(spark, Map("step" -> "sql", "data-dir" -> sf("sf0.001"), "out-dir" -> out,
+        "tx" -> tx, "sql" -> stmt))
+      s"$out/sql_result"
+    }
+    // a backquoted name
+    val opt = spark.read.parquet(step(s"mt=$table", "OPTIMIZE `mt`"))
+    assert(opt.select("rewrote").as[Boolean].head)
+    assert(graft.sources.TxStore.history(spark, table).last.op === "compact")
+    // a database-qualified name
+    val preview = spark.read.parquet(step(s"mt=$table", "VACUUM default.mt GRACE 0 MS DRY RUN"))
+    assert(preview.columns.toSeq === Seq("file"))
+    assert(preview.as[String].collect().sorted.toSeq ===
+      graft.sources.TxStore.vacuumPreview(spark, table, 2, 0L).sorted)
+    // a leading comment, and a trailing ';'
+    graft.sources.TxStore.append(ev.limit(5).repartition(1), table)
+    val v = graft.sources.TxStore.snapshot(spark, table).version
+    spark.read.parquet(step(s"mt=$table", "-- nightly\nOPTIMIZE mt"))
+    assert(graft.sources.TxStore.snapshot(spark, table).version === v + 1)
+    assert(graft.sources.TxStore.history(spark, table).last.op === "compact")
+    val hist = spark.read.parquet(step(s"mt=$table", "/* audit */ DESCRIBE HISTORY mt;"))
+    assert(hist.count() === graft.sources.TxStore.history(spark, table).size.toLong)
+    // a name pinned to a version is read-only: OPTIMIZE refuses, HISTORY reads
+    val ex = intercept[IllegalArgumentException](step(s"old=$table@v1", "OPTIMIZE old"))
+    assert(ex.getMessage.contains("read-only"), ex.getMessage)
+    spark.read.parquet(step(s"old=$table@v1", "DESCRIBE HISTORY old"))
+    assert(graft.sources.TxStore.history(spark, table).last.op === "compact")
   }
 
   test("sql step: ALTER TABLE — rename/add/drop columns and CHECK constraints as SQL") {

@@ -166,6 +166,11 @@ class GraftCatalogSpec extends SparkSpec {
 
     spark.sql("ALTER TABLE graft.meta.src SET TBLPROPERTIES ('team' = 'graft', 'tier' = 'gold')")
     assert(TxStore.tableProperties(spark, path).toMap === Map("team" -> "graft", "tier" -> "gold"))
+    // Spark's SHOW TBLPROPERTIES reads the log's property set
+    assert(spark.sql("SHOW TBLPROPERTIES graft.meta.src").as[(String, String)].collect().toMap ===
+      Map("team" -> "graft", "tier" -> "gold"))
+    assert(spark.sql("SHOW TBLPROPERTIES graft.meta.src ('team')").as[(String, String)]
+      .collect().toSeq === Seq("team" -> "graft"))
     spark.sql("ALTER TABLE graft.meta.src UNSET TBLPROPERTIES ('tier')")
     assert(TxStore.tableProperties(spark, path).toMap === Map("team" -> "graft"))
 
@@ -297,18 +302,42 @@ class GraftCatalogSpec extends SparkSpec {
     assert(t.op === "delete" && t.add.isEmpty)
     assert(TxStore.snapshot(spark, path).partitioning === Seq("p"))
 
-    // maintenance SQL resolves the same names (its catalog-name fallback)
+    // maintenance SQL resolves the same names through Spark's analyzer
     spark.sql("INSERT INTO graft.maint.t VALUES (1, 'a', 0), (2, 'b', 1)")
-    val hist = graft.sources.SqlMaint.maybeExecute(spark,
-      "DESCRIBE HISTORY graft.maint.t", Map.empty)
-    assert(hist.isDefined)
-    assert(hist.get.df.count() === TxStore.history(spark, path).size.toLong)
-    val opt = graft.sources.SqlMaint.maybeExecute(spark,
-      "OPTIMIZE graft.maint.t", Map.empty)
-    assert(opt.isDefined)
-    // an unknown catalog name still refuses loudly
-    val e = intercept[Exception](graft.sources.SqlMaint.maybeExecute(spark,
-      "DESCRIBE HISTORY graft.maint.nope", Map.empty))
-    assert(e.getMessage.contains("graft-catalog") || e.getMessage.contains("not a"))
+    val hist = spark.sql("DESCRIBE HISTORY graft.maint.t")
+    assert(hist.count() === TxStore.history(spark, path).size.toLong)
+    val opt = spark.sql("OPTIMIZE graft.maint.t")
+    assert(opt.select("op").as[String].collect().toSeq === Seq("optimize"))
+    // an unknown catalog name refuses with Spark's own error
+    val e = intercept[AnalysisException](spark.sql("DESCRIBE HISTORY graft.maint.nope"))
+    assert(e.getMessage.contains("TABLE_OR_VIEW_NOT_FOUND"), e.getMessage)
+  }
+
+  test("GraftTable.name() parses as a SQL identifier naming the path and the version") {
+    val w = warehouse
+    val path = s"$w/odd`name"
+    TxStore.append(rows(3), path) // v1
+    TxStore.append(rows(3, 3), path) // v2
+    val fresh = s"$w/fresh"
+    val tables = Seq(
+      new graft.sources.GraftTable(spark, path, TxStore.snapshot(spark, path)) -> s"$path@v2",
+      new graft.sources.GraftTable(spark, path, TxStore.snapshotAt(spark, path, 1L),
+        writable = false) -> s"$path@v1",
+      new graft.sources.GraftTable(spark, fresh, TxStore.snapshot(spark, fresh),
+        exists = false) -> s"$fresh (not yet a table)")
+    tables.foreach { case (t, shown) =>
+      assert(spark.sessionState.sqlParser.parseMultipartIdentifier(t.name()) === Seq("graft", shown))
+    }
+  }
+
+  test("the graft parser forwards parameters, and newSession() inherits it") {
+    assert(spark.sql("SELECT :x AS x", Map("x" -> 1)).head().getInt(0) === 1)
+    assert(spark.sql("SELECT ? AS y", Array(2)).head().getInt(0) === 2)
+    val child = spark.newSession()
+    assert(child.sessionState.sqlParser.parsePlan("DESCRIBE HISTORY t")
+      .isInstanceOf[graft.sources.GraftMaintenance])
+    // DESCRIBE HISTORY with no table after it is Spark's DESCRIBE
+    assert(!child.sessionState.sqlParser.parsePlan("DESCRIBE history")
+      .isInstanceOf[graft.sources.GraftMaintenance])
   }
 }

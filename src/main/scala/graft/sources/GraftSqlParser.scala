@@ -107,15 +107,16 @@ final class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
 
 /** The tokens of one statement past its leading whitespace and
   * comments, without its trailing `;`: words, quoted text and single
-  * symbols, each with its place in the text. */
+  * symbols, each with its place in the text. Tokens are read as asked
+  * for, so a statement that is not graft's costs one token. */
 private final class Scanner(sqlText: String) {
   private val s = Scanner.Leading.replaceFirstIn(sqlText, "").trim.stripSuffix(";").trim
-  private val tokens = Scanner.Token.findAllMatchIn(s).toIndexedSeq
+  private val tokens = Scanner.Token.findAllMatchIn(s).to(LazyList)
   private var k = 0
   private def at(j: Int) = tokens.lift(j).map(_.matched)
   private def from = if (atEnd) s.length else tokens(k).start
 
-  def atEnd: Boolean = k >= tokens.size
+  def atEnd: Boolean = tokens.lengthCompare(k) <= 0
 
   /** Consume `words` (case-insensitive) if they come next. */
   def kw(words: String*): Boolean = {
@@ -129,7 +130,7 @@ private final class Scanner(sqlText: String) {
     val start = from
     k += 1
     while (at(k).contains(".")) k += 2
-    s.substring(start, if (k > tokens.size) s.length else tokens(k - 1).end)
+    s.substring(start, if (tokens.lengthCompare(k) < 0) s.length else tokens(k - 1).end)
   }
 
   def number(): Option[Long] = at(k).filter(_.forall(_.isDigit)).map { n => k += 1; n.toLong }
@@ -257,7 +258,8 @@ case class GraftMaintenance(op: GraftMaintenance.Op, table: Option[LogicalPlan])
       case _ => None
     }
     TxCatalog.Written(op.name, op match { case Convert(path) => path; case _ => target._1 },
-      moved.map(m => TxStore.latestVersion(spark, m._1)).filter(_ > moved.get._2))
+      moved.map { case (path, before) => TxStore.latestVersion(spark, path) -> before }
+        .collect { case (latest, before) if latest > before => latest })
   }
 }
 

@@ -304,10 +304,20 @@ class GraftCatalogSpec extends SparkSpec {
 
     // maintenance SQL resolves the same names through Spark's analyzer
     spark.sql("INSERT INTO graft.maint.t VALUES (1, 'a', 0), (2, 'b', 1)")
+    val inserted = TxStore.snapshot(spark, path).version
     val hist = spark.sql("DESCRIBE HISTORY graft.maint.t")
     assert(hist.count() === TxStore.history(spark, path).size.toLong)
     val opt = spark.sql("OPTIMIZE graft.maint.t")
     assert(opt.select("op").as[String].collect().toSeq === Seq("optimize"))
+    // …and so does every other maintenance kind
+    assert(spark.sql("DESCRIBE DETAIL graft.maint.t").select("location").as[String].head === path)
+    spark.sql(s"RESTORE TABLE graft.maint.t TO VERSION AS OF $inserted")
+    assert(TxStore.history(spark, path).last.op === "restore")
+    assert(spark.sql("VACUUM graft.maint.t RETAIN 1 VERSIONS GRACE 0 MS DRY RUN").columns.toSeq ===
+      Seq("file"))
+    val clone = s"${java.nio.file.Files.createTempDirectory("graft-clone")}/t"
+    spark.sql(s"CREATE TABLE '$clone' SHALLOW CLONE graft.maint.t")
+    assert(TxStore.read(spark, clone).count() === spark.table("graft.maint.t").count())
     // an unknown catalog name refuses with Spark's own error
     val e = intercept[AnalysisException](spark.sql("DESCRIBE HISTORY graft.maint.nope"))
     assert(e.getMessage.contains("TABLE_OR_VIEW_NOT_FOUND"), e.getMessage)

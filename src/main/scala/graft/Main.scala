@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.ops.{ExternalScorer, IhcScorer, JourneyBuilder}
-import graft.sources.TxCatalog
+import graft.sources.{GraftSqlParser, TxCatalog}
 import org.apache.spark.sql.functions.{col, to_timestamp}
 
 /** CLI mirroring the reference's per-step interface
@@ -24,7 +24,9 @@ import org.apache.spark.sql.functions.{col, to_timestamp}
   * Date bounds follow the reference's asymmetry: build-journeys filters
   * the conversion date (cj_builder.py:45–53), report filters the session
   * date (⚠B5, channel_reporter.py:47–56). `--step sql` runs one
-  * statement through `spark.sql`, with `--tx` names resolved by
+  * statement through `spark.sql` (maintenance statements through
+  * [[graft.sources.GraftSqlParser.sql]] on a session built without
+  * graft's parser), with `--tx` names resolved by
   * [[graft.sources.TxCatalog]], and lands its result as
   * out-dir/sql_result/ (parquet; a statement with no result columns
   * writes none). A write on a graft table (DELETE, UPDATE, MERGE,
@@ -168,10 +170,11 @@ object Main {
         entries.foreach(e => session.catalog.dropTempView(e.name))
         val result = s"$outDir/sql_result"
         // Spark parses every statement, graft's maintenance statements
-        // through the session's parser extension; reads plan the v2
+        // through graft's parser (the session's own when it was built
+        // with graft's extension); reads plan the v2
         // pushed-filter scan, writes run through the catalog and
         // graft's planner hooks
-        TxCatalog.artifact(session.sql(text)) match {
+        TxCatalog.artifact(GraftSqlParser.sql(session, text)) match {
           case (df, Some(w)) =>
             df.write.mode("overwrite").parquet(result)
             println(s"[graft] sql ${w.op} on '${w.name}' " +

@@ -94,8 +94,9 @@ object GraftExtensions {
 
   /** Idempotent late registration of the functions and planner hooks
     * on a session built without the extension (`GraftSession.tune`).
-    * Maintenance SQL needs the parser, which only the extension at
-    * construction adds. */
+    * Only the extension at construction adds the parser, so on such a
+    * session maintenance SQL runs through
+    * [[graft.sources.GraftSqlParser.sql]]. */
   def register(spark: SparkSession): SparkSession = {
     if (spark.sessionState.sqlParser.isInstanceOf[graft.sources.GraftSqlParser]) return spark
     functions.foreach { case (id, info, builder) =>

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.ops.{ChannelReport, IhcScorer, IncrementalReport, JourneyBuilder, Skew}
-import graft.sources.{Compaction, TxCatalog, TxStore}
+import graft.sources.{Compaction, GraftSqlParser, TxCatalog, TxStore}
 import graft.streaming.{StreamingCdf, StreamingIngest}
 import org.apache.spark.sql.functions._
 
@@ -1397,7 +1397,7 @@ object StorageQueries {
         val sql = TxCatalog.session(s, TxCatalog.parse(s, s"mt=$store"))
         // (summary rows, the version committed)
         def run(stmt: String) = {
-          val (df, w) = TxCatalog.artifact(sql.sql(stmt))
+          val (df, w) = TxCatalog.artifact(GraftSqlParser.sql(sql, stmt))
           (df, w.flatMap(_.version))
         }
         val filesBefore = TxStore.snapshot(s, store).files.size // 1 big + 4 trickle
@@ -1564,7 +1564,7 @@ object StorageQueries {
           }
         val before = walk(new java.io.File(store), "").toMap
         require(before.nonEmpty, "fixture: the estate must hold parquet files")
-        val r = s.sql(s"CONVERT TO TX '$store'").head()
+        val r = GraftSqlParser.sql(s, s"CONVERT TO TX '$store'").head()
         require(r.getAs[Long]("version") == 1L &&
           TxStore.history(s, store).head.op == "convert",
           "convert must publish exactly one v1 commit")

@@ -1,12 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.analysis.{ResolvedTable, UnresolvedTable}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.parser.{ParameterContext, ParserInterface}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.catalyst.util.QuotingUtils
 import org.apache.spark.sql.execution.command.RunnableCommand
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -31,7 +32,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * `db.t`), the predicate and the timestamp through its expression
   * parser. Every other statement is the delegate's, parameters
   * included. Registered by [[graft.functions.GraftExtensions]]; a
-  * session takes a parser only when it is built. */
+  * session takes a parser only when it is built, so
+  * [[GraftSqlParser.sql]] runs the statements on any other. */
 final class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
   import GraftMaintenance._
 
@@ -52,8 +54,13 @@ final class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
   private def maintenance(sqlText: String): Option[LogicalPlan] = {
     val in = new Scanner(sqlText)
     var form = ""
+    var name = ""
     def bad(): Nothing = refuse(s"unrecognized clause '${in.rest()}' (expected $form)")
-    def table(command: String) = Some(UnresolvedTable(parseMultipartIdentifier(in.name()), command))
+    def table(command: String) = {
+      val parts = parseMultipartIdentifier(in.name())
+      name = QuotingUtils.quoted(parts.toArray)
+      Some(UnresolvedTable(parts, command))
+    }
     def column(text: String) = ColumnBridge.column(parseExpression(text))
     val parsed: Option[(Op, Option[LogicalPlan])] =
       if (in.kw("OPTIMIZE")) {
@@ -85,11 +92,13 @@ final class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
       } else if (in.kw("DESC") || in.kw("DESCRIBE")) {
         form = "DESC[RIBE] HISTORY|DETAIL t"
         val op = if (in.kw("HISTORY")) Some(History) else if (in.kw("DETAIL")) Some(Detail) else None
-        // `DESCRIBE HISTORY` alone describes a table named HISTORY
-        op.filterNot(_ => in.atEnd).map(_ -> table("DESCRIBE"))
+        // `DESCRIBE HISTORY` alone describes a table named HISTORY, and
+        // `DESCRIBE history.t` a table in a database named history
+        op.filterNot(_ => in.atEnd || in.peek.contains(".")).map(_ -> table("DESCRIBE"))
       } else if (in.kw("CONVERT", "TO", "TX")) {
         form = "CONVERT TO TX '/path'"
-        Some(Convert(in.quoted().getOrElse(bad()).trim.stripSuffix("/")) -> None)
+        name = in.quoted().getOrElse(bad()).trim.stripSuffix("/")
+        Some(Convert(name) -> None)
       } else if (in.kw("CREATE", "TABLE")) {
         // every other CREATE TABLE (CTAS included) is Spark's
         in.quoted().map { dest =>
@@ -100,8 +109,23 @@ final class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
       } else None
     parsed.map { case (op, t) =>
       if (!in.atEnd) bad()
-      GraftMaintenance(op, t)
+      GraftMaintenance(op, t, name)
     }
+  }
+}
+
+object GraftSqlParser {
+
+  /** Run one statement on `spark`, maintenance statements included. A
+    * session built with [[graft.functions.GraftExtensions]] parses them
+    * itself. On any other (a caller's own session, given graft's
+    * functions and planner hooks by `GraftSession.tune`) a graft parser
+    * around the session's own parses them, and they run as `spark.sql`
+    * runs a command; every other statement is `spark.sql`'s. */
+  def sql(spark: SparkSession, text: String): DataFrame = spark.sessionState.sqlParser match {
+    case _: GraftSqlParser => spark.sql(text)
+    case p => new GraftSqlParser(p).maintenance(text)
+      .fold(spark.sql(text))(ColumnBridge.dataFrame(spark, _))
   }
 }
 
@@ -117,6 +141,9 @@ private final class Scanner(sqlText: String) {
   private def from = if (atEnd) s.length else tokens(k).start
 
   def atEnd: Boolean = tokens.lengthCompare(k) <= 0
+
+  /** The next token, not consumed. */
+  def peek: Option[String] = at(k)
 
   /** Consume `words` (case-insensitive) if they come next. */
   def kw(words: String*): Boolean = {
@@ -145,11 +172,7 @@ private final class Scanner(sqlText: String) {
     s.substring(start, from)
   }
 
-  def rest(): String = {
-    val r = s.substring(from)
-    k = tokens.size
-    r
-  }
+  def rest(): String = try s.substring(from) finally k = tokens.size
 }
 
 private object Scanner {
@@ -159,13 +182,14 @@ private object Scanner {
 
 /** One maintenance statement. `table` (none for CONVERT) starts as the
   * `UnresolvedTable` that Spark's analyzer resolves through the
-  * catalog. `run` refuses a table that is not a graft table, and every
-  * statement but DESCRIBE refuses a name pinned to a version (`--tx
-  * t=/p@vN`). Each answers a small summary (one row, or one per
+  * catalog; `name` is the table's name as written (CONVERT's path),
+  * which the summary rows and the sql step report. `run` refuses a
+  * table that is not a graft table, and every statement but DESCRIBE
+  * refuses a name pinned to a version (`--tx t=/p@vN`). Each answers a small summary (one row, or one per
   * retained commit for DESCRIBE HISTORY), never table data. A Spark
   * `RunnableCommand`, so Spark plans it like its own commands and
   * `spark.sql` runs it at once. */
-case class GraftMaintenance(op: GraftMaintenance.Op, table: Option[LogicalPlan])
+case class GraftMaintenance(op: GraftMaintenance.Op, table: Option[LogicalPlan], name: String)
     extends RunnableCommand {
   import GraftMaintenance._
 
@@ -174,93 +198,82 @@ case class GraftMaintenance(op: GraftMaintenance.Op, table: Option[LogicalPlan])
   override protected def withNewChildrenInternal(c: IndexedSeq[LogicalPlan]): LogicalPlan =
     copy(table = c.headOption)
 
-  /** The graft table the statement names, and the name's last part. */
-  private def target: (String, GraftTable) = table match {
-    case Some(ResolvedTable(_, id, t: GraftTable, _)) =>
+  /** The graft table the statement names, once the analyzer resolved it. */
+  private lazy val t: GraftTable = table match {
+    case Some(ResolvedTable(_, _, t: GraftTable, _)) =>
       if (!t.writable && op != History && op != Detail) refuse(s"${op.name} needs the current " +
-        s"table, but '${id.name}' is pinned to v${t.snap.version} — time-travel names are read-only")
-      (id.name, t)
+        s"table, but '$name' is pinned to v${t.snap.version} — time-travel names are read-only")
+      t
     case Some(r: ResolvedTable) => refuse(s"${r.name} is not a graft table")
     case other => refuse(s"${op.name}: no table resolved in $other")
   }
 
-  override def run(spark: SparkSession): Seq[Row] = {
-    lazy val (name, t) = target
-    op match {
-      case Optimize(where, zOrder) =>
-        // sizing rides session config (the Delta idiom: OPTIMIZE takes
-        // no size literals; a lake's file size is an operations setting)
-        def conf(k: String, default: Long) = spark.conf.getOption(k).fold(default)(_.toLong)
-        val committed =
-          if (zOrder.nonEmpty) TxStore.compactZOrder(spark, t.path, zOrder, where = where)
-          else TxStore.compactSmallFiles(spark, t.path, where = where,
-            targetBytes = conf("graft.optimize.targetBytes", 128L << 20),
-            minBytes = conf("graft.optimize.minBytes", 64L << 20))
-        Seq(Row(if (zOrder.nonEmpty) "optimize-zorder" else "optimize", name,
-          committed.map(Long.box).orNull, committed.isDefined))
+  override def run(spark: SparkSession): Seq[Row] = op match {
+    case Optimize(where, zOrder) =>
+      // sizing rides session config (the Delta idiom: OPTIMIZE takes
+      // no size literals; a lake's file size is an operations setting)
+      def conf(k: String, default: Long) = spark.conf.getOption(k).fold(default)(_.toLong)
+      val committed =
+        if (zOrder.nonEmpty) TxStore.compactZOrder(spark, t.path, zOrder, where = where)
+        else TxStore.compactSmallFiles(spark, t.path, where = where,
+          targetBytes = conf("graft.optimize.targetBytes", 128L << 20),
+          minBytes = conf("graft.optimize.minBytes", 64L << 20))
+      Seq(Row(if (zOrder.nonEmpty) "optimize-zorder" else "optimize", name,
+        committed.map(Long.box).orNull, committed.isDefined))
 
-      case Vacuum(retain, grace, dryRun) =>
-        // the native retention unit is VERSIONS (the log is the clock);
-        // HOURS resolves to a version count on commit-file mtimes, so
-        // both forms drive one victim computation
-        def hours(h: Long) = TxStore.retainVersionsForWindow(spark, t.path, h * 3600000L)
-        // a bare VACUUM honours the table's own retention property
-        // (Delta's deletedFileRetentionDuration idiom): retainVersions
-        // wins over retainHours, an explicit RETAIN over both; default 2
-        def property(k: String) = t.snap.properties.collectFirst {
-          case (n, v) if n.equalsIgnoreCase(k) =>
-            v.trim.toIntOption.getOrElse(refuse(s"table property $k must be an integer, got '$v'"))
-        }
-        val retainV = retain.map(_.fold(_.toInt, hours))
-          .orElse(property("graft.vacuum.retainVersions"))
-          .orElse(property("graft.vacuum.retainHours").map(hours(_)))
-          .getOrElse(2)
-        // GRACE lowers the age guard for an operator who just cut
-        // retention; DRY RUN answers the data-file victims the reap's
-        // own computation finds, without deleting
-        val graceMs = grace.getOrElse(TxStore.DefaultAgeGraceMs)
-        if (dryRun) TxStore.vacuumPreview(spark, t.path, retainV, graceMs).sorted.map(Row(_))
-        else Seq(Row("vacuum", name, TxStore.vacuum(spark, t.path, retainV, graceMs).toLong))
+    case Vacuum(retain, grace, dryRun) =>
+      // the native retention unit is VERSIONS (the log is the clock);
+      // HOURS resolves to a version count on commit-file mtimes, so
+      // both forms drive one victim computation
+      def hours(h: Long) = TxStore.retainVersionsForWindow(spark, t.path, h * 3600000L)
+      // a bare VACUUM honours the table's own retention property
+      // (Delta's deletedFileRetentionDuration idiom): retainVersions
+      // wins over retainHours, an explicit RETAIN over both; default 2
+      def property(k: String) = t.snap.properties.collectFirst {
+        case (n, v) if n.equalsIgnoreCase(k) =>
+          v.trim.toIntOption.getOrElse(refuse(s"table property $k must be an integer, got '$v'"))
+      }
+      val retainV = retain.map(_.fold(_.toInt, hours))
+        .orElse(property("graft.vacuum.retainVersions"))
+        .orElse(property("graft.vacuum.retainHours").map(hours(_)))
+        .getOrElse(2)
+      // GRACE lowers the age guard for an operator who just cut
+      // retention; DRY RUN answers the data-file victims the reap's
+      // own computation finds, without deleting
+      val graceMs = grace.getOrElse(TxStore.DefaultAgeGraceMs)
+      if (dryRun) TxStore.vacuumPreview(spark, t.path, retainV, graceMs).sorted.map(Row(_))
+      else Seq(Row("vacuum", name, TxStore.vacuum(spark, t.path, retainV, graceMs).toLong))
 
-      case Restore(to) =>
-        // a timestamp evaluates through the session (a literal, date
-        // arithmetic), then resolves to the latest version at or
-        // before it by commit-file mtime, the clock TIMESTAMP AS OF reads
-        val version = to.fold(identity, ts => {
-          val at = spark.range(1).select(ts.cast("timestamp")).head().getTimestamp(0)
-          if (at == null) refuse("RESTORE: TIMESTAMP AS OF expression evaluated to NULL")
-          TxStore.versionAtTimestamp(spark, t.path, at.getTime)
-        })
-        Seq(Row("restore", name, version, TxStore.restore(spark, t.path, version)))
+    case Restore(to) =>
+      // a timestamp evaluates through the session (a literal, date
+      // arithmetic), then resolves to the latest version at or
+      // before it by commit-file mtime, the clock TIMESTAMP AS OF reads
+      val version = to.fold(identity, ts => {
+        val at = spark.range(1).select(ts.cast("timestamp")).head().getTimestamp(0)
+        if (at == null) refuse("RESTORE: TIMESTAMP AS OF expression evaluated to NULL")
+        TxStore.versionAtTimestamp(spark, t.path, at.getTime)
+      })
+      Seq(Row("restore", name, version, TxStore.restore(spark, t.path, version)))
 
-      case History => TxStore.historyFrame(spark, t.path).collect().toSeq
-      case Detail => TxStore.tableDetail(spark, t.path).collect().toSeq
+    case History => TxStore.historyFrame(spark, t.path).collect().toSeq
+    case Detail => TxStore.tableDetail(spark, t.path).collect().toSeq
 
-      case Convert(path) =>
-        val v = TxStore.convert(spark, path)
-        Seq(Row("convert", path, v, TxStore.snapshot(spark, path).files.size.toLong))
+    case Convert(path) =>
+      val v = TxStore.convert(spark, path)
+      Seq(Row("convert", path, v, TxStore.snapshot(spark, path).files.size.toLong))
 
-      case Clone(dest) =>
-        // the source's current snapshot as v1 of a fresh table at the
-        // quoted path: hard links, no data rewrite (Delta's SHALLOW CLONE)
-        Seq(Row("shallow-clone", name, dest, TxStore.cloneTable(spark, t.path, dest)))
-    }
+    case Clone(dest) =>
+      // the source's current snapshot as v1 of a fresh table at the
+      // quoted path: hard links, no data rewrite (Delta's SHALLOW CLONE)
+      Seq(Row("shallow-clone", name, dest, TxStore.cloneTable(spark, t.path, dest)))
   }
 
   /** What the sql step reports: the statement's kind, its table, and
-    * the version it committed: the latest version of the table it
-    * writes, when that moved past the version the statement resolved. */
-  def written(spark: SparkSession): TxCatalog.Written = {
-    val moved = op match {
-      case Convert(path) => Some(path -> 0L)
-      case Clone(dest) => Some(dest -> 0L)
-      case _: Optimize | _: Restore => Some(target._2.path -> target._2.snap.version)
-      case _ => None
-    }
-    TxCatalog.Written(op.name, op match { case Convert(path) => path; case _ => target._1 },
-      moved.map { case (path, before) => TxStore.latestVersion(spark, path) -> before }
-        .collect { case (latest, before) if latest > before => latest })
-  }
+    * the version it committed, read from its `summary` rows (OPTIMIZE's
+    * is null when it rewrote nothing). */
+  def written(summary: DataFrame): TxCatalog.Written = TxCatalog.Written(op.name, name,
+    Some(op).collect { case _: Optimize | _: Restore | _: Convert | _: Clone => summary.head() }
+      .flatMap(r => Option(r.getAs[java.lang.Long]("version"))).map(_.longValue))
 }
 
 object GraftMaintenance {

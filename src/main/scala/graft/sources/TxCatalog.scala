@@ -157,9 +157,9 @@ object TxCatalog {
     * catalog and temp views; the new one carries the caller's runtime
     * SQL settings (bar a session-catalog implementation of its own,
     * which [[TxCatalog]] replaces) and the caller's extensions, so it
-    * parses maintenance SQL when the caller was built with graft's.
-    * `register` gives a session built without them graft's functions
-    * and planner hooks. */
+    * parses maintenance SQL when the caller was built with graft's
+    * ([[GraftSqlParser.sql]] runs it on any other). `register` gives a
+    * session built without them graft's functions and planner hooks. */
   def session(spark: SparkSession, entries: Seq[Entry]): SparkSession = {
     val s = spark.newSession()
     spark.conf.getAll.foreach { case (k, v) =>
@@ -200,7 +200,7 @@ object TxCatalog {
         (t, r.identifier.fold(t.path)(_.name))
     }
     df.queryExecution.analyzed match {
-      case m: GraftMaintenance => (df, Some(m.written(spark)))
+      case m: GraftMaintenance => (df, Some(m.written(df)))
       // ADD CONSTRAINT … CHECK stays AddCheckConstraint over the relation
       case plan @ (_: AlterTableCommand | _: AddCheckConstraint) =>
         (graft(plan).fold(df) { case (t, _) =>

@@ -971,6 +971,26 @@ class CliSpec extends SparkSpec {
     assert(graft.sources.TxStore.history(spark, table).last.op === "compact")
   }
 
+  test("maintenance SQL runs on a caller's session built without graft's extension") {
+    val plain = org.apache.spark.sql.graft.SessionBridge.plain(spark)
+    assert(!plain.sessionState.sqlParser.isInstanceOf[graft.sources.GraftSqlParser])
+    // the driver contract tunes the session it is handed, and the lanes'
+    // own REQUIREs check each statement's commit
+    Seq("s47_sql_maintenance", "s49_tx_convert").foreach { q =>
+      assert(SparkEntry.queries(q)(plain, sf("sf0.001")).count() > 0, q)
+    }
+    import org.apache.spark.sql.functions.col
+    val table = s"${tmp()}/plaintbl"
+    val ev = Tables.events(spark, sf("sf0.001"))
+    for (w <- 0 until 2)
+      graft.sources.TxStore.append(ev.filter(col("event_id") % 2 === w).repartition(1), table)
+    val out = tmp()
+    Main.run(plain, Map("step" -> "sql", "data-dir" -> sf("sf0.001"), "out-dir" -> out,
+      "tx" -> s"mt=$table", "sql" -> "OPTIMIZE mt"))
+    assert(spark.read.parquet(s"$out/sql_result").select("rewrote").as[Boolean].head)
+    assert(graft.sources.TxStore.history(spark, table).last.op === "compact")
+  }
+
   test("sql step: ALTER TABLE — rename/add/drop columns and CHECK constraints as SQL") {
     import org.apache.spark.sql.functions.col
     val dir = tmp()

@@ -309,6 +309,14 @@ class GraftCatalogSpec extends SparkSpec {
     assert(hist.count() === TxStore.history(spark, path).size.toLong)
     val opt = spark.sql("OPTIMIZE graft.maint.t")
     assert(opt.select("op").as[String].collect().toSeq === Seq("optimize"))
+    // the sql step reports the name as written and the summary's version
+    assert(opt.select("table").as[String].head === "graft.maint.t")
+    val optimized = Option(opt.select("version").as[java.lang.Long].head).map(_.longValue)
+    assert(optimized.forall(_ === TxStore.snapshot(spark, path).version))
+    assert(graft.sources.TxCatalog.artifact(opt)._2 ===
+      Some(graft.sources.TxCatalog.Written("optimize", "graft.maint.t", optimized)))
+    assert(graft.sources.TxCatalog.artifact(spark.sql("OPTIMIZE graft.maint.t"))._2 ===
+      Some(graft.sources.TxCatalog.Written("optimize", "graft.maint.t", None)))
     // …and so does every other maintenance kind
     assert(spark.sql("DESCRIBE DETAIL graft.maint.t").select("location").as[String].head === path)
     spark.sql(s"RESTORE TABLE graft.maint.t TO VERSION AS OF $inserted")
@@ -346,8 +354,11 @@ class GraftCatalogSpec extends SparkSpec {
     val child = spark.newSession()
     assert(child.sessionState.sqlParser.parsePlan("DESCRIBE HISTORY t")
       .isInstanceOf[graft.sources.GraftMaintenance])
-    // DESCRIBE HISTORY with no table after it is Spark's DESCRIBE
-    assert(!child.sessionState.sqlParser.parsePlan("DESCRIBE history")
-      .isInstanceOf[graft.sources.GraftMaintenance])
+    // DESCRIBE HISTORY with no table after it is Spark's DESCRIBE, and
+    // so is a table in a database named history or detail
+    Seq("DESCRIBE history", "DESCRIBE history.t", "DESC detail.t").foreach { stmt =>
+      assert(!child.sessionState.sqlParser.parsePlan(stmt)
+        .isInstanceOf[graft.sources.GraftMaintenance], stmt)
+    }
   }
 }

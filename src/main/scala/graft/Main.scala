@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.ops.{ExternalScorer, IhcScorer, JourneyBuilder}
-import graft.sources.{GraftSqlParser, TxCatalog}
+import graft.sources.{GraftScan, GraftSqlParser, TxCatalog}
 import org.apache.spark.sql.functions.{col, to_timestamp}
 
 /** CLI mirroring the reference's per-step interface
@@ -183,6 +183,11 @@ object Main {
           // has already run; parquet cannot hold a zero-column frame
           case (df, None) if df.columns.isEmpty => println("[graft] sql ok (no result columns)")
           case (df, None) =>
+            // the write plans the same analyzed plan: it prunes as printed
+            GraftScan.named(df).foreach { case (name, p) =>
+              println(s"[graft] sql scan on '$name' @v${p.version}: skipped " +
+                s"${p.skipped.size} of ${p.kept.size + p.skipped.size} files from log metadata")
+            }
             df.write.mode("overwrite").parquet(result)
             println(s"[graft] sql -> $result")
         }

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.ops.{ChannelReport, IhcScorer, IncrementalReport, JourneyBuilder, Skew}
-import graft.sources.{Compaction, GraftSqlParser, TxCatalog, TxStore}
+import graft.sources.{Compaction, GraftScan, GraftSqlParser, TxCatalog, TxStore}
 import graft.streaming.{StreamingCdf, StreamingIngest}
 import org.apache.spark.sql.functions._
 
@@ -643,13 +643,11 @@ object StorageQueries {
       "s45_sql_pruned_read",
       (s, d) => {
         val store = freshStore(s, "s45-sqlread", d)
-        prunedLikeReadWhere(s, d, store, "SQL read") {
-          val sql = TxCatalog.session(s, TxCatalog.parse(s, s"s45tx=$store"))
-          val df = sql.sql(
+        TxStore.append(Tables.events(s, d).repartitionByRange(8, col("event_id")), store)
+        prunedLikeReadWhere(s, store, col("event_id") <= 500L, "SQL read") {
+          TxCatalog.session(s, TxCatalog.parse(s, s"s45tx=$store")).sql(
             "SELECT event_id, ts div 1000 AS ts_us, user_id, event_type, value, props " +
               "FROM s45tx WHERE event_id <= 500")
-          df.queryExecution.executedPlan: Unit // plans the scan: prunes files
-          df
         }
       },
       Some(eventsSql(" WHERE event_id <= 500")),
@@ -666,7 +664,8 @@ object StorageQueries {
       "s51_dsv2_pruned_read",
       (s, d) => {
         val store = freshStore(s, "s51-dsv2", d)
-        eventsCols(prunedLikeReadWhere(s, d, store, "v2 scan") {
+        TxStore.append(Tables.events(s, d).repartitionByRange(8, col("event_id")), store)
+        eventsCols(prunedLikeReadWhere(s, store, col("event_id") <= 500L, "v2 scan") {
           val v2 = s.read.format("graft").load(store).filter(col("event_id") <= 500L)
           require(v2.count() > 0, "the pruned v2 scan must still return rows")
           v2
@@ -702,17 +701,14 @@ object StorageQueries {
             when(col("etype").isin(keepTypes: _*), "keep").otherwise("drop"))
           .coalesce(1).write.parquet(dimPath)
         val dim = s.read.parquet(dimPath).filter(col("flag") === "keep")
-        graft.sources.GraftScanEvents.clear(store)
         val fact = s.read.format("graft").load(store)
         val joined = fact
           .join(broadcast(dim), fact("event_type") === dim("etype"))
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"), graft.Num.rnd(sum("value"), 2).as("total"))
-        require(joined.count() == 2, "both kept event types must aggregate")
-        // pick THIS scan's event from the ring: the one that received a
-        // runtime filter (a concurrent plain scan of the path records a
-        // filterless event that must not shadow it — ADVICE r15)
-        val planned = graft.sources.GraftScanEvents.recent(store)
+        // collect runs THIS plan, whose fact scan receives the runtime filter
+        require(joined.collect().length == 2, "both kept event types must aggregate")
+        val planned = GraftScan.planned(joined)
           .find(_.runtimeFilterCount > 0).getOrElse(
             sys.error("the fact scan must receive a runtime (dynamic pruning) filter"))
         val total = TxStore.snapshot(s, store).files.size
@@ -933,7 +929,6 @@ object StorageQueries {
         val store = freshStore(s, "s55-agg", d)
         val ev = Tables.events(s, d)
         TxStore.append(ev, store, partitionBy = Seq("event_type"))
-        graft.sources.GraftScanEvents.clear(store)
         val got = s.read.format("graft").load(store).agg(
           count(lit(1)).as("n"),
           count(col("props")).as("n_props"),
@@ -941,14 +936,8 @@ object StorageQueries {
           min("value").as("min_v"), max("value").as("max_v"),
           min("event_type").as("type_lo"), max("event_type").as("type_hi"))
         require(got.collect().length == 1, "one aggregate row")
-        // THIS scan's event is the aggregate-pushed one — search the
-        // ring so a concurrent plain scan cannot shadow it (ADVICE r15)
-        val planned = graft.sources.GraftScanEvents.recent(store)
-          .find(_.aggregatePushed).getOrElse(
-            sys.error("aggregates must push down to log facts (no pushed event recorded)"))
-        require(planned.kept.isEmpty,
-          s"aggregates must answer from log facts with zero files planned: " +
-            s"kept=${planned.kept.size}")
+        require(GraftScan.planned(got).exists(p => p.aggregatePushed && p.kept.isEmpty),
+          "aggregates must answer from log facts with zero files planned")
         got
       },
       Some("""SELECT COUNT(*) AS n, COUNT(props) AS n_props,
@@ -1000,7 +989,6 @@ object StorageQueries {
         val ev = Tables.events(s, d)
         TxStore.append(ev, store, partitionBy = Seq("event_type"))
         val t0 = ev.agg(min("event_type")).first().getString(0)
-        graft.sources.GraftScanEvents.clear(store)
         // filtered AND grouped compose in one pushdown; keying by the
         // partition column keeps the final attach an equi-join (the
         // registry-wide plan audit forbids cross-join shapes)
@@ -1008,27 +996,23 @@ object StorageQueries {
           .filter(col("event_type") === t0)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n_t0"), min("event_id").as("min_id_t0"))
-        require(filtered.count() == 1, "one aggregate row")
-        require(graft.sources.GraftScanEvents.recent(store)
-            .exists(p => p.aggregatePushed && p.kept.isEmpty),
+        require(filtered.collect().length == 1, "one aggregate row")
+        require(GraftScan.planned(filtered).exists(p => p.aggregatePushed && p.kept.isEmpty),
           "a partition-filtered aggregate must answer from log facts, zero files planned")
-        graft.sources.GraftScanEvents.clear(store)
         val grouped = s.read.format("graft").load(store)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"), count(col("props")).as("n_props"),
             min("value").as("min_v"), max("value").as("max_v"))
-        require(grouped.count() > 1, "several live partitions must group")
-        require(graft.sources.GraftScanEvents.recent(store)
-            .exists(p => p.aggregatePushed && p.kept.isEmpty),
+        require(grouped.collect().length > 1, "several live partitions must group")
+        require(GraftScan.planned(grouped).exists(p => p.aggregatePushed && p.kept.isEmpty),
           "GROUP BY a partition column must answer from log facts, zero files planned")
         // REFUSAL leg: a non-partition conjunct cannot consume exactly —
         // the ordinary scan (with file pruning) answers instead
-        graft.sources.GraftScanEvents.clear(store)
         val refused = s.read.format("graft").load(store)
           .filter(col("event_type") === t0 && col("event_id") >= 0L)
           .agg(count(lit(1)).as("n"))
-        require(refused.first().getLong(0) > 0, "the refused pushdown still answers")
-        require(!graft.sources.GraftScanEvents.recent(store).exists(_.aggregatePushed),
+        require(refused.collect().head.getLong(0) > 0, "the refused pushdown still answers")
+        require(!GraftScan.planned(refused).exists(_.aggregatePushed),
           "a non-partition conjunct must refuse the aggregate pushdown")
         grouped.join(broadcast(filtered), Seq("event_type"), "left")
       },
@@ -1067,16 +1051,11 @@ object StorageQueries {
             lpad(col("event_id").cast("string"), 8, "0")))
         TxStore.append(ev.repartitionByRange(4, col("tag")), store)
         val pred = col("tag").startsWith("a")
-        val (_, kept, skipped) = TxStore.pruneFiles(s, store, pred)
-        require(skipped.nonEmpty && kept.nonEmpty,
-          s"the prefix must skip range-refuted files (kept ${kept.size}, " +
-            s"skipped ${skipped.size})")
-        graft.sources.GraftScanEvents.clear(store)
-        val v2 = s.read.format("graft").load(store).filter(pred)
-        require(v2.count() > 0, "the pruned scan must still return matching rows")
-        require(graft.sources.GraftScanEvents.recent(store)
-            .exists(p => p.kept.toSet == kept.toSet && p.skipped.toSet == skipped.toSet),
-          "the v2 scan must skip the SAME file set the walk skips")
+        val v2 = prunedLikeReadWhere(s, store, pred, "v2 scan") {
+          val v2 = s.read.format("graft").load(store).filter(pred)
+          require(v2.count() > 0, "the pruned scan must still return matching rows")
+          v2
+        }
         v2.select(col("event_id"), expr("ts div 1000").as("ts_us"),
           col("user_id"), col("event_type"), col("value"), col("props"), col("tag"))
       },
@@ -1766,26 +1745,21 @@ object StorageQueries {
              |WHERE event_id % 100 <> 0 AND user_id <> 7
              |GROUP BY 1, 2""".stripMargin)))
 
-  /** s45/s51: lay events out at `store` in 8 event_id ranges, run
-    * `read` (an `event_id <= 500` read that plans its scan), and REQUIRE
-    * that the scan kept and skipped exactly the files the readWhere stats
-    * walk does. The per-path ring is searched, so a concurrent scan of
-    * the same path cannot clobber this scan's event (ADVICE r15), and the
-    * REQUIRE stays falsifiable: broken pruning leaves NO matching event. */
+  /** s45/s51/s58: with `store` laid out so that `pred` skips some files
+    * and keeps others, run `read` (a `pred` read) and REQUIRE that the
+    * scan in its executed plan kept and skipped exactly the files the
+    * readWhere stats walk does. */
   private def prunedLikeReadWhere(
-      s: org.apache.spark.sql.SparkSession, d: String, store: String, what: String)(
-      read: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    TxStore.append(Tables.events(s, d).repartitionByRange(8, col("event_id")), store)
-    val (_, kept, skipped) = TxStore.pruneFiles(s, store, col("event_id") <= 500L)
-    require(skipped.nonEmpty,
-      s"range layout + selective predicate must skip files (kept ${kept.size})")
-    graft.sources.GraftScanEvents.clear(store)
+      s: org.apache.spark.sql.SparkSession, store: String, pred: org.apache.spark.sql.Column,
+      what: String)(read: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val (_, kept, skipped) = TxStore.pruneFiles(s, store, pred)
+    require(skipped.nonEmpty && kept.nonEmpty,
+      s"the layout and predicate must skip files (kept ${kept.size}, skipped ${skipped.size})")
     val df = read
-    val ring = graft.sources.GraftScanEvents.recent(store)
-    require(ring.nonEmpty, s"the $what recorded no planning event")
-    require(ring.exists(p => p.kept.toSet == kept.toSet && p.skipped.toSet == skipped.toSet),
+    val planned = GraftScan.planned(df)
+    require(planned.exists(p => p.kept.toSet == kept.toSet && p.skipped.toSet == skipped.toSet),
       s"the $what must skip the SAME file set readWhere skips " +
-        s"($what ${ring.head.skipped.size}, walk ${skipped.size})")
+        s"($what ${planned.head.skipped.size}, walk ${skipped.size})")
     df
   }
 

@@ -4,13 +4,17 @@ import java.util.{Locale, Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{And, Cast, EqualTo, EvalMode, Expression, GenericInternalRow, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Or}
+import org.apache.spark.sql.catalyst.util.QuotingUtils
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, SupportsRuntimeFiltering}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation}
 import org.apache.spark.sql.graft.DsvBridge
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter, StreamSinkProvider, StreamSourceProvider}
@@ -48,6 +52,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - `option("versionAsOf", n)` / `option("timestampAsOf", ts)` pin
   *     a historical snapshot — pruning then uses the ranges the log
   *     knew AT that version, exactly like [[TxStore.readWhereAt]].
+  *   - Each scan plans once per runtime-filter state into one record
+  *     ([[GraftScan.Planned]]) that every `BatchScanExec` copy reads,
+  *     and reports it as four driver metrics, which Spark posts after
+  *     runtime filtering to the SQL UI and the event log. The exact
+  *     file sets stay on the record: [[GraftScan.planned]].
   *
   * Column order note: the scan's OUTPUT order is the requested order
   * (declared schema for `select *`) — the parquet factory emits
@@ -957,10 +966,10 @@ final class GraftScan(
 
   private val pushedCatalyst: Seq[Expression] =
     pushedV1.flatMap(GraftFilters.toCatalyst).toSeq
-  @volatile private var runtimeCatalyst: Seq[Expression] = Nil
-  @volatile private var runtimeEmptyIn: Boolean = false
-  @volatile private var runtimeCount: Int = 0
-  @volatile private var runtimeShown: Seq[String] = Nil
+  // guarded by `this`: every BatchScanExec copy plans and filters the
+  // scan again, and an equal filter set keeps the record
+  private var runtime: Seq[Filter] = Nil
+  private var plan: (GraftScan.Planned, Array[InputPartition]) = null
 
   /** Columns a runtime filter can prune files on: the partition
     * columns plus every column the log carries stats or blooms for —
@@ -983,41 +992,52 @@ final class GraftScan(
       .toArray
   }
 
-  override def filter(filters: Array[Filter]): Unit = {
-    runtimeCount = filters.length
-    runtimeShown = filters.map(_.toString).toSeq
-    // a dynamic-pruning IN with an EMPTY build side matches nothing —
-    // catalyst In cannot carry zero values, so flag it directly
-    runtimeEmptyIn = filters.exists {
-      case sources.In(_, vs) => vs.isEmpty
-      case _ => false
+  override def filter(filters: Array[Filter]): Unit = synchronized {
+    if (filters.toSeq != runtime) {
+      runtime = filters.toSeq
+      plan = null
     }
-    runtimeCatalyst = filters.flatMap(GraftFilters.toCatalyst).toSeq
   }
 
-  private def prunedFiles(preds: Seq[Expression]): (Seq[String], Seq[String]) =
-    if (runtimeEmptyIn) (Nil, snap.files)
+  private def prunedFiles(runtime: Seq[Filter]): (Seq[String], Seq[String]) = {
+    val preds = pushedCatalyst ++ runtime.flatMap(GraftFilters.toCatalyst)
+    // a dynamic-pruning IN with an EMPTY build side matches nothing —
+    // catalyst In cannot carry zero values, so test it directly
+    if (runtime.exists { case sources.In(_, vs) => vs.isEmpty; case _ => false })
+      (Nil, snap.files)
     else if (preds.isEmpty) (exactKept, snap.files.diff(exactKept))
     else {
       val (kept, skipped) = TxStats.pruneFileSubset(snap, preds.reduce(And), exactKept)
       (kept, skipped ++ snap.files.diff(exactKept))
     }
-
-  private lazy val pushedKept: Seq[String] = prunedFiles(pushedCatalyst)._1
-
-  override def planInputPartitions(): Array[InputPartition] = pushedAgg match {
-    case Some((_, rows)) =>
-      // the answer came from log facts — ZERO files planned
-      GraftScanEvents.record(path, GraftScanEvents.Planned(
-        snap.version, Nil, snap.files, runtimeCount, runtimeShown, aggregatePushed = true))
-      Array(GraftAggPartition(rows.map(_.toSeq)))
-    case None => planFileSplits()
   }
 
-  private def planFileSplits(): Array[InputPartition] = {
-    val (kept, skipped) = prunedFiles(pushedCatalyst ++ runtimeCatalyst)
-    GraftScanEvents.record(path,
-      GraftScanEvents.Planned(snap.version, kept, skipped, runtimeCount, runtimeShown))
+  private lazy val pushedKept: Seq[String] = prunedFiles(Nil)._1
+
+  private def current: (GraftScan.Planned, Array[InputPartition]) = synchronized {
+    if (plan == null) {
+      // an aggregate answered from log facts plans ZERO files
+      val (kept, skipped) = if (pushedAgg.isDefined) (Nil, snap.files) else prunedFiles(runtime)
+      plan = (GraftScan.Planned(snap.version, kept, skipped, runtime.size,
+          runtime.map(_.toString), pushedAgg.isDefined),
+        pushedAgg.fold(fileSplits(kept))(a => Array(GraftAggPartition(a._2.map(_.toSeq)))))
+    }
+    plan
+  }
+
+  /** What this scan planned under its current runtime filters. */
+  def planned: GraftScan.Planned = current._1
+
+  override def planInputPartitions(): Array[InputPartition] = current._2
+
+  override def supportedCustomMetrics(): Array[CustomMetric] = GraftScan.metrics.toArray
+
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = {
+    val p = planned
+    GraftScan.metrics.map(m => GraftScan.Value(m.name(), m.of(p)): CustomTaskMetric).toArray
+  }
+
+  private def fileSplits(kept: Seq[String]): Array[InputPartition] = {
     if (kept.isEmpty) return Array.empty
     val sizes = TxStats.fileSizes(spark, path, snap, kept)
     val openCost = spark.sessionState.conf.filesOpenCostInBytes
@@ -1114,6 +1134,61 @@ final class GraftScan(
       pushedAgg.fold("")(_ => " [aggregates from log facts]")
 }
 
+object GraftScan {
+
+  /** What one scan planned; an aggregate answered from log facts keeps
+    * no file. */
+  final case class Planned(
+      version: Long, kept: Seq[String], skipped: Seq[String], runtimeFilterCount: Int,
+      runtimeFilters: Seq[String], aggregatePushed: Boolean)
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  private def metrics: Seq[GraftScanMetric] =
+    Seq(new GraftFilesKept, new GraftFilesSkipped, new GraftRuntimeFilters, new GraftAggregatePushed)
+  private final case class Value(name: String, value: Long) extends CustomTaskMetric
+
+  /** The record of every graft scan in `df`'s executed plan; fails when
+    * there is none. Runtime filters arrive only when `df` itself runs:
+    * run `df.collect()` first, as `count()` and `head()` plan another
+    * Dataset. */
+  def planned(df: DataFrame): Seq[Planned] = {
+    val found = named(df).map(_._2)
+    require(found.nonEmpty,
+      s"graft: no graft scan in the executed plan:\n${df.queryExecution.executedPlan}")
+    found
+  }
+
+  /** [[planned]] with the identifier of each scan's relation (its path
+    * when it has none), and empty for a plan without a graft scan. */
+  def named(df: DataFrame): Seq[(String, Planned)] = {
+    val ids = df.queryExecution.optimizedPlan.collectWithSubqueries {
+      case r: DataSourceV2ScanRelation => (r.scan, r.relation.identifier)
+    }
+    Plans.collectWithSubqueries(df.queryExecution.executedPlan) { case b: BatchScanExec => b.scan }
+      .collect { case g: GraftScan => g }.distinct.map { g =>
+        ids.collectFirst { case (s, Some(id)) if s eq g => QuotingUtils.quoted(id) }
+          .getOrElse(g.path) -> g.planned
+      }
+  }
+}
+
+/** The scan's driver metrics, each a class without constructor
+  * arguments: the SQL status store instantiates one by name. */
+sealed abstract class GraftScanMetric(key: String, text: String, val of: GraftScan.Planned => Long)
+  extends CustomSumMetric {
+  override def name(): String = key
+  override def description(): String = text
+}
+final class GraftFilesKept
+  extends GraftScanMetric("filesKept", "files kept by log pruning", _.kept.size.toLong)
+final class GraftFilesSkipped
+  extends GraftScanMetric("filesSkipped", "files skipped by log pruning", _.skipped.size.toLong)
+final class GraftRuntimeFilters
+  extends GraftScanMetric("runtimeFilters", "runtime filters applied", _.runtimeFilterCount.toLong)
+final class GraftAggregatePushed extends GraftScanMetric(
+  "aggregatePushed", "aggregate answered from log facts", p => if (p.aggregatePushed) 1L else 0L)
+
 /** Permutes a reader factory's emitted column order (data-first/
   * partition-last, the parquet layout) back to the scan's DECLARED
   * order, so v1 and v2 reads of a partitioned table agree positionally
@@ -1190,64 +1265,6 @@ private[sources] final case class GraftAggReaderFactory()
       override def get(): InternalRow = row
       override def close(): Unit = ()
     }
-}
-
-/** Last planning outcome per table path — observability for the
-  * correctness lanes and specs that assert the v2 scan skips exactly
-  * the files the log walk skips (the s45 shape), and that runtime
-  * filters pruned at execution. Diagnostics only: never consulted by
-  * the scan itself. */
-object GraftScanEvents {
-  final case class Planned(
-      version: Long, kept: Seq[String], skipped: Seq[String], runtimeFilterCount: Int,
-      runtimeFilters: Seq[String] = Nil, aggregatePushed: Boolean = false)
-  // per-path RING (newest first, bounded): a concurrent scan of the
-  // same path — a stats-only estimate, a second action in the same
-  // query — must not clobber the event a probe is about to read
-  // (ADVICE r15); probes search `recent` for the event matching their
-  // own scan's shape instead of trusting last-writer-wins
-  private val RingSize = 8
-  private val events = scala.collection.concurrent.TrieMap.empty[String, List[Planned]]
-  // BOUNDED: every scan records (lanes and specs probe the lists), but
-  // a long-lived session over many paths must not pin file-name lists
-  // forever — evict in INSERTION order past the cap (probes read their
-  // own path immediately after running, so the oldest paths are dead)
-  private val MaxPaths = 64
-  private val order = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  private def norm(p: String) = p.stripPrefix("file:")
-  private[sources] def record(path: String, e: Planned): Unit = {
-    events.synchronized {
-      if (!events.contains(path)) {
-        // re-insertion after a clear(): drop the stale queue entry first,
-        // or the queue grows per clear+record cycle and eviction polls a
-        // RECENT path's stale slot ahead of genuinely older paths
-        order.remove(path)
-        order.add(path)
-        while (events.size >= MaxPaths) {
-          val victim = order.poll()
-          if (victim == null) events.keys.headOption.foreach(events.remove)
-          else events.remove(victim)
-        }
-      }
-      events.put(path, (e :: events.getOrElse(path, Nil)).take(RingSize)): Unit
-    }
-  }
-  /** Catalog-resolved scans record under the QUALIFIED location
-    * (`file:/…`) — look up scheme-blind so callers can probe with the
-    * raw path they created the table with. */
-  def last(path: String): Option[Planned] = recent(path).headOption
-  /** All retained events for the path, newest first — REQUIRE sites
-    * pick THEIR scan's event (by version / filter shape) from here. */
-  def recent(path: String): Seq[Planned] =
-    events.getOrElse(path, events.collectFirst {
-      case (k, v) if norm(k) == norm(path) => v
-    }.getOrElse(Nil))
-  def clear(path: String): Unit = events.synchronized {
-    events.keys.filter(k => norm(k) == norm(path)).foreach { k =>
-      events.remove(k)
-      order.remove(k): Unit
-    }
-  }
 }
 
 /** v1 `sources.Filter` → catalyst expressions for the log's stats walk

@@ -4,8 +4,8 @@ import java.util.Locale
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.catalyst.analysis.ResolvedTable
-import org.apache.spark.sql.catalyst.plans.logical.{AddCheckConstraint, AlterTableCommand, DeleteFromTable, LogicalPlan, MergeIntoTable, UpdateTable, V2WriteCommand}
+import org.apache.spark.sql.catalyst.analysis.{ResolvedTable, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.plans.logical.{AddCheckConstraint, AlterTableCommand, DeleteFromTable, InsertIntoStatement, LogicalPlan, MergeIntoTable, UpdateTable, V2WriteCommand}
 import org.apache.spark.sql.connector.catalog.{DelegatingCatalogExtension, Identifier, Table, TableCatalog, TableCatalogCapability, TableChange, TableInfo}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.col
@@ -193,17 +193,16 @@ object TxCatalog {
     * its own result. */
   def artifact(df: DataFrame): (DataFrame, Option[Written]) = {
     val spark = df.sparkSession
-    def graft(plan: LogicalPlan): Option[(GraftTable, String)] = plan.collectFirst {
-      case ResolvedTable(_, id, t: GraftTable, _) => (t, id.name)
+    def graft(plan: LogicalPlan): Option[GraftTable] = plan.collectFirst {
+      case ResolvedTable(_, _, t: GraftTable, _) => t
       case r: DataSourceV2Relation if r.table.isInstanceOf[GraftTable] =>
-        val t = r.table.asInstanceOf[GraftTable]
-        (t, r.identifier.fold(t.path)(_.name))
+        r.table.asInstanceOf[GraftTable]
     }
     df.queryExecution.analyzed match {
       case m: GraftMaintenance => (df, Some(m.written(df)))
       // ADD CONSTRAINT … CHECK stays AddCheckConstraint over the relation
       case plan @ (_: AlterTableCommand | _: AddCheckConstraint) =>
-        (graft(plan).fold(df) { case (t, _) =>
+        (graft(plan).fold(df) { t =>
           TxStore.historyFrame(spark, t.path).where(col("version") > t.snap.version)
         }, None)
       case plan =>
@@ -214,9 +213,16 @@ object TxCatalog {
           case w: V2WriteCommand => Some("insert" -> w.table)
           case _ => None
         }
-        write.flatMap { case (op, table) => graft(table).collect { case (t, name) if t.exists =>
+        // the target's name as written, as maintenance reports it: the
+        // first relation of a parsed DELETE, UPDATE or MERGE; INSERT's
+        // target is not a child of its plan
+        val name = (df.queryExecution.logical match {
+          case i: InsertIntoStatement => i.table
+          case parsed => parsed
+        }).collectFirst { case u: UnresolvedRelation => u.tableName }
+        write.flatMap { case (op, table) => graft(table).filter(_.exists).map { t =>
           val (latest, changes) = TxStore.readChangesSince(spark, t.path, t.snap.version)
-          (changes, Some(Written(op, name, Some(latest).filter(_ > t.snap.version))))
+          (changes, Some(Written(op, name.getOrElse(t.path), Some(latest).filter(_ > t.snap.version))))
         } }.getOrElse((df, None))
     }
   }

@@ -384,6 +384,28 @@ class CliSpec extends SparkSpec {
     assert(graft.sources.TxStore.read(spark, table).count() === 5)
   }
 
+  test("sql step: a query prints each graft scan's pruning, read from its own plan") {
+    import org.apache.spark.sql.functions.col
+    val table = s"${tmp()}/readtbl"
+    graft.sources.TxStore.append(
+      Tables.events(spark, sf("sf0.001")).repartitionByRange(8, col("event_id")), table)
+    val (_, kept, skipped) =
+      graft.sources.TxStore.pruneFiles(spark, table, col("event_id") <= 100L)
+    assert(skipped.nonEmpty, "range layout + selective predicate must skip files")
+    val out = tmp()
+    val stdout = new java.io.ByteArrayOutputStream()
+    Console.withOut(stdout) {
+      Main.run(spark, Map(
+        "step" -> "sql", "data-dir" -> sf("sf0.001"), "out-dir" -> out,
+        "tx" -> s"rtx=$table", "sql" -> "SELECT event_id FROM rtx WHERE event_id <= 100"))
+    }
+    val lines = stdout.toString.linesIterator.filter(_.startsWith("[graft] sql scan")).toSeq
+    assert(lines === Seq(s"[graft] sql scan on 'default.rtx' @v1: skipped ${skipped.size} of " +
+      s"${kept.size + skipped.size} files from log metadata"), stdout.toString)
+    assert(spark.read.parquet(s"$out/sql_result").count() ===
+      graft.sources.TxStore.read(spark, table).filter(col("event_id") <= 100L).count())
+  }
+
   test("sql step: tx reads prune files from log metadata; VERSION/TIMESTAMP AS OF syntax") {
     import org.apache.spark.sql.functions.col
     val dir = tmp()
@@ -396,11 +418,11 @@ class CliSpec extends SparkSpec {
     assert(skipped.nonEmpty, "range layout + selective predicate must skip files")
     val session = graft.sources.TxCatalog.session(spark,
       graft.sources.TxCatalog.parse(spark, s"rtx=$table"))
-    def scanned(sql: String): (Long, graft.sources.GraftScanEvents.Planned) = {
-      graft.sources.GraftScanEvents.clear(table)
-      val n = session.sql(sql).count()
-      (n, graft.sources.GraftScanEvents.recent(table).find(_.kept.nonEmpty)
-        .getOrElse(fail(s"no planning event for: $sql")))
+    def scanned(sql: String): (Long, graft.sources.GraftScan.Planned) = {
+      val df = session.sql(sql)
+      val n = df.collect().length.toLong
+      (n, graft.sources.GraftScan.planned(df).find(_.kept.nonEmpty)
+        .getOrElse(fail(s"the scan kept no file for: $sql")))
     }
     val (n, planned) = scanned("SELECT event_id, value FROM rtx WHERE rtx.event_id <= 100")
     assert((planned.kept.toSet, planned.skipped.toSet) === ((kept.toSet, skipped.toSet)),

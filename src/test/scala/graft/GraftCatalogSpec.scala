@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{GraftScanEvents, TxStore}
+import graft.sources.{GraftScan, TxStore}
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 
@@ -69,11 +69,10 @@ class GraftCatalogSpec extends SparkSpec {
         (c * 100 until (c + 1) * 100).map(i => (i.toLong, s"v$i")).toDF("id", "payload")
           .repartition(1), path)
     val (_, keptV1, _) = TxStore.pruneFiles(spark, path, col("id") >= 250L && col("id") < 320L)
-    GraftScanEvents.clear(path)
-    assert(spark.sql("SELECT count(*) AS n FROM graft.prune.t WHERE id >= 250 AND id < 320")
-      .head().getLong(0) === 70L)
-    val ev = GraftScanEvents.recent(path).find(_.kept.nonEmpty)
-      .getOrElse(fail("catalog scan recorded no planning event"))
+    val counted = spark.sql("SELECT count(*) AS n FROM graft.prune.t WHERE id >= 250 AND id < 320")
+    assert(counted.collect().head.getLong(0) === 70L)
+    val ev = GraftScan.planned(counted).find(_.kept.nonEmpty)
+      .getOrElse(fail("the catalog scan kept no file"))
     assert(ev.kept.toSet === keptV1.toSet,
       "the catalog read must prune through the same log walk readWhere uses")
   }
@@ -329,6 +328,24 @@ class GraftCatalogSpec extends SparkSpec {
     // an unknown catalog name refuses with Spark's own error
     val e = intercept[AnalysisException](spark.sql("DESCRIBE HISTORY graft.maint.nope"))
     assert(e.getMessage.contains("TABLE_OR_VIEW_NOT_FOUND"), e.getMessage)
+  }
+
+  test("DML reports its target by the name as written, like maintenance") {
+    assert(warehouse.nonEmpty)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.named")
+    spark.sql("CREATE TABLE graft.named.t (id BIGINT, payload STRING, p INT) USING graft")
+    def reported(sql: String) = graft.sources.TxCatalog.artifact(spark.sql(sql))._2.map(w =>
+      (w.op, w.name))
+    assert(reported("INSERT INTO graft.named.t VALUES (1, 'a', 0), (2, 'b', 1)") ===
+      Some("insert" -> "graft.named.t"))
+    assert(reported("UPDATE graft.named.t SET payload = 'c' WHERE id = 2") ===
+      Some("update" -> "graft.named.t"))
+    assert(reported("MERGE INTO graft.named.t AS t USING (SELECT 3L AS id, 'd' AS payload, " +
+      "0 AS p) AS s ON t.id = s.id WHEN NOT MATCHED THEN INSERT *") ===
+      Some("merge" -> "graft.named.t"))
+    assert(reported("DELETE FROM graft.named.t WHERE id = 1") ===
+      Some("delete" -> "graft.named.t"))
+    assert(reported("OPTIMIZE graft.named.t") === Some("optimize" -> "graft.named.t"))
   }
 
   test("GraftTable.name() parses as a SQL identifier naming the path and the version") {

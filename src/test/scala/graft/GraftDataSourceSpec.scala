@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{GraftScanEvents, TxStore}
+import graft.sources.{GraftScan, TxStore}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -20,6 +20,13 @@ class GraftDataSourceSpec extends SparkSpec {
     (from until from + n).map(i => (i.toLong, s"v$i")).toDF("id", "payload")
 
   private def v2(path: String): DataFrame = spark.read.format("graft").load(path)
+
+  /** The record of the one graft scan in `df`'s executed plan. */
+  private def scanOf(df: DataFrame): GraftScan.Planned = {
+    val planned = GraftScan.planned(df)
+    assert(planned.size === 1, s"expected one graft scan: $planned")
+    planned.head
+  }
 
   /** Order-insensitive frame comparison by aligned column names. */
   private def assertSame(got: DataFrame, want: DataFrame): Unit = {
@@ -46,10 +53,9 @@ class GraftDataSourceSpec extends SparkSpec {
       TxStore.append(rows(100, from = c * 100).repartition(1), t)
     val pred = col("id") >= 250L && col("id") < 320L
     val (_, keptV1, skippedV1) = TxStore.pruneFiles(spark, t, pred)
-    GraftScanEvents.clear(t)
     val got = v2(t).filter(pred)
-    assert(got.count() === 70)
-    val ev = GraftScanEvents.last(t).getOrElse(fail("scan recorded no planning event"))
+    assert(got.collect().length === 70)
+    val ev = scanOf(got)
     assert(ev.kept.toSet === keptV1.toSet,
       s"v2 kept ${ev.kept.size} files, readWhere kept ${keptV1.size}")
     assert(ev.skipped.toSet === skippedV1.toSet)
@@ -67,9 +73,9 @@ class GraftDataSourceSpec extends SparkSpec {
     assert(got.schema("shard").dataType === org.apache.spark.sql.types.IntegerType)
     assertSame(got, TxStore.read(spark, t))
     // a partition predicate prunes to that partition's files only
-    GraftScanEvents.clear(t)
-    assert(v2(t).filter(col("shard") === 2).count() === 10)
-    val ev = GraftScanEvents.last(t).get
+    val shard2 = v2(t).filter(col("shard") === 2)
+    assert(shard2.collect().length === 10)
+    val ev = scanOf(shard2)
     assert(ev.kept.forall(_.startsWith("shard=2/")),
       s"partition pruning must keep only shard=2 files, kept ${ev.kept}")
   }
@@ -112,9 +118,9 @@ class GraftDataSourceSpec extends SparkSpec {
     val got = v2(t)
     assert(got.schema.fieldNames.toSeq === Seq("id", "note"))
     assertSame(got, TxStore.read(spark, t))
-    GraftScanEvents.clear(t)
-    assert(v2(t).filter(col("id") === 250L).count() === 1)
-    val ev = GraftScanEvents.last(t).get
+    val one = v2(t).filter(col("id") === 250L)
+    assert(one.collect().length === 1)
+    val ev = scanOf(one)
     assert(ev.skipped.size === 2, s"mapped-table pruning must skip 2 of 3 files: $ev")
   }
 
@@ -131,15 +137,15 @@ class GraftDataSourceSpec extends SparkSpec {
     (0 until 8).map(i => (i, if (i >= 6) "keep" else "drop"))
       .toDF("r_id", "flag").write.parquet(dimPath)
     val dim = spark.read.parquet(dimPath)
-    GraftScanEvents.clear(t)
     val joined = v2(t)
       .join(broadcast(dim.filter(col("flag") === "keep")),
         col("region_id") === col("r_id"))
       .agg(sum("amount").as("total"), count(lit(1)).as("n"))
-    val row = joined.head()
+    // collect runs THIS plan: its fact scan receives the runtime filter
+    val Array(row) = joined.collect()
     assert(row.getLong(1) === 200L)
     val total = TxStore.snapshot(spark, t).files.size
-    val ev = GraftScanEvents.last(t).getOrElse(fail("no planning event"))
+    val ev = scanOf(joined)
     assert(ev.runtimeFilterCount > 0,
       "the scan must have received a runtime (dynamic pruning) filter")
     assert(ev.kept.nonEmpty && ev.kept.size < total,
@@ -151,41 +157,110 @@ class GraftDataSourceSpec extends SparkSpec {
       s"exactly the two selected regions' files survive: ${ev.kept.size} vs $total/4")
   }
 
+  test("scan metrics: kept, skipped, runtime filters and pushed aggregates reach the plan and the status store") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val plans = new AdaptiveSparkPlanHelper {}
+    val status = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.statusStore
+    // run `df`, then read the four metrics off its executed graft scan and
+    // off the execution the SQL UI and the event log show
+    def metrics(df: DataFrame): (Map[String, Long], Map[String, String]) = {
+      df.collect()
+      val scans = plans.collectWithSubqueries(df.queryExecution.executedPlan) {
+        case b: BatchScanExec if b.scan.isInstanceOf[GraftScan] => b
+      }
+      assert(scans.size === 1, s"expected one graft scan: $scans")
+      val keys = Seq("filesKept", "filesSkipped", "runtimeFilters", "aggregatePushed")
+      val ms = keys.map(k => k -> scans.head.metrics(k)).toMap
+      org.apache.spark.sql.graft.ColumnBridge.drainListenerBus(spark.sparkContext, 30000L)
+      val shown = status.executionsList().reverseIterator
+        .map(e => status.executionMetrics(e.executionId))
+        .find(m => ms.values.forall(x => m.contains(x.id)))
+        .getOrElse(fail("no execution in the status store holds the scan's metrics"))
+      (ms.map { case (k, m) => k -> m.value }, ms.map { case (k, m) => k -> shown(m.id) })
+    }
+    def check(df: DataFrame, kept: Long, skipped: Long, runtime: Long, pushed: Long): Unit = {
+      val want = Map("filesKept" -> kept, "filesSkipped" -> skipped,
+        "runtimeFilters" -> runtime, "aggregatePushed" -> pushed)
+      val (inPlan, inStore) = metrics(df)
+      assert(inPlan === want)
+      assert(inStore === want.map { case (k, v) => k -> v.toString })
+    }
+
+    // a pruned read: the walk's own kept and skipped counts
+    val t = tmpDir()
+    for (c <- 0 until 4)
+      TxStore.append(rows(100, from = c * 100).repartition(1), t)
+    val (_, kept, skipped) = TxStore.pruneFiles(spark, t, col("id") < 50L)
+    check(v2(t).filter(col("id") < 50L), kept.size.toLong, skipped.size.toLong, 0L, 0L)
+
+    // the runtime-filtered broadcast join: the files of two of eight regions
+    val f = tmpDir()
+    TxStore.append((0 until 800).map(i => (i.toLong, i % 8)).toDF("order_id", "region_id"),
+      f, partitionBy = Seq("region_id"))
+    val dimPath = f + "_dim"
+    (0 until 8).map(i => (i, if (i >= 6) "keep" else "drop"))
+      .toDF("r_id", "flag").write.parquet(dimPath)
+    val joined = v2(f)
+      .join(broadcast(spark.read.parquet(dimPath).filter(col("flag") === "keep")),
+        col("region_id") === col("r_id"))
+      .agg(count(lit(1)).as("n"))
+    val total = TxStore.snapshot(spark, f).files.size.toLong
+    check(joined, total / 4, total - total / 4, 1L, 0L)
+
+    // a pushed aggregate: log facts answer, every file is skipped
+    check(v2(t).agg(count(lit(1))), 0L, 4L, 0L, 1L)
+  }
+
+  test("one planning record per scan: reading and running the plan replans nothing") {
+    val t = tmpDir()
+    for (c <- 0 until 4)
+      TxStore.append(rows(100, from = c * 100).repartition(1), t)
+    val df = v2(t).filter(col("id") < 50L)
+    val before = scanOf(df)
+    assert(scanOf(df) eq before)
+    assert(df.collect().length === 50)
+    assert(scanOf(df) eq before, "running the plan must reuse the scan's record")
+    // a plan without a graft scan has nothing to report
+    intercept[IllegalArgumentException](GraftScan.planned(spark.range(3).toDF()))
+  }
+
   test("v2 metadata-only aggregates: COUNT/MIN/MAX answer from log facts, zero files planned") {
     val t = tmpDir()
     val df = (0 until 300).map(i => (i.toLong, s"u${i % 7}", i * 1.5, i % 3))
       .toDF("id", "user", "score", "part")
     TxStore.append(df, t, partitionBy = Seq("part"))
-    GraftScanEvents.clear(t)
-    val got = v2(t).agg(
+    val agg = v2(t).agg(
       count(lit(1)).as("n"), count(col("user")).as("nu"),
       min("id").as("min_id"), max("id").as("max_id"),
       min("score").as("lo"), max("score").as("hi"),
       min("user").as("u_lo"), max("user").as("u_hi"),
-      min("part").as("p_lo"), max("part").as("p_hi")).head()
+      min("part").as("p_lo"), max("part").as("p_hi"))
+    val got = agg.collect().head
     assert(got.getLong(0) === 300L && got.getLong(1) === 300L)
     assert(got.getLong(2) === 0L && got.getLong(3) === 299L)
     assert(got.getDouble(4) === 0.0 && got.getDouble(5) === 448.5)
     assert(got.getString(6) === "u0" && got.getString(7) === "u6")
     assert(got.getInt(8) === 0 && got.getInt(9) === 2) // partition col, from path values
-    val ev = GraftScanEvents.last(t).getOrElse(fail("no planning event"))
+    val ev = scanOf(agg)
     assert(ev.aggregatePushed && ev.kept.isEmpty,
       s"aggregates must answer from log facts with zero files planned: $ev")
 
     // refusal paths stay CORRECT, just unpushed: DATA-column filters,
     // DISTINCT, unsupported funcs, and deletion marks (partition-only
     // filters and partition GROUP BYs push — separate tests below)
-    GraftScanEvents.clear(t)
-    assert(v2(t).filter(col("id") >= 100L).agg(count(lit(1))).head().getLong(0) === 200L)
-    assert(!GraftScanEvents.last(t).exists(_.aggregatePushed))
+    val dataFiltered = v2(t).filter(col("id") >= 100L).agg(count(lit(1)))
+    assert(dataFiltered.collect().head.getLong(0) === 200L)
+    assert(!scanOf(dataFiltered).aggregatePushed)
     assert(v2(t).agg(countDistinct(col("user"))).head().getLong(0) === 7L)
     assert(v2(t).groupBy("part").count().count() === 3)
     assert(v2(t).agg(sum("id")).head().getLong(0) === (0L until 300L).sum)
     TxStore.deleteVectored(spark, t, col("id") === 5L)
-    GraftScanEvents.clear(t)
-    assert(v2(t).agg(count(lit(1))).head().getLong(0) === 299L,
+    val marked = v2(t).agg(count(lit(1)))
+    assert(marked.collect().head.getLong(0) === 299L,
       "deletion marks must fall back to the real scan")
-    assert(!GraftScanEvents.last(t).exists(_.aggregatePushed))
+    assert(!scanOf(marked).aggregatePushed)
   }
 
   test("v2 aggregate pushdown handles nulls exactly: proven-all-null files skip, NULL answers") {
@@ -194,22 +269,22 @@ class GraftDataSourceSpec extends SparkSpec {
       .toDF("id", "payload").repartition(1), t) // all-null payload
     TxStore.append((50 until 90).map(i => (i.toLong, Some(s"v$i")))
       .toDF("id", "payload").repartition(1), t)
-    GraftScanEvents.clear(t)
-    val got = v2(t).agg(
+    val agg = v2(t).agg(
       count(col("payload")).as("np"),
-      min("payload").as("lo"), max("payload").as("hi")).head()
+      min("payload").as("lo"), max("payload").as("hi"))
+    val got = agg.collect().head
     assert(got.getLong(0) === 40L, "count(col) = rows minus logged nulls")
     assert(got.getString(1) === "v50" && got.getString(2) === "v89",
       "the proven-all-null file contributes nothing to min/max")
-    assert(GraftScanEvents.last(t).exists(_.aggregatePushed))
+    assert(scanOf(agg).aggregatePushed)
     // a column that is null EVERYWHERE answers SQL NULL — from facts
     val t2 = tmpDir()
     TxStore.append((0 until 10).map(i => (i.toLong, None: Option[String]))
       .toDF("id", "payload"), t2)
-    GraftScanEvents.clear(t2)
-    val r2 = v2(t2).agg(min("payload"), max("payload"), count(col("payload"))).head()
+    val agg2 = v2(t2).agg(min("payload"), max("payload"), count(col("payload")))
+    val r2 = agg2.collect().head
     assert(r2.isNullAt(0) && r2.isNullAt(1) && r2.getLong(2) === 0L)
-    assert(GraftScanEvents.last(t2).exists(_.aggregatePushed))
+    assert(scanOf(agg2).aggregatePushed)
   }
 
   test("SQL over CREATE TABLE USING graft: pruning and aggregates ride the catalog path") {
@@ -218,15 +293,14 @@ class GraftDataSourceSpec extends SparkSpec {
       TxStore.append(rows(100, from = c * 100).repartition(1), t)
     spark.sql(s"CREATE TABLE graft_sql_tab USING graft OPTIONS (path '$t')")
     try {
-      GraftScanEvents.clear(t)
-      assert(spark.sql("SELECT count(*) AS n FROM graft_sql_tab").head().getLong(0) === 400L)
-      assert(GraftScanEvents.last(t).exists(_.aggregatePushed),
+      val all = spark.sql("SELECT count(*) AS n FROM graft_sql_tab")
+      assert(all.collect().head.getLong(0) === 400L)
+      assert(scanOf(all).aggregatePushed,
         "SQL count(*) must answer from log facts")
-      GraftScanEvents.clear(t)
-      assert(spark.sql(
+      val some = spark.sql(
         "SELECT count(*) AS n FROM graft_sql_tab WHERE id BETWEEN 150 AND 180")
-        .head().getLong(0) === 31L)
-      val ev = GraftScanEvents.last(t).get
+      assert(some.collect().head.getLong(0) === 31L)
+      val ev = scanOf(some)
       assert(ev.kept.size === 1 && ev.skipped.size === 3,
         s"SQL WHERE must prune from the log walk: $ev")
     } finally spark.sql("DROP TABLE graft_sql_tab")
@@ -246,22 +320,22 @@ class GraftDataSourceSpec extends SparkSpec {
     val t = tmpDir()
     val df = (0 until 300).map(i => (i.toLong, i % 3)).toDF("id", "part")
     TxStore.append(df, t, partitionBy = Seq("part"))
-    GraftScanEvents.clear(t)
-    val got = v2(t).filter(col("part") === 1)
-      .agg(count(lit(1)).as("n"), min("id").as("lo"), max("id").as("hi")).head()
+    val agg = v2(t).filter(col("part") === 1)
+      .agg(count(lit(1)).as("n"), min("id").as("lo"), max("id").as("hi"))
+    val got = agg.collect().head
     assert(got.getLong(0) === 100L)
     assert(got.getLong(1) === 1L && got.getLong(2) === 298L)
-    assert(GraftScanEvents.recent(t).exists(p => p.aggregatePushed && p.kept.isEmpty),
+    val ev = scanOf(agg)
+    assert(ev.aggregatePushed && ev.kept.isEmpty,
       "a partition-filtered aggregate must answer from facts, zero files planned")
     // the consumed filter needs no post-scan re-evaluation; rows exact
     assert(v2(t).filter(col("part") === 1).count() === 100L)
     assert(v2(t).filter(col("part") === 1).select(sum("id")).head().getLong(0)
       === (0L until 300L).filter(_ % 3 == 1).sum)
     // a data-column conjunct refuses the aggregate pushdown (stays right)
-    GraftScanEvents.clear(t)
-    assert(v2(t).filter(col("part") === 1 && col("id") >= 0L)
-      .agg(count(lit(1))).head().getLong(0) === 100L)
-    assert(!GraftScanEvents.recent(t).exists(_.aggregatePushed))
+    val refused = v2(t).filter(col("part") === 1 && col("id") >= 0L).agg(count(lit(1)))
+    assert(refused.collect().head.getLong(0) === 100L)
+    assert(!scanOf(refused).aggregatePushed)
   }
 
   test("GROUP BY partition columns answers one row per live dir from facts") {
@@ -269,22 +343,23 @@ class GraftDataSourceSpec extends SparkSpec {
     val df = (0 until 300).map(i => (i.toLong, i % 3, s"u${i % 5}"))
       .toDF("id", "part", "user")
     TxStore.append(df, t, partitionBy = Seq("part"))
-    GraftScanEvents.clear(t)
-    val g = v2(t).groupBy("part")
+    val grouped = v2(t).groupBy("part")
       .agg(count(lit(1)).as("n"), min("id").as("lo"), max("id").as("hi"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).sorted
+    val g = grouped.collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).sorted
     assert(g.toSeq === Seq((0, 100L, 0L, 297L), (1, 100L, 1L, 298L), (2, 100L, 2L, 299L)))
-    assert(GraftScanEvents.recent(t).exists(p => p.aggregatePushed && p.kept.isEmpty),
+    val ev = scanOf(grouped)
+    assert(ev.aggregatePushed && ev.kept.isEmpty,
       "GROUP BY a partition column must answer from facts, zero files planned")
     // filtered + grouped composes: only the selected partitions' rows out
-    GraftScanEvents.clear(t)
     val fg = v2(t).filter(col("part") >= 1).groupBy("part").agg(count(lit(1)).as("n"))
     assert(fg.collect().map(_.getLong(1)).toSeq === Seq(100L, 100L))
-    assert(GraftScanEvents.recent(t).exists(p => p.aggregatePushed && p.kept.isEmpty))
+    val fgEv = scanOf(fg)
+    assert(fgEv.aggregatePushed && fgEv.kept.isEmpty)
     // grouping by a DATA column refuses (stays right through the scan)
-    GraftScanEvents.clear(t)
-    assert(v2(t).groupBy("user").count().count() === 5)
-    assert(!GraftScanEvents.recent(t).exists(_.aggregatePushed))
+    val byUser = v2(t).groupBy("user").count()
+    assert(byUser.collect().length === 5)
+    assert(!scanOf(byUser).aggregatePushed)
   }
 
   test("null partition dirs: Kleene consumption semantics and NULL group keys") {
@@ -298,12 +373,12 @@ class GraftDataSourceSpec extends SparkSpec {
     assert(v2(t).filter(col("part").isNull).count() === 1L)
     assert(v2(t).filter(col("part").isNotNull).count() === 3L)
     // the NULL group surfaces from the null dir; count(part) excludes it
-    GraftScanEvents.clear(t)
-    assert(v2(t).groupBy("part").agg(count(lit(1))).count() === 3L)
-    assert(GraftScanEvents.recent(t).exists(_.aggregatePushed))
-    GraftScanEvents.clear(t)
-    assert(v2(t).agg(count(col("part"))).head().getLong(0) === 3L)
-    assert(GraftScanEvents.recent(t).exists(_.aggregatePushed))
+    val byPart = v2(t).groupBy("part").agg(count(lit(1)))
+    assert(byPart.collect().length === 3)
+    assert(scanOf(byPart).aggregatePushed)
+    val nonNull = v2(t).agg(count(col("part")))
+    assert(nonNull.collect().head.getLong(0) === 3L)
+    assert(scanOf(nonNull).aggregatePushed)
   }
 
   test("metadata columns _file and _commit_version answer from the log") {
@@ -365,10 +440,9 @@ class GraftDataSourceSpec extends SparkSpec {
     val (_, kept, skipped) = TxStore.pruneFiles(spark, t, col("key").startsWith("k001"))
     assert(kept.size === 1 && skipped.size === 3,
       s"the prefix must keep exactly the covering file (kept ${kept.size})")
-    GraftScanEvents.clear(t)
     val got = v2(t).filter(col("key").startsWith("k001"))
-    assert(got.count() === 100L)
-    assert(GraftScanEvents.last(t).exists(p => p.kept.toSet == kept.toSet),
+    assert(got.collect().length === 100)
+    assert(scanOf(got).kept.toSet == kept.toSet,
       "the v2 scan must skip the same prefix-refuted files")
     // a longer prefix narrows within the file; rows stay exact
     assert(v2(t).filter(col("key").startsWith("k0010")).count() === 10L)
@@ -389,12 +463,12 @@ class GraftDataSourceSpec extends SparkSpec {
     TxStore.convert(spark, t)
     assert(v2(t).schema("part").dataType ===
       org.apache.spark.sql.types.IntegerType)
-    GraftScanEvents.clear(t)
-    val g = v2(t).groupBy("part").agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sorted.toSeq
+    val grouped = v2(t).groupBy("part").agg(count(lit(1)).as("n"))
+    val g = grouped.collect().map(r => (r.getInt(0), r.getLong(1))).sorted.toSeq
     assert(g === Seq((1, 2L), (2, 1L)),
       s"part=01 and part=1 must merge into one typed group (got $g)")
-    assert(GraftScanEvents.recent(t).exists(p => p.aggregatePushed && p.kept.isEmpty),
+    val ev = scanOf(grouped)
+    assert(ev.aggregatePushed && ev.kept.isEmpty,
       "the merged-key group-by must still answer from facts")
 
     // a type outside the exactly-parseable set (DATE — calendar parsing
@@ -406,11 +480,10 @@ class GraftDataSourceSpec extends SparkSpec {
     TxStore.convert(spark, d)
     assert(v2(d).schema("part").dataType ===
       org.apache.spark.sql.types.DateType)
-    GraftScanEvents.clear(d)
-    val byDay = v2(d).groupBy("part").agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getDate(0).toString, r.getLong(1))).sorted.toSeq
+    val dated = v2(d).groupBy("part").agg(count(lit(1)).as("n"))
+    val byDay = dated.collect().map(r => (r.getDate(0).toString, r.getLong(1))).sorted.toSeq
     assert(byDay === Seq(("2024-01-01", 2L), ("2024-02-03", 1L)))
-    assert(!GraftScanEvents.recent(d).exists(_.aggregatePushed),
+    assert(!scanOf(dated).aggregatePushed,
       "a DATE group key must refuse the metadata pushdown")
   }
 

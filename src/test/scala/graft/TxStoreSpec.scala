@@ -2605,28 +2605,26 @@ class TxStoreSpec extends SparkSpec {
     assert(kept.nonEmpty && skipped.nonEmpty)
     // metadata-only COUNT still answers from facts; MIN/MAX refuses to
     // the ordinary scan (and stays CORRECT either way)
-    import graft.sources.GraftScanEvents
-    GraftScanEvents.clear(t)
-    assert(spark.read.format("graft").load(t)
-      .agg(org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1))).head().getLong(0) === 100L)
-    assert(GraftScanEvents.recent(t).exists(_.aggregatePushed),
+    import graft.sources.GraftScan
+    val counted = spark.read.format("graft").load(t)
+      .agg(org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)))
+    assert(counted.collect().head.getLong(0) === 100L)
+    assert(GraftScan.planned(counted).exists(_.aggregatePushed),
       "COUNT(*) rides #rows facts regardless of stats origin")
-    GraftScanEvents.clear(t)
-    val mm = spark.read.format("graft").load(t)
+    val minMax = spark.read.format("graft").load(t)
       .agg(org.apache.spark.sql.functions.min("id"),
-        org.apache.spark.sql.functions.max("key")).head()
+        org.apache.spark.sql.functions.max("key"))
+    val mm = minMax.collect().head
     assert(mm.getLong(0) === 0L && mm.getString(1) === "v099")
-    assert(!GraftScanEvents.recent(t).exists(_.aggregatePushed),
+    assert(!GraftScan.planned(minMax).exists(_.aggregatePushed),
       "MIN/MAX over foreign footers must refuse the metadata answer")
     // graft-written files NEXT TO adopted ones: a later append harvests
     // exact stats, but any #x file in the set still refuses MIN/MAX
     TxStore.append((100 until 120).map(i => (i.toLong, i * 1.5, f"v$i%03d"))
       .toDF("id", "score", "key"), t)
-    GraftScanEvents.clear(t)
-    assert(spark.read.format("graft").load(t)
-      .agg(org.apache.spark.sql.functions.max("id")).head().getLong(0) === 119L)
-    assert(!GraftScanEvents.recent(t).exists(_.aggregatePushed))
+    val maxId = spark.read.format("graft").load(t).agg(org.apache.spark.sql.functions.max("id"))
+    assert(maxId.collect().head.getLong(0) === 119L)
+    assert(!GraftScan.planned(maxId).exists(_.aggregatePushed))
   }
 
   test("graft.stats.nullCounts=false bounds the EXT74 harvest; absent facts stay sound") {
@@ -2644,12 +2642,10 @@ class TxStoreSpec extends SparkSpec {
     // soundness: IS NULL pruning keeps the fact-less files; reads stay exact
     assert(TxStore.readWhere(spark, t, col("payload").isNotNull).count() === 21)
     // metadata COUNT(col) refuses (a missing fact refuses, never miscounts)
-    import graft.sources.GraftScanEvents
-    GraftScanEvents.clear(t)
-    assert(spark.read.format("graft").load(t)
-      .agg(org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.col("payload"))).head().getLong(0) === 21L)
-    assert(!GraftScanEvents.recent(t).exists(_.aggregatePushed))
+    val counted = spark.read.format("graft").load(t)
+      .agg(org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.col("payload")))
+    assert(counted.collect().head.getLong(0) === 21L)
+    assert(!graft.sources.GraftScan.planned(counted).exists(_.aggregatePushed))
     // lifting the property resumes the harvest
     TxStore.unsetTableProperties(spark, t, Seq("graft.stats.nullCounts"))
     TxStore.append(rows(3, from = 200).repartition(1), t)

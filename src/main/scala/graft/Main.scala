@@ -4,7 +4,12 @@ import java.nio.file.{Files, Paths}
 
 import graft.ops.{ExternalScorer, IhcScorer, JourneyBuilder}
 import graft.sources.{GraftScan, GraftSqlParser, TxCatalog}
+import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.util.QuotingUtils
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.{col, to_timestamp}
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** CLI mirroring the reference's per-step interface
   * (run_pipeline.py:31–106): each step runnable standalone against the
@@ -183,12 +188,31 @@ object Main {
           // has already run; parquet cannot hold a zero-column frame
           case (df, None) if df.columns.isEmpty => println("[graft] sql ok (no result columns)")
           case (df, None) =>
-            // the write plans the same analyzed plan: it prunes as printed
-            GraftScan.named(df).foreach { case (name, p) =>
-              println(s"[graft] sql scan on '$name' @v${p.version}: skipped " +
-                s"${p.skipped.size} of ${p.kept.size + p.skipped.size} files from log metadata")
+            // each graft scan's pruning as the write ran it, runtime
+            // filters included, named as the statement wrote the table
+            val written = df.queryExecution.logical.collectWithSubqueries {
+              case u: UnresolvedRelation => u.multipartIdentifier
+              case RelationTimeTravel(u: UnresolvedRelation, _, _) => u.multipartIdentifier
             }
-            df.write.mode("overwrite").parquet(result)
+            def lc(parts: Seq[String]) = parts.map(_.toLowerCase(java.util.Locale.ROOT))
+            val ran = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+            val listener = new QueryExecutionListener {
+              override def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+                ran.add(qe): Unit
+              override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+            }
+            df.sparkSession.listenerManager.register(listener)
+            try df.write.mode("overwrite").parquet(result)
+            finally {
+              ColumnBridge.drainListenerBus(spark.sparkContext, 10000L)
+              df.sparkSession.listenerManager.unregister(listener)
+            }
+            ran.forEach(qe => GraftScan.named(qe).foreach { case (id, p) =>
+              val name = written.find(w => lc(id).endsWith(lc(w))).getOrElse(id)
+              println(s"[graft] sql scan on '${name.map(QuotingUtils.quoteIfNeeded).mkString(".")}' " +
+                s"@v${p.version}: skipped ${p.skipped.size} of ${p.kept.size + p.skipped.size} " +
+                "files from log metadata")
+            })
             println(s"[graft] sql -> $result")
         }
       case other =>

@@ -30,8 +30,8 @@ object DsvBridge {
     * ROW POSITION when it appears in the requested schema — correct
     * under predicate pushdown and row-group skipping (the reader
     * derives it from row-group metadata, not a row counter). The
-    * deletion-vector read path appends it, filters marked positions,
-    * and projects it away. */
+    * row-based read path appends it, filters marked positions, and
+    * keeps it only for a scan that asks for the row index. */
   def rowIndexField: StructField =
     StructField(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
       org.apache.spark.sql.types.LongType, nullable = true)
@@ -89,33 +89,34 @@ object DsvBridge {
     * each file's reader drops rows whose position is marked deleted —
     * inline marks ship with the factory (log-sized), parquet-vectored
     * marks load EXECUTOR-SIDE from their sidecar dirs (positions never
-    * visit the driver, the same contract as the v1 anti-join read).
-    * Row-based by construction; the owning scan reports
-    * ColumnarSupportMode.UNSUPPORTED when any mark is live.
+    * visit the driver). It also serves scans that ask for the row
+    * index, with or without marks. Row-based by construction; the
+    * owning scan reports ColumnarSupportMode.UNSUPPORTED for it.
     *
     * `readDataSchema` here EXCLUDES the row-index field — the factory
-    * appends it for the inner reader and projects it back out, so the
-    * emitted rows match the scan's declared readSchema exactly. No
-    * filters reach the inner parquet reader: row-group skipping never
-    * changes row indexes, but a record-level parquet filter (conf-
-    * enabled) would drop rows BEFORE the position check with untested
-    * interplay — the engine's own log-level pruning has already done
-    * the file skipping, and Spark re-applies every predicate above the
-    * scan. */
+    * appends it for the inner reader and, unless `keepRowIndex`,
+    * projects it back out, so the emitted rows match the scan's
+    * declared layout exactly. No filters reach the inner parquet
+    * reader: row-group skipping never changes row indexes, but a
+    * record-level parquet filter (conf-enabled) would drop rows BEFORE
+    * the position check with untested interplay — the engine's own
+    * log-level pruning has already done the file skipping, and Spark
+    * re-applies every predicate above the scan. */
   def dvReaderFactory(
       spark: SparkSession,
       dataSchema: StructType,
       readDataSchema: StructType,
       partitionSchema: StructType,
       inlineMarks: Map[String, Array[Long]],
-      sidecarDirsByLeaf: Map[String, Seq[String]]): PartitionReaderFactory = {
+      sidecarDirsByLeaf: Map[String, Seq[String]],
+      keepRowIndex: Boolean): PartitionReaderFactory = {
     val inner = parquetReaderFactory(
       spark, dataSchema, StructType(readDataSchema.fields :+ rowIndexField),
       partitionSchema, Nil).asInstanceOf[FilePartitionReaderFactory]
     val conf = spark.sparkContext.broadcast(
       new SerializableConfiguration(spark.sessionState.newHadoopConfWithOptions(Map.empty)))
     GraftDvReaderFactory(inner, readDataSchema, partitionSchema,
-      inlineMarks, sidecarDirsByLeaf, conf)
+      inlineMarks, sidecarDirsByLeaf, keepRowIndex, conf)
   }
 
   /** Re-wrap a computed batch plan as a STREAMING frame — what a v1
@@ -139,15 +140,16 @@ object DsvBridge {
 }
 
 /** Per-file deletion-vector skipping around the v2 parquet row reader.
-  * Emitted row layout: [data columns…, partition columns…] — the inner
-  * reader's trailing row-index column (at ordinal `nData`) is consumed
-  * by the position check and projected away. */
+  * Emitted row layout: [data columns…, row index if kept, partition
+  * columns…] — the inner reader's row-index column (at ordinal `nData`)
+  * is consumed by the position check. */
 private[graft] final case class GraftDvReaderFactory(
     inner: FilePartitionReaderFactory,
     readDataSchema: StructType,
     partitionSchema: StructType,
     inlineMarks: Map[String, Array[Long]],
     sidecarDirsByLeaf: Map[String, Seq[String]],
+    keepRowIndex: Boolean,
     conf: Broadcast[SerializableConfiguration])
   extends PartitionReaderFactory {
 
@@ -155,14 +157,13 @@ private[graft] final case class GraftDvReaderFactory(
   private val nData = readDataSchema.length
   private val nPartition = partitionSchema.length
 
-  // mark keys are BARE leaf names (staged UUIDs — injective), the same
-  // probe the v1 anti-join uses via _metadata.file_name
+  // mark keys are BARE leaf names (staged UUIDs — injective), as the
+  // parquet marks store them
   private def leafOf(p: PartitionedFile): String = p.filePath.toPath.getName
 
   /** One sidecar dir, read ONCE and bucketed by leaf — a reader over a
     * partition holding k files of the same bulk delete must not scan
-    * the shared sidecar k times (the v1 path decodes it once per JVM;
-    * this cache is per reader, the executor-side equivalent). */
+    * the shared sidecar k times. */
   private def loadDir(dir: String): Map[String, java.util.HashSet[java.lang.Long]] = {
     val byLeaf = scala.collection.mutable.HashMap.empty[String, java.util.HashSet[java.lang.Long]]
     val dp = new Path(dir)
@@ -201,16 +202,15 @@ private[graft] final case class GraftDvReaderFactory(
       private var current: PartitionReader[InternalRow] = _
       private var row: InternalRow = _
       private var marks: java.util.HashSet[java.lang.Long] = _
-      // projection dropping the row-index ordinal: [0..nData-1] ++
-      // [nData+1..nData+nPartition]
+      // projection keeping [0..nData-1], the row index at nData when
+      // kept, and [nData+1..nData+nPartition]
       private val project: UnsafeProjection = {
         val fields = readDataSchema.fields ++
           Array(DsvBridge.rowIndexField) ++ partitionSchema.fields
-        val exprs = (0 until nData).map(i =>
-          BoundReference(i, fields(i).dataType, fields(i).nullable)) ++
-          (0 until nPartition).map(i => BoundReference(nData + 1 + i,
-            fields(nData + 1 + i).dataType, fields(nData + 1 + i).nullable))
-        UnsafeProjection.create(exprs)
+        val kept = (0 until nData) ++ (if (keepRowIndex) Seq(nData) else Nil) ++
+          (nData + 1 to nData + nPartition)
+        UnsafeProjection.create(kept.map(i =>
+          BoundReference(i, fields(i).dataType, fields(i).nullable)))
       }
       private def advanceFile(): Boolean =
         if (!files.hasNext) false

@@ -8,17 +8,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{And, Cast, EqualTo, EvalMode, Expression, GenericInternalRow, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Or}
-import org.apache.spark.sql.catalyst.util.QuotingUtils
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, SupportsRuntimeFiltering}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation}
 import org.apache.spark.sql.graft.DsvBridge
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter, StreamSinkProvider, StreamSourceProvider}
-import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -62,7 +62,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (declared schema for `select *`) — the parquet factory emits
   * data-columns-first/partition-columns-last, and
   * [[GraftReorderReaderFactory]] permutes that back (vector reshuffle
-  * per batch, zero copies), so v1 and v2 reads agree positionally. */
+  * per batch, zero copies), so reads keep the declared column order. */
 class GraftDataSource extends TableProvider with DataSourceRegister
   with StreamSourceProvider with StreamSinkProvider {
 
@@ -220,7 +220,7 @@ final class GraftTable(
 
   private[sources] val logical: StructType =
     TxStore.logicalSchema(snap).getOrElse {
-      if (!exists) new StructType()
+      if (!exists || snap.files.isEmpty) new StructType()
       else throw new IllegalArgumentException(
         s"graft: table at $path carries no log schema")
     }
@@ -316,8 +316,10 @@ final class GraftTable(
     * truncated history reports the checkpoint) — both are PER-FILE
     * CONSTANTS synthesized at planning time from log metadata and
     * appended through the partition-value channel, zero extra IO at any
-    * table size. Resolved only when referenced by name; a (pathological)
-    * table column with the same name shadows the metadata column. */
+    * table size. `_row_index` is the row's position in its file, which
+    * the parquet reader fills (the key deletion marks use). Resolved
+    * only when referenced by name; a (pathological) table column with
+    * the same name shadows the metadata column. */
   override def metadataColumns(): Array[org.apache.spark.sql.connector.catalog.MetadataColumn] = {
     val taken = logical.fieldNames.map(n => n.toLowerCase(Locale.ROOT)).toSet
     GraftMetaColumns.all.filterNot(c => taken(c.name.toLowerCase(Locale.ROOT)))
@@ -447,8 +449,10 @@ private[sources] object GraftMetaColumns {
   val CommitVersion: Col = Col("_commit_version",
     org.apache.spark.sql.types.LongType,
     "commit that (re-)added the row's file in the retained log")
-  val all: Array[MetadataColumn] = Array(File, CommitVersion)
-  val names: Set[String] = Set(File.name, CommitVersion.name)
+  val RowIndex: Col = Col("_row_index", org.apache.spark.sql.types.LongType,
+    "position of the row in its data file")
+  val all: Array[MetadataColumn] = Array(File, CommitVersion, RowIndex)
+  val names: Set[String] = Set(File.name, CommitVersion.name, RowIndex.name)
 }
 
 /** Exact per-file evaluation of v1 filters against hive PARTITION path
@@ -926,11 +930,16 @@ final class GraftScan(
   // parquet factory emits); physical names face the files. HIDDEN
   // metadata columns (requested by name only) ride the partition-value
   // channel: per-file constants appended after the real partition
-  // columns, synthesized from log metadata at planning time.
+  // columns, synthesized from log metadata at planning time. The row
+  // index instead rides the reader's row-index field, right after the
+  // data columns.
   private def isMeta(n: String): Boolean =
     GraftMetaColumns.names.exists(_.equalsIgnoreCase(n)) &&
       !table.logical.fieldNames.exists(_.equalsIgnoreCase(n))
-  private val readMetaSchema = StructType(required.fields.filter(f => isMeta(f.name)))
+  private val rowIndex: Option[StructField] = required.fields.find(f =>
+    isMeta(f.name) && f.name.equalsIgnoreCase(GraftMetaColumns.RowIndex.name))
+  private val readMetaSchema =
+    StructType(required.fields.filter(f => isMeta(f.name) && !rowIndex.contains(f)))
   private val readPartitionSchemaL =
     StructType(required.fields.filter(f => !isMeta(f.name) && isPartition(f.name)))
   private val readDataSchemaL =
@@ -953,9 +962,9 @@ final class GraftScan(
   // then partition values, then metadata constants (the parquet-reader
   // layout). The scan's DECLARED output is `required`'s own order —
   // the reorder wrapper permutes emitted → declared so positional
-  // consumers (select *, df.collect) see the v1 read's column order.
+  // consumers (select *, df.collect) see the declared column order.
   private val emittedSchema = StructType(
-    readDataSchemaL.fields ++ readPartitionSchemaL.fields ++ readMetaSchema.fields)
+    readDataSchemaL.fields ++ rowIndex ++ readPartitionSchemaL.fields ++ readMetaSchema.fields)
 
   override def readSchema(): StructType = pushedAgg match {
     case Some((aggSchema, _)) => aggSchema
@@ -1012,18 +1021,44 @@ final class GraftScan(
     }
   }
 
-  private lazy val pushedKept: Seq[String] = prunedFiles(Nil)._1
+  /** The pushed filters' (kept, skipped) files and the kept files'
+    * sizes: one stats walk, shared by the size estimate and the plan
+    * without runtime filters. */
+  private lazy val pushedPlan: (Seq[String], Seq[String], Map[String, Long]) = {
+    val (kept, skipped) = prunedFiles(Nil)
+    (kept, skipped, TxStats.fileSizes(spark, path, snap, kept))
+  }
 
   private def current: (GraftScan.Planned, Array[InputPartition]) = synchronized {
     if (plan == null) {
       // an aggregate answered from log facts plans ZERO files
-      val (kept, skipped) = if (pushedAgg.isDefined) (Nil, snap.files) else prunedFiles(runtime)
+      val (kept, skipped) =
+        if (pushedAgg.isDefined) (Nil, snap.files)
+        else if (runtime.isEmpty) (pushedPlan._1, pushedPlan._2)
+        else prunedFiles(runtime)
       plan = (GraftScan.Planned(snap.version, kept, skipped, runtime.size,
           runtime.map(_.toString), pushedAgg.isDefined),
         pushedAgg.fold(fileSplits(kept))(a => Array(GraftAggPartition(a._2.map(_.toSeq)))))
     }
     plan
   }
+
+  private def runtimeFilters: Seq[Filter] = synchronized(runtime)
+
+  /** What the scan plans from: two reads of one frame compare equal,
+    * so a plan reuses their exchanges. */
+  private def inputs: (String, TxStore.Snapshot, StructType, Seq[Filter], Seq[String],
+      Option[(StructType, Seq[Seq[Any]])]) =
+    (path, snap, required, pushedV1.toSeq, exactKept,
+      pushedAgg.map { case (st, rows) => (st, rows.map(_.toSeq)) })
+
+  override def equals(other: Any): Boolean = other match {
+    case that: GraftScan =>
+      (this eq that) || (inputs == that.inputs && runtimeFilters == that.runtimeFilters)
+    case _ => false
+  }
+
+  override def hashCode(): Int = (path, snap.version, required, pushedV1.toSeq).hashCode()
 
   /** What this scan planned under its current runtime filters. */
   def planned: GraftScan.Planned = current._1
@@ -1039,9 +1074,11 @@ final class GraftScan(
 
   private def fileSplits(kept: Seq[String]): Array[InputPartition] = {
     if (kept.isEmpty) return Array.empty
-    val sizes = TxStats.fileSizes(spark, path, snap, kept)
+    // runtime filters only add conjuncts: they keep a subset of the
+    // pushed-filter files
+    val sizes = pushedPlan._3
     val openCost = spark.sessionState.conf.filesOpenCostInBytes
-    val maxSplit = DsvBridge.maxSplitBytes(spark, sizes.valuesIterator.map(_ + openCost).sum)
+    val maxSplit = DsvBridge.maxSplitBytes(spark, kept.iterator.map(sizes(_) + openCost).sum)
     val splits = kept.flatMap { rel =>
       val size = sizes(rel)
       val pv = partitionValuesOf(rel)
@@ -1073,36 +1110,35 @@ final class GraftScan(
       new GenericInternalRow(values ++ meta)
     }
 
-  private def hasDv: Boolean = snap.dv.nonEmpty || snap.dvp.nonEmpty
+  // deletion marks and row positions need the row-based reader
+  private def rowBased: Boolean = snap.dv.nonEmpty || snap.dvp.nonEmpty || rowIndex.isDefined
 
   override def columnarSupportMode(): Scan.ColumnarSupportMode =
-    if (hasDv || pushedAgg.isDefined) Scan.ColumnarSupportMode.UNSUPPORTED
+    if (rowBased || pushedAgg.isDefined) Scan.ColumnarSupportMode.UNSUPPORTED
     else Scan.ColumnarSupportMode.PARTITION_DEFINED
 
   override def createReaderFactory(): PartitionReaderFactory =
     if (pushedAgg.isDefined) GraftAggReaderFactory()
-    else if (!hasDv)
-      GraftReorderReaderFactory.wrap(
+    else GraftReorderReaderFactory.wrap(
+      if (!rowBased)
         DsvBridge.parquetReaderFactory(spark, dataSchemaP, readDataSchemaP,
           emittedPartSchema, GraftFilters.forParquet(pushedV1, physName,
-            dataSchemaP.fieldNames.map(lc).toSet)),
-        emittedSchema, required)
-    else {
-      // restrict marks to live files and project keys to bare leaves
-      // (the reader probes by leaf); sidecar dirs resolve to absolute
-      // paths the executors read directly
-      val live = snap.files.toSet
-      val inline = snap.dv.collect { case (f, rows) if live(f) =>
-        TxSnapshot.leafOf(f) -> rows.toArray
-      }
-      val sidecars = snap.dvp.collect { case (f, dirs) if live(f) =>
-        TxSnapshot.leafOf(f) -> dirs.map(d => LogStore.sidecarPath(path, d).toString)
-      }
-      GraftReorderReaderFactory.wrap(
+            dataSchemaP.fieldNames.map(lc).toSet))
+      else {
+        // restrict marks to live files and project keys to bare leaves
+        // (the reader probes by leaf); sidecar dirs resolve to absolute
+        // paths the executors read directly
+        val live = snap.files.toSet
+        val inline = snap.dv.collect { case (f, rows) if live(f) =>
+          TxSnapshot.leafOf(f) -> rows.toArray
+        }
+        val sidecars = snap.dvp.collect { case (f, dirs) if live(f) =>
+          TxSnapshot.leafOf(f) -> dirs.map(d => LogStore.sidecarPath(path, d).toString)
+        }
         DsvBridge.dvReaderFactory(spark, dataSchemaP, readDataSchemaP,
-          emittedPartSchema, inline, sidecars),
-        emittedSchema, required)
-    }
+          emittedPartSchema, inline, sidecars, keepRowIndex = rowIndex.isDefined)
+      },
+      emittedSchema, required)
 
   /** Size/row estimates from the log's `#size`/`#rows` facts over the
     * PUSHED-pruned file set — what lets a filtered graft table qualify
@@ -1112,7 +1148,7 @@ final class GraftScan(
     override val sizeInBytes: java.util.OptionalLong = java.util.OptionalLong.of(256L * n)
     override val numRows: java.util.OptionalLong = java.util.OptionalLong.of(n.toLong)
   } else new Statistics {
-    private val sizes = TxStats.fileSizes(spark, path, snap, pushedKept)
+    private val (pushedKept, _, sizes) = pushedPlan
     override val sizeInBytes: java.util.OptionalLong =
       java.util.OptionalLong.of(sizes.valuesIterator.sum)
     override val numRows: java.util.OptionalLong =
@@ -1153,22 +1189,23 @@ object GraftScan {
     * run `df.collect()` first, as `count()` and `head()` plan another
     * Dataset. */
   def planned(df: DataFrame): Seq[Planned] = {
-    val found = named(df).map(_._2)
+    val found = named(df.queryExecution).map(_._2)
     require(found.nonEmpty,
       s"graft: no graft scan in the executed plan:\n${df.queryExecution.executedPlan}")
     found
   }
 
-  /** [[planned]] with the identifier of each scan's relation (its path
-    * when it has none), and empty for a plan without a graft scan. */
-  def named(df: DataFrame): Seq[(String, Planned)] = {
-    val ids = df.queryExecution.optimizedPlan.collectWithSubqueries {
+  /** [[planned]] with the name parts of each scan's relation (namespace
+    * and name; its path when it has none), and empty for a plan without
+    * a graft scan. */
+  def named(qe: QueryExecution): Seq[(Seq[String], Planned)] = {
+    val ids = qe.optimizedPlan.collectWithSubqueries {
       case r: DataSourceV2ScanRelation => (r.scan, r.relation.identifier)
     }
-    Plans.collectWithSubqueries(df.queryExecution.executedPlan) { case b: BatchScanExec => b.scan }
+    Plans.collectWithSubqueries(qe.executedPlan) { case b: BatchScanExec => b.scan }
       .collect { case g: GraftScan => g }.distinct.map { g =>
-        ids.collectFirst { case (s, Some(id)) if s eq g => QuotingUtils.quoted(id) }
-          .getOrElse(g.path) -> g.planned
+        ids.collectFirst { case (s, Some(id)) if s eq g => id.namespace.toSeq :+ id.name }
+          .getOrElse(Seq(g.path)) -> g.planned
       }
   }
 }
@@ -1191,7 +1228,7 @@ final class GraftAggregatePushed extends GraftScanMetric(
 
 /** Permutes a reader factory's emitted column order (data-first/
   * partition-last, the parquet layout) back to the scan's DECLARED
-  * order, so v1 and v2 reads of a partitioned table agree positionally
+  * order, so reads of a partitioned table keep the declared order
   * (VERDICT r16 #5). Row path: one codegen'd projection per reader.
   * Columnar path: the batch's column-vector array is permuted — a
   * per-batch object allocation, zero data copies, vectorization

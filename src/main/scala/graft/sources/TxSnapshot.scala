@@ -2,7 +2,9 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.ColumnBridge
 
 import java.nio.charset.StandardCharsets
 import java.util.UUID
@@ -12,7 +14,7 @@ import TxStats._
 
 /** TxStore's commit log read side: the commit and snapshot shapes, the
   * payload codecs and their decode memo, replay, and reading a
-  * snapshot's data files. */
+  * snapshot as a table. */
 object TxSnapshot {
 
   private[sources] val DataDir = "data"
@@ -66,8 +68,8 @@ object TxSnapshot {
       /** Data file → PARQUET deletion-vector sidecar dirs whose marks
         * apply to it (see [[deleteVectoredBulk]]): positions live in
         * executor-written parquet under `_txlog/_sidecar/<uuid>.dvpq/`,
-        * never on the driver — reads union them into the same anti-join
-        * as inline marks. */
+        * never on the driver — the scan's reader loads them beside the
+        * inline marks. */
       dvp: Map[String, Seq[String]] = Map.empty,
       /** Live CHECK constraints, (name, SQL expression) in declaration
         * order — every write of new row values is validated against
@@ -237,11 +239,11 @@ object TxSnapshot {
     }
 
   /** The bare data-file name (the part after the partition dirs) —
-    * identical to the full log name on flat tables. Runtime `__file`
-    * columns carry the LEAF (`_metadata.file_name`); the log, stats,
-    * and deletion-vector keys carry the FULL relative name; leaf names
-    * are staged UUIDs, so the leaf → full map over a snapshot's live
-    * set is always injective. */
+    * identical to the full log name on flat tables. Parquet deletion
+    * marks and the bloom build's raw scan (`_metadata.file_name`) carry
+    * the LEAF; the log, stats and inline deletion-vector keys carry the
+    * FULL relative name; leaf names are staged UUIDs, so the leaf → full
+    * map over a snapshot's live set is always injective. */
   private[sources] def leafOf(n: String): String = {
     val i = n.lastIndexOf('/')
     if (i < 0) n else n.substring(i + 1)
@@ -423,8 +425,8 @@ object TxSnapshot {
   // ── deletion vectors in the log (merge-on-read DELETE) ─────────────
   // A delete-dv commit adds/removes NO files: it marks row POSITIONS of
   // live files as deleted ({"file":[idx,...],...}, base64-wrapped like
-  // the other structured payloads). Readers anti-join the marked
-  // positions out via the parquet scan's _metadata.row_index — a
+  // the other structured payloads). The scan's reader skips the marked
+  // positions by the parquet row index — a
   // selective delete on a huge file costs one tiny log entry instead of
   // rewriting the file (the Delta deletion-vector / Iceberg v2
   // position-delete design, re-derived). Rewrites retire vectors:
@@ -755,138 +757,34 @@ object TxSnapshot {
 
   // ── reads ──────────────────────────────────────────────────────────
 
-  /** A snapshot's deletion-vector state restricted to `files`: the
-    * inline (file → positions) map, and the parquet-vector dirs each
-    * restricted to the files its refs still cover (a dir may also hold
-    * marks for files since removed — or removed-then-restored, where
-    * the marks must NOT re-apply; the ref map is the source of truth,
-    * the parquet is just position storage). */
-  private[sources] def restrictMarks(
-      dv: Map[String, Seq[Long]],
-      dvp: Map[String, Seq[String]],
-      files: Seq[String]): (Map[String, Seq[Long]], Map[String, Seq[String]]) = {
-    val fileSet = files.toSet
-    val relevant = dv.view.filterKeys(fileSet).toMap
-    val relevantP: Map[String, Seq[String]] = {
-      val byDir = scala.collection.mutable.LinkedHashMap.empty[String, List[String]]
-      dvp.foreach { case (fl, dirs) =>
-        if (fileSet(fl)) dirs.foreach(d => byDir(d) = fl :: byDir.getOrElse(d, Nil))
-      }
-      byDir.view.mapValues(_.reverse: Seq[String]).toMap
-    }
-    (relevant, relevantP)
+  /** `snap` narrowed to `files` and their deletion marks — what a
+    * rewrite or change-feed frame reads. */
+  private[sources] def restricted(snap: Snapshot, files: Seq[String]): Snapshot = {
+    val keep = files.toSet
+    snap.copy(files = files, dv = snap.dv.filter(e => keep(e._1)),
+      dvp = snap.dvp.filter(e => keep(e._1)))
   }
 
-  /** Materialize [[restrictMarks]]' output as one (__file, __row) frame
-    * — inline marks from the log, parquet marks from their sidecar dirs
-    * — or None when there are no marks. The flag reports whether every
-    * mark is inline (log-sized, safe to broadcast unconditionally). */
-  private[sources] def dvMarks(
-      spark: SparkSession,
-      path: String,
-      inline: Map[String, Seq[Long]],
-      parquetDirs: Map[String, Seq[String]]): Option[(DataFrame, Boolean)] =
-    if (inline.isEmpty && parquetDirs.isEmpty) None
-    else {
-      import spark.implicits._
-      // the anti-join's probe column (`_metadata.file_name`) is the bare
-      // LEAF name, so marks keyed by full partitioned names project to
-      // their leaf here (leaf names are staged UUIDs — injective)
-      val inlineDf =
-        if (inline.isEmpty) None
-        else Some(inline.toSeq
-          .flatMap { case (f, rows) => rows.map(r => (leafOf(f), r)) }
-          .toDF("__file", "__row"))
-      val parquetMarks = parquetDirs.toSeq.map { case (dir, applicable) =>
-        spark.read
-          .schema("__file STRING, __row BIGINT")
-          .parquet(sidecarPath(path, dir).toString)
-          .filter(col("__file").isin(applicable.map(leafOf): _*))
-      }
-      Some(((inlineDf.toSeq ++ parquetMarks).reduce(_ unionByName _), parquetDirs.isEmpty))
-    }
+  /** The probe columns a read may add: a row's table-relative data
+    * file, and the row's position in it. */
+  private[sources] val FileCol: String = GraftMetaColumns.File.name
+  private[sources] val Position: Seq[String] = Seq(FileCol, GraftMetaColumns.RowIndex.name)
 
-  /** `files` of `snap`, read through its deletion vectors and column
-    * mapping. No files (a created, truncated or fully deleted table, or
-    * a pruned read that kept none) read as no rows under the log
-    * schema. */
+  /** `snap` read as a table: the v2 scan of a [[GraftTable]] pinned to
+    * it, which applies the log schema (never footers: a file predating
+    * an added column reads it as NULL), the column mapping, the
+    * partition layout and the deletion marks, and prunes files on the
+    * query's filters. `meta` adds probe columns ([[FileCol]],
+    * [[Position]]) after the table's own. */
   private[sources] def readSnap(
-      spark: SparkSession, path: String, snap: Snapshot, files: Seq[String],
-      withFile: Boolean = false): DataFrame =
-    if (files.isEmpty) {
-      val schema = logicalSchema(snap).getOrElse(org.apache.spark.sql.types.StructType(Nil))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        if (withFile) schema.add("__file", "string").add("__row", "long") else schema)
-    } else readFiles(spark, path, files, snap.schema, snap.dv, withFile, snap.dvp, snap.mapping)
-
-  /** The log schema (when present) is APPLIED, never inferred from
-    * footers: files predating an added column read it as NULL, and the
-    * reader costs zero metadata IO regardless of file count. Logs
-    * written before schema tracking fall back to footer inference.
-    *
-    * Deletion vectors apply HERE, so every read path (current,
-    * time-travel, stats-pruned, rewrite inputs) sees them: rows whose
-    * (file, row position) is marked deleted are anti-joined out via
-    * the scan's `_metadata.row_index` (position identity is the
-    * parquet row order, stable under pushdown — probed in
-    * TxStoreSpec). `withFile` keeps a `__file` column (the bare data
-    * file name) for the copy-on-write probes — `_metadata.file_name`
-    * is captured AT the scan, so unlike `input_file_name()` it
-    * survives the anti-join. */
-  private[sources] def readFiles(
-      spark: SparkSession,
-      path: String,
-      files: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType],
-      dv: Map[String, Seq[Long]] = Map.empty,
-      withFile: Boolean = false,
-      dvp: Map[String, Seq[String]] = Map.empty,
-      mapping: Seq[(String, String)] = Nil): DataFrame = {
-    require(files.nonEmpty, s"empty snapshot at $path")
-    // hive-partitioned file names carry col=value/ segments; basePath
-    // makes the scan parse the partition values back out of the path
-    // (typed by the user schema), exactly like a directory read would
-    val partitioned = files.exists(_.indexOf('/') >= 0)
-    val rdr = schema.fold(spark.read)(s => spark.read.schema(s))
-    val reader = if (partitioned) rdr.option("basePath", s"$path/$DataDir") else rdr
-    val base = reader.parquet(files.map(n => s"$path/$DataDir/$n"): _*)
-    // the scan surfaces path-derived partition columns LAST regardless
-    // of the declared schema order — readers see the LOG's order
-    def ordered(d: DataFrame): DataFrame =
-      if (!partitioned) d
-      else schema.fold(d)(s => d.select(s.fieldNames.toSeq.map(col): _*))
-    val (relevant, relevantP) = restrictMarks(dv, dvp, files)
-    val physical =
-      if (relevant.isEmpty && relevantP.isEmpty && !withFile) ordered(base)
-      else {
-        require(!base.columns.contains("__file") && !base.columns.contains("__row"),
-          "table must not carry the reserved __file/__row columns")
-        val dataCols = schema.fold(base.columns.toSeq)(_.fieldNames.toSeq).map(col)
-        val withMeta = base.select(dataCols ++ Seq(
-          col("_metadata.file_name").as("__file"),
-          col("_metadata.row_index").as("__row")): _*)
-        val filtered = dvMarks(spark, path, relevant, relevantP) match {
-          case None => withMeta
-          case Some((marks, inlineOnly)) =>
-            // inline-only marks are log-sized — broadcast unconditionally
-            // (the historical plan); once executor-written parquet marks
-            // are in play their size is data-dependent, so leave the
-            // strategy to AQE
-            val marksSide =
-              if (inlineOnly) org.apache.spark.sql.functions.broadcast(marks) else marks
-            withMeta.join(marksSide, Seq("__file", "__row"), "left_anti")
-        }
-        // withFile keeps BOTH meta columns — the DV probe needs the row
-        // position; the copy-on-write probes just ignore it
-        if (withFile) filtered else filtered.drop("__row", "__file")
-      }
-    // column mapping: project physical → logical (a dropped column is
-    // simply not selected); a pure projection, so pushdown/pruning of
-    // the physical scan is unaffected
-    if (mapping.isEmpty) physical
+      spark: SparkSession, path: String, snap: Snapshot, meta: Seq[String] = Nil): DataFrame = {
+    val df = ColumnBridge.dataFrame(spark,
+      DataSourceV2Relation.create(new GraftTable(spark, path, snap), None, None))
+    if (meta.isEmpty) df
     else {
-      val metaCols = if (withFile) Seq(col("__file"), col("__row")) else Nil
-      physical.select(mapping.map { case (l, p) => col(p).as(l) } ++ metaCols: _*)
+      require(!df.columns.exists(c => meta.exists(_.equalsIgnoreCase(c))),
+        s"table at $path must not carry the reserved ${meta.mkString("/")} columns")
+      df.select(col("*") +: meta.map(df.metadataColumn): _*)
     }
   }
 }

@@ -635,7 +635,7 @@ object TxStats {
     * facts when present (zero IO — the footer harvest records them at
     * stage time), else one getFileStatus per missing file (older logs,
     * `collectStats = false` writes). The DSv2 scan sizes its input
-    * splits from this. */
+    * splits from this, and compactSmallFiles its bins. */
   private[sources] def fileSizes(
       spark: SparkSession, path: String, snap: Snapshot,
       files: Seq[String]): Map[String, Long] = {

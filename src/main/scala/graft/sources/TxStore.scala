@@ -242,9 +242,8 @@ object TxStore extends TxWrites {
       }
       if (validatedAt != snap.version) {
         if (snap.files.nonEmpty)
-          enforceConstraints(
-            readSnap(spark, path, snap, snap.files),
-            Seq(name -> exprSql), "existing data", path)
+          enforceConstraints(readSnap(spark, path, snap), Seq(name -> exprSql),
+            "existing data", path)
         validatedAt = snap.version
       }
       Some(CommitSpec(Nil, Nil, None,
@@ -522,20 +521,10 @@ object TxStore extends TxWrites {
       s"($sinceVersion, ${snap.version}] contains rewrite commits " +
         s"(${rewrites.map(c => s"v${c.version}:${c.op}").mkString(", ")}) — file-level CDC " +
         "tracks appends only; re-read the snapshot")
-    val added = tail.flatMap(_.add)
-    val df =
-      if (added.nonEmpty) readFiles(spark, path, added, snap.schema, mapping = snap.mapping)
-      else
-        // caught up (or the table has no commits yet): an EMPTY delta,
-        // never an error — a poll loop must be able to run ahead of the
-        // producer. With no schema on the log yet there is nothing to
-        // type the frame with, so it is the zero-column empty frame.
-        logicalSchema(snap) match {
-          case Some(s) =>
-            spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-          case None => spark.emptyDataFrame
-        }
-    (snap.version, df)
+    // caught up (or the table has no commits yet) reads no file: an
+    // EMPTY delta, never an error — a poll loop must be able to run
+    // ahead of the producer (with no schema on the log yet, zero columns)
+    (snap.version, readSnap(spark, path, restricted(snap, tail.flatMap(_.add))))
   }
 
   /** The data files a delete-dv commit marks, from the commit's own
@@ -560,10 +549,11 @@ object TxStore extends TxWrites {
     *
     *  - `append`: the added files' rows → inserts. Exact, cost = the
     *    appended bytes.
-    *  - `delete-dv`: the NEWLY marked positions (this version's mark
-    *    frame anti-joined against the previous version's) joined back to
-    *    their rows → deletes. Exact, cost = the touched files — row
-    *    positions identify the deleted rows without any diff.
+    *  - `delete-dv`: the touched files' rows under the previous
+    *    version's marks, left-anti joined on (`_file`, `_row_index`)
+    *    against the same files under this version's marks → deletes.
+    *    Exact, cost = the touched files read twice — row positions
+    *    identify the deleted rows without a row diff.
     *  - `compact` / `optimize-zorder`: data-preserving by contract —
     *    no events.
     *  - `delete` (copy-on-write): the rewritten inputs' effective rows
@@ -622,23 +612,25 @@ object TxStore extends TxWrites {
     // NULL via schema-on-read) — one schema across every emitted frame;
     // same for the CURRENT column mapping (a renamed column's whole
     // history reads under its current logical name, a dropped one
-    // disappears — the current-schema contract)
-    val readSchema = snap.schema
-    val curMap = snap.mapping
-
+    // disappears — the current-schema contract). Each frame reads its
+    // files under the layout and stats of the snapshot they were live
+    // in, and under its deletion marks unless the files were just added.
+    def frame(at: Snapshot, files: Seq[String], marked: Boolean = true,
+        meta: Seq[String] = Nil): DataFrame = {
+      val era = if (marked) restricted(at, files) else at.copy(files = files, dv = Map.empty, dvp = Map.empty)
+      readSnap(spark, path, era.copy(schema = snap.schema, mapping = snap.mapping), meta)
+    }
     def tagged(df: DataFrame, tpe: String, v: Long): DataFrame =
       df.withColumn("_change_type", lit(tpe)).withColumn("_commit_version", lit(v))
-    // readFiles restricts marks to the read file set itself
-    def effective(s0: Snapshot, files: Seq[String]): DataFrame =
-      readFiles(spark, path, files, readSchema, s0.dv, dvp = s0.dvp, mapping = curMap)
 
     val parts: Seq[DataFrame] = tail.flatMap { c =>
       lazy val before = replay(log, cs.filter(_.version < c.version))
       lazy val after = replay(log, cs.filter(_.version <= c.version))
+      def added = frame(after, c.add, marked = false)
       c.op match {
         case "append" =>
           if (c.add.isEmpty) Nil
-          else Seq(tagged(readFiles(spark, path, c.add, readSchema, mapping = curMap), "insert", c.version))
+          else Seq(tagged(added, "insert", c.version))
         // metadata-only commits move no rows: file-preserving layout ops,
         // ALTERs (constraints, column mapping, properties), an empty
         // CREATE, and stats annotations (buildBlooms' "bloom" op
@@ -652,25 +644,17 @@ object TxStore extends TxWrites {
           val touched = dvTouchedFiles(log.fs, path, c).filter(after.files.contains)
           if (touched.isEmpty) Nil
           else {
-            val (bdv, bdvp) = restrictMarks(before.dv, before.dvp, touched)
-            val beforeMarks = dvMarks(spark, path, bdv, bdvp)
-            val (adv, advp) = restrictMarks(after.dv, after.dvp, touched)
-            val afterMarks = dvMarks(spark, path, adv, advp)
-            require(afterMarks.isDefined, s"delete-dv commit v${c.version} carries no marks")
-            val fresh = beforeMarks.map(_._1).fold(afterMarks.get._1)(b =>
-              afterMarks.get._1.join(b, Seq("__file", "__row"), "left_anti"))
-            val rows = readFiles(spark, path, touched, readSchema, withFile = true, mapping = curMap)
-              .join(fresh, Seq("__file", "__row"))
-              .drop("__file", "__row")
-            Seq(tagged(rows, "delete", c.version))
+            val stillThere = frame(after, touched, meta = Position).select(Position.map(col): _*)
+            val gone = frame(before, touched, meta = Position)
+              .join(stillThere, Position, "left_anti")
+              .drop(Position: _*)
+            Seq(tagged(gone, "delete", c.version))
           }
         case "delete" =>
           if (c.remove.isEmpty) Nil
           else {
-            val old = effective(before, c.remove)
-            val gone =
-              if (c.add.isEmpty) old
-              else old.exceptAll(readFiles(spark, path, c.add, readSchema, mapping = curMap))
+            val old = frame(before, c.remove)
+            val gone = if (c.add.isEmpty) old else old.exceptAll(added)
             Seq(tagged(gone, "delete", c.version))
           }
         // replace-where and update derive like merge: removed files'
@@ -678,29 +662,26 @@ object TxStore extends TxWrites {
         // update wave's untouched rows in a rewritten file, or a
         // restatement re-landing a row unchanged, are not changes)
         case "merge" | "replace-where" | "update" =>
-          val old = if (c.remove.isEmpty) None else Some(effective(before, c.remove))
-          val neu =
-            if (c.add.isEmpty) None else Some(readFiles(spark, path, c.add, readSchema, mapping = curMap))
+          val old = if (c.remove.isEmpty) None else Some(frame(before, c.remove))
+          val neu = if (c.add.isEmpty) None else Some(added)
           val dels = old.map(o => tagged(neu.fold(o)(o.exceptAll), "delete", c.version))
           val ins = neu.map(n => tagged(old.fold(n)(n.exceptAll), "insert", c.version))
           dels.toSeq ++ ins.toSeq
         case "overwrite" =>
           val dels =
             if (before.files.isEmpty) Nil
-            else Seq(tagged(effective(before, before.files), "delete", c.version))
-          val ins =
-            if (c.add.isEmpty) Nil
-            else Seq(tagged(readFiles(spark, path, c.add, readSchema, mapping = curMap), "insert", c.version))
+            else Seq(tagged(frame(before, before.files), "delete", c.version))
+          val ins = if (c.add.isEmpty) Nil else Seq(tagged(added, "insert", c.version))
           dels ++ ins
         // a clone's (or convert's) creating commit restates existing
         // data into a fresh table: its adds are inserts, read through
         // the commit's own restated DV marks (none for convert)
         case "clone" | "convert" =>
           if (c.add.isEmpty) Nil
-          else Seq(tagged(effective(after, c.add), "insert", c.version))
+          else Seq(tagged(frame(after, c.add), "insert", c.version))
         case "restore" =>
-          val b = if (before.files.isEmpty) None else Some(effective(before, before.files))
-          val a = if (after.files.isEmpty) None else Some(effective(after, after.files))
+          val b = if (before.files.isEmpty) None else Some(frame(before, before.files))
+          val a = if (after.files.isEmpty) None else Some(frame(after, after.files))
           val dels = b.map(bf => tagged(a.fold(bf)(bf.exceptAll), "delete", c.version))
           val ins = a.map(af => tagged(b.fold(af)(af.exceptAll), "insert", c.version))
           dels.toSeq ++ ins.toSeq
@@ -710,16 +691,8 @@ object TxStore extends TxWrites {
       }
     }
 
-    val df = parts match {
-      case Nil =>
-        val base = logicalSchema(snap) match {
-          case Some(s) =>
-            spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-          case None => spark.emptyDataFrame
-        }
-        tagged(base, "insert", snap.version)
-      case ps => ps.reduce(_.unionByName(_))
-    }
+    val df = parts.reduceOption(_.unionByName(_))
+      .getOrElse(tagged(frame(snap, Nil), "insert", snap.version))
     (snap.version, df)
   }
 
@@ -920,17 +893,13 @@ object TxStore extends TxWrites {
   }
 
   /** Read the current snapshot. */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val snap = snapshot(spark, path)
-    readSnap(spark, path, snap, snap.files)
-  }
+  def read(spark: SparkSession, path: String): DataFrame =
+    readSnap(spark, path, snapshot(spark, path))
 
   /** Read an historical snapshot — time travel, with the schema AS OF
     * that version (a later-added column does not haunt the past). */
-  def readAt(spark: SparkSession, path: String, version: Long): DataFrame = {
-    val snap = snapshotAt(spark, path, version)
-    readSnap(spark, path, snap, snap.files)
-  }
+  def readAt(spark: SparkSession, path: String, version: Long): DataFrame =
+    readSnap(spark, path, snapshotAt(spark, path, version))
 
   /** Filter-sizing helper: ~`bitsPerValue` bits per expected value per
     * file (rounded up to a 64-bit block; floor 64 Kbit). m/n ≈ 10 with
@@ -1023,9 +992,10 @@ object TxStore extends TxWrites {
   /** Stats-pruned read: `read(...).filter(predicate)` semantics, with
     * files whose logged ranges refute the predicate never entering the
     * scan (the predicate is STILL applied to the kept files — pruning is
-    * an optimization, not the filter). Complements, not replaces, the
-    * parquet row-group pushdown the scan already does: this tier skips
-    * whole files from the log before any footer is opened.
+    * an optimization, not the filter). The scan reads exactly the files
+    * [[pruneFiles]] keeps, whatever part of the predicate Spark can push
+    * into it, and its parquet reader still skips row groups: this tier
+    * skips whole files from the log before any footer is opened.
     *
     * Partition-pruning note: a file holding ONE value of a column (the
     * partitioned-write layout — e.g. range-partitioned by a low-
@@ -1047,7 +1017,7 @@ object TxStore extends TxWrites {
       spark: SparkSession, path: String, snap: Snapshot, predicate: Column): DataFrame = {
     val pred = org.apache.spark.sql.graft.ColumnBridge.expression(predicate)
     val (kept, _) = pruneSnapFiles(snap, pred)
-    readSnap(spark, path, snap, kept).filter(predicate)
+    readSnap(spark, path, restricted(snap, kept)).filter(predicate)
   }
 
   /** CONVERT an existing plain-parquet directory into a transactional

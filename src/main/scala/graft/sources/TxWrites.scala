@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, count, count_distinct, lit, not, struct, when}
+import org.apache.spark.sql.functions.{coalesce, col, count, count_distinct, lit, not, struct, substring_index, when}
 
 import java.util.UUID
 
@@ -254,21 +254,13 @@ trait TxWrites {
     Some(CommitSpec(files, inputs, snap.schema.map(encodeSchema), stats))
 
   /** The copy-on-write probe shared by delete, update and merge: the
-    * live files of `base` holding a row `select` keeps. Predicates push
-    * into the parquet scan, so row-group stats prune most files before a
-    * row is read. The probe's `__file` is the leaf name; one leaf → log
-    * name map serves every hit (one per hit would cost O(hits × live
-    * files)). */
+    * live files of `base` holding a row `select` keeps, by the probe's
+    * `_file`. Predicates push into the scan, so the log's stats and the
+    * parquet row-group stats prune most files before a row is read. */
   private def hitFiles(spark: SparkSession, path: String, base: Snapshot)(
-      select: DataFrame => DataFrame): Seq[String] = {
-    val leaves = select(readSnap(spark, path, base, base.files, withFile = true))
-      .select("__file").distinct().collect().map(_.getString(0))
-    if (leaves.isEmpty) Nil
-    else {
-      val fullName = byLeaf(base.files)
-      leaves.toSeq.map(fullName)
-    }
-  }
+      select: DataFrame => DataFrame): Seq[String] =
+    select(readSnap(spark, path, base, Seq(FileCol)))
+      .select(FileCol).distinct().collect().map(_.getString(0)).toSeq
 
   /** The exactly-once shell of appendOnce, mergeOnce and
     * mergeConditionalOnce: `write` commits under a (writerId, batchId)
@@ -453,7 +445,7 @@ trait TxWrites {
   def compact(spark: SparkSession, path: String, target: Int = 1): Option[Long] = {
     val base = snapshot(spark, path)
     if (base.files.isEmpty) return None
-    val out = readSnap(spark, path, base, base.files).repartition(target)
+    val out = readSnap(spark, path, base).repartition(target)
     stageAndCommit(toPhysical(out, base.mapping), path, "compact", NoOp(base, base.files),
       base, base.partitioning)(replacing(base.files))
   }
@@ -488,10 +480,10 @@ trait TxWrites {
     * partition-only predicate (same rule as [[compactZOrder]]);
     * directories with fewer than two candidate files are skipped
     * (rewriting one file into one file buys nothing). Bin assignment
-    * is driver-side over file metadata (file-count scale); rows route
-    * to their bin via a broadcast map on the probe `__file` leaf, so
-    * the data plane is one scoped read + one keyed exchange on the
-    * bin id. Deletion vectors on rewritten files materialize (their
+    * is driver-side over the log's file sizes (file-count scale, no
+    * listing); rows route to their bin via a broadcast map on the probe
+    * `_file`, so the data plane is one scoped read + one keyed exchange
+    * on the bin id. Deletion vectors on rewritten files materialize (their
     * marks die with the removed files, like compact). Aborts as a
     * no-op if a concurrent commit removed an input or marked one
     * (same contract as compact). Returns None when nothing qualifies. */
@@ -507,22 +499,10 @@ trait TxWrites {
     if (base.files.isEmpty) return None
     val scoped = scopedFiles(spark, path, base, where, "compactSmallFiles")
     if (scoped.isEmpty) return None
-    val f = fs(spark, path)
-    // one recursive listing: relative name -> size (file-count scale)
-    val dataDir = new Path(s"$path/$DataDir")
-    val dataQ = f.makeQualified(dataDir).toString
-    val sizes = {
-      val m = scala.collection.mutable.HashMap.empty[String, Long]
-      val it = f.listFiles(dataDir, true)
-      while (it.hasNext) {
-        val st = it.next()
-        m += st.getPath.toString.substring(dataQ.length + 1) -> st.getLen
-      }
-      m
-    }
+    val sizes = fileSizes(spark, path, base, scoped)
     def dirKey(fl: String) = if (fl.indexOf('/') < 0) "" else dirOf(fl)
     val candidates = scoped
-      .filter(fl => sizes.get(fl).exists(_ < minBytes))
+      .filter(fl => sizes(fl) < minBytes)
       .groupBy(dirKey)
       .filter(_._2.size >= 2) // a lone small file gains nothing
     if (candidates.isEmpty) return None
@@ -543,11 +523,11 @@ trait TxWrites {
     val assignment: Seq[(String, Int)] = ordered.zipWithIndex
       .flatMap { case (fls, id) => fls.map(_ -> id) }
     val inputs = assignment.map(_._1)
-    val leafBin = {
+    val fileBin = {
       import spark.implicits._
-      assignment.map { case (fl, b) => (leafOf(fl), b) }.toDF("__file", "__bin")
+      assignment.toDF(FileCol, "__bin")
     }
-    val pre = readSnap(spark, path, base, inputs, withFile = true)
+    val pre = readSnap(spark, path, restricted(base, inputs), Seq(FileCol))
     require(!pre.columns.contains("__bin"),
       "table must not carry the reserved __bin column")
     // Rows route to bins through an EXACT integer partitioner on the
@@ -558,11 +538,11 @@ trait TxWrites {
     // of an op whose point is IO-proportional-to-small-files). The
     // RDD hop costs codegen on a pure IO-bound rewrite — the one
     // place imperative partitioning is the honest tool.
-    // __file/__row ride in from the withFile probe and must not reach
-    // the staged parquet (phantom physical columns).
+    // the probe's _file must not reach the staged parquet (a phantom
+    // physical column)
     val joined = pre
-      .join(org.apache.spark.sql.functions.broadcast(leafBin), "__file")
-      .drop("__file", "__row")
+      .join(org.apache.spark.sql.functions.broadcast(fileBin), FileCol)
+      .drop(FileCol)
     val binIdx = joined.columns.indexOf("__bin")
     val outSchema = org.apache.spark.sql.types.StructType(
       joined.schema.fields.filterNot(_.name == "__bin"))
@@ -609,7 +589,7 @@ trait TxWrites {
     // file rewrite.
     val inputs = scopedFiles(spark, path, base, where, "compactZOrder")
     if (inputs.isEmpty) return None
-    val df = readSnap(spark, path, base, inputs)
+    val df = readSnap(spark, path, restricted(base, inputs))
     require(!df.columns.contains("__z"), "table must not carry the reserved __z column")
     // persisted: the keyed frame feeds both the range-sampling and the
     // write pass (see the s24 lane note). DISK_ONLY (r18): the frame is
@@ -872,7 +852,7 @@ trait TxWrites {
     if (hit.isEmpty) return None
     // reading THROUGH the vectors: the rewrite also materializes any
     // deletion vectors on the hit files (their marks die with the files)
-    val kept = readSnap(spark, path, base, hit).filter(not(predicate <=> lit(true)))
+    val kept = readSnap(spark, path, restricted(base, hit)).filter(not(predicate <=> lit(true)))
     stageAndCommit(toPhysical(kept, base.mapping), path, "delete", Loud(base, hit),
       base, base.partitioning)(replacing(hit))
   }
@@ -906,7 +886,7 @@ trait TxWrites {
     if (base.files.isEmpty) return None
     val hit = hitFiles(spark, path, base)(_.filter(predicate))
     if (hit.isEmpty) return None
-    val cur = readSnap(spark, path, base, hit)
+    val cur = readSnap(spark, path, restricted(base, hit))
     val missing = set.keys.filterNot(cur.columns.contains)
     require(missing.isEmpty,
       s"UPDATE may only SET existing columns; missing: ${missing.mkString(", ")}")
@@ -936,13 +916,13 @@ trait TxWrites {
   /** Merge-on-read DELETE via DELETION VECTORS — the selective-delete
     * path where [[delete]]'s copy-on-write is the wrong trade: removing
     * three rows from a 1 GB file should cost one tiny log entry, not a
-    * 1 GB rewrite. The probe finds matching (file, row position) pairs
-    * through the scan's `_metadata.row_index`; the commit marks them
-    * deleted; every read path anti-joins the marks out (readFiles).
-    * Rewrites RETIRE vectors — compact/delete/merge read through them
-    * and their replacement files carry none — so vectors never outlive
-    * the files they annotate, and a periodic compact bounds read-side
-    * anti-join work exactly as in Delta's DV design.
+    * 1 GB rewrite. The probe finds matching (`_file`, `_row_index`)
+    * pairs through the scan; the commit marks them deleted; the scan's
+    * reader skips marked positions on every read. Rewrites RETIRE
+    * vectors — compact/delete/merge read through them and their
+    * replacement files carry none — so vectors never outlive the files
+    * they annotate, and a periodic compact bounds read-side mark work
+    * exactly as in Delta's DV design.
     *
     * Mark-set size: up to `inlineDvRows` positions travel INLINE in the
     * commit line; bigger mark sets ride a compressed (delta-varint)
@@ -969,18 +949,17 @@ trait TxWrites {
       inlineDvRows: Int = 10000): Option[Long] = {
     val base = snapshot(spark, path)
     if (base.files.isEmpty) return None
-    val hits = readSnap(spark, path, base, base.files, withFile = true)
+    val hits = readSnap(spark, path, base, Position)
       .filter(predicate <=> lit(true))
-      .select(col("__file"), col("__row"))
+      .select(Position.map(col): _*)
       .collect()
     if (hits.isEmpty) return None
     require(hits.length <= maxDvRows,
       s"deleteVectored matched ${hits.length} rows (> maxDvRows = $maxDvRows) — " +
         "a delete this bulky should not collect to the driver: use " +
         "deleteVectoredBulk() (distributed vectors) or delete() (copy-on-write)")
-    val fullName = byLeaf(base.files) // probe __file is the leaf name
     val marks: Map[String, Seq[Long]] =
-      hits.groupBy(r => fullName(r.getString(0)))
+      hits.groupBy(_.getString(0))
         .view.mapValues(_.map(_.getLong(1)).toSeq.sorted).toMap
     val f = fs(spark, path)
     // the marks don't depend on the snapshot — one sidecar serves every
@@ -1008,18 +987,17 @@ trait TxWrites {
     * collects; this op's probe writes), and the commit references the
     * dir through a text sidecar that lists WHICH data files the marks
     * cover — file-LEVEL metadata, so log replay stays driver-cheap and
-    * never opens the parquet. Reads union the dir into the same
-    * (file, row) anti-join as inline marks, restricted per the ref map
-    * (so marks retired by a rewrite can never re-apply to a
-    * restore-re-added file). This is the Delta production DV shape:
-    * vector payloads are data-plane files, the log carries references.
+    * never opens the parquet. The scan's reader loads the dir's marks
+    * for the files the ref map still lists (so marks retired by a
+    * rewrite can never re-apply to a restore-re-added file). This is
+    * the Delta production DV shape: vector payloads are data-plane
+    * files, the log carries references.
     *
     * Trade vs [[deleteVectored]]: a billion-mark delete costs one
     * distributed parquet write and a file-level collect of the touched
-    * file NAMES; the read-side anti-join is no longer a guaranteed
-    * broadcast (AQE decides from the marks' actual size). For
-    * small/selective deletes the inline path remains the better plan —
-    * one log line, broadcast anti-join, no extra file IO per read.
+    * file NAMES; every read task of a marked file then reads the dir.
+    * For small/selective deletes the inline path remains the better
+    * plan — one log line, no extra file IO per read.
     *
     * Same SQL DELETE NULL semantics, same write-serializable conflict
     * rules (marked files must still be live at commit; rewrites detect
@@ -1034,15 +1012,16 @@ trait TxWrites {
     val f = fs(spark, path)
     val dir = s"${UUID.randomUUID()}.dvpq"
     val dirPath = sidecarPath(path, dir)
-    readSnap(spark, path, base, base.files, withFile = true)
+    // the marks keep the sidecar format: (leaf file name, row index)
+    readSnap(spark, path, base, Position)
       .filter(predicate <=> lit(true))
-      .select(col("__file"), col("__row"))
+      .select(substring_index(col(FileCol), "/", -1).as("__file"), col(Position(1)).as("__row"))
       .write.parquet(dirPath.toString)
     // file-LEVEL collect: which data files carry marks (bounded by the
     // snapshot's file count, never by row count)
-    val fullName = byLeaf(base.files) // the parquet marks carry leaf names
-    val marked = spark.read.schema("__file STRING, __row BIGINT").parquet(dirPath.toString)
-      .select("__file").distinct().collect().map(r => fullName(r.getString(0))).toSeq.sorted
+    val leaves = spark.read.schema("__file STRING, __row BIGINT").parquet(dirPath.toString)
+      .select("__file").distinct().collect().map(_.getString(0)).toSet
+    val marked = base.files.filter(f => leaves(leafOf(f))).sorted
     if (marked.isEmpty) {
       f.delete(dirPath, true)
       return None
@@ -1064,8 +1043,7 @@ trait TxWrites {
   /** Keyed MERGE (upsert): rows of `updates` replace current rows with the
     * same key; keys not present insert. Same copy-on-write shape as
     * [[delete]]: a distributed semi-join probe finds the files holding a
-    * matching key (the file identity is captured AT the scan via
-    * `_metadata.file_name` — see readFiles — so it survives the join),
+    * matching key (the scan's `_file` column survives the join),
     * then only those files are rewritten: it is [[mergeClauses]] with
     * `WHEN MATCHED THEN UPDATE SET *` and `WHEN NOT MATCHED THEN INSERT *`,
     * so every target row sharing a key takes that key's source row.
@@ -1292,7 +1270,7 @@ trait TxWrites {
           // unmatched — keyHit empty means no file holds a matching key)
           (None, insertFrames(src))
         } else {
-          val cur = readSnap(spark, path, base, hit)
+          val cur = readSnap(spark, path, restricted(base, hit))
           val tgtCols = cur.columns.toSeq
           val tgt = cur.alias("t")
           val keyEq = keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)

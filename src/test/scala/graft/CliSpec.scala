@@ -400,10 +400,41 @@ class CliSpec extends SparkSpec {
         "tx" -> s"rtx=$table", "sql" -> "SELECT event_id FROM rtx WHERE event_id <= 100"))
     }
     val lines = stdout.toString.linesIterator.filter(_.startsWith("[graft] sql scan")).toSeq
-    assert(lines === Seq(s"[graft] sql scan on 'default.rtx' @v1: skipped ${skipped.size} of " +
+    assert(lines === Seq(s"[graft] sql scan on 'rtx' @v1: skipped ${skipped.size} of " +
       s"${kept.size + skipped.size} files from log metadata"), stdout.toString)
     assert(spark.read.parquet(s"$out/sql_result").count() ===
       graft.sources.TxStore.read(spark, table).filter(col("event_id") <= 100L).count())
+  }
+
+  test("sql step: the pruning line reports the scan that ran, runtime filters included") {
+    val dir = tmp()
+    val (fact, dim) = (s"$dir/fact", s"$dir/dim")
+    // fact partitioned by region, one file each; only regions 6 and 7
+    // survive the dim's filter, which prunes fact files at execution
+    graft.sources.TxStore.append((0 until 800).map(i => (i.toLong, i % 8, i * 2.0))
+      .toDF("order_id", "region_id", "amount"), fact, partitionBy = Seq("region_id"))
+    graft.sources.TxStore.append((0 until 8).map(i => (i, if (i >= 6) "keep" else "drop"))
+      .toDF("r_id", "flag"), dim)
+    val tx = s"fact=$fact,dim=$dim"
+    val sql = "SELECT /*+ BROADCAST(d) */ f.order_id, f.amount FROM fact f " +
+      "JOIN dim d ON f.region_id = d.r_id WHERE d.flag = 'keep'"
+    val df = graft.sources.TxCatalog.session(spark, graft.sources.TxCatalog.parse(spark, tx)).sql(sql)
+    assert(df.collect().length === 200)
+    val planned = graft.sources.GraftScan.planned(df)
+    val factScan = planned.find(_.runtimeFilterCount > 0)
+      .getOrElse(fail(s"no runtime filter reached the fact scan: $planned"))
+    assert(factScan.skipped.nonEmpty, s"the runtime filter must prune fact files: $factScan")
+    def line(name: String, p: graft.sources.GraftScan.Planned) =
+      s"[graft] sql scan on '$name' @v${p.version}: skipped ${p.skipped.size} of " +
+        s"${p.kept.size + p.skipped.size} files from log metadata"
+    val want = planned.map(p => line(if (p eq factScan) "fact" else "dim", p)).toSet
+    val stdout = new java.io.ByteArrayOutputStream()
+    Console.withOut(stdout) {
+      Main.run(spark, Map("step" -> "sql", "data-dir" -> sf("sf0.001"), "out-dir" -> tmp(),
+        "tx" -> tx, "sql" -> sql))
+    }
+    val lines = stdout.toString.linesIterator.filter(_.startsWith("[graft] sql scan")).toSet
+    assert(lines === want, stdout.toString)
   }
 
   test("sql step: tx reads prune files from log metadata; VERSION/TIMESTAMP AS OF syntax") {

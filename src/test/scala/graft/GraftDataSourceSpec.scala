@@ -4,8 +4,9 @@ import graft.sources.{GraftScan, TxStore}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The DataSource v2 provider: `spark.read.format("graft")` must read
-  * byte-identically to the TxStore v1 API across every table shape
+/** The DataSource v2 provider: `spark.read.format("graft")` and the
+  * TxStore API, which plans the same scan, must return the rows an
+  * oracle outside graft's reader computes across every table shape
   * (flat, partitioned, column-mapped, deletion-vectored), prune files
   * inside Catalyst from the SAME log walk `readWhere` uses, and accept
   * runtime (dynamic-pruning) filters at execution start. */
@@ -28,12 +29,20 @@ class GraftDataSourceSpec extends SparkSpec {
     planned.head
   }
 
-  /** Order-insensitive frame comparison by aligned column names. */
-  private def assertSame(got: DataFrame, want: DataFrame): Unit = {
-    val cols = want.columns.sorted.toSeq
-    val g = got.select(cols.map(col): _*).collect().map(_.toSeq).sortBy(_.mkString("|"))
-    val w = want.select(cols.map(col): _*).collect().map(_.toSeq).sortBy(_.mkString("|"))
-    assert(g.toSeq === w.toSeq)
+  /** Order-insensitive comparison of a frame's rows, in its column
+    * order, with expected rows. */
+  private def assertRows(got: DataFrame, want: Seq[Seq[Any]]): Unit = {
+    def sorted(rs: Seq[Seq[Any]]) = rs.sortBy(_.mkString("|"))
+    assert(sorted(got.collect().map(_.toSeq).toSeq) === sorted(want))
+  }
+
+  /** The (id, payload) rows [[rows]] writes. */
+  private def expected(ids: Seq[Int]): Seq[Seq[Any]] = ids.map(i => Seq(i.toLong, s"v$i"))
+
+  /** Both reads of `t` — the v2 source and TxStore's — hold `want`. */
+  private def assertReads(t: String, want: Seq[Seq[Any]]): Unit = {
+    assertRows(v2(t), want)
+    assertRows(TxStore.read(spark, t), want)
   }
 
   test("v2 read round-trips a flat table; schema is the log schema") {
@@ -42,7 +51,7 @@ class GraftDataSourceSpec extends SparkSpec {
     TxStore.append(rows(5, from = 10), t)
     val df = v2(t)
     assert(df.schema.fieldNames.toSeq === Seq("id", "payload"))
-    assertSame(df, TxStore.read(spark, t))
+    assertReads(t, expected(0 until 15))
     assert(df.count() === 15) // empty-projection scan (count star)
   }
 
@@ -60,7 +69,8 @@ class GraftDataSourceSpec extends SparkSpec {
       s"v2 kept ${ev.kept.size} files, readWhere kept ${keptV1.size}")
     assert(ev.skipped.toSet === skippedV1.toSet)
     assert(ev.skipped.nonEmpty, "the fixture must actually skip files")
-    assertSame(v2(t).filter(pred), TxStore.readWhere(spark, t, pred))
+    assertRows(v2(t).filter(pred), expected(250 until 320))
+    assertRows(TxStore.readWhere(spark, t, pred), expected(250 until 320))
   }
 
   test("v2 reads a hive-partitioned table with typed partition values") {
@@ -71,7 +81,9 @@ class GraftDataSourceSpec extends SparkSpec {
     // partition columns surface LAST in the v2 schema (hive layout)
     assert(got.schema.fieldNames.toSeq.sorted === Seq("id", "payload", "shard"))
     assert(got.schema("shard").dataType === org.apache.spark.sql.types.IntegerType)
-    assertSame(got, TxStore.read(spark, t))
+    val want = (0 until 40).map(i => Seq(i.toLong, i % 4, s"p$i"))
+    assertRows(got.select("id", "shard", "payload"), want)
+    assertRows(TxStore.read(spark, t).select("id", "shard", "payload"), want)
     // a partition predicate prunes to that partition's files only
     val shard2 = v2(t).filter(col("shard") === 2)
     assert(shard2.collect().length === 10)
@@ -99,14 +111,14 @@ class GraftDataSourceSpec extends SparkSpec {
     val got = v2(t)
     assert(got.count() === 90)
     assert(got.filter(col("id") % 10 === 3L).count() === 0)
-    assertSame(got, TxStore.read(spark, t))
+    assertReads(t, expected((0 until 100).filter(_ % 10 != 3)))
   }
 
   test("v2 applies parquet-vectored (sidecar) deletion vectors executor-side") {
     val t = tmpDir()
     TxStore.append(rows(200).repartition(2), t)
     TxStore.deleteVectoredBulk(spark, t, col("id") >= 150L)
-    assertSame(v2(t), TxStore.read(spark, t))
+    assertReads(t, expected(0 until 150))
     assert(v2(t).count() === 150)
   }
 
@@ -117,7 +129,7 @@ class GraftDataSourceSpec extends SparkSpec {
     TxStore.renameColumn(spark, t, "payload", "note")
     val got = v2(t)
     assert(got.schema.fieldNames.toSeq === Seq("id", "note"))
-    assertSame(got, TxStore.read(spark, t))
+    assertReads(t, expected(0 until 300))
     val one = v2(t).filter(col("id") === 250L)
     assert(one.collect().length === 1)
     val ev = scanOf(one)
@@ -487,17 +499,17 @@ class GraftDataSourceSpec extends SparkSpec {
       "a DATE group key must refuse the metadata pushdown")
   }
 
-  test("v1 and v2 reads agree on COLUMN ORDER for partitioned tables") {
+  test("reads keep the declared COLUMN ORDER for partitioned tables") {
     val t = tmpDir()
     // partition column declared FIRST — the parquet factory emits it
     // last; the reorder wrapper must restore the declared order
     val df = Seq((0, 1L, "a"), (1, 2L, "b"), (0, 3L, "c")).toDF("part", "id", "payload")
     TxStore.append(df, t, partitionBy = Seq("part"))
     assert(v2(t).columns.toSeq === Seq("part", "id", "payload"))
-    assert(v2(t).columns.toSeq === TxStore.read(spark, t).columns.toSeq)
-    // positional consumers see identical rows in identical order of fields
-    assert(v2(t).collect().map(_.toSeq).toSet ===
-      TxStore.read(spark, t).collect().map(_.toSeq).toSet)
+    assert(TxStore.read(spark, t).columns.toSeq === Seq("part", "id", "payload"))
+    // positional consumers see the declared order of fields
+    val want = Seq(Seq(0, 1L, "a"), Seq(1, 2L, "b"), Seq(0, 3L, "c"))
+    assertReads(t, want)
     // a projection keeps ITS order, wherever the partition column sits
     assert(v2(t).select("payload", "part", "id").columns.toSeq ===
       Seq("payload", "part", "id"))
@@ -506,7 +518,110 @@ class GraftDataSourceSpec extends SparkSpec {
     // deletion-vector path reorders too (row-based reader)
     TxStore.deleteVectored(spark, t, col("id") === 2L)
     assert(v2(t).columns.toSeq === Seq("part", "id", "payload"))
-    assert(v2(t).collect().map(_.toSeq).toSet ===
-      TxStore.read(spark, t).collect().map(_.toSeq).toSet)
+    assertReads(t, want.filterNot(_(1) == 2L))
+  }
+
+  /** The rows a read of `t` at `version` must return, computed without
+    * graft's reader: a raw parquet read of the snapshot's live files
+    * under the log schema, the marked positions removed here, and the
+    * physical columns named as the column mapping says. */
+  private def oracle(t: String, version: Long): Seq[Seq[Any]] = {
+    val snap = TxStore.snapshotAt(spark, t, version)
+    val phys = snap.schema.get
+    def leaf(f: String) = f.substring(f.lastIndexOf('/') + 1)
+    val raw = spark.read.schema(phys).option("basePath", s"$t/data")
+      .parquet(snap.files.map(f => s"$t/data/$f"): _*)
+      .select(phys.fieldNames.toSeq.map(col) ++ Seq(
+        col("_metadata.file_name").as("leaf"), col("_metadata.row_index").as("pos")): _*)
+      .collect()
+    val inline = snap.dv.toSeq.flatMap { case (f, ps) => ps.map(p => (leaf(f), p)) }
+    val sidecar = snap.dvp.toSeq.flatMap { case (f, dirs) =>
+      dirs.flatMap(d => spark.read.parquet(s"$t/_txlog/_sidecar/$d")
+        .filter(col("__file") === leaf(f)).collect().map(r => (r.getString(0), r.getLong(1))))
+    }
+    val marked = (inline ++ sidecar).toSet
+    val physOrder = if (snap.mapping.isEmpty) phys.fieldNames.toSeq else snap.mapping.map(_._2)
+    raw.toSeq.filterNot(r => marked((r.getAs[String]("leaf"), r.getAs[Long]("pos"))))
+      .map(r => physOrder.map(r.getAs[Any]))
+  }
+
+  /** Run `df`, then check that each graft scan in its executed plan
+    * reports the four scan metrics, the kept count its own record's. */
+  private def assertScanMetrics(df: DataFrame): Unit = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    df.collect()
+    val scans = new AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(df.queryExecution.executedPlan) {
+        case b: BatchScanExec if b.scan.isInstanceOf[GraftScan] => b
+      }
+    assert(scans.nonEmpty, s"no graft scan in\n${df.queryExecution.executedPlan}")
+    scans.foreach { b =>
+      val keys = Seq("filesKept", "filesSkipped", "runtimeFilters", "aggregatePushed")
+      assert(keys.forall(b.metrics.contains), s"metrics ${b.metrics.keys}")
+      assert(b.metrics("filesKept").value ===
+        b.scan.asInstanceOf[GraftScan].planned.kept.size.toLong)
+    }
+  }
+
+  test("two reads of one TxStore frame plan equal scans, so the plan reuses their exchange") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val t = tmpDir()
+    TxStore.append(rows(100).repartition(4), t)
+    val r = TxStore.read(spark, t)
+    val byKey = r.groupBy((col("id") % 10).as("k")).count()
+    val both = byKey.union(byKey)
+    assert(both.collect().length === 20)
+    val reused = new AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(both.queryExecution.executedPlan) { case e: ReusedExchangeExec => e }
+    assert(reused.nonEmpty, s"no reused exchange in\n${both.queryExecution.executedPlan}")
+  }
+
+  test("TxStore reads of a marked, partitioned, column-mapped table equal a raw-parquet oracle") {
+    val t = tmpDir()
+    def part(n: Int, from: Int) =
+      (from until from + n).map(i => (i.toLong, s"v$i", s"p${i % 3}")).toDF("id", "payload", "bucket")
+    TxStore.append(part(60, 0), t, partitionBy = Seq("bucket")) // v1
+    TxStore.append(part(40, 60), t) // v2
+    TxStore.renameColumn(spark, t, "payload", "note") // v3
+    TxStore.deleteVectored(spark, t, col("id") % 7 === 0L) // v4: inline marks
+    TxStore.deleteVectoredBulk(spark, t, col("id") >= 80L) // v5: parquet marks
+    TxStore.append(part(10, 100).withColumnRenamed("payload", "note"), t) // v6
+    val snap = TxStore.snapshot(spark, t)
+    assert(snap.version === 6L && snap.dv.nonEmpty && snap.dvp.nonEmpty && snap.mapping.nonEmpty)
+    val cols = Seq("id", "note", "bucket")
+
+    val now = TxStore.read(spark, t)
+    assertRows(now.select(cols.map(col): _*), oracle(t, 6))
+    assertScanMetrics(now)
+    val v2Read = TxStore.readAt(spark, t, 2)
+    assertRows(v2Read.select("id", "payload", "bucket"), oracle(t, 2))
+    assertScanMetrics(v2Read)
+    val v5Read = TxStore.readAt(spark, t, 5)
+    assertRows(v5Read.select(cols.map(col): _*), oracle(t, 5))
+    assertScanMetrics(v5Read)
+
+    val pred = col("id") < 40L && col("bucket") === "p1"
+    val where = TxStore.readWhere(spark, t, pred)
+    assertRows(where.select(cols.map(col): _*),
+      oracle(t, 6).filter(r => r(0).asInstanceOf[Long] < 40L && r(2) == "p1"))
+    assertScanMetrics(where)
+    val (_, kept, _) = TxStore.pruneFiles(spark, t, pred)
+    assert(GraftScan.planned(where).flatMap(_.kept).toSet === kept.toSet,
+      "readWhere reads exactly the files pruneFiles keeps")
+
+    // each commit's change rows: what left the oracle, what joined it
+    def diff(a: Seq[Seq[Any]], b: Seq[Seq[Any]]): Seq[Seq[Any]] =
+      b.foldLeft(a)((rest, r) => rest.diff(Seq(r)))
+    for (v <- Seq(4L, 5L, 6L)) {
+      val changes = TxStore.readChangesBetween(spark, t, v - 1, v)
+      val (before, after) = (oracle(t, v - 1), oracle(t, v))
+      assertRows(changes.filter(col("_change_type") === "delete").select(cols.map(col): _*),
+        diff(before, after))
+      assertRows(changes.filter(col("_change_type") === "insert").select(cols.map(col): _*),
+        diff(after, before))
+      assertScanMetrics(changes)
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.sources.TxStore
-import org.apache.hadoop.fs.{FileStatus, FilterFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileStatus, FilterFileSystem, LocatedFileStatus, Path, RawLocalFileSystem, RemoteIterator}
 import org.apache.spark.sql.functions._
 
 import java.io.IOException
@@ -76,6 +76,44 @@ object FaultFs {
     p.getParent != null && p.getParent.getName == "_txlog" && p.getName.matches("\\d{20}\\.json")
 }
 
+/** A local filesystem under the `countfs` scheme that records every
+  * directory it lists. Rename refuses an existing destination, as
+  * HDFS's does. */
+class CountFs extends FilterFileSystem(new CountFs.Raw) {
+  override def getScheme: String = "countfs"
+
+  private def seen(p: Path): Unit = CountFs.listed.add(p.toUri.getPath.stripSuffix("/")): Unit
+
+  override def listStatus(p: Path): Array[FileStatus] = { seen(p); super.listStatus(p) }
+  override def listStatusIterator(p: Path): RemoteIterator[FileStatus] = {
+    seen(p); super.listStatusIterator(p)
+  }
+  override def listLocatedStatus(p: Path): RemoteIterator[LocatedFileStatus] = {
+    seen(p); super.listLocatedStatus(p)
+  }
+  override def listFiles(p: Path, recursive: Boolean): RemoteIterator[LocatedFileStatus] = {
+    seen(p); super.listFiles(p, recursive)
+  }
+  override def rename(src: Path, dst: Path): Boolean = !exists(dst) && super.rename(src, dst)
+}
+
+object CountFs {
+  /** The local filesystem under the `countfs` name, with plain statuses
+    * (see [[FaultFs.Raw]]). */
+  final class Raw extends RawLocalFileSystem {
+    override def getUri: URI = URI.create("countfs:///")
+    override def getScheme: String = "countfs"
+    private def plain(s: FileStatus) = new FileStatus(
+      s.getLen, s.isDirectory, s.getReplication, s.getBlockSize, s.getModificationTime, s.getPath)
+    override def getFileStatus(p: Path): FileStatus = plain(super.getFileStatus(p))
+    override def getFileLinkStatus(p: Path): FileStatus = plain(super.getFileLinkStatus(p))
+    override def listStatus(p: Path): Array[FileStatus] = super.listStatus(p).map(plain)
+  }
+
+  /** The paths listed so far. */
+  val listed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+}
+
 /** TxStore's commit path under publication faults, through the renaming
   * log store a non-local filesystem gets: lost races retry at the next
   * version, a livelock names its op and table, and a put that fails
@@ -85,6 +123,7 @@ class LogStoreFaultSpec extends SparkSpec {
   import spark.implicits._
 
   spark.sparkContext.hadoopConfiguration.set("fs.faultfs.impl", classOf[FaultFs].getName)
+  spark.sparkContext.hadoopConfiguration.set("fs.countfs.impl", classOf[CountFs].getName)
 
   private def table(): String =
     s"faultfs://${Files.createTempDirectory("graft-logstore")}/t"
@@ -167,5 +206,42 @@ class LogStoreFaultSpec extends SparkSpec {
     assert(armed(FaultFs.applied, 1)(TxStore.append(rows(3, from = 6), t)) === 2L)
     assert(contents(t) === (0 until 9).map(i => (i.toLong, s"v$i")).toSet)
     assert(TxStore.vacuum(spark, t, ageGraceMs = 0) === 0)
+  }
+
+  test("compactSmallFiles sizes its bins from the log and never lists data/") {
+    val dir = Files.createTempDirectory("graft-countfs").toString
+    val t = s"countfs://$dir/t"
+    // six small files of distinct sizes; one written without stats, so
+    // its size comes from the file's own status
+    val batches = Seq(3, 9, 14, 20, 27, 35)
+    batches.zipWithIndex.foreach { case (n, i) =>
+      TxStore.append(rows(n, from = i * 100).repartition(1), t, collectStats = i != 2)
+    }
+    val snap = TxStore.snapshot(spark, t)
+    val size = snap.files.map(f => f -> new java.io.File(s"$dir/t/data/$f").length).toMap
+    val floor = size.values.max + 1
+    val target = floor * 2
+    // first-fit-decreasing over the on-disk sizes, in log order
+    val bins = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[String])]
+    snap.files.sortBy(f => -size(f)).foreach { f =>
+      bins.indexWhere(_._1 + size(f) <= target) match {
+        case -1 => bins += ((size(f), Seq(f)))
+        case i => bins(i) = (bins(i)._1 + size(f), bins(i)._2 :+ f)
+      }
+    }
+    assert(bins.size > 1, "the fixture must pack more than one bin")
+    def idsByFile(): Map[String, Set[Long]] =
+      spark.read.format("graft").load(t).select("_file", "id").as[(String, Long)].collect()
+        .groupBy(_._1).map { case (f, rs) => f -> rs.map(_._2).toSet }
+    val before = idsByFile()
+
+    CountFs.listed.clear()
+    assert(TxStore.compactSmallFiles(spark, t, targetBytes = target, minBytes = floor).isDefined)
+    val data = s"$dir/t/data"
+    assert(!CountFs.listed.contains(data), s"data/ was listed: ${CountFs.listed}")
+    // each packed file holds exactly one bin's rows
+    val packed = idsByFile()
+    assert(TxStore.history(spark, t).last.remove.toSet === snap.files.toSet)
+    assert(packed.values.toSet === bins.map(_._2.flatMap(before).toSet).toSet)
   }
 }

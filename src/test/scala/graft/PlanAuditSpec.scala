@@ -210,7 +210,12 @@ class PlanAuditSpec extends SparkSpec {
       // scan + projection, zero exchanges, same class as s40
       "s42_tx_replace_where" -> 0,
       "s43_tx_partitioned_optimize" -> 0,
-      "s44_tx_small_file_compact" -> 0)
+      "s44_tx_small_file_compact" -> 0,
+      // deletion-vector readbacks: the scan's reader skips marked
+      // positions, so no mark join (and no exchange) is planned
+      "s25_tx_delete_dv" -> 0,
+      "s30_tx_delete_dv_sidecar" -> 0,
+      "s31_tx_delete_dv_distributed" -> 0)
     val measured = bounds.toSeq.sortBy(_._1).map { case (name, maxShuffles) =>
       val df = SparkEntry.queries(name)(spark, sf("sf0.001"))
       df.collect() // finalize the AQE plan

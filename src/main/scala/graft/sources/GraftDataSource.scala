@@ -1149,8 +1149,11 @@ final class GraftScan(
     override val numRows: java.util.OptionalLong = java.util.OptionalLong.of(n.toLong)
   } else new Statistics {
     private val (pushedKept, _, sizes) = pushedPlan
-    override val sizeInBytes: java.util.OptionalLong =
-      java.util.OptionalLong.of(sizes.valuesIterator.sum)
+    // scaled to the columns read, as Spark's own file scans estimate, so
+    // a key-only read of a table weighs what it costs in a join
+    override val sizeInBytes: java.util.OptionalLong = java.util.OptionalLong.of(
+      if (table.logical.isEmpty) sizes.valuesIterator.sum
+      else (BigInt(sizes.valuesIterator.sum) * required.defaultSize / table.logical.defaultSize).toLong)
     override val numRows: java.util.OptionalLong =
       TxStats.fileRowTotal(snap, pushedKept) match {
         // inline dv marks are exact deletions — but only marks ON THE

@@ -617,7 +617,8 @@ object TxStore extends TxWrites {
     // in, and under its deletion marks unless the files were just added.
     def frame(at: Snapshot, files: Seq[String], marked: Boolean = true,
         meta: Seq[String] = Nil): DataFrame = {
-      val era = if (marked) restricted(at, files) else at.copy(files = files, dv = Map.empty, dvp = Map.empty)
+      val era =
+        if (marked) restricted(at, files) else at.copy(files = files, dv = Map.empty, dvp = Map.empty)
       readSnap(spark, path, era.copy(schema = snap.schema, mapping = snap.mapping), meta)
     }
     def tagged(df: DataFrame, tpe: String, v: Long): DataFrame =

@@ -2239,8 +2239,8 @@ class TxStoreSpec extends SparkSpec {
     assert(TxStore.read(spark, t).as[(Long, String, String)].collect().toSet ===
       (0 until 120).map(i => (i.toLong, s"v$i", s"p${i % 3}")).toSet,
       "pure physical rewrite")
-    // …pure at the BYTE level too: the withFile routing's __file/__row
-    // probe columns must not leak into the staged parquet
+    // …pure at the BYTE level too: the bin routing's _file probe column
+    // must not leak into the staged parquet
     val rawCols = spark.read.parquet(s"$t/data/${after.files.head}").columns.toSet
     assert(rawCols === Set("id", "payload"),
       s"packed files must carry exactly the data columns, got $rawCols")

@@ -210,8 +210,10 @@ object Main {
             ran.forEach(qe => GraftScan.named(qe).foreach { case (id, p) =>
               val name = written.find(w => lc(id).endsWith(lc(w))).getOrElse(id)
               println(s"[graft] sql scan on '${name.map(QuotingUtils.quoteIfNeeded).mkString(".")}' " +
-                s"@v${p.version}: skipped ${p.skipped.size} of ${p.kept.size + p.skipped.size} " +
-                "files from log metadata")
+                s"@v${p.version}: " + (
+                  if (p.aggregatePushed) "aggregate answered from log metadata, no file read"
+                  else s"skipped ${p.skipped.size} of ${p.kept.size + p.skipped.size} " +
+                    "files from log metadata"))
             })
             println(s"[graft] sql -> $result")
         }

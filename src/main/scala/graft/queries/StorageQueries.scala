@@ -1408,17 +1408,17 @@ object StorageQueries {
       bench = true),
 
     // ── S48 — STREAMING CDF FOLLOW: a TxStore table as a STREAMING
-    //    SOURCE (Delta's readStream-on-a-table). The commit log is the
-    //    stream — Spark's file source checkpoints which commit files
-    //    each micro-batch saw — and each batch derives its versions'
-    //    row-level changes from the table's own parquet
-    //    (readChangesBetween) into a history sink via exactly-once
-    //    stamped appends. TWO drains: the first moves v1 (the initial
-    //    snapshot as the inserts it was), the second resumes from the
-    //    stream checkpoint and moves ONLY v2 (a copy-on-write delete →
-    //    delete rows). The REQUIRE pins stream ≡ batch CDC; the oracle
-    //    pins the full change history exactly: inserts = the even-id
-    //    half at v1, deletes = the %4 rows at v2.
+    //    SOURCE (Delta's readStream-on-a-table) through
+    //    StreamingCdf.follow — graft's change-feed source, whose offset
+    //    is the commit version and whose batches are readChangesBetween's
+    //    row-level changes, into graft's sink, exactly-once by stamped
+    //    appends (s59 wires the same pieces by hand). TWO drains: the
+    //    first moves v1 (the initial snapshot as the inserts it was),
+    //    the second resumes from the stream checkpoint and moves ONLY v2
+    //    (a copy-on-write delete → delete rows). The REQUIRE pins
+    //    stream ≡ batch CDC; the oracle pins the full change history
+    //    exactly: inserts = the even-id half at v1, deletes = the %4
+    //    rows at v2.
     QueryDef(
       "s48_tx_cdf_follow",
       (s, d) => {

@@ -175,7 +175,8 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     new graft.streaming.GraftCdfSource(
       sqlContext.sparkSession,
       streamPath(parameters),
-      param(parameters, "startingVersion").map(_.trim.toLong).getOrElse(0L))
+      param(parameters, "startingVersion").map(_.trim.toLong).getOrElse(0L),
+      metadataPath)
 
   // ── streaming SINK: `writeStream.format("graft")` — each micro-batch
   // lands as ONE idempotent commit through TxStore.appendOnce, stamped
@@ -1110,11 +1111,14 @@ final class GraftScan(
       new GenericInternalRow(values ++ meta)
     }
 
-  // deletion marks and row positions need the row-based reader
-  private def rowBased: Boolean = snap.dv.nonEmpty || snap.dvp.nonEmpty || rowIndex.isDefined
+  // deletion marks and row positions need the row-based reader; only
+  // marks on the pushed-pruned files count (runtime filters keep a
+  // subset of them), so a mark elsewhere leaves this scan columnar
+  private lazy val rowBased: Boolean = rowIndex.isDefined ||
+    pushedPlan._1.exists(f => snap.dv.contains(f) || snap.dvp.contains(f))
 
   override def columnarSupportMode(): Scan.ColumnarSupportMode =
-    if (rowBased || pushedAgg.isDefined) Scan.ColumnarSupportMode.UNSUPPORTED
+    if (pushedAgg.isDefined || rowBased) Scan.ColumnarSupportMode.UNSUPPORTED
     else Scan.ColumnarSupportMode.PARTITION_DEFINED
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -7,7 +7,7 @@ import java.util.UUID
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileStatus, FileSystem, Path}
 
 /** One published commit file as a listing reports it. */
-private[graft] final case class LogFile(version: Long, mtime: Long, length: Long)
+private[sources] final case class LogFile(version: Long, mtime: Long, length: Long)
 
 /** The commit log's storage seam: the one place that knows where a
   * table's commit files live (`<table>/_txlog/%020d.json`, sidecars
@@ -25,7 +25,7 @@ private[graft] final case class LogFile(version: Long, mtime: Long, length: Long
   * (`.<v>.json.<uuid>.tmp`) and then make it appear under the final name
   * in one metadata operation; they differ only in that operation (see
   * [[LogStore.apply]]). */
-private[graft] sealed abstract class LogStore(val fs: FileSystem, val table: String) {
+private[sources] sealed abstract class LogStore(val fs: FileSystem, val table: String) {
 
   val dir: Path = new Path(LogStore.dirOf(table))
 
@@ -80,17 +80,16 @@ private[graft] sealed abstract class LogStore(val fs: FileSystem, val table: Str
   }
 }
 
-private[graft] object LogStore {
+private[sources] object LogStore {
 
   private val LogDir = "_txlog"
   private val SidecarDir = "_sidecar"
 
-  /** Where `table`'s commit files live; [[graft.streaming.StreamingCdf]]
-    * follows a table by streaming this directory's arrivals. */
-  def dirOf(table: String): String = s"$table/$LogDir"
+  /** Where `table`'s commit files live. */
+  private def dirOf(table: String): String = s"$table/$LogDir"
 
   def sidecarPath(table: String, name: String): Path =
-    new Path(s"$table/$LogDir/$SidecarDir/$name")
+    new Path(s"${dirOf(table)}/$SidecarDir/$name")
 
   /** The log store for `table` on `fs`: a hard link publishes on a local
     * filesystem (link(2) fails atomically if the target exists, where a

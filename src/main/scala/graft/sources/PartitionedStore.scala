@@ -57,33 +57,8 @@ object PartitionedStore {
       tsCol: String,
       keyCol: String,
       path: String,
-      maxRecordsPerFile: Long = 5000000L): Unit =
-    upsertDated(
-      spark,
-      batch.withColumn("date", date_format(graft.Tables.tsMicros(tsCol), "yyyy-MM-dd")),
-      keyCol, path, maxRecordsPerFile)
-
-  /** [[upsertByDate]] for a batch that ALREADY carries a `yyyy-MM-dd`
-    * string `date` column (e.g. a windowed rollup whose date is the
-    * window start, not a row timestamp). Same merge semantics and
-    * single-writer contract. */
-  def upsertByDateCol(
-      spark: SparkSession,
-      batch: DataFrame,
-      keyCol: String,
-      path: String,
       maxRecordsPerFile: Long = 5000000L): Unit = {
-    require(batch.columns.contains("date"),
-      "upsertByDateCol needs a `date` column — use upsertByDate to derive one from a timestamp")
-    upsertDated(spark, batch, keyCol, path, maxRecordsPerFile)
-  }
-
-  private def upsertDated(
-      spark: SparkSession,
-      dated: DataFrame,
-      keyCol: String,
-      path: String,
-      maxRecordsPerFile: Long): Unit = {
+    val dated = batch.withColumn("date", date_format(graft.Tables.tsMicros(tsCol), "yyyy-MM-dd"))
     // the store exists once a write left a data entry under the path;
     // `_`/`.`-prefixed names are skipped as parquet discovery skips
     // them, so an empty or aborted-write directory still reads as new

@@ -7,11 +7,10 @@ import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** `spark.readStream.format("graft").load(path)` — the table's CHANGE
-  * FEED as a first-class streaming source, replacing the file-stream +
-  * foreachBatch assembly [[StreamingCdf.follow]] wires by hand (the
-  * caller keeps follow() for the exactly-once-sink composition; this
-  * source serves the general `readStream → any transform → any sink`
-  * shape with the engine's own offset tracking).
+  * FEED as a first-class streaming source: the general
+  * `readStream → any transform → any sink` shape with the engine's own
+  * offset tracking. [[StreamingCdf.follow]] is this source piped into
+  * [[GraftSink]].
   *
   * Architecture note (why a v1 `Source`, not a DSv2 MicroBatchStream):
   * a micro-batch's rows are the COMMIT RANGE'S ROW-LEVEL CHANGES —
@@ -31,22 +30,29 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * refuses with the re-sync message; vacuum retention must cover the
   * versions still being followed. `startingVersion` (default 0 = full
   * history: the initial snapshot arrives as the inserts it was) skips
-  * commits at or before it. */
+  * commits at or before it. A checkpoint whose offset is not a commit
+  * version (another source wrote it) refuses, naming `metadataPath`. */
 class GraftCdfSource(
     spark: SparkSession,
     path: String,
-    startingVersion: Long) extends Source
+    startingVersion: Long,
+    metadataPath: String = "") extends Source
   with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
 
   import org.apache.spark.sql.connector.read.streaming.{Offset => OffsetV2, ReadLimit}
 
   override val schema: StructType = GraftCdfSource.cdfSchema(spark, path)
 
-  private def versionOf(o: V1Offset): Long = o match {
+  private def versionOf(o: OffsetV2): Long = o match {
     case LongOffset(v) => v
     // after a checkpoint resume the engine hands back SerializedOffset
     // (raw json) — LongOffset serializes as the bare number
-    case other => other.json.trim.toLong
+    case other => other.json.trim.toLongOption.getOrElse(throw new IllegalStateException(
+      s"graft: checkpoint ${metadataPath.replaceAll("/sources/[0-9]+/?$", "")} holds the " +
+        s"offset ${other.json}, not a commit version of $path: another source wrote it (such as " +
+        "a follow() checkpoint from when follow streamed `_txlog` as files). " +
+        "Start a new checkpoint with sinceVersion = the last source version the sink landed " +
+        "(its max _commit_version)."))
   }
 
   override def getOffset: Option[V1Offset] = {
@@ -72,6 +78,9 @@ class GraftCdfSource(
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
   override def latestOffset(startOffset: OffsetV2, limit: ReadLimit): OffsetV2 = {
+    // the engine passes the checkpointed offset: refuse a foreign one
+    // before any batch, even when no commit is new
+    Option(startOffset).foreach(versionOf)
     val latest = availableNowCap.getOrElse(TxStore.latestVersion(spark, path))
     if (latest <= startingVersion) null else LongOffset(latest)
   }

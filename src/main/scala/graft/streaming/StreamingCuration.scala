@@ -61,29 +61,15 @@ object StreamingCuration {
       checkpoint: String,
       tablePath: String,
       writerId: Option[String] = None,
-      maxFilesPerTrigger: Int = 32): StreamingQuery = {
-    val writer = writerId
-      .getOrElse(StreamingIngest.writerIdFor(spark, checkpoint, "graft-curate-"))
-    readDocs(spark, landingDir, maxFilesPerTrigger)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // persisted: the funnel join + the append each re-run the plan
-        batch.persist()
-        try {
-          val kept = batch.join(
-            QualityFunnel.filterFlagsUnder(batch, tf, total)
-              .filter(col("pass_all") === 1L)
-              .select("doc_id"),
-            Seq("doc_id"), "left_semi")
-          if (!kept.isEmpty)
-            TxStore.appendOnce(kept, tablePath, writer, batchId): Unit
-        } finally batch.unpersist(): Unit
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      maxFilesPerTrigger: Int = 32): StreamingQuery =
+    gateAndAppend(spark, landingDir, checkpoint, tablePath, writerId, "graft-curate-",
+        maxFilesPerTrigger) { batch =>
+      batch.join(
+        QualityFunnel.filterFlagsUnder(batch, tf, total)
+          .filter(col("pass_all") === 1L)
+          .select("doc_id"),
+        Seq("doc_id"), "left_semi")
+    }
 
   /** EXT47's ingest path: gate each micro-batch by the hashing-trick
     * linear classifier ([[graft.ops.TextOps.hashedClassifierScore]])
@@ -101,20 +87,38 @@ object StreamingCuration {
       checkpoint: String,
       tablePath: String,
       writerId: Option[String] = None,
-      maxFilesPerTrigger: Int = 32): StreamingQuery = {
-    val writer = writerId
-      .getOrElse(StreamingIngest.writerIdFor(spark, checkpoint, "graft-clsgate-"))
+      maxFilesPerTrigger: Int = 32): StreamingQuery =
+    gateAndAppend(spark, landingDir, checkpoint, tablePath, writerId, "graft-clsgate-",
+        maxFilesPerTrigger) { batch =>
+      batch.join(
+        graft.ops.TextOps.hashedClassifierScore(batch, weights)
+          .filter(col("keep"))
+          .select("doc_id"),
+        Seq("doc_id"), "left_semi")
+    }
+
+  /** The gate-and-append body every document gate shares: drain the
+    * landed documents AvailableNow, and append each micro-batch's
+    * `keep(batch)` rows exactly-once into `tablePath`, stamped
+    * (writerId, batchId) — the writer derived from the checkpoint under
+    * `prefix` when none is given. The batch is persisted: the gate's
+    * join and the append each re-run its plan. */
+  private[streaming] def gateAndAppend(
+      spark: SparkSession,
+      landingDir: String,
+      checkpoint: String,
+      tablePath: String,
+      writerId: Option[String],
+      prefix: String,
+      maxFilesPerTrigger: Int)(keep: DataFrame => DataFrame): StreamingQuery = {
+    val writer = writerId.getOrElse(StreamingIngest.writerIdFor(spark, checkpoint, prefix))
     readDocs(spark, landingDir, maxFilesPerTrigger)
       .writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.persist()
         try {
-          val kept = batch.join(
-            graft.ops.TextOps.hashedClassifierScore(batch, weights)
-              .filter(col("keep"))
-              .select("doc_id"),
-            Seq("doc_id"), "left_semi")
+          val kept = keep(batch)
           if (!kept.isEmpty)
             TxStore.appendOnce(kept, tablePath, writer, batchId): Unit
         } finally batch.unpersist(): Unit

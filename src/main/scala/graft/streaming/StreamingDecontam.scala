@@ -1,10 +1,9 @@
 package graft.streaming
 
 import graft.ops.Dedup
-import graft.sources.TxStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming DECONTAMINATION: documents land as parquet files and each
   * micro-batch is screened against a STATIC evaluation corpus before
@@ -33,7 +32,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * the one-shot batch screen of the same rows (asserted in
   * StreamingDecontamSpec, same law as StreamingCuration). Exactly-once:
   * (writerId, batchId) stamps in the table's own commit log; a replayed
-  * micro-batch no-ops inside [[TxStore.appendOnce]].
+  * micro-batch no-ops inside [[graft.sources.TxStore.appendOnce]].
   *
   * Scale shape: the eval corpus is bounded (benchmark sets — thousands
   * of docs), re-shingled per batch from `evalDocs` (a cheap, bounded
@@ -53,27 +52,13 @@ object StreamingDecontam {
       minOverlap: Double = 0.5,
       maxTrainDf: Long = 0L,
       writerId: Option[String] = None,
-      maxFilesPerTrigger: Int = 32): StreamingQuery = {
-    val writer = writerId
-      .getOrElse(StreamingIngest.writerIdFor(spark, checkpoint, "graft-decontam-"))
-    StreamingCuration.readDocs(spark, landingDir, maxFilesPerTrigger)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // persisted: the screen join and the append each re-run the plan
-        batch.persist()
-        try {
-          val contaminated = Dedup
-            .decontamPairs(batch, evalDocs, minOverlap = minOverlap, maxTrainDf = maxTrainDf)
-            .select(col("train_doc").as("doc_id"))
-            .distinct()
-          val kept = batch.join(contaminated, Seq("doc_id"), "left_anti")
-          if (!kept.isEmpty)
-            TxStore.appendOnce(kept, tablePath, writer, batchId): Unit
-        } finally batch.unpersist(): Unit
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      maxFilesPerTrigger: Int = 32): StreamingQuery =
+    StreamingCuration.gateAndAppend(spark, landingDir, checkpoint, tablePath, writerId,
+        "graft-decontam-", maxFilesPerTrigger) { batch =>
+      val contaminated = Dedup
+        .decontamPairs(batch, evalDocs, minOverlap = minOverlap, maxTrainDf = maxTrainDf)
+        .select(col("train_doc").as("doc_id"))
+        .distinct()
+      batch.join(contaminated, Seq("doc_id"), "left_anti")
+    }
 }

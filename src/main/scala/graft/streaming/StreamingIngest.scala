@@ -103,167 +103,121 @@ object StreamingIngest {
     * rows, so any run spanning more than one micro-batch (>
     * maxFilesPerTrigger landing files, or one day's events split across
     * triggers) would leave stale duplicates per key and double-count on
-    * read. Each batch upserts into a [[graft.sources.TxStore]] table at
-    * `<checkpoint>_rollup` via [[graft.sources.TxStore.mergeOnce]] —
-    * keyed by (date, event_type), stamped (writerId, batchId) so
-    * foreachBatch's at-least-once redelivery after a crash no-ops
-    * instead of re-merging — and the temp view is re-registered over
-    * the TABLE on the caller's session after every batch (foreachBatch
-    * runs under a cloned session whose temp views the caller can't
-    * see). NOTHING accumulates on the driver: state scales with the
-    * cluster's storage, not driver heap, at any channel × day
+    * read. Each batch runs [[rollupBatch]]: a keyed
+    * [[graft.sources.TxStore.mergeOnce]] into a TxStore table at
+    * `<checkpoint>_rollup`, stamped (writerId, batchId) so foreachBatch's
+    * at-least-once redelivery after a crash no-ops instead of
+    * re-merging. NOTHING accumulates on the driver: state scales with
+    * the cluster's storage, not driver heap, at any channel × day
     * cardinality. Verified by the multi-micro-batch spec.
     *
     * State is keyed by the CHECKPOINT (the store is its sibling
     * directory) and is durable: update mode only emits groups the NEW
     * files touched, so a scheduled re-invocation against the same
     * checkpoint merges into (not replaces) the accumulated rollup — and
-    * because store and checkpoint now live and die together, a fresh
-    * driver process resumes with BOTH the processed-file set and the
-    * rollup intact (the JVM-lifetime temp-view gap this replaced). */
+    * because store and checkpoint live and die together, a fresh driver
+    * process resumes with BOTH the processed-file set and the rollup
+    * intact (verified by the kill-mid-run/resume spec). The
+    * [[channelDaily]] arrival-order contract applies. */
   def runAvailableNow(
       spark: SparkSession,
       dir: String,
       checkpoint: String,
       name: String,
       maxFilesPerTrigger: Int = 32): StreamingQuery = {
-    val store = checkpoint.stripSuffix("/") + "_rollup"
-    val writer = writerIdFor(spark, checkpoint, "graft-rollup-")
-    def register(): Unit = {
-      val cur =
-        if (graft.sources.TxStore.snapshot(spark, store).files.nonEmpty)
-          graft.sources.TxStore.read(spark, store)
-        else
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rollupSchema)
-      cur.createOrReplaceTempView(name)
-    }
     // Register up front: a zero-micro-batch run (empty landing dir, or a
     // checkpoint with nothing new) never fires foreachBatch, and the
     // documented `spark.table(name)` read-back must still resolve — with
     // the previous invocations' rollup intact, empty only on first use.
-    register()
+    registerRollup(spark, checkpoint, name)
     channelDaily(readEvents(spark, dir, maxFilesPerTrigger))
       .writeStream
       .outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // persisted across the emptiness probe + merge's several actions
-        // (count/key-probe/stage): unpersisted, each would recompute the
-        // stateful aggregation from the source
-        batch.persist()
-        try
-          if (!batch.isEmpty)
-            // collectStats = false: the rollup table is tiny (date ×
-            // event_type) — skip the per-micro-batch footer harvest
-            graft.sources.TxStore.mergeOnce(
-              spark, store, batch, Seq("date", "event_type"), writer, batchId,
-              collectStats = false): Unit
-        finally batch.unpersist(): Unit
-        register()
-      }
+      .foreachBatch(rollupBatch(spark, checkpoint, name))
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()
   }
 
-  /** The durable twin of [[runAvailableNow]]: the same watermarked
-    * channel/day rollup, upserted per micro-batch into a date-partitioned
-    * parquet store keyed by (date, event_type) via
-    * [[graft.sources.PartitionedStore.upsertByDateCol]] — so the rollup
-    * SURVIVES driver restarts, unlike the JVM-lifetime temp view.
-    *
-    * Exactly-once table state from at-least-once machinery: foreachBatch
-    * may REPLAY a micro-batch after a crash (the checkpoint commits after
-    * the sink runs), but update-mode stateful aggregation emits CUMULATIVE
-    * per-key values and the upsert is keyed last-write-wins — so replaying
-    * a batch rewrites the same rows instead of double-counting, and a
-    * resumed query continues merging into the same store. Verified by the
-    * kill-mid-run/resume spec (StreamingMultimodalSpec).
-    *
-    * Read back with `PartitionedStore.read(spark, storePath)`; rows are
-    * (date, event_type, n_events, total_value) like the in-memory twin.
-    * The [[channelDaily]] arrival-order contract applies — out-of-order
-    * landings beyond `watermarkDelay` would UPSERT reset counts over
-    * good ones; widen the delay for unordered backfills. */
-  def runAvailableNowDurable(
-      spark: SparkSession,
-      dir: String,
-      checkpoint: String,
-      storePath: String,
-      maxFilesPerTrigger: Int = 32,
-      watermarkDelay: String = "1 day"): StreamingQuery =
-    channelDaily(readEvents(spark, dir, maxFilesPerTrigger), watermarkDelay)
-      .writeStream
-      .outputMode("update")
-      .foreachBatch(upsertRollup(spark, storePath) _)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+  /** [[runAvailableNow]]'s micro-batch body — public so tests can wrap
+    * it with fault injection (kill after batch N, then resume). The
+    * batch is persisted across the emptiness probe and merge's several
+    * actions (count/key-probe/stage): unpersisted, each would recompute
+    * the stateful aggregation from the source. The temp view is
+    * re-registered over the TABLE on the caller's session after every
+    * batch (foreachBatch runs under a cloned session whose temp views
+    * the caller can't see). */
+  def rollupBatch(
+      spark: SparkSession, checkpoint: String, name: String): (DataFrame, Long) => Unit = {
+    val store = rollupStore(checkpoint)
+    val writer = writerIdFor(spark, checkpoint, "graft-rollup-")
+    (batch, batchId) => {
+      batch.persist()
+      try
+        if (!batch.isEmpty)
+          // collectStats = false: the rollup table is tiny (date ×
+          // event_type) — skip the per-micro-batch footer harvest
+          graft.sources.TxStore.mergeOnce(
+            spark, store, batch, Seq("date", "event_type"), writer, batchId,
+            collectStats = false): Unit
+      finally batch.unpersist(): Unit
+      registerRollup(spark, checkpoint, name)
+    }
+  }
+
+  private def rollupStore(checkpoint: String): String = checkpoint.stripSuffix("/") + "_rollup"
+
+  private def registerRollup(spark: SparkSession, checkpoint: String, name: String): Unit = {
+    val store = rollupStore(checkpoint)
+    val cur =
+      if (graft.sources.TxStore.snapshot(spark, store).files.nonEmpty)
+        graft.sources.TxStore.read(spark, store)
+      else
+        spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rollupSchema)
+    cur.createOrReplaceTempView(name)
+  }
 
   /** Exactly-once RAW ingest into a transactional table — the
-    * append-landing ("bronze") pattern: each micro-batch lands as one
-    * atomic [[graft.sources.TxStore.appendOnce]] commit stamped with
-    * (writerId, batchId). foreachBatch's at-least-once redelivery after
-    * a crash (checkpoint commits AFTER the sink runs) therefore never
-    * double-appends: the replay finds its stamp in the commit log and
-    * no-ops. Unlike [[runAvailableNowDurable]] — which gets idempotence
-    * from cumulative upserts — this sink preserves every raw row, and
-    * the idempotence lives in the TABLE's log, so it also holds across
+    * append-landing ("bronze") pattern: the landed events stream into
+    * `writeStream.format("graft")` ([[GraftSink]]), so each micro-batch
+    * lands as one atomic [[graft.sources.TxStore.appendOnce]] commit
+    * stamped with (writerId, batchId). The engine's at-least-once
+    * redelivery after a crash (checkpoint commits AFTER the sink runs)
+    * therefore never double-appends: the replay finds its stamp in the
+    * commit log and no-ops. This sink preserves every raw row, and the
+    * idempotence lives in the TABLE's log, so it also holds across
     * driver restarts and even checkpoint deletion (the stamps, not the
     * checkpoint, are the source of truth; TxStore's checkpoint-retention
     * caveat applies). Downstream consumers follow incrementally via
     * `TxStore.readAppendsSince`.
     *
-    * `writerId` defaults to a hash of the CHECKPOINT path, because the
-    * stamp identifies (writer, batchId), not content: two pipelines — or
-    * one pipeline whose checkpoint was deleted and restarted — sharing a
-    * writerId would find each other's batch-0 stamp and silently DROP
-    * their own batch 0. The path is fully QUALIFIED before hashing
-    * (scheme + absolute form), so respelling the same directory across
-    * restarts ("/x/ckpt" vs "/x/ckpt/" vs a relative form) keeps the
-    * same writer; the hash is 128-bit SHA-256-derived, so distinct
-    * checkpoints colliding into one writer is not a practical concern.
-    * After DELETING a checkpoint (batch numbering restarts), pass a
-    * fresh explicit writerId. */
+    * `writerId` (the sink's `txnAppId`) defaults to a hash of the
+    * CHECKPOINT path, because the stamp identifies (writer, batchId),
+    * not content: two pipelines — or one pipeline whose checkpoint was
+    * deleted and restarted — sharing a writerId would find each other's
+    * batch-0 stamp and silently DROP their own batch 0. The path is
+    * fully QUALIFIED before hashing (scheme + absolute form), so
+    * respelling the same directory across restarts ("/x/ckpt" vs
+    * "/x/ckpt/" vs a relative form) keeps the same writer; the hash is
+    * 128-bit SHA-256-derived, so distinct checkpoints colliding into one
+    * writer is not a practical concern. After DELETING a checkpoint
+    * (batch numbering restarts), pass a fresh explicit writerId. */
   def runAppendToTxStore(
       spark: SparkSession,
       dir: String,
       checkpoint: String,
       tablePath: String,
       writerId: String = null,
-      maxFilesPerTrigger: Int = 32): StreamingQuery = {
-    val writer = Option(writerId).getOrElse(writerIdFor(spark, checkpoint, "graft-ingest-"))
+      maxFilesPerTrigger: Int = 32): StreamingQuery =
     readEvents(spark, dir, maxFilesPerTrigger)
       .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // no persist here (unlike upsertRollup): this plan is a bare
-        // file scan, so the isEmpty probe's limit-1 recompute is far
-        // cheaper than caching the whole micro-batch
-        if (!batch.isEmpty)
-          graft.sources.TxStore.appendOnce(batch, tablePath, writer, batchId): Unit
-      }
+      .format("graft")
+      .option("txnAppId",
+        Option(writerId).getOrElse(writerIdFor(spark, checkpoint, "graft-ingest-")))
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** The durable sink seam — public so tests can wrap it with fault
-    * injection (kill after batch N, then resume). Empty micro-batches
-    * are skipped: a zero-row dynamic overwrite is harmless but pointless
-    * IO on the store path. The batch is persisted across the emptiness
-    * probe + write — foreachBatch frames re-run their whole plan per
-    * action, so an unpersisted probe would compute the stateful
-    * aggregation twice. */
-  def upsertRollup(spark: SparkSession, storePath: String)(
-      batch: DataFrame, batchId: Long): Unit = {
-    batch.persist()
-    try
-      if (!batch.isEmpty)
-        graft.sources.PartitionedStore.upsertByDateCol(
-          spark, batch, keyCol = "event_type", path = storePath)
-    finally batch.unpersist(): Unit
-  }
+      .start(tablePath)
 
   /** Deterministic writer id from the FULLY-QUALIFIED checkpoint path
     * (scheme + absolute form, so respelling "/x/ckpt" vs "/x/ckpt/" vs a

@@ -404,6 +404,16 @@ class CliSpec extends SparkSpec {
       s"${kept.size + skipped.size} files from log metadata"), stdout.toString)
     assert(spark.read.parquet(s"$out/sql_result").count() ===
       graft.sources.TxStore.read(spark, table).filter(col("event_id") <= 100L).count())
+    // an aggregate answered from log facts reads no file, and says so
+    val aggOut = new java.io.ByteArrayOutputStream()
+    Console.withOut(aggOut) {
+      Main.run(spark, Map(
+        "step" -> "sql", "data-dir" -> sf("sf0.001"), "out-dir" -> tmp(),
+        "tx" -> s"rtx=$table", "sql" -> "SELECT (SELECT COUNT(*) FROM rtx VERSION AS OF 1) AS n"))
+    }
+    assert(aggOut.toString.linesIterator.filter(_.startsWith("[graft] sql scan")).toSeq ===
+      Seq("[graft] sql scan on 'rtx' @v1: aggregate answered from log metadata, no file read"),
+      aggOut.toString)
   }
 
   test("sql step: the pruning line reports the scan that ran, runtime filters included") {

@@ -564,6 +564,37 @@ class GraftDataSourceSpec extends SparkSpec {
     }
   }
 
+  test("a vectored delete in one partition leaves reads of the others columnar") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val t = tmpDir()
+    TxStore.append((0 until 90).map(i => (i.toLong, s"v$i", s"p${i % 3}"))
+      .toDF("id", "payload", "bucket"), t, partitionBy = Seq("bucket"))
+    TxStore.deleteVectored(spark, t, col("bucket") === "p1" && col("id") < 30L)
+    val snap = TxStore.snapshot(spark, t)
+    assert(snap.dv.nonEmpty && snap.dv.keys.forall(_.contains("bucket=p1")), snap.dv.keys)
+    def scanExec(df: DataFrame): BatchScanExec = {
+      df.collect()
+      val scans = new AdaptiveSparkPlanHelper {}
+        .collectWithSubqueries(df.queryExecution.executedPlan) {
+          case b: BatchScanExec if b.scan.isInstanceOf[GraftScan] => b
+        }
+      assert(scans.size === 1, df.queryExecution.executedPlan)
+      scans.head
+    }
+    // readWhere pins a snapshot of its kept files; a filter on a whole
+    // read prunes inside the scan, against the full snapshot's marks
+    for (other <- Seq(TxStore.readWhere(spark, t, col("bucket") === "p0"),
+        TxStore.read(spark, t).filter(col("bucket") === "p0"))) {
+      assert(scanExec(other).supportsColumnar, "no kept file is marked: the scan stays columnar")
+      assertRows(other.select("id", "payload"), expected((0 until 90).filter(_ % 3 == 0)))
+    }
+    val all = TxStore.read(spark, t)
+    assert(!scanExec(all).supportsColumnar, "a kept marked file needs the row-based reader")
+    assertRows(all.select("id", "payload"),
+      expected((0 until 90).filterNot(i => i % 3 == 1 && i < 30)))
+  }
+
   test("two reads of one TxStore frame plan equal scans, so the plan reuses their exchange") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.ReusedExchangeExec

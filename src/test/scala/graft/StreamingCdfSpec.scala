@@ -7,12 +7,13 @@ import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
 
-/** A TxStore table as a streaming source: the commit-log file stream
-  * drives per-batch row-level CDC into a sink table. Pins
-  * stream-equals-batch (the follower's history table is EXACTLY the
-  * batch CDC read), incremental resume (a second drain moves only the
-  * new versions), replay idempotence (same checkpoint, nothing new →
-  * no sink commit), and sinceVersion skipping. */
+/** A TxStore table's change feed followed into a sink table through
+  * graft's streaming source and sink. Pins stream-equals-batch (the
+  * follower's history table is EXACTLY the batch CDC read), incremental
+  * resume (a second drain moves only the new versions), replay
+  * idempotence (same checkpoint, nothing new → no sink commit),
+  * sinceVersion skipping, and the refusal of a checkpoint another
+  * source wrote. */
 class StreamingCdfSpec extends SparkSpec {
 
   import spark.implicits._
@@ -71,6 +72,31 @@ class StreamingCdfSpec extends SparkSpec {
     assert(bounded.select("_commit_version").distinct()
       .as[Long].collect().sorted.toSeq === Seq(1L, 2L))
     assert(bounded.count() === ev.filter(col("event_id") <= 200).count())
+  }
+
+  test("a checkpoint of the old `_txlog` file-stream follower refuses loudly, naming the fix") {
+    val (src, sink, ckpt) = (tmp("src4"), tmp("sink4"), tmp("ckpt4"))
+    TxStore.append(ev.limit(20), src) // v1
+    // what follow() checkpointed when it streamed the commit files
+    val old = spark.readStream.schema("version LONG, op STRING").json(s"$src/_txlog")
+      .writeStream
+      .foreachBatch((_: DataFrame, _: Long) => ())
+      .option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    assert(old.awaitTermination(180000))
+    TxStore.append(ev.limit(10), src) // v2
+    val ex = intercept[Exception] {
+      val q = StreamingCdf.follow(spark, src, sink, ckpt)
+      q.awaitTermination(180000)
+      q.exception.foreach(throw _)
+    }
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    val msg = messages(ex).find(_.contains("not a commit version"))
+      .getOrElse(fail(s"must refuse the foreign offset, got: ${messages(ex).mkString(" | ")}"))
+    assert(msg.contains(ckpt) && msg.contains("sinceVersion"), msg)
+    assert(!new java.io.File(sink).exists(), "nothing may land in the sink")
   }
 
   test("readChangesBetween refuses inverted and ahead-of-log ranges") {

@@ -96,6 +96,28 @@ class StreamingMultimodalSpec extends SparkSpec {
     assert(delta.count() === ev.filter(col("event_id") % 2 =!= 0).count())
   }
 
+  test("bronze ingest without a writerId stamps the checkpoint-hash writer; a replay no-ops") {
+    val ckpt = Files.createTempDirectory("graft-ckpt-txdef").toString
+    val landing = Files.createTempDirectory("graft-landing-txdef")
+    val table = Files.createTempDirectory("graft-txtable-def").toString
+    val ev = Tables.events(spark, sf("sf0.001"))
+    ev.coalesce(1).write.parquet(s"$landing/w1")
+    assert(StreamingIngest.runAppendToTxStore(spark, s"$landing/*/", ckpt, table)
+      .awaitTermination(120000))
+    // the writer is "graft-ingest-" + the first 16 bytes of SHA-256 over
+    // the qualified checkpoint path, in hex
+    val p = new org.apache.hadoop.fs.Path(ckpt)
+    val qualified = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(p).toUri.toString
+    val writer = "graft-ingest-" + java.security.MessageDigest.getInstance("SHA-256")
+      .digest(qualified.getBytes("UTF-8")).take(16).map("%02x".format(_)).mkString
+    assert(graft.sources.TxStore.history(spark, table).flatMap(_.txn) === Seq(s"$writer:0"))
+    val v = graft.sources.TxStore.snapshot(spark, table).version
+    assert(graft.sources.TxStore.appendOnce(ev.limit(5), table, writer, 0L) === v,
+      "a replayed batch 0 must no-op with its original version")
+    assert(graft.sources.TxStore.read(spark, table).count() === ev.count())
+  }
+
   test("multi-micro-batch rollup upserts per key instead of appending stale rows") {
     // Split the same events across two landing files and force one file
     // per trigger: every (date, event_type) key is updated in BOTH
@@ -161,16 +183,17 @@ class StreamingMultimodalSpec extends SparkSpec {
     // watermark contract requires (a hash split here would trip state
     // eviction: update mode re-aggregates late keys from zero, and the
     // upsert would overwrite good totals with reset counts). Run 1 uses
-    // the SAME plan and sink seam as runAvailableNowDurable but throws
-    // right AFTER the batch-0 upsert — the sink ran, the checkpoint
-    // commit did not: the exact at-least-once replay window. The resumed
-    // query must replay batch 0 into the store (keyed last-write-wins ⇒
-    // idempotent), then finish batches 1–2, landing on exactly the batch
+    // the SAME plan and batch body as runAvailableNow but throws right
+    // AFTER the batch-0 merge — the sink ran, the checkpoint commit did
+    // not: the exact at-least-once replay window. The resumed query must
+    // replay batch 0 into the TxStore rollup as a no-op (its stamp is in
+    // the log), then finish batches 1–2, landing on exactly the batch
     // rollup.
     val dir = sf("sf0.001")
     val ckpt = Files.createTempDirectory("graft-ckpt-kill").toString
     val landing = Files.createTempDirectory("graft-landing-kill")
-    val store = Files.createTempDirectory("graft-store-kill").toString + "/rollup"
+    val store = ckpt + "_rollup"
+    val name = "stream_rollup_kill"
     val ev = Tables.events(spark, dir)
     val day = date_format(Tables.tsMicros("ts"), "yyyy-MM-dd")
     Seq(("f0", day < "2024-01-11"),
@@ -185,12 +208,13 @@ class StreamingMultimodalSpec extends SparkSpec {
           java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
       }
     }
+    val body = StreamingIngest.rollupBatch(spark, ckpt, name)
     val q1 = StreamingIngest
       .channelDaily(StreamingIngest.readEvents(spark, s"$landing/*/", maxFilesPerTrigger = 1))
       .writeStream
       .outputMode("update")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        StreamingIngest.upsertRollup(spark, store)(batch, id)
+        body(batch, id)
         if (id == 0) throw new RuntimeException("injected kill after batch-0 sink")
       }
       .option("checkpointLocation", ckpt)
@@ -199,14 +223,18 @@ class StreamingMultimodalSpec extends SparkSpec {
     intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       q1.awaitTermination(120000)
     }
-    assert(spark.read.parquet(store).count() > 0, "batch-0 upsert must have landed")
+    assert(graft.sources.TxStore.read(spark, store).count() > 0, "batch-0 merge must have landed")
+    def batch0Commits = graft.sources.TxStore.history(spark, store)
+      .count(_.txn.exists(_.endsWith(":0")))
+    assert(batch0Commits === 1)
 
     // resume: the production runner, same checkpoint, same store
-    val q2 = StreamingIngest.runAvailableNowDurable(
-      spark, s"$landing/*/", ckpt, store, maxFilesPerTrigger = 1)
+    val q2 = StreamingIngest.runAvailableNow(
+      spark, s"$landing/*/", ckpt, name, maxFilesPerTrigger = 1)
     assert(q2.awaitTermination(120000), "resumed stream timed out")
+    assert(batch0Commits === 1, "the replayed batch 0 must land no second commit")
 
-    val stored = graft.sources.PartitionedStore.read(spark, store)
+    val stored = graft.sources.TxStore.read(spark, store)
     val got = stored.select("date", "event_type", "n_events")
       .as[(String, String, Long)].collect()
     assert(got.length == got.map(r => (r._1, r._2)).distinct.length,
@@ -226,11 +254,13 @@ class StreamingMultimodalSpec extends SparkSpec {
     assert(math.abs(gotVal - batchVal) <= 1e-6 * math.abs(batchVal))
 
     // a third invocation with nothing new landed: zero micro-batches,
-    // store byte-for-byte readable and unchanged in content
-    val q3 = StreamingIngest.runAvailableNowDurable(
-      spark, s"$landing/*/", ckpt, store, maxFilesPerTrigger = 1)
+    // no new commit, and the rollup readable and unchanged in content
+    val settled = graft.sources.TxStore.snapshot(spark, store).version
+    val q3 = StreamingIngest.runAvailableNow(
+      spark, s"$landing/*/", ckpt, name, maxFilesPerTrigger = 1)
     assert(q3.awaitTermination(120000))
-    assert(graft.sources.PartitionedStore.read(spark, store)
+    assert(graft.sources.TxStore.snapshot(spark, store).version === settled)
+    assert(spark.table(name)
       .select("date", "event_type", "n_events")
       .as[(String, String, Long)].collect().toSet == batch)
   }

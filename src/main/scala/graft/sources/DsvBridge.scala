@@ -26,6 +26,16 @@ import org.apache.spark.util.SerializableConfiguration
 
 object DsvBridge {
 
+  /** The v1 filter Spark's own v1 pushdown would hand a scan for a
+    * catalyst predicate (`protected[sql]` in Spark), None when it has
+    * none. */
+  def v1Filter(e: org.apache.spark.sql.catalyst.expressions.Expression): Option[Filter] =
+    org.apache.spark.sql.execution.datasources.DataSourceStrategy
+      .translateFilter(e, supportNestedPredicatePushdown = true)
+
+  /** A v1 filter as the v2 predicate a scan builder reports. */
+  def v2Predicate(f: Filter): org.apache.spark.sql.connector.expressions.filter.Predicate = f.toV2
+
   /** The synthetic LongType field parquet readers FILL WITH THE FILE
     * ROW POSITION when it appears in the requested schema — correct
     * under predicate pushdown and row-group skipping (the reader

@@ -8,14 +8,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{And, Cast, EqualTo, EvalMode, Expression, GenericInternalRow, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Or}
+import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, SupportsRuntimeFiltering}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownRequiredColumns, SupportsReportStatistics, SupportsRuntimeFiltering}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.DataSourceUtils
 import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation}
 import org.apache.spark.sql.graft.DsvBridge
+import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter, StreamSinkProvider, StreamSourceProvider}
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
@@ -28,11 +31,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * commit log's file skipping:
   *
   *   - [[GraftScanBuilder]] receives the query's own pushed filters
-  *     (`SupportsPushDownFilters`) and prunes files through the SAME
-  *     stats walk `readWhere` uses ([[TxStats.pruneSnapFiles]] —
-  *     partition dirs, min/max ranges, blooms, all from log metadata,
-  *     zero file IO). Every filter is also returned as a post-scan
-  *     filter: file pruning is approximate, Spark re-evaluates.
+  *     (`SupportsPushDownCatalystFilters`). It consumes the ones over
+  *     partition columns alone, deciding them exactly per directory
+  *     ([[GraftPartitionEval]]), and prunes files on the rest through
+  *     the SAME stats walk `readWhere` uses ([[TxStats.pruneSnapFiles]]
+  *     — partition values, min/max ranges, blooms, all from log
+  *     metadata, zero file IO). Those return as post-scan filters: file
+  *     pruning is approximate, Spark re-evaluates.
   *   - [[GraftScan]] additionally accepts RUNTIME filters
   *     (`SupportsRuntimeFiltering`) — the dynamic-pruning `IN` sets a
   *     broadcast dimension build hands over at execution start — and
@@ -248,17 +253,13 @@ final class GraftTable(
   /** `SHOW PARTITIONS`: the live files' directories, decoded like the
     * scan decodes them; the layout is the log's, so create, drop and
     * replace refuse. */
-  override def partitionSchema(): StructType =
-    StructType(partitionLogical.flatMap(n => logical.find(_.name.equalsIgnoreCase(n))))
+  override def partitionSchema(): StructType = GraftPartitionEval.partitionSchema(snap)
 
   override def listPartitionIdentifiers(names: Array[String], ident: InternalRow): Array[InternalRow] = {
-    val fields = partitionSchema().fields
+    val dirs = new GraftPartitionEval.Dirs(spark, snap)
+    val fields = dirs.schema.fields
     val at = names.map(n => fields.indexWhere(_.name == n))
-    snap.files.map(GraftPartitionEval.rawValues).distinct.map { raw =>
-      new GenericInternalRow(snap.partitioning.zip(fields).map { case (p, f) =>
-        raw.get(lc(p)).flatten.map(GraftPartitionEval.catalystValue(spark, _, f.dataType)).orNull
-      }.toArray): InternalRow
-    }.filter(p => at.indices.forall(k =>
+    snap.files.map(dirs.values).distinct.filter(p => at.indices.forall(k =>
       p.get(at(k), fields(at(k)).dataType) == ident.get(k, fields(at(k)).dataType))).toArray
   }
 
@@ -350,40 +351,38 @@ final class GraftTable(
 }
 
 final class GraftScanBuilder(table: GraftTable)
-  extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
+  extends ScanBuilder with SupportsPushDownCatalystFilters with SupportsPushDownRequiredColumns
   with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
 
   private var required: StructType = table.logical
   private var pushed: Array[Filter] = Array.empty
-  private var consumed: Array[Filter] = Array.empty
-  private var postScan: Array[Filter] = Array.empty
+  private var postScan: Seq[Expression] = Nil
   private var pushedAgg: Option[(StructType, Seq[Array[Any]])] = None
+  private val dirs = new GraftPartitionEval.Dirs(table.spark, table.snap)
+  /** The files whose rows satisfy every consumed filter — exact. */
+  private var exactKeptFiles: Seq[String] = table.snap.files
 
-  /** Filters over PARTITION columns that evaluate exactly per file from
-    * the hive path values are CONSUMED by the scan (no post-scan
-    * re-evaluation — the same contract Spark's own file sources use for
-    * partition filters; [[GraftPartitionEval]] is tri-state-strict, so
-    * a filter is only consumed when every live file gets a definite
-    * verdict). Everything else returns as post-scan: file/row-group
-    * skipping on data-column stats is approximate, the predicate must
-    * still evaluate exactly once above the scan. The log walk prunes on
-    * every translatable filter either way, and translatable filters
-    * also reach the parquet reader for row-group pruning. */
-  // one memoizing evaluator per scan build — partition verdicts are
-  // per-directory, paid once across consumability, the aggregate walk
-  // and the scan's kept set
-  private val partitionEval = new GraftPartitionEval.Evaluator(table)
-  private lazy val exactKeptFiles: Seq[String] = partitionEval.keptFiles(consumed)
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (c, post) = filters.partition(partitionEval.consumable)
-    consumed = c
-    postScan = post
-    pushed = filters.filter(f => GraftFilters.toCatalyst(f).isDefined)
-    post
+  /** The split Spark's own `FileScanBuilder` makes. A deterministic
+    * filter over partition columns alone is CONSUMED: decided per
+    * directory by [[GraftPartitionEval.Dirs.matching]] over the values
+    * the scan emits, so Spark drops its post-scan re-evaluation. The
+    * rest return as post-scan filters, because file and row-group
+    * skipping on data-column stats is approximate. Every filter that
+    * translates to a v1 filter also reaches the log's stats walk and
+    * the parquet reader for row-group pruning. */
+  override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
+    val (deterministic, other) = filters.partition(_.deterministic)
+    val (partitionFilters, dataFilters) =
+      DataSourceUtils.getPartitionFiltersAndDataFilters(dirs.schema, deterministic)
+    val (consumed, unevaluable) = partitionFilters.partition(dirs.evaluable)
+    exactKeptFiles = table.snap.files.filter(dirs.matching(consumed))
+    pushed = deterministic.flatMap(DsvBridge.v1Filter)
+      .filter(f => GraftFilters.toCatalyst(f).isDefined).toArray
+    postScan = dataFilters ++ unevaluable ++ other
+    postScan
   }
 
-  override def pushedFilters(): Array[Filter] = pushed
+  override def pushedFilters: Array[Predicate] = pushed.map(DsvBridge.v2Predicate)
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     if (pushedAgg.isEmpty) required = requiredSchema
@@ -391,7 +390,7 @@ final class GraftScanBuilder(table: GraftTable)
   /** METADATA-ONLY aggregates: COUNT(*)/COUNT(col)/MIN(col)/MAX(col)
     * over a table without deletion marks answers from the commit log's
     * own facts — `#rows` per file for counts, `<col>#n` null facts for
-    * COUNT(col), min/max ranges (and hive path values for partition
+    * COUNT(col), min/max ranges (and decoded path values for partition
     * columns) for MIN/MAX — with ZERO file IO at any table size
     * (parquet answers these from footers, one open per file; the log
     * answers them from memory). Allowed under a WHERE iff every
@@ -428,13 +427,13 @@ final class GraftScanBuilder(table: GraftTable)
       lastAgg = agg
       lastResult =
         if (postScan.nonEmpty) None // an unconsumed filter would re-evaluate over 1 row
-        else GraftAggregates.compute(table.spark, table, agg, exactKeptFiles)
+        else GraftAggregates.compute(table, dirs, agg, exactKeptFiles)
     }
     lastResult
   }
 
   override def build(): Scan =
-    new GraftScan(table, required, pushed, exactKeptFiles, pushedAgg)
+    new GraftScan(table, dirs, required, pushed, exactKeptFiles, pushedAgg)
 }
 
 /** The table's hidden metadata columns (see
@@ -456,18 +455,22 @@ private[sources] object GraftMetaColumns {
   val names: Set[String] = Set(File.name, CommitVersion.name, RowIndex.name)
 }
 
-/** Exact per-file evaluation of v1 filters against hive PARTITION path
-  * values — Kleene tri-state (`Some(Some(b))` definite, `Some(None)` =
-  * SQL NULL, `None` = undecidable), so NULL partition dirs filter
-  * correctly under NOT and a filter is consumed only when every live
-  * file gets a definite verdict. This is what lets the scan drop the
-  * post-scan re-evaluation for partition predicates (Spark's own file
-  * sources' partition-filter contract) and what makes filtered
-  * metadata-aggregates sound: kept files contain EXACTLY the
-  * qualifying rows, because a partition column is constant per file. */
+/** Hive partition directories decoded into the values the scan emits.
+  * This is graft's one partition evaluator, the shape of Spark's own
+  * `PartitioningAwareFileIndex.prunePartitions`: each live directory is
+  * decoded once ([[rawValues]], then [[catalystValue]]) into the typed
+  * values [[GraftScan]] puts into every row of its files, and every
+  * exact partition decision evaluates Spark's interpreted predicate over
+  * them ([[Dirs.matching]]). That covers the scan's consumed filters,
+  * metadata deletes, `replaceWhere` and OPTIMIZE WHERE. Pushed GROUP BY
+  * keys and the stats walk's partition facts read the same values. A
+  * decision therefore agrees by construction with the same predicate
+  * applied to the rows: a partition column is constant per file. */
 private[sources] object GraftPartitionEval {
 
   import java.util.Locale
+
+  import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BoundReference, CommonExpressionRef, Predicate, RuntimeReplaceable, Unevaluable, With}
 
   private def lc(s: String) = s.toLowerCase(Locale.ROOT)
 
@@ -483,207 +486,84 @@ private[sources] object GraftPartitionEval {
       })
     }.toMap
 
-  /** The typed JVM value of a raw path segment under the LOGICAL field
-    * type — None when the type is outside the exactly-comparable set
-    * (timestamps and dates stay out: timezone/calendar parsing is not
-    * worth an exactness bug; NON-ASCII strings stay out too — Java
-    * String ordering is UTF-16 code-unit order while Spark orders by
-    * UTF-8 binary, and a consumed filter's verdict is never
-    * re-checked, so the orders must provably agree). */
-  private def typed(raw: String, dt: DataType): Option[Any] = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case StringType => if (raw.forall(_ < 128)) Some(raw) else None
-      case LongType | IntegerType | ShortType | ByteType =>
-        scala.util.Try(java.lang.Long.valueOf(raw.trim)).toOption
-      case DoubleType | FloatType =>
-        scala.util.Try(java.lang.Double.valueOf(raw.trim)).toOption
-      case BooleanType => raw.trim.toLowerCase(Locale.ROOT) match {
-        case "true" => Some(java.lang.Boolean.TRUE)
-        case "false" => Some(java.lang.Boolean.FALSE)
-        case _ => None
-      }
-      case _: DecimalType =>
-        scala.util.Try(new java.math.BigDecimal(raw.trim)).toOption
-      case _ => None
-    }
-  }
-
-  /** The exact GROUP-KEY value of a raw path segment under the LOGICAL
-    * field type — stricter than [[typed]]: the parse must land in the
-    * declared type's own value domain (Int overflow refuses; a decimal
-    * needing rounding to the declared scale refuses; floats parse as
-    * Float, not Double) so that key equality coincides exactly with
-    * output-value equality under complete pushdown. None = refuse the
-    * pushdown (a LEGACY cast could silently yield NULL or a merged
-    * duplicate key). */
-  private[sources] def typedKey(raw: String, dt: DataType): Option[Any] = {
-    import org.apache.spark.sql.types._
-    val t = raw.trim
-    dt match {
-      case StringType => if (raw.forall(_ < 128)) Some(raw) else None
-      case LongType => scala.util.Try(java.lang.Long.valueOf(t)).toOption
-      case IntegerType => scala.util.Try(Integer.valueOf(t)).toOption
-      case ShortType => scala.util.Try(java.lang.Short.valueOf(t)).toOption
-      case ByteType => scala.util.Try(java.lang.Byte.valueOf(t)).toOption
-      case DoubleType => scala.util.Try(java.lang.Double.valueOf(t)).toOption
-      case FloatType => scala.util.Try(java.lang.Float.valueOf(t)).toOption
-      case BooleanType => t.toLowerCase(Locale.ROOT) match {
-        case "true" => Some(java.lang.Boolean.TRUE)
-        case "false" => Some(java.lang.Boolean.FALSE)
-        case _ => None
-      }
-      case d: DecimalType =>
-        // setScale without a rounding mode throws when rounding would be
-        // needed — exactly the refusal we want; the fixed scale makes
-        // BigDecimal.equals (scale-sensitive) agree with value equality
-        scala.util.Try(new java.math.BigDecimal(t).setScale(d.scale))
-          .toOption.filter(_.precision <= d.precision)
-      case _ => None
-    }
-  }
-
-  private def cmp(a: Any, b: Any): Option[Int] = (a, b) match {
-    case (x: java.lang.Number, y: java.lang.Number) =>
-      scala.util.Try(BigDecimal(x.toString).compare(BigDecimal(y.toString))).toOption
-    // both sides must be pure ASCII, where UTF-16 and UTF-8 binary
-    // orders agree (the file side is guarded in typed(); the FILTER
-    // value arrives from the query and must be checked here)
-    case (x: String, y: String) if x.forall(_ < 128) && y.forall(_ < 128) =>
-      Some(x.compareTo(y))
-    case (x: java.lang.Boolean, y: java.lang.Boolean) => Some(x.compareTo(y))
-    case _ => None
-  }
-
-  /** Per-query memoizing wrapper: partition values are constant per
-    * DIRECTORY, so verdicts memoize per (dir, filter) — a 100k-file
-    * plan with 3 conjuncts does O(dirs × filters) evaluations, not
-    * O(files × filters), and each dir's path parses once (the
-    * partitionRanges memoization discipline). One instance per scan
-    * build; single-threaded planning state. */
-  final class Evaluator(table: GraftTable) {
-    private val dirValues =
-      scala.collection.mutable.HashMap.empty[String, Map[String, Option[String]]]
-    private val verdicts =
-      scala.collection.mutable.HashMap.empty[(String, Filter), Option[Option[Boolean]]]
-    private def dirOf(rel: String): String = {
-      val cut = rel.lastIndexOf('/')
-      if (cut < 0) "" else rel.substring(0, cut + 1)
-    }
-    def eval(rel: String, f: Filter): Option[Option[Boolean]] = {
-      val dir = dirOf(rel)
-      verdicts.getOrElseUpdate((dir, f),
-        evalValues(table, dirValues.getOrElseUpdate(dir, rawValues(rel)), f))
-    }
-    /** May the scan consume `f` (drop its post-scan re-evaluation)?
-      * Yes iff every live file gets a definite verdict. */
-    def consumable(f: Filter): Boolean =
-      table.snap.files.forall(rel => eval(rel, f).isDefined)
-    /** The files whose every row satisfies ALL consumed filters —
-      * exact, because each filter evaluated definitely per file. */
-    def keptFiles(consumed: Array[Filter]): Seq[String] =
-      if (consumed.isEmpty) table.snap.files
-      else table.snap.files.filter(rel =>
-        consumed.forall(f => eval(rel, f).exists(_.contains(true))))
-  }
-
-  /** Kleene evaluation of `f` against ONE directory's partition values.
-    * Outer None = undecidable; inner None = SQL NULL (filters drop the
-    * row). */
-  private def evalValues(
-      table: GraftTable,
-      raws: Map[String, Option[String]],
-      f: Filter): Option[Option[Boolean]] = {
-    val snap = table.snap
-    val partPhys = snap.partitioning.map(lc).toSet
-    val physFor = snap.mapping.map { case (l, p) => lc(l) -> p }.toMap
-    // logical attr name → Some(value) iff it IS a partition column with
-    // an exactly-typed value; the value itself is Option (null dir)
-    def lookup(a: String): Option[Option[Any]] = {
-      val phys = lc(physFor.getOrElse(lc(a), a))
-      if (!partPhys(phys)) return None
-      val dt = table.logical.fields.find(fd => lc(fd.name) == lc(a)).map(_.dataType)
-      raws.get(phys) match {
-        case Some(None) => Some(None) // explicit null dir
-        case Some(Some(raw)) =>
-          dt.flatMap(t => typed(raw, t)) match {
-            case Some(v) => Some(Some(v))
-            case None => None // unparseable / untyped — undecidable
-          }
-        case None => None // partition column missing from the path?!
-      }
-    }
-    def bin(a: String, v: Any)(op: Int => Boolean): Option[Option[Boolean]] =
-      if (v == null) lookup(a).map(_ => None) // col OP NULL is NULL
-      else lookup(a).flatMap {
-        case None => Some(None) // NULL OP v is NULL
-        case Some(x) => cmp(x, v).map(c => Some(op(c)))
-      }
-    def kleeneAnd(
-        l: Option[Option[Boolean]], r: Option[Option[Boolean]]): Option[Option[Boolean]] =
-      (l, r) match {
-        case (Some(Some(false)), _) | (_, Some(Some(false))) => Some(Some(false))
-        case (Some(a), Some(b)) =>
-          Some(if (a.contains(true) && b.contains(true)) Some(true) else None)
-        case _ => None
-      }
-    def kleeneOr(
-        l: Option[Option[Boolean]], r: Option[Option[Boolean]]): Option[Option[Boolean]] =
-      (l, r) match {
-        case (Some(Some(true)), _) | (_, Some(Some(true))) => Some(Some(true))
-        case (Some(a), Some(b)) =>
-          Some(if (a.contains(false) && b.contains(false)) Some(false) else None)
-        case _ => None
-      }
-    f match {
-      case sources.EqualTo(a, v) => bin(a, v)(_ == 0)
-      case sources.GreaterThan(a, v) => bin(a, v)(_ > 0)
-      case sources.GreaterThanOrEqual(a, v) => bin(a, v)(_ >= 0)
-      case sources.LessThan(a, v) => bin(a, v)(_ < 0)
-      case sources.LessThanOrEqual(a, v) => bin(a, v)(_ <= 0)
-      case sources.EqualNullSafe(a, v) => lookup(a).flatMap {
-        case None => Some(Some(v == null))
-        case Some(x) => if (v == null) Some(Some(false)) else cmp(x, v).map(c => Some(c == 0))
-      }
-      case sources.In(a, vs) => lookup(a).flatMap {
-        case None => Some(None) // NULL IN (...) is NULL
-        case Some(x) =>
-          val cs = vs.toSeq.filter(_ != null).map(v => cmp(x, v))
-          if (cs.exists(_.isEmpty)) None
-          else if (cs.exists(_.contains(0))) Some(Some(true))
-          else Some(if (vs.contains(null)) None else Some(false))
-      }
-      case sources.IsNull(a) => lookup(a).map(v => Some(v.isEmpty))
-      case sources.IsNotNull(a) => lookup(a).map(v => Some(v.nonEmpty))
-      case sources.StringStartsWith(a, v) => strTest(lookup(a), v)(_.startsWith(_))
-      case sources.StringEndsWith(a, v) => strTest(lookup(a), v)(_.endsWith(_))
-      case sources.StringContains(a, v) => strTest(lookup(a), v)(_.contains(_))
-      case sources.And(l, r) =>
-        kleeneAnd(evalValues(table, raws, l), evalValues(table, raws, r))
-      case sources.Or(l, r) =>
-        kleeneOr(evalValues(table, raws, l), evalValues(table, raws, r))
-      case sources.Not(x) => evalValues(table, raws, x).map(_.map(!_))
-      case _: sources.AlwaysTrue => Some(Some(true))
-      case _: sources.AlwaysFalse => Some(Some(false))
-      case _ => None
-    }
-  }
-
-  private def strTest(lk: Option[Option[Any]], v: String)(
-      op: (String, String) => Boolean): Option[Option[Boolean]] =
-    if (v == null) None
-    else lk.flatMap {
-      case None => Some(None)
-      case Some(x: String) => Some(Some(op(x, v)))
-      case _ => None
-    }
-
   /** Raw path segment → catalyst value of `dt` — LEGACY cast semantics
     * (a malformed segment reads NULL rather than failing the scan). */
   def catalystValue(spark: SparkSession, raw: String, dt: DataType): Any =
     if (dt == StringType) UTF8String.fromString(raw)
     else Cast(Literal(UTF8String.fromString(raw), StringType), dt,
       Some(spark.sessionState.conf.sessionLocalTimeZone), EvalMode.LEGACY).eval(null)
+
+  /** (lc physical name, logical field) of each partition column of
+    * `snap`, in its layout's order. */
+  private def columns(snap: TxStore.Snapshot): Seq[(String, StructField)] = {
+    val logical = TxStore.logicalSchema(snap).getOrElse(new StructType())
+    val logicalByPhys = snap.mapping.map { case (l, p) => lc(p) -> l }.toMap
+    snap.partitioning.flatMap { p =>
+      val name = lc(logicalByPhys.getOrElse(lc(p), p))
+      logical.fields.find(f => lc(f.name) == name).map(lc(p) -> _)
+    }
+  }
+
+  /** The logical partition columns of `snap`, in its layout's order. */
+  def partitionSchema(snap: TxStore.Snapshot): StructType = StructType(columns(snap).map(_._2))
+
+  /** The live directories of one snapshot, decoded lazily and once
+    * each. */
+  final class Dirs(spark: SparkSession, val snap: TxStore.Snapshot) {
+    private val cols = columns(snap)
+    /** The logical partition columns; [[values]] rows follow its order. */
+    val schema: StructType = StructType(cols.map(_._2))
+    /** The lowercased physical name of each [[schema]] column. */
+    val physical: Seq[String] = cols.map(_._1)
+    private val decoded = scala.collection.mutable.HashMap.empty[String, InternalRow]
+
+    /** The directory part of a relative file path, `""` for a flat file. */
+    def dirOf(rel: String): String = rel.substring(0, rel.lastIndexOf('/') + 1)
+
+    /** The typed partition values of `rel`'s directory, in [[schema]]'s
+      * order; NULL for the null dir and for a raw the cast rejects. */
+    def values(rel: String): InternalRow = synchronized {
+      decoded.getOrElseUpdate(dirOf(rel), {
+        val raw = rawValues(rel)
+        new GenericInternalRow(cols.map { case (p, f) =>
+          raw.get(p).flatten.map(catalystValue(spark, _, f.dataType)).orNull
+        }.toArray)
+      })
+    }
+
+    /** `pred` over [[schema]]'s columns, bound to [[values]] positions,
+      * with what only the optimizer rewrites (an analyzed predicate
+      * still holds it) evaluated in place: a runtime-replaceable
+      * expression (SQL `BETWEEN`) becomes its replacement, a common-
+      * expression `With` its inlined body. */
+    private def bind(pred: Expression): Expression = pred match {
+      case a: AttributeReference =>
+        val i = schema.fieldNames.indexWhere(n => lc(n) == lc(a.name))
+        BoundReference(i, schema(i).dataType, nullable = true)
+      case r: RuntimeReplaceable => bind(r.replacement)
+      case w: With =>
+        val defs = w.defs.map(d => d.id -> d.child).toMap
+        bind(w.child.transform { case r: CommonExpressionRef if defs.contains(r.id) => defs(r.id) })
+      case _ => pred.mapChildren(bind)
+    }
+
+    /** Can [[matching]] evaluate `pred`, a predicate over partition
+      * columns only? No for what only a later phase runs (a Python UDF). */
+    def evaluable(pred: Expression): Boolean =
+      !bind(pred).exists(_.isInstanceOf[Unevaluable])
+
+    /** Which files' rows all satisfy every predicate in `preds` — TRUE,
+      * not NULL — decided once per directory by Spark's interpreted
+      * predicate. */
+    def matching(preds: Seq[Expression]): String => Boolean =
+      if (preds.isEmpty) _ => true
+      else {
+        val p = Predicate.createInterpreted(bind(preds.reduce(And)))
+        p.initialize(0)
+        val verdicts = scala.collection.mutable.HashMap.empty[String, Boolean]
+        rel => verdicts.getOrElseUpdate(dirOf(rel), p.eval(values(rel)))
+      }
+  }
 }
 
 /** The log-facts evaluator behind [[GraftScanBuilder.pushAggregation]].
@@ -698,8 +578,8 @@ private[sources] object GraftAggregates {
   import org.apache.spark.sql.types._
 
   def compute(
-      spark: SparkSession,
       table: GraftTable,
+      dirs: GraftPartitionEval.Dirs,
       agg: Aggregation,
       kept: Seq[String]): Option[(StructType, Seq[Array[Any]])] = {
     val snap = table.snap
@@ -707,7 +587,7 @@ private[sources] object GraftAggregates {
     if (snap.dv.nonEmpty || snap.dvp.nonEmpty) return None
     def lc(s: String) = s.toLowerCase(Locale.ROOT)
     val physFor = snap.mapping.map { case (l, p) => lc(l) -> p }.toMap
-    val pranges = TxStats.partitionRanges(snap)
+    val pranges = TxStats.partitionRanges(dirs)
     def facts(f: String): Map[String, TxStore.ColRange] =
       snap.stats.getOrElse(f, Map.empty) ++ pranges(f)
     def numFact(f: String, key: String): Option[BigDecimal] =
@@ -728,6 +608,10 @@ private[sources] object GraftAggregates {
     // column — the path values ARE the group keys, so grouping costs
     // zero IO; anything else refuses
     val partPhys = snap.partitioning.map(lc).toSet
+    /** Is `f`'s value of partition column `phys` NULL — the null dir, or
+      * a raw the cast rejects? Every row of `f` then reads NULL. */
+    def nullIn(f: String, phys: String): Boolean =
+      dirs.values(f).isNullAt(dirs.physical.indexOf(lc(phys)))
     val groupCols: Seq[String] = {
       val resolved = agg.groupByExpressions.toSeq.map(colName)
       if (resolved.exists(_.isEmpty)) return None
@@ -744,15 +628,10 @@ private[sources] object GraftAggregates {
     def countCol(files: Seq[String], l: String): Option[Long] = {
       val phys = physName(l)
       // a PARTITION column has no per-file null fact — its nulls are the
-      // null-dir files (every row null there, no row null elsewhere)
+      // files whose decoded value is NULL (every row null there, no row
+      // null elsewhere)
       if (partPhys(lc(phys))) {
-        val perFile = files.map { f =>
-          val isNullDir = GraftPartitionEval.rawValues(f).get(lc(phys)) match {
-            case Some(None) => true
-            case _ => false
-          }
-          rowsOf(f).map(r => if (isNullDir) 0L else r)
-        }
+        val perFile = files.map(f => rowsOf(f).map(r => if (nullIn(f, phys)) 0L else r))
         if (perFile.exists(_.isEmpty)) None else Some(perFile.flatten.sum)
       } else {
         val perFile = files.map { f =>
@@ -793,13 +672,10 @@ private[sources] object GraftAggregates {
           case Some(r) => endpointValue(dt, r, lo).map(Some(_))
           case None =>
             // no range: sound ONLY if the file is PROVEN all-null for
-            // this column — by null facts, or by BEING the null dir of a
-            // partition column — then it contributes nothing
+            // this column — by null facts, or by a NULL decoded value of
+            // a partition column — then it contributes nothing
             if (partPhys(lc(phys))) {
-              GraftPartitionEval.rawValues(f).get(lc(phys)) match {
-                case Some(None) => Some(None) // null dir
-                case _ => None // typed-range parse failed — refuse
-              }
+              if (nullIn(f, phys)) Some(None) else None // a type without ranges — refuse
             } else (numFact(f, s"$phys#n"), rowsOf(f)) match {
               case (Some(n), Some(rows)) if n.toLong == rows => Some(None)
               case _ => None // unprovable — refuse the pushdown
@@ -810,7 +686,7 @@ private[sources] object GraftAggregates {
       val values = contrib.flatten.flatten
       if (values.isEmpty) Some(null) // every row null → SQL NULL
       else Some(values.reduce { (a, b) =>
-        val cmp = (a, b) match {
+        val order = (a, b) match {
           case (x: java.lang.Long, y: java.lang.Long) => java.lang.Long.compare(x, y)
           case (x: java.lang.Integer, y: java.lang.Integer) => Integer.compare(x, y)
           case (x: java.lang.Short, y: java.lang.Short) => java.lang.Short.compare(x, y)
@@ -820,7 +696,7 @@ private[sources] object GraftAggregates {
           case (x: UTF8String, y: UTF8String) => x.compareTo(y)
           case _ => return None
         }
-        if ((cmp <= 0) == lo) a else b
+        if ((order <= 0) == lo) a else b
       })
     }
 
@@ -857,45 +733,33 @@ private[sources] object GraftAggregates {
 
     // one group per live partition-value combination among the kept
     // files (deterministic order for stable plans); the ungrouped case
-    // is the single all-kept group. Keys are the exact TYPED values —
-    // not raw directory strings — because supportCompletePushDown means
-    // Spark never re-merges: two raws casting to one typed value
-    // (part=01 vs part=1 on INT) must land ONE row, and a raw that
-    // fails exact typed parsing (part=abc, overflow, rounding-needed
-    // decimal) refuses the whole pushdown rather than LEGACY-casting to
-    // a NULL key that would silently merge with the genuine null dir
-    // (the consumption discipline, applied to group keys).
-    val groups: Seq[(Seq[Option[String]], Seq[String])] =
-      if (groupCols.isEmpty) Seq((Nil, kept))
-      else {
-        val keyed: Seq[Option[(Seq[Option[Any]], Seq[Option[String]], String)]] =
-          kept.map { f =>
-            val raws = GraftPartitionEval.rawValues(f)
-            val rawKey = groupCols.map(n => raws.getOrElse(lc(physName(n)), None))
-            val typed = rawKey.zip(groupCols).map {
-              case (None, _) => Some(None) // genuine null dir
-              case (Some(r), n) =>
-                GraftPartitionEval.typedKey(r, fieldType(n)).map(Some(_))
-            }
-            if (typed.exists(_.isEmpty)) None
-            else Some((typed.map(_.get), rawKey, f))
-          }
-        if (keyed.exists(_.isEmpty)) return None
-        keyed.flatten.groupBy(_._1).toSeq
-          .sortBy(_._1.map(_.map(_.toString).getOrElse("\u0000")).mkString("\u0001"))
-          .map { case (_, members) => (members.head._2, members.map(_._3)) }
+    // is the single all-kept group. Keys are the decoded values the scan
+    // emits — not raw directory strings — because supportCompletePushDown
+    // means Spark never re-merges: two raws casting to one value
+    // (part=01 vs part=1 on INT) land ONE row, and a raw the cast
+    // rejects groups with the null dir, as the unpushed plan groups the
+    // rows. Float zeros key as +0.0, as Spark normalizes group keys.
+    val keyAt = groupCols.map(n => dirs.physical.indexOf(lc(physName(n))))
+    def keyOf(f: String): Seq[Any] = {
+      val row = dirs.values(f)
+      keyAt.zip(groupCols).map { case (i, n) =>
+        row.get(i, fieldType(n)) match {
+          case d: java.lang.Double if d == 0.0d => 0.0d
+          case x: java.lang.Float if x == 0.0f => 0.0f
+          case v => v
+        }
       }
+    }
+    val groups: Seq[(Seq[Any], Seq[String])] =
+      if (groupCols.isEmpty) Seq((Nil, kept))
+      else kept.groupBy(keyOf).toSeq.sortBy(_._1.map(String.valueOf).mkString("\u0001"))
 
     val schema0 = groupCols.foldLeft(new StructType())(
       (st, n) => st.add(n, fieldType(n), nullable = true))
     val schema = evals.foldLeft(schema0)((st, d) => d._1(st))
     val rows: Seq[Option[Array[Any]]] = groups.map { case (key, files) =>
       val vals = evals.map(_._2(files))
-      if (vals.exists(_.isEmpty)) None
-      else Some((key.zip(groupCols).map { case (raw, n) =>
-        raw.map(r =>
-          GraftPartitionEval.catalystValue(spark, r, fieldType(n))).orNull
-      } ++ vals.map(_.get)).toArray)
+      if (vals.exists(_.isEmpty)) None else Some((key ++ vals.map(_.get)).toArray)
     }
     if (rows.exists(_.isEmpty)) None else Some((schema, rows.flatten))
   }
@@ -906,6 +770,9 @@ private[sources] object GraftAggregates {
   * machinery. */
 final class GraftScan(
     table: GraftTable,
+    /** The snapshot's decoded partition directories: the values every
+      * row of a file emits. */
+    dirs: GraftPartitionEval.Dirs,
     required: StructType,
     pushedV1: Array[Filter],
     /** The files the builder's CONSUMED partition filters kept — exact
@@ -1017,7 +884,7 @@ final class GraftScan(
       (Nil, snap.files)
     else if (preds.isEmpty) (exactKept, snap.files.diff(exactKept))
     else {
-      val (kept, skipped) = TxStats.pruneFileSubset(snap, preds.reduce(And), exactKept)
+      val (kept, skipped) = TxStats.pruneFileSubset(dirs, preds.reduce(And), exactKept)
       (kept, skipped ++ snap.files.diff(exactKept))
     }
   }
@@ -1091,17 +958,18 @@ final class GraftScan(
     DsvBridge.filePartitions(spark, splits.sortBy(-_.length), maxSplit)
   }
 
-  /** Path segments → typed partition values, in the PRUNED partition
-    * schema's order. LEGACY cast semantics: a malformed segment reads
-    * NULL rather than failing the scan (values are Spark-written, so
-    * this is purely defensive). */
+  private val partitionAt: Array[Int] =
+    readPartitionSchemaL.fieldNames.map(n => dirs.physical.indexOf(lc(physName(n))))
+
+  /** The decoded partition values of `rel`'s directory
+    * ([[GraftPartitionEval.Dirs.values]]), in the PRUNED partition
+    * schema's order, then the requested metadata constants. */
   private def partitionValuesOf(rel: String): InternalRow =
     if (emittedPartSchema.isEmpty) InternalRow.empty
     else {
-      val raw = GraftPartitionEval.rawValues(rel)
-      val values: Array[Any] = readPartitionSchemaL.fields.map { f =>
-        raw.get(lc(physName(f.name))).flatten
-          .map(GraftPartitionEval.catalystValue(spark, _, f.dataType)).orNull
+      val decoded = dirs.values(rel)
+      val values: Array[Any] = partitionAt.zip(readPartitionSchemaL.fields).map {
+        case (i, f) => decoded.get(i, f.dataType)
       }
       val meta: Array[Any] = readMetaSchema.fields.map { f =>
         if (f.name.equalsIgnoreCase(GraftMetaColumns.File.name))
@@ -1315,7 +1183,8 @@ private[sources] final case class GraftAggReaderFactory()
   * ([[TxStats.pruneSnapFiles]]), plus the physical-name rewrite for
   * parquet row-group pushdown. Translation is PRUNING-sound, never
   * complete: an untranslatable filter prunes nothing (its files are
-  * kept), and Spark re-applies every filter above the scan. */
+  * kept), and Spark re-applies every filter the scan did not consume
+  * above it. */
 private[sources] object GraftFilters {
 
   private def attr(name: String): Expression = UnresolvedAttribute(Seq(name))

@@ -37,9 +37,8 @@ object TxStats {
 
   /** Hive path unescaping (the inverse of the `%xx` escaping Spark's
     * partitioned writer applies to special characters in values).
-    * `private[sources]`: SHOW PARTITIONS (`GraftTable`'s partition
-    * listing) decodes values through THIS function so display and
-    * partition pruning can never disagree on an escape. */
+    * `private[sources]`: [[GraftPartitionEval.rawValues]] is its one
+    * caller, so every reader of a partition value decodes the same way. */
   private[sources] def unescapePathName(s: String): String =
     if (s.indexOf('%') < 0) s
     else {
@@ -58,51 +57,36 @@ object TxStats {
       sb.toString
     }
 
-  /** Synthetic lo == hi column ranges from a file's hive partition path
-    * — partition pruning rides the SAME sound mayMatch walker as
-    * min/max stats (a partition file holds exactly one value of each
-    * partition column, so [v, v] is its exact range). Typed from the
-    * log schema: numerics and dates prune on NumRange (a date value
-    * parses to its epoch-day, matching the Catalyst DateType literal),
-    * ASCII strings on StrRange; anything else (and the
-    * __HIVE_DEFAULT_PARTITION__ null marker) yields no range — the
-    * file is kept, which is always sound. Memoized per partition DIR:
-    * many files share one. */
-  private[sources] def partitionRanges(snap: Snapshot): String => Map[String, ColRange] =
-    if (snap.partitioning.isEmpty) (_: String) => Map.empty
-    else {
-      import org.apache.spark.sql.types._
-      val types: Map[String, DataType] = snap.schema
-        .map(_.fields.map(f => f.name.toLowerCase(java.util.Locale.ROOT) -> f.dataType).toMap)
-        .getOrElse(Map.empty)
-      def typed(k: String, v: String): Option[ColRange] =
-        types.get(k.toLowerCase(java.util.Locale.ROOT)) match {
-          case Some(_: NumericType) =>
-            scala.util.Try(BigDecimal(v)).toOption.map(n => NumRange(n, n))
-          case Some(DateType) =>
-            scala.util.Try(BigDecimal(java.time.LocalDate.parse(v).toEpochDay))
-              .toOption.map(n => NumRange(n, n))
-          case Some(StringType) if v.forall(_ < 128) => Some(StrRange(v, v))
-          case _ => None
-        }
-      val cache = scala.collection.mutable.HashMap.empty[String, Map[String, ColRange]]
-      (name: String) => {
-        val cut = name.lastIndexOf('/')
-        if (cut < 0) Map.empty
-        else cache.getOrElseUpdate(name.substring(0, cut), {
-          name.substring(0, cut).split('/').iterator.flatMap { seg =>
-            val eq = seg.indexOf('=')
-            if (eq <= 0) None
-            else {
-              val k = unescapePathName(seg.substring(0, eq))
-              val v = unescapePathName(seg.substring(eq + 1))
-              if (v == "__HIVE_DEFAULT_PARTITION__") None
-              else typed(k, v).map(r => k -> r)
-            }
-          }.toMap
-        })
-      }
+  /** Synthetic lo == hi column ranges from a file's decoded partition
+    * values ([[GraftPartitionEval.Dirs.values]], what the scan emits) —
+    * partition pruning rides the SAME sound mayMatch walker as min/max
+    * stats (a partition file holds exactly one value of each partition
+    * column, so [v, v] is its exact range). Numerics prune on NumRange,
+    * dates on their epoch day (the Catalyst DateType literal's value),
+    * ASCII strings on StrRange; any other type, and a NULL value, yields
+    * no range — the file is kept, which is always sound. Memoized per
+    * partition DIR: many files share one. */
+  private[sources] def partitionRanges(
+      dirs: GraftPartitionEval.Dirs): String => Map[String, ColRange] = {
+    import org.apache.spark.sql.types._
+    def range(v: Any, dt: DataType): Option[ColRange] = (dt, v) match {
+      case (DateType, d: Integer) => Some(NumRange(BigDecimal(d), BigDecimal(d)))
+      case (_: DecimalType, d: Decimal) => Some(NumRange(d.toBigDecimal, d.toBigDecimal))
+      case (_: NumericType, n: java.lang.Number) =>
+        scala.util.Try(BigDecimal(n.toString)).toOption.map(b => NumRange(b, b))
+      case (StringType, u: org.apache.spark.unsafe.types.UTF8String) =>
+        Some(u.toString).filter(_.forall(_ < 128)).map(x => StrRange(x, x))
+      case _ => None
     }
+    val cache = scala.collection.mutable.HashMap.empty[String, Map[String, ColRange]]
+    rel => cache.getOrElseUpdate(dirs.dirOf(rel), {
+      val row = dirs.values(rel)
+      dirs.schema.fields.indices.flatMap { i =>
+        range(row.get(i, dirs.schema(i).dataType), dirs.schema(i).dataType)
+          .map(dirs.physical(i) -> _)
+      }.toMap
+    })
+  }
 
   // ── file-level min/max stats in the log (Delta-style data skipping) ─
   // Commit entries carry per-file column ranges so a predicate read
@@ -587,7 +571,7 @@ object TxStats {
   private def bloomContains(b: BloomSum, v: Either[BigDecimal, String]): Boolean = {
     import org.apache.spark.sql.catalyst.expressions.{Literal => CLit, XxHash64}
     import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-    val typed: Option[CLit] = (b.tpe, v) match {
+    val probe: Option[CLit] = (b.tpe, v) match {
       case ('L', scala.Left(n)) =>
         if (n.isWhole && n.isValidLong) Some(CLit(n.toLongExact, LongType))
         else None // non-integral literal can't equal a bigint; keep (sound)
@@ -595,7 +579,7 @@ object TxStats {
         Some(CLit(org.apache.spark.unsafe.types.UTF8String.fromString(t), StringType))
       case _ => None // kind mismatch — keep the file
     }
-    typed.forall { litV =>
+    probe.forall { litV =>
       val m = b.bits.length * 64L
       (0 until b.k).forall { i =>
         val h = XxHash64(Seq(CLit(i, IntegerType), litV), 42L)
@@ -613,18 +597,20 @@ object TxStats {
     * check. Shared by [[readWhere]]/[[readWhereAt]], [[pruneFiles]] and
     * the DSv2 scan ([[GraftScanBuilder]], which SQL reads plan). */
   private[sources] def pruneSnapFiles(
-      snap: Snapshot,
+      spark: SparkSession, snap: Snapshot,
       pred: org.apache.spark.sql.catalyst.expressions.Expression): (Seq[String], Seq[String]) =
-    pruneFileSubset(snap, pred, snap.files)
+    pruneFileSubset(new GraftPartitionEval.Dirs(spark, snap), pred, snap.files)
 
-  /** [[pruneSnapFiles]] over an explicit file subset — the DSv2 scan
-    * walks only the files its exact partition evaluation already kept. */
+  /** [[pruneSnapFiles]] over an explicit file subset of `dirs`'
+    * snapshot — the DSv2 scan walks only the files its exact partition
+    * evaluation already kept. */
   private[sources] def pruneFileSubset(
-      snap: Snapshot,
+      dirs: GraftPartitionEval.Dirs,
       pred: org.apache.spark.sql.catalyst.expressions.Expression,
       files: Seq[String]): (Seq[String], Seq[String]) = {
+    val snap = dirs.snap
     val phys = physByLogical(snap)
-    val pranges = partitionRanges(snap)
+    val pranges = partitionRanges(dirs)
     files.partition { f =>
       mayMatch(pred, pranges(f), phys) &&
         snap.stats.get(f).forall(ranges => mayMatch(pred, ranges, phys))

@@ -986,7 +986,7 @@ object TxStore extends TxWrites {
     // the Spark-4 Column→Catalyst bridge (Column.expr is gone with the
     // Connect-unified API; see ColumnBridge)
     val pred = org.apache.spark.sql.graft.ColumnBridge.expression(predicate)
-    val (kept, skipped) = pruneSnapFiles(snap, pred)
+    val (kept, skipped) = pruneSnapFiles(spark, snap, pred)
     (snap, kept, skipped)
   }
 
@@ -998,11 +998,13 @@ object TxStore extends TxWrites {
     * into it, and its parquet reader still skips row groups: this tier
     * skips whole files from the log before any footer is opened.
     *
-    * Partition-pruning note: a file holding ONE value of a column (the
-    * partitioned-write layout — e.g. range-partitioned by a low-
-    * cardinality key so each file owns one value) gets lo == hi stats,
-    * and pruning on them IS Hive-style partition pruning — the log's
-    * stats subsume a separate partition-column mechanism. */
+    * Partition-pruning note: each hive partition directory's decoded
+    * values ([[GraftPartitionEval.Dirs]], the values the scan emits)
+    * enter the stats walk as lo == hi facts, so the walk prunes
+    * partitions with the same sound test as min/max ranges. The scan
+    * then decides a filter over partition columns alone exactly, with
+    * Spark's own predicate over those values; the predicate applied
+    * here re-checks every kept row either way. */
   def readWhere(spark: SparkSession, path: String, predicate: Column): DataFrame =
     readSnapWhere(spark, path, snapshot(spark, path), predicate)
 
@@ -1017,7 +1019,7 @@ object TxStore extends TxWrites {
   private def readSnapWhere(
       spark: SparkSession, path: String, snap: Snapshot, predicate: Column): DataFrame = {
     val pred = org.apache.spark.sql.graft.ColumnBridge.expression(predicate)
-    val (kept, _) = pruneSnapFiles(snap, pred)
+    val (kept, _) = pruneSnapFiles(spark, snap, pred)
     readSnap(spark, path, restricted(snap, kept)).filter(predicate)
   }
 

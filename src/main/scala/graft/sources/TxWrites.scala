@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, count, count_distinct, lit, not, struct, substring_index, when}
 
 import java.util.UUID
@@ -358,7 +358,16 @@ trait TxWrites {
             throw conflict("schema evolved concurrently under column mapping")
           (physSchema, if (m2 != pre.mapping) Some(encodeMapping(m2, pre.retired)) else None)
       }
-      Some(CommitSpec(files, remove(snap), Some(encodeSchema(schema)), stats, mapping = mp,
+      val removed = remove(snap)
+      // Spark stages one empty file for an empty unpartitioned frame;
+      // the harvest's `#rows` facts tell it holds nothing
+      def noRows = files.isEmpty || stats.map(decodeStats).exists(m => files.forall(f =>
+        m.get(f).flatMap(_.get("#rows")).contains(NumRange(0, 0))))
+      // a stamped write that changes nothing lands no commit: `once`
+      // answers the current version, and a replay still no-ops
+      if (txn.isDefined && snap.schema.contains(schema) && removed.isEmpty && mp.isEmpty &&
+          pc.isEmpty && noRows) None
+      else Some(CommitSpec(files, removed, Some(encodeSchema(schema)), stats, mapping = mp,
         partcols = pc))
     }
   }
@@ -659,67 +668,38 @@ trait TxWrites {
   /** Evaluate a predicate against the live PARTITION DIRECTORIES of
     * `base`: Some(matching dir set) when the table is partitioned and
     * the predicate is deterministic and references partition columns
-    * exclusively — then its value is a constant per directory and the
-    * decision runs on a partitions-count local frame (metadata class),
-    * never the data. None when that evaluation does not apply and
+    * exclusively — then its value is a constant per directory, and the
+    * decision is graft's one partition evaluator
+    * ([[GraftPartitionEval.Dirs.matching]]) over the values reads emit,
+    * with no Spark job. None when that evaluation does not apply and
     * per-row semantics are required. Shared by the partition-delete
-    * fast path and [[replaceWhere]]. */
+    * fast path, [[replaceWhere]] and the maintenance WHERE scope. */
   private def partitionDirsMatching(
       spark: SparkSession, base: Snapshot,
       predicate: Column): Option[Set[String]] = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    if (base.partitioning.isEmpty) return None
-    // logical names (what the predicate speaks) per physical partition col
-    val logicalOf: Map[String, String] = base.partitioning.map { p =>
-      lc(p) -> (if (base.mapping.isEmpty) p
-                else base.mapping.find(_._2 == p).map(_._1).getOrElse(p))
-    }.toMap
-    val partLc = logicalOf.values.map(lc).toSet
-    val expr = org.apache.spark.sql.graft.ColumnBridge.expression(predicate)
-    val attrs = expr.collect {
-      case u: UnresolvedAttribute => lc(u.nameParts.last)
-      case a: AttributeReference => lc(a.name)
-    }
-    // attrs must be non-empty (a constant predicate may be row-dependent
-    // through non-determinism — rand() — which per-file evaluation would
-    // silently change; the general path keeps exact semantics there)
-    if (attrs.isEmpty || !attrs.forall(partLc)) return None
-    val logicalNames = base.partitioning.map(p => logicalOf(lc(p)))
-    val types = logicalSchema(base).get.fields
-      .map(f => lc(f.name) -> f.dataType).toMap
-    val rows = base.files.groupBy(dirOf).toSeq.map { case (d, files) =>
-      val vals = GraftPartitionEval.rawValues(files.head)
-      org.apache.spark.sql.Row.fromSeq(
-        d +: base.partitioning.map(p => vals.get(lc(p)).flatten.orNull))
-    }
-    val schema = StructType(StructField("__dir", StringType) +:
-      logicalNames.map(n => StructField(n, StringType)))
-    val typed = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema)
-      .select(col("__dir") +: logicalNames.map(n =>
-        col(n).cast(types(lc(n))).as(n)): _*)
-    val filtered = typed.filter(predicate <=> lit(true))
-    // A MIXED predicate (partition attrs AND a nondeterministic term,
-    // e.g. p === 1 && rand() < 0.5) must fall through too: here the
-    // coin would flip once per partition DIRECTORY, deleting or keeping
-    // whole partitions where the copy-on-write path flips it per row.
-    // Nondeterminism is judged on the RESOLVED condition — the analyzer
-    // attaches each function's own deterministic flag — never a name
-    // blocklist: SQL-parsed text arrives as UnresolvedFunction (whose
-    // default deterministic is TRUE), and a UDF registered
-    // .asNondeterministic() has no name any list could know. A
-    // predicate this metadata frame cannot resolve at all falls through
-    // to the per-row path, which surfaces the same analysis error on
-    // the data itself.
-    val resolvedCond =
-      try filtered.queryExecution.analyzed.collectFirst {
-        case fl: org.apache.spark.sql.catalyst.plans.logical.Filter => fl.condition
-      }
+    val dirs = new GraftPartitionEval.Dirs(spark, base)
+    if (dirs.schema.isEmpty) return None
+    // Resolved against the partition columns alone: a predicate naming
+    // any other column does not resolve, so it is not partition-only and
+    // falls through to the per-row path, which surfaces the same
+    // analysis error on the data itself. Analysis runs no job.
+    val cond =
+      try spark.createDataFrame(java.util.Collections.emptyList[Row](), dirs.schema)
+        .filter(predicate).queryExecution.analyzed.collectFirst {
+          case fl: org.apache.spark.sql.catalyst.plans.logical.Filter => fl.condition
+        }.get
       catch { case _: org.apache.spark.sql.AnalysisException => return None }
-    if (!resolvedCond.forall(_.deterministic)) return None
-    Some(filtered.select("__dir").collect().map(_.getString(0)).toSet)
+    // A constant predicate, or a MIXED one (p === 1 && rand() < 0.5),
+    // falls through too: here the coin would flip once per partition
+    // DIRECTORY, deleting or keeping whole partitions where the
+    // copy-on-write path flips it per row. Nondeterminism is judged on
+    // the RESOLVED condition — the analyzer attaches each function's
+    // own deterministic flag — never a name blocklist: SQL-parsed text
+    // arrives as UnresolvedFunction (whose default deterministic is
+    // TRUE), and a UDF registered .asNondeterministic() has no name any
+    // list could know.
+    if (cond.references.isEmpty || !cond.deterministic || !dirs.evaluable(cond)) return None
+    Some(base.files.filter(dirs.matching(Seq(cond))).map(dirOf).toSet)
   }
 
   /** Dynamic partition overwrite — Delta's `replaceWhere` idiom: ONE
@@ -1221,7 +1201,7 @@ trait TxWrites {
             case _ => None
           }
           if (conds.exists(_.isEmpty)) base.files
-          else pruneSnapFiles(base, org.apache.spark.sql.graft.ColumnBridge
+          else pruneSnapFiles(spark, base, org.apache.spark.sql.graft.ColumnBridge
             .expression(conds.flatten.reduce(_ || _)))._1
         }
       val hit = (keyHit ++ bySourceHit).distinct

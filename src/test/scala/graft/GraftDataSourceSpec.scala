@@ -416,31 +416,25 @@ class GraftDataSourceSpec extends SparkSpec {
     assert(rows2.forall(r => r.getString(1).startsWith(s"part=${r.getInt(0)}/")))
   }
 
-  test("string partition consumption is ASCII-guarded: non-ASCII literals stay post-scan") {
+  test("string partition filters are consumed, non-ASCII literals included") {
     import org.apache.spark.sql.catalyst.plans.logical
     val t = tmpDir()
     val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "pt")
     TxStore.append(df, t, partitionBy = Seq("pt"))
-    // ASCII ordering consumes: the Filter node vanishes from the plan
-    // (UTF-16 and UTF-8 binary orders provably agree on pure ASCII)
+    // the Filter node vanishes from the plan: the scan decides it
     val consumed = v2(t).filter(col("pt") >= "b")
     assert(consumed.queryExecution.optimizedPlan
       .collect { case f: logical.Filter => f }.isEmpty,
       "an ASCII partition comparison must be consumed (no post-scan Filter)")
     assert(consumed.count() === 2L)
-    // a NON-ASCII literal must NOT be consumed — Java's UTF-16
-    // code-unit order diverges from Spark's UTF-8 binary order above
-    // the surrogate range (e.g. U+FFFF vs U+1F600), and a consumed
-    // verdict is never re-checked. The guard keeps the comparison in
-    // the post-scan Filter, where Spark evaluates it exactly. (The
-    // wrong-verdict fixture itself — non-ASCII PARTITION DIRS — cannot
-    // be written under this container's POSIX locale; the guard exists
-    // for clusters that can.)
-    val guarded = v2(t).filter(col("pt") > "π")
-    assert(guarded.queryExecution.optimizedPlan
-      .collect { case f: logical.Filter => f }.nonEmpty,
-      "a non-ASCII literal must stay in the post-scan Filter")
-    assert(guarded.count() === 0L)
+    // a NON-ASCII literal is consumed too: Spark's own predicate decides
+    // it over the values the scan emits, in Spark's UTF-8 binary order,
+    // so no order of graft's own has to agree with Spark's
+    val nonAscii = v2(t).filter(col("pt") > "π")
+    assert(nonAscii.queryExecution.optimizedPlan
+      .collect { case f: logical.Filter => f }.isEmpty,
+      "a non-ASCII partition comparison must be consumed (no post-scan Filter)")
+    assert(nonAscii.count() === 0L)
   }
 
   test("prefix predicates prune files from string ranges; walk and scan agree") {
@@ -464,7 +458,7 @@ class GraftDataSourceSpec extends SparkSpec {
     assert(v2(t).filter(col("key").startsWith("z")).count() === 0L)
   }
 
-  test("group-key pushdown keys on TYPED values: equal-cast raws merge, unparseable types refuse") {
+  test("group-key pushdown keys on emitted values: raws merge, DATE keys push") {
     // a convert-adopted foreign layout can carry raws that differ
     // textually but cast to one typed value: part=01 and part=1 on an
     // INT column must land ONE group row (complete pushdown — Spark
@@ -483,9 +477,8 @@ class GraftDataSourceSpec extends SparkSpec {
     assert(ev.aggregatePushed && ev.kept.isEmpty,
       "the merged-key group-by must still answer from facts")
 
-    // a type outside the exactly-parseable set (DATE — calendar parsing
-    // is not worth an exactness bug) refuses the pushdown; the ordinary
-    // scan answers and stays correct
+    // a DATE key pushes as well: the keys are the decoded values the
+    // scan emits, so no type needs a parser of graft's own
     val d = tmpDir() + "/dated"
     Seq((1L, "2024-01-01"), (2L, "2024-01-01"), (3L, "2024-02-03"))
       .toDF("id", "part").write.partitionBy("part").parquet(d)
@@ -495,8 +488,54 @@ class GraftDataSourceSpec extends SparkSpec {
     val dated = v2(d).groupBy("part").agg(count(lit(1)).as("n"))
     val byDay = dated.collect().map(r => (r.getDate(0).toString, r.getLong(1))).sorted.toSeq
     assert(byDay === Seq(("2024-01-01", 2L), ("2024-02-03", 1L)))
-    assert(!scanOf(dated).aggregatePushed,
-      "a DATE group key must refuse the metadata pushdown")
+    assert(scanOf(dated).aggregatePushed,
+      "a DATE group key must answer from the log's facts")
+  }
+
+  test("partition decisions agree with filters on the emitted rows") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.catalyst.plans.logical
+    // a convert-adopted INT layout: raws that differ textually (01, 1),
+    // the null dir, and a raw the cast reads as NULL (abc)
+    val ints = tmpDir() + "/ints"
+    Seq[(Long, String)]((1L, "01"), (2L, "1"), (3L, "2"), (4L, null), (5L, "3"))
+      .toDF("id", "part").write.partitionBy("part").parquet(ints)
+    TxStore.convert(spark, ints)
+    val three = TxStore.snapshot(spark, ints).files.filter(_.startsWith("part=3/"))
+    assert(three.size === 1)
+    graft.sources.ForeignLayout.relabel(spark, ints, three.head, "part=abc")
+    assert(v2(ints).schema("part").dataType === org.apache.spark.sql.types.IntegerType)
+    val dates = tmpDir() + "/dates"
+    Seq[(Long, String)]((1L, "2024-01-01"), (2L, "2024-01-01"), (3L, "2024-02-03"), (4L, null))
+      .toDF("id", "part").write.partitionBy("part").parquet(dates)
+    TxStore.convert(spark, dates)
+    assert(v2(dates).schema("part").dataType === org.apache.spark.sql.types.DateType)
+
+    def rowsOf(df: DataFrame): Seq[Seq[Any]] = df.collect().map(_.toSeq).toSeq
+    val cases: Seq[(String, Seq[Column])] = Seq(
+      ints -> Seq(col("part") === 1, col("part").isin(1, 2), col("part").isNull,
+        not(col("part") === 1), col("part").between(1, 2)),
+      dates -> Seq(col("part") === "2024-01-01", col("part").isin("2024-02-03"),
+        col("part").isNull, not(col("part") === "2024-01-01"), col("part") > "2024-01-15"))
+    for ((t, preds) <- cases; p <- preds) {
+      // the rows a filter Spark evaluates on the emitted rows keeps
+      val emitted = v2(t).localCheckpoint()
+      val want = rowsOf(emitted.filter(p))
+      val scan = v2(t).filter(p)
+      assert(scan.queryExecution.optimizedPlan.collect { case f: logical.Filter => f }.isEmpty,
+        s"$p must be consumed by the scan")
+      assertRows(scan, want)
+      // GROUP BY the partition column pushes and equals the unpushed plan
+      val grouped = v2(t).filter(p).groupBy("part").agg(count(lit(1)).as("n"))
+      assertRows(grouped, rowsOf(emitted.filter(p).groupBy("part").agg(count(lit(1)).as("n"))))
+      assert(scanOf(grouped).aggregatePushed, s"GROUP BY under $p must answer from facts")
+      // a metadata delete removes exactly the directories whose rows match
+      val v = TxStore.snapshot(spark, t).version
+      val deleted = TxStore.deletePartitions(spark, t, p)
+      assert(deleted.isDefined === want.nonEmpty, s"$p")
+      assertRows(TxStore.read(spark, t), rowsOf(emitted.filter(!(p <=> lit(true)))))
+      deleted.foreach(_ => TxStore.restore(spark, t, v))
+    }
   }
 
   test("reads keep the declared COLUMN ORDER for partitioned tables") {

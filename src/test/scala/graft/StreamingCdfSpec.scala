@@ -99,6 +99,24 @@ class StreamingCdfSpec extends SparkSpec {
     assert(!new java.io.File(sink).exists(), "nothing may land in the sink")
   }
 
+  test("a follow range whose commits change no rows lands no sink commit") {
+    val (src, sink, ckpt) = (tmp("src5"), tmp("sink5"), tmp("ckpt5"))
+    TxStore.append(ev.limit(20).repartition(2), src) // v1
+    assert(StreamingCdf.follow(spark, src, sink, ckpt, writerId = Some("cdf5"))
+      .awaitTermination(180000))
+    val sinkV = TxStore.snapshot(spark, sink).version
+    // v2 only rewrites files: its change feed is empty
+    assert(TxStore.compact(spark, src).isDefined)
+    assert(StreamingCdf.follow(spark, src, sink, ckpt, writerId = Some("cdf5"))
+      .awaitTermination(180000))
+    assert(TxStore.snapshot(spark, sink).version === sinkV)
+    // replaying that empty batch (batch 1 of writer cdf5) still lands none
+    val empty = TxStore.read(spark, sink).limit(0)
+    assert(TxStore.appendOnce(empty, sink, "cdf5", 1L) === sinkV)
+    assert(TxStore.snapshot(spark, sink).version === sinkV)
+    assert(TxStore.read(spark, sink).count() === 20L)
+  }
+
   test("readChangesBetween refuses inverted and ahead-of-log ranges") {
     val src = tmp("src3")
     TxStore.append(ev.limit(5), src) // v1

@@ -2760,4 +2760,53 @@ class TxStoreSpec extends SparkSpec {
     assert(got === (20 until 30).map(i => (i.toLong, s"v$i")).toSet,
       "stale commit parse served after delete+recreate")
   }
+
+  test("Spark jobs per TxStore op on a day-partitioned table stay pinned") {
+    import org.apache.spark.graft.ListenerBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // the table_upkeep shape: one string `day` partition per batch
+    val t = tmpDir()
+    def day(d: Int, n: Int = 20, from: Int = 0) =
+      (from until from + n).map(i => (d * 1000L + i, f"2024-01-$d%02d", i.toLong, i * 0.5))
+        .toDF("id", "day", "qty", "amount")
+    TxStore.append(day(1), t, partitionBy = Seq("day"))
+    TxStore.append(day(2), t)
+    TxStore.append(day(3), t)
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(ev: SparkListenerJobStart): Unit = started.incrementAndGet(): Unit
+    }
+    def jobs(body: => Any): Int = {
+      ListenerBridge.waitUntilListenerBusEmpty(sc)
+      started.set(0)
+      body
+      ListenerBridge.waitUntilListenerBusEmpty(sc)
+      started.get
+    }
+    sc.addSparkListener(listener)
+    val counts =
+      try Seq(
+        "append" -> jobs(TxStore.append(day(3, from = 20), t)),
+        "mergeOnce" -> jobs(TxStore.mergeOnce(spark, t, day(3, 5), Seq("id"), "jobs", 0L)),
+        "deletePartitions" -> jobs(TxStore.deletePartitions(spark, t, col("day") === "2024-01-01")),
+        "replaceWhere" -> jobs(TxStore.replaceWhere(day(2, 10), t, col("day") === "2024-01-02")),
+        "compactSmallFiles" -> jobs(TxStore.compactSmallFiles(spark, t,
+          where = Some(col("day") === "2024-01-03"))),
+        "readWhere" -> jobs(TxStore.readWhere(spark, t,
+          col("day").between("2024-01-02", "2024-01-03")).collect()),
+        "readAt" -> jobs(TxStore.readAt(spark, t, 3L).collect())).toMap
+      finally sc.removeSparkListener(listener)
+    assert(TxStore.read(spark, t).count() === 50L)
+    // decided from log metadata by the partition evaluator: no job
+    assert(counts("deletePartitions") === 0, counts)
+    // 4 and 3 jobs before the evaluator ran in-process: replaceWhere
+    // scopes its partitions twice, OPTIMIZE WHERE once
+    assert(counts("replaceWhere") <= 2, counts)
+    assert(counts("compactSmallFiles") <= 2, counts)
+    // the rest pinned at their recorded counts, as upper bounds
+    assert(counts("append") <= 1 && counts("mergeOnce") <= 11, counts)
+    assert(counts("readWhere") <= 1 && counts("readAt") <= 1, counts)
+  }
+
 }

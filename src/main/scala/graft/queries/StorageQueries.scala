@@ -656,7 +656,7 @@ object StorageQueries {
     // ── S51 — DataSource v2 PUSHED-FILTER pruning (EXT73): the native
     //    `spark.read.format("graft")` scan must skip the IDENTICAL file
     //    set the readWhere stats walk skips — pruning now happens INSIDE
-    //    Catalyst (SupportsPushDownFilters → pruneSnapFiles), not in a
+    //    Catalyst (SupportsPushDownCatalystFilters → pruneSnapFiles), not in a
     //    pre-analysis rewrite, and the kept files are planned into
     //    splits from the log's #size facts (zero filesystem RPCs). The
     //    REQUIREs pin the file-set identity; the oracle pins the rows.

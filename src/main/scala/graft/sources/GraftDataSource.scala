@@ -458,7 +458,7 @@ private[sources] object GraftMetaColumns {
 /** Hive partition directories decoded into the values the scan emits.
   * This is graft's one partition evaluator, the shape of Spark's own
   * `PartitioningAwareFileIndex.prunePartitions`: each live directory is
-  * decoded once ([[rawValues]], then [[catalystValue]]) into the typed
+  * decoded once ([[rawValues]], then [[catalystValue]]) into the
   * values [[GraftScan]] puts into every row of its files, and every
   * exact partition decision evaluates Spark's interpreted predicate over
   * them ([[Dirs.matching]]). That covers the scan's consumed filters,
@@ -476,7 +476,7 @@ private[sources] object GraftPartitionEval {
 
   /** lc(physical column) → raw path value (None = the null dir) for a
     * staged file's relative path. */
-  def rawValues(rel: String): Map[String, Option[String]] =
+  private def rawValues(rel: String): Map[String, Option[String]] =
     rel.split('/').dropRight(1).toSeq.flatMap { seg =>
       val i = seg.indexOf('=')
       if (i <= 0) None
@@ -488,7 +488,7 @@ private[sources] object GraftPartitionEval {
 
   /** Raw path segment → catalyst value of `dt` — LEGACY cast semantics
     * (a malformed segment reads NULL rather than failing the scan). */
-  def catalystValue(spark: SparkSession, raw: String, dt: DataType): Any =
+  private def catalystValue(spark: SparkSession, raw: String, dt: DataType): Any =
     if (dt == StringType) UTF8String.fromString(raw)
     else Cast(Literal(UTF8String.fromString(raw), StringType), dt,
       Some(spark.sessionState.conf.sessionLocalTimeZone), EvalMode.LEGACY).eval(null)
@@ -520,7 +520,7 @@ private[sources] object GraftPartitionEval {
     /** The directory part of a relative file path, `""` for a flat file. */
     def dirOf(rel: String): String = rel.substring(0, rel.lastIndexOf('/') + 1)
 
-    /** The typed partition values of `rel`'s directory, in [[schema]]'s
+    /** The decoded partition values of `rel`'s directory, in [[schema]]'s
       * order; NULL for the null dir and for a raw the cast rejects. */
     def values(rel: String): InternalRow = synchronized {
       decoded.getOrElseUpdate(dirOf(rel), {

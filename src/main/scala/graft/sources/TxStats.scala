@@ -389,7 +389,7 @@ object TxStats {
     }
     def range(name: String): Option[ColRange] =
       ranges.collectFirst { case (k, v) if k.toLowerCase(java.util.Locale.ROOT) == name => v }
-    // is `col OP v` satisfiable inside the column's range? cmp encodes
+    // is `col OP v` satisfiable inside the column's range? sat encodes
     // OP via three flags: can the op be satisfied by values <v, =v, >v
     def sat(r: ColRange, v: Either[BigDecimal, String],
         lt: Boolean, eq: Boolean, gt: Boolean): Boolean = (r, v) match {

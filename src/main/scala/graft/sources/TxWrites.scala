@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, count, count_distinct, lit, not, struct, substring_index, when}
 
 import java.util.UUID
@@ -683,11 +683,16 @@ trait TxWrites {
     // any other column does not resolve, so it is not partition-only and
     // falls through to the per-row path, which surfaces the same
     // analysis error on the data itself. Analysis runs no job.
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+    val partitions =
+      LocalRelation(org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(dirs.schema))
     val cond =
-      try spark.createDataFrame(java.util.Collections.emptyList[Row](), dirs.schema)
-        .filter(predicate).queryExecution.analyzed.collectFirst {
-          case fl: org.apache.spark.sql.catalyst.plans.logical.Filter => fl.condition
-        }.get
+      try org.apache.spark.sql.graft.ColumnBridge.dataFrame(spark,
+          Filter(org.apache.spark.sql.graft.ColumnBridge.expression(predicate), partitions))
+        .queryExecution.analyzed match {
+          case fl: Filter => fl.condition
+          case _ => return None
+        }
       catch { case _: org.apache.spark.sql.AnalysisException => return None }
     // A constant predicate, or a MIXED one (p === 1 && rand() < 0.5),
     // falls through too: here the coin would flip once per partition
